@@ -241,23 +241,23 @@ object Ivf {
     * The layout's tombstones are a global id mask (unlike the
     * posting/SQ8 stores' covered-leg tombstones, under which re-adds
     * revive); the supported revival path here is [[compactLayout]]
-    * (physical drop + tombstone clear), THEN re-add. Batch-sized
-    * semi-join against the small broadcast tombstone table. */
+    * (physical drop + tombstone clear), THEN re-add. One literal-id
+    * filtered scan of the mask legs ([[lookupIds]]); no scan at all
+    * when the snapshot has no mask. */
   private def requireNotTombstoned(
-      layout: Layout, rows: DataFrame, idCol: String,
-      snap: Option[IvfSnap] = None): Unit = {
-    val spark = rows.sparkSession
-    val mask = maskOf(spark, layout.dir,
-      snap.getOrElse(snapOf(layout.dir)), idCol)
-    if (mask.isEmpty) return
-    val clash = rows.select(col(idCol).cast("long").as(idCol)).distinct()
-      .join(broadcast(mask.get), Seq(idCol), "left_semi")
-      .limit(1).collect()
+      spark: SparkSession, dir: String, s: IvfSnap, ids: Seq[Long]): Unit = {
+    val clash = lookupIds(spark, dir, s, ids, "vec_id", "", data = false)
     require(clash.isEmpty,
-      s"append: id ${clash.headOption.map(_.getLong(0)).getOrElse(-1L)} is tombstoned in " +
-        s"${layout.dir} — a global-mask probe would silently hide the re-add; run " +
+      s"append: id ${clash.headOption.map(_._2).getOrElse(-1L)} is tombstoned in " +
+        s"$dir — a global-mask probe would silently hide the re-add; run " +
         "compactLayout to physically reclaim deleted rows, then re-add")
   }
+
+  /** The non-null `idCol` values of `df`, collected — callers hand in
+    * request-sized frames (a batch, a victim list). */
+  private def idsOf(df: DataFrame, idCol: String): Seq[Long] =
+    df.select(col(idCol).cast("long")).collect().toSeq
+      .filterNot(_.isNullAt(0)).map(_.getLong(0))
 
   def appendToLayout(
       layout: Layout,
@@ -265,12 +265,12 @@ object Ivf {
       embCol: String = "embedding"): Layout =
       graft.io.MutableStore.withWriterLock(layout.dir, "appendToLayout") {
     val s = snapOf(layout.dir)
-    requireNotTombstoned(layout, rows, "vec_id", Some(s))
     // pin the batch ONCE: writing and fingerprinting from two separate
     // evaluations of `rows` would let a nondeterministic input store one
     // dataset while the sidecar attests another — exactly the silent
     // staleness the fingerprint exists to rule out
     val assigned = assignByCentroids(layout, rows, embCol).localCheckpoint()
+    requireNotTombstoned(rows.sparkSession, layout.dir, s, idsOf(assigned, "vec_id"))
     if (s.v == 0)
       // legacy resolution lists the root `cluster=K/` dirs — a direct
       // append is visible the moment its files land
@@ -587,6 +587,32 @@ object Ivf {
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(_.getPath).toSeq.sorted
 
+  private val clusterField = org.apache.spark.sql.types.StructField(
+    "cluster", org.apache.spark.sql.types.IntegerType)
+
+  /** A cluster-partitioned leg dir (a delta, or the legacy root base)
+    * as one schema-pinned read ([[graft.io.MutableStore.readParquetPinned]]:
+    * no schema-inference job); None when it holds no data file. */
+  private def readClusteredDir(spark: SparkSession, path: String): Option[DataFrame] =
+    graft.io.MutableStore.sampleDataFile(path).map(f =>
+      graft.io.MutableStore.readParquetPinned(spark, Seq(path), f, Seq(clusterField)))
+
+  /** Manifest-listed base files sharing one partition-discovery root,
+    * schema-pinned; the root as `basePath` recovers `cluster`. */
+  private def readBaseFiles(
+      spark: SparkSession, dir: String, root: String, files: Seq[String]): DataFrame =
+    graft.io.MutableStore.readParquetPinned(spark, files.map(f => s"$dir/$f"),
+      s"$dir/${files.head}", Seq(clusterField),
+      Some(if (root.isEmpty) dir else s"$dir/$root"))
+
+  /** Names the Spark jobs `body` starts `<primitive> at Ivf.scala`. */
+  private def named[A](spark: SparkSession, primitive: String)(body: => A): A =
+    graft.io.MutableStore.withCallSite(spark, s"$primitive at Ivf.scala")(body)
+
+  /** [[named]] under the layout's writer lease. */
+  private def writing[A](spark: SparkSession, dir: String, primitive: String)(body: => A): A =
+    graft.io.MutableStore.withWriterLock(dir, primitive)(named(spark, primitive)(body))
+
   private[graft] def snapOf(dir: String): IvfSnap = {
     if (!stateFileExists(dir))
       return IvfSnap(0, Set.empty, Set.empty, None,
@@ -627,7 +653,8 @@ object Ivf {
       spark: SparkSession, dir: String, s: IvfSnap,
       clusters: Option[Seq[Int]]): DataFrame = s.manifestV match {
     case None =>
-      val df = spark.read.parquet(dir)
+      val df = readClusteredDir(spark, dir).getOrElse(
+        throw new IllegalStateException(s"IVF layout $dir has no base data file"))
       clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df)
     case Some(mv) =>
       // SPLIT manifest: resolve ONLY the probed clusters' file lists
@@ -644,35 +671,27 @@ object Ivf {
         val anyCluster = manifestClusterIds(dir, mv)
         require(anyCluster.nonEmpty, s"manifest v$mv of $dir lists no files")
         val sample = manifestFilesFor(dir, mv, Set(anyCluster.head)).head
-        val root = rootOfPath(sample)
-        val basePath = if (root.isEmpty) dir else s"$dir/$root"
-        val schema = spark.read.option("basePath", basePath)
-          .parquet(s"$dir/$sample").schema
+        val schema = readBaseFiles(spark, dir, rootOfPath(sample), Seq(sample)).schema
         return spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       }
       val legs = picked.groupBy(rootOfPath).toSeq.sortBy(_._1).map {
-        case (root, fs) =>
-          val basePath = if (root.isEmpty) dir else s"$dir/$root"
-          spark.read.option("basePath", basePath)
-            .parquet(fs.map(f => s"$dir/$f"): _*)
+        case (root, fs) => readBaseFiles(spark, dir, root, fs)
       }
       val df = legs.reduce(_ unionByName _)
       clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df)
   }
 
   /** Live delta legs of a pinned snapshot (cluster-pruned), unioned
-    * onto `base`'s column order. None when the snapshot has none. */
+    * by name. None when the snapshot has none holding a data file (a
+    * leg an empty write left with only `_SUCCESS` has no rows). */
   private def deltaScanOf(
       spark: SparkSession, dir: String, s: IvfSnap,
-      clusters: Option[Seq[Int]]): Option[DataFrame] = {
-    if (s.live.isEmpty) return None
-    val legs = s.live.map { t =>
-      val df = spark.read.parquet(s"$dir/$deltaDirPrefix$t")
-      clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df)
-    }
-    Some(legs.reduce(_ unionByName _))
-  }
+      clusters: Option[Seq[Int]]): Option[DataFrame] =
+    s.live.flatMap { t =>
+      readClusteredDir(spark, s"$dir/$deltaDirPrefix$t").map(df =>
+        clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df))
+    }.reduceOption(_ unionByName _)
 
   /** The layout's LIVE rows as ONE pinned DataFrame (base ∪ live
     * deltas, minus the global mask) — the read-side twin of the probe
@@ -732,18 +751,49 @@ object Ivf {
     applyMask(all, maskOf(spark, dir, s, idCol), idCol)
   }
 
-  /** The pinned GLOBAL id mask: legacy flat tombstone files plus the
-    * snapshot's live tombstone-batch dirs. */
+  /** The pinned GLOBAL id mask's legs (`idCol` only): legacy flat
+    * tombstone files plus the snapshot's live tombstone-batch dirs,
+    * each schema-pinned. */
+  private def maskLegs(
+      spark: SparkSession, dir: String, s: IvfSnap, idCol: String): Seq[DataFrame] = {
+    val legacy = legacyTombFiles(dir)
+    ((if (legacy.nonEmpty)
+      Seq(graft.io.MutableStore.readParquetPinned(spark, legacy, legacy.head))
+    else Seq.empty) ++
+      s.tombTags.flatMap { t =>
+        val p = s"$dir/$tombstoneDirName/$tombTagPrefix$t/ids"
+        graft.io.MutableStore.sampleDataFile(p)
+          .map(f => graft.io.MutableStore.readParquetPinned(spark, Seq(p), f))
+      }).map(_.select(col(idCol)))
+  }
+
+  /** The pinned GLOBAL id mask as one distinct id table. */
   private def maskOf(
       spark: SparkSession, dir: String, s: IvfSnap,
-      idCol: String): Option[DataFrame] = {
-    val legacy = legacyTombFiles(dir)
+      idCol: String): Option[DataFrame] =
+    maskLegs(spark, dir, s, idCol).reduceOption(_ unionAll _).map(_.distinct())
+
+  /** Where requested ids live in a pinned snapshot, from ONE
+    * literal-id filtered scan: one (leg, id, h) per matching row, leg
+    * 0 = base, 1 = live delta, 2 = mask, with `h` the base row's
+    * embedding hash (the sidecar's per-row term, 0 elsewhere).
+    * `data = false` scans the mask legs only. The result is bounded by
+    * the request (ids × their copies), so it comes to the driver —
+    * the ids-on-driver contract of [[graft.index.Hnsw.deleteFromLayout]]. */
+  private def lookupIds(
+      spark: SparkSession, dir: String, s: IvfSnap, ids: Seq[Long],
+      idCol: String, embCol: String, data: Boolean): Array[(Int, Long, Long)] = {
+    if (ids.isEmpty) return Array.empty
+    def tagged(df: DataFrame, leg: Int, h: Column): DataFrame =
+      df.filter(col(idCol).isin(ids: _*))
+        .select(lit(leg).as("leg"), col(idCol).cast("long").as(idCol), h.as("h"))
     val legs =
-      (if (legacy.nonEmpty) Seq(spark.read.parquet(legacy: _*)) else Seq.empty) ++
-        s.tombTags.map(t =>
-          spark.read.parquet(s"$dir/$tombstoneDirName/$tombTagPrefix$t/ids"))
-    if (legs.isEmpty) None
-    else Some(legs.map(_.select(col(idCol))).reduce(_ unionAll _).distinct())
+      (if (!data) Seq.empty
+      else tagged(baseScanOf(spark, dir, s, None), 0, xxhash64(col(embCol))) +:
+        deltaScanOf(spark, dir, s, None).toSeq.map(tagged(_, 1, lit(0L)))) ++
+        maskLegs(spark, dir, s, idCol).map(tagged(_, 2, lit(0L)))
+    legs.reduceOption(_ unionAll _).toSeq.flatMap(_.collect())
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toArray
   }
 
   private def applyMask(
@@ -854,26 +904,41 @@ object Ivf {
     * touched — it attests the base corpus only, so [[buildLayout]]
     * reuse semantics stay exact; fold deltas into the base with a
     * batch [[appendToLayout]] + delta cleanup when compaction is due.
+    *
+    * Job plan (at most three Spark jobs, named `appendDelta at
+    * Ivf.scala`): (1) one evaluation of the assigned rows fills a
+    * cache and brings their ids to the driver — ids only, bounded by
+    * the batch, the same contract as [[deleteFromLayout]]; the row
+    * count comes from it; (2) when the snapshot has a mask, one
+    * literal-id filtered scan of its legs is the tombstone guard;
+    * (3) the write, from the cache. A batch of zero rows returns 0 and
+    * writes and commits nothing — an empty partitioned write would
+    * leave a leg holding only `_SUCCESS`.
     * Returns the number of rows written. */
   def appendDelta(
       layout: Layout,
       rows: DataFrame,
       tag: String,
       embCol: String = "embedding"): Long =
-      graft.io.MutableStore.withWriterLock(layout.dir, "appendDelta") {
+      writing(rows.sparkSession, layout.dir, "appendDelta") {
     val s = snapOf(layout.dir)
-    requireNotTombstoned(layout, rows, "vec_id", Some(s)) // see the guard's doc
-    val assigned = assignByCentroids(layout, rows, embCol).localCheckpoint()
-    assigned.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"${layout.dir}/$deltaDirPrefix$tag")
-    // COMMIT the mutation (snapshot-pin protocol): the delta is live
-    // once the state names it. A tag the committed state already FOLDED
-    // is a redelivered batch whose rows are base-resident — debris,
-    // never re-committed (double-count).
-    if (!s.folded.contains(tag))
-      graft.io.MutableStore.commitLiveLists(layout.dir,
-        (s.live :+ tag).distinct.sorted, s.tombTags)
-    assigned.count()
+    val assigned = assignByCentroids(layout, rows, embCol).persist()
+    try {
+      val ids = assigned.select(col("vec_id").cast("long")).collect()
+      if (ids.isEmpty) return 0L
+      requireNotTombstoned(rows.sparkSession, layout.dir, s, // see the guard's doc
+        ids.toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0)))
+      assigned.write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"${layout.dir}/$deltaDirPrefix$tag")
+      // COMMIT the mutation (snapshot-pin protocol): the delta is live
+      // once the state names it. A tag the committed state already FOLDED
+      // is a redelivered batch whose rows are base-resident — debris,
+      // never re-committed (double-count).
+      if (!s.folded.contains(tag))
+        graft.io.MutableStore.commitLiveLists(layout.dir,
+          (s.live :+ tag).distinct.sorted, s.tombTags)
+      ids.length.toLong
+    } finally assigned.unpersist()
   }
 
   /** Number of LIVE delta legs — what a probe's union width grows
@@ -953,7 +1018,7 @@ object Ivf {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       excludeTags: Set[String] = Set.empty): Int =
-      graft.io.MutableStore.withWriterLock(layout.dir, "compactDeltas") {
+      writing(spark, layout.dir, "compactDeltas") {
     val dir = layout.dir
     val s = snapOf(dir)
     val tags = s.live.filterNot(excludeTags)
@@ -969,17 +1034,16 @@ object Ivf {
         .flatMap(manifestVersionOf))
       .max + 1
     gcLayout(dir, st, protectedRefs)
-    val deltaDf = tags
-      .map(t => spark.read.parquet(s"$dir/$deltaDirPrefix$t"))
-      .reduce(_ unionByName _)
+    // None only when every folded leg is file-less: nothing to merge
+    val deltaDf = deltaScanOf(spark, dir, s.copy(live = tags), None)
     // fingerprint only LIVE delta rows: a delta row deleted via
     // [[deleteFromLayout]] never entered the sidecar arithmetic (delta
     // deletes write tombstones only), so folding it into the count/
     // hash/hsum here would make the sidecar attest a corpus containing
     // deleted rows. The masked rows are still REWRITTEN (the mask is a
     // global probe-side anti-join until compactLayout reclaims).
-    val (nNew, hNew, sNew) = fingerprint(
-      applyMask(deltaDf, maskOf(spark, dir, s, idCol), idCol), embCol)
+    val (nNew, hNew, sNew) = deltaDf.map(d => fingerprint(
+      applyMask(d, maskOf(spark, dir, s, idCol), idCol), embCol)).getOrElse((0L, 0L, "0"))
     val touched: Set[Int] = tags.flatMap { t =>
       Option(new java.io.File(dir, s"$deltaDirPrefix$t").listFiles())
         .getOrElse(Array.empty)
@@ -996,8 +1060,9 @@ object Ivf {
         val baseTouched =
           if (oldTouched.isEmpty) None
           else Some(baseScanOf(spark, dir, s, Some(touched.toSeq.sorted)))
-        val merged = (baseTouched.toSeq :+ deltaDf
-          .select(baseTouched.getOrElse(deltaDf).columns.map(col).toIndexedSeq: _*))
+        val delta = deltaDf.get // a touched cluster has a delta file
+        val merged = (baseTouched.toSeq :+ delta
+          .select(baseTouched.getOrElse(delta).columns.map(col).toIndexedSeq: _*))
           .reduce(_ unionByName _)
         val building = java.nio.file.Paths.get(dir, s"_building_$foldDirPrefix$vNew")
         graft.io.MutableStore.deleteDir(building)
@@ -1043,7 +1108,9 @@ object Ivf {
     * every delta dir — they share the cluster-partitioned disk
     * layout), and the tombstone anti-join applies to the UNION, so a
     * delete of a delta-appended id is honored ([[deleteFromLayout]]
-    * writes tombstones for delta rows too). */
+    * writes tombstones for delta rows too). Planning starts no Spark
+    * job (every leg read is schema-pinned); the returned frame's jobs
+    * run under the caller's action. */
   def searchLayoutDeltaAware(
       spark: SparkSession,
       layout: Layout,
@@ -1053,16 +1120,18 @@ object Ivf {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val clusters = probeClustersOf(layout.centroids, query, nprobe)
-    pinned(layout.dir) { s =>
-      val base = baseScanOf(spark, layout.dir, s, Some(clusters))
-      val scan = deltaScanOf(spark, layout.dir, s, Some(clusters)) match {
-        case Some(d) =>
-          base.unionByName(d.select(base.columns.map(col).toIndexedSeq: _*))
-        case None => base
+    named(spark, "searchLayoutDeltaAware") {
+      pinned(layout.dir) { s =>
+        val base = baseScanOf(spark, layout.dir, s, Some(clusters))
+        val scan = deltaScanOf(spark, layout.dir, s, Some(clusters)) match {
+          case Some(d) =>
+            base.unionByName(d.select(base.columns.map(col).toIndexedSeq: _*))
+          case None => base
+        }
+        VectorSearch.knnExact(
+          applyMask(scan, maskOf(spark, layout.dir, s, idCol), idCol),
+          query.toSeq, k, idCol, embCol)
       }
-      VectorSearch.knnExact(
-        applyMask(scan, maskOf(spark, layout.dir, s, idCol), idCol),
-        query.toSeq, k, idCol, embCol)
     }
   }
 
@@ -1081,49 +1150,59 @@ object Ivf {
     * idempotent; the fingerprint is never double-xored). Tombstones are
     * written BEFORE the sidecar: a crash in between leaves probes
     * correct and only the reuse check conservative. Returns the number
-    * of newly deleted rows. */
+    * of newly deleted rows.
+    *
+    * Job plan (two Spark jobs, named `deleteFromLayout at Ivf.scala`):
+    * (1) ONE literal-id filtered scan over base ∪ live deltas ∪ mask
+    * legs ([[lookupIds]]) brings the matching rows' ids and embedding
+    * hashes to the driver — ids only, bounded by the request (the
+    * contract of [[graft.index.Hnsw.deleteFromLayout]] and
+    * [[graft.ops.Takedown]]); the driver derives the sidecar's count,
+    * xor and decimal sum ([[graft.io.Artifact.hashAgg]]'s arithmetic)
+    * and the delta-only count from it; (2) the tombstone leg write.
+    * A request that hits no live row writes and commits nothing. */
   def deleteFromLayout(
+      spark: SparkSession,
       layout: Layout,
-      ids: DataFrame,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      tag: String = ""): Long =
-      graft.io.MutableStore.withWriterLock(layout.dir, "deleteFromLayout") {
-    val spark = ids.sparkSession
+      ids: Seq[Long],
+      idCol: String,
+      embCol: String,
+      tag: String): Long =
+      writing(spark, layout.dir, "deleteFromLayout") {
     val dir = layout.dir
     val s = snapOf(dir)
-    val mask = maskOf(spark, dir, s, idCol)
-    val requested = ids.select(col(idCol).cast("long").as(idCol)).distinct()
-    val affected = applyMask(baseScanOf(spark, dir, s, None), mask, idCol)
-      .join(broadcast(requested), Seq(idCol), "left_semi")
-      .localCheckpoint() // one evaluation feeds both the write and the xor
+    val hits = lookupIds(spark, dir, s, ids.distinct, idCol, embCol, data = true)
+    val masked = hits.collect { case (2, id, _) => id }.toSet
+    // every live base copy of a requested id leaves the sidecar
+    val baseHits = hits.filter { case (leg, id, _) => leg == 0 && !masked(id) }
+    val baseIds = baseHits.map(_._2).toSet
     // delta-appended rows are tombstoned too (the streaming-append
     // interplay), but NEVER enter the sidecar arithmetic — the sidecar
     // attests only the base corpus, and delta rows were never added to
-    // it. The overlap exclusion (an id deleted via the base leg must
-    // not re-count here) anti-joins against `affected` — the
-    // batch-bounded requested∩live-in-base set — NOT against all base
-    // ids, which would broadcast a corpus-sized id table at scale.
-    val deltaAffected = deltaScanOf(spark, dir, s, None).map(d =>
-      applyMask(d.join(broadcast(requested), Seq(idCol), "left_semi")
-          .join(broadcast(affected.select(col(idCol))), Seq(idCol), "left_anti"),
-          mask, idCol)
-        .select(col(idCol)).distinct().localCheckpoint())
-    val (nDel, hDel, sDel) = fingerprint(affected, embCol)
-    val nDeltaDel = deltaAffected.map(_.count()).getOrElse(0L)
-    if (nDel + nDeltaDel == 0L) return 0L
+    // it; an id deleted via its base row counts once, there
+    val deltaIds = hits.collect {
+      case (1, id, _) if !masked(id) && !baseIds(id) => id
+    }.toSet
+    val nDel = baseHits.length.toLong
+    if (nDel + deltaIds.size == 0L) return 0L
     // ONE tag-keyed tombstone batch (idempotent overwrite under
     // at-least-once redelivery), live once the committed state names it
     val t = if (tag.nonEmpty) tag else s"auto${System.nanoTime()}"
-    (affected.select(col(idCol)) +: deltaAffected.toSeq)
-      .reduce(_ unionAll _).distinct()
+    val idSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField(idCol, org.apache.spark.sql.types.LongType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        (baseIds ++ deltaIds).toSeq.sorted.map(org.apache.spark.sql.Row(_)), 1), idSchema)
       .write.mode("overwrite")
       .parquet(s"$dir/$tombstoneDirName/$tombTagPrefix$t/ids")
     if (nDel > 0L) {
+      // hashAgg's xor and decimal sum, over the collected per-row hashes
+      val hDel = baseHits.foldLeft(0L)(_ ^ _._3)
+      val sDel = baseHits.foldLeft(java.math.BigInteger.ZERO)((acc, r) =>
+        acc.add(java.math.BigInteger.valueOf(r._3)))
       val sidecar = java.nio.file.Paths.get(dir, centroidFile)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val node = mapper.readTree(java.nio.file.Files.readString(sidecar))
-      val hsum = storedHsum(node).subtract(new java.math.BigInteger(sDel))
+      val hsum = storedHsum(node).subtract(sDel)
       graft.io.Artifact.writeAtomic(sidecar,
         s"""{"count":${node.get("count").asLong() - nDel},"hash":${node.get("hash").asLong() ^ hDel},"hsum":"$hsum","centroids":${node.get("centroids").toString}}""")
     }
@@ -1131,8 +1210,18 @@ object Ivf {
     if (!s.deadTombs.contains(t))
       graft.io.MutableStore.commitLiveLists(dir,
         s.live, (s.tombTags :+ t).distinct.sorted)
-    nDel + nDeltaDel
+    nDel + deltaIds.size
   }
+
+  /** [[deleteFromLayout]] for ids held in a DataFrame: collects the
+    * non-null ids (a request-sized victim list) and delegates. */
+  def deleteFromLayout(
+      layout: Layout,
+      ids: DataFrame,
+      idCol: String = "vec_id",
+      embCol: String = "embedding",
+      tag: String = ""): Long =
+    deleteFromLayout(ids.sparkSession, layout, idsOf(ids, idCol), idCol, embCol, tag)
 
   /** Physically remove tombstoned rows once they exceed
     * `maxTombstoneFraction` of the layout — the RECLAIM leg, now

@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Shared machinery of the MUTABLE-STORE protocol — the tombstone +
   * versioned-atomic-compaction shape every incremental store in this
@@ -946,5 +947,58 @@ private[graft] object MutableStore {
       vs.sorted.foreach(arr.add)
     }
     Artifact.writeAtomic(path, node.toString)
+  }
+
+  /** Runs `body` with the Spark jobs it starts named `site` (e.g.
+    * `appendDelta at Ivf.scala` — the call site the UI, the event log
+    * and job listeners show), then restores the caller's call site.
+    * Inside a foreachBatch sink every job otherwise reads as the
+    * stream's `start` call. */
+  def withCallSite[A](spark: SparkSession, site: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val keys = Seq("callSite.short", "callSite.long")
+    val saved = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, site))
+    try body finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  /** First parquet data file of a leg directory, descending into its
+    * `k=v` partition dirs (name order); None when the leg holds none —
+    * an empty partitioned write leaves only `_SUCCESS`. */
+  def sampleDataFile(dir: String): Option[String] = {
+    def walk(d: java.io.File): Option[java.io.File] = {
+      val kids = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .sortBy(_.getName)
+      kids.find(f => f.isFile && f.getName.endsWith(".parquet")).orElse(
+        kids.iterator.filter(f => f.isDirectory && f.getName.contains("="))
+          .flatMap(walk).nextOption())
+    }
+    walk(new java.io.File(dir)).map(_.getPath)
+  }
+
+  /** A parquet read planned with the schema Spark's non-merging
+    * inference would pick: the footer of ONE data file (`sample`),
+    * read here on the driver. Inference reads exactly one footer too,
+    * but as a Spark job per read. `partitions` are the
+    * directory-encoded columns, which discovery appends after the file
+    * columns. Nothing is cached beyond the call. */
+  def readParquetPinned(
+      spark: SparkSession, paths: Seq[String], sample: String,
+      partitions: Seq[StructField] = Seq.empty,
+      basePath: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(sample)
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    // inference's own per-file step: the stored Spark schema, else the
+    // converted parquet one
+    val fileSchema = ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    val reader = spark.read.schema(StructType(fileSchema.fields ++ partitions))
+    basePath.fold(reader)(reader.option("basePath", _)).parquet(paths: _*)
   }
 }

@@ -733,7 +733,20 @@ object StreamingIngest {
     * the not-tombstoned guard). Deletes of ids absent from the layout
     * are ignored (delete is idempotent). Re-adding an id deleted by
     * an EARLIER batch fails loudly via the append guard — the
-    * supported revival path is compactLayout, then re-add. */
+    * supported revival path is compactLayout, then re-add. Rows with a
+    * null `vec_id` are dropped: they cannot be addressed by id.
+    *
+    * Per-batch job plan (a fixed budget, independent of the layout's
+    * leg count): the pinned batch is read ONCE to bring each op's ids
+    * to the driver — ids only, bounded by the micro-batch, the
+    * contract the HNSW sink and [[graft.ops.Takedown]] already use;
+    * the net-out and the emptiness checks are then driver-side set
+    * arithmetic and literal `isin` filters. [[graft.index.Ivf.appendDelta]]
+    * adds at most three jobs (materialize + ids, mask guard, write) and
+    * [[graft.index.Ivf.deleteFromLayout]] two (one id lookup, the
+    * tombstone write); every leg read is schema-pinned, so no read
+    * starts a schema-inference job. A compacting batch adds the fold
+    * ([[graft.index.Ivf.compactDeltas]]) on top. */
   def streamingIvfMutations(
       stream: DataFrame,
       layoutDir: String,
@@ -751,25 +764,30 @@ object StreamingIngest {
             graft.index.Ivf.baseBytes(layout), compactBytesRatio))
           graft.index.Ivf.compactDeltas(batch.sparkSession, layout, embCol,
             excludeTags = Set(tag))
-        val (b, present) = pinBatch(batch)
-        val dels = b.filter(col("op") === "del").select("vec_id")
-        // adds keep the batch's FULL row schema minus op (the layout's
-        // delta rows must carry every base column — label etc. — for
-        // the positional base ∪ delta union)
-        val adds = b.filter(col("op") === "add").drop("op")
-          .join(broadcast(dels), Seq("vec_id"), "left_anti") // net out same-batch pairs
+        val b = batch.persist()
         try {
-        // NOT present("add"): same-batch add+delete pairs net out in the
-        // anti-join, and a fully-netted batch must not commit an empty
-        // delta leg — the emptiness check reads the pinned batch, so it
-        // is a cache-local job either way
-        if (present("add") && !adds.isEmpty)
-          graft.index.Ivf.appendDelta(layout, adds, tag, embCol)
-        if (present("del"))
-          // batch-keyed tombstone tag: an at-least-once redelivery
-          // OVERWRITES its own batch dir (and the already-masked ids
-          // filter to an empty affected set — no double-xor either way)
-          graft.index.Ivf.deleteFromLayout(layout, dels, tag = s"${tag}_del")
+          val ops = b.filter(col("op").isin("add", "del") && col("vec_id").isNotNull)
+            .select(col("op"), col("vec_id").cast("long")).collect()
+          def opIds(op: String) = ops.collect { case r if r.getString(0) == op => r.getLong(1) }
+          val addIds = opIds("add")
+          val delIds = opIds("del").distinct.toSeq
+          // same-batch add+delete pairs net out before anything lands
+          val netted = addIds.toSet.intersect(delIds.toSet)
+          if (addIds.exists(!netted(_))) {
+            // adds keep the batch's FULL row schema minus op (the layout's
+            // delta rows must carry every base column — label etc. — for
+            // the positional base ∪ delta union)
+            val adds = b.filter(col("op") === "add" && col("vec_id").isNotNull).drop("op")
+            graft.index.Ivf.appendDelta(layout,
+              if (netted.isEmpty) adds else adds.filter(!col("vec_id").isin(netted.toSeq: _*)),
+              tag, embCol)
+          }
+          if (delIds.nonEmpty)
+            // batch-keyed tombstone tag: an at-least-once redelivery
+            // OVERWRITES its own batch dir (and the already-masked ids
+            // filter to an empty affected set — no double-xor either way)
+            graft.index.Ivf.deleteFromLayout(batch.sparkSession, layout, delIds,
+              "vec_id", embCol, s"${tag}_del")
         } finally batch.unpersist()
         ()
       }

@@ -82,6 +82,39 @@ class IvfStreamAppendSpec extends AnyFunSuite {
       s"batch results must equal per-query delta-aware singles\nbatch  $got\nsingle $singles")
   }
 
+  test("an empty append commits nothing: the delta count holds, probe and fold keep working") {
+    val layout = freshLayout("ivfempty")
+    Ivf.appendDelta(layout,
+      Seq((901L, Seq(0.02f, 0.04f))).toDF("vec_id", "embedding"), "t_b0")
+    val before = Ivf.deltaDirCount(layout)
+    assert(Ivf.appendDelta(layout,
+      Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"), "t_b1") == 0L)
+    assert(Ivf.deltaDirCount(layout) == before,
+      "an empty batch must not commit a delta leg")
+    def probe(): Set[Long] = Ivf.searchLayoutDeltaAware(
+        spark, layout, Array(0.0f, 0.0f), k = 6, nprobe = 1)
+      .select("vec_id").as[Long].collect().toSet
+    assert(probe().contains(901L))
+    assert(Ivf.compactDeltas(spark, layout) == 1)
+    assert(probe().contains(901L), "the fold must keep serving the appended row")
+  }
+
+  test("schema-pinned leg reads plan the schema Spark infers") {
+    val layout = freshLayout("ivfschema")
+    Ivf.appendDelta(layout,
+      Seq((911L, Seq(0.02f, 0.04f))).toDF("vec_id", "embedding"), "t_b0")
+    Ivf.deleteFromLayout(layout, Seq(1L).toDF("vec_id"))
+    // legacy root base, a delta leg and a mask leg
+    assert(Ivf.layoutRows(spark, layout).schema == spark.read.parquet(layout.dir).schema)
+    assert(Ivf.deltaRows(spark, layout).get.schema ==
+      spark.read.parquet(s"${layout.dir}/_delta_t_b0").schema)
+    // manifest base after a fold
+    Ivf.compactDeltas(spark, layout)
+    assert(Ivf.layoutRows(spark, layout).schema == spark.read.parquet(layout.dir).schema)
+    assert(Ivf.layoutRows(spark, layout).select("vec_id").as[Long].collect().toSet ==
+      Set(2L, 3L, 4L, 5L, 6L, 911L))
+  }
+
   test("delta_<tag> retry idempotency: redelivering a batch rewrites, never doubles") {
     val layout = freshLayout("ivfretry")
     val rows = Seq((201L, Seq(0.03f, 0.03f)), (202L, Seq(0.04f, 0.02f)))
