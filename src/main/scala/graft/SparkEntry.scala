@@ -1836,33 +1836,8 @@ object SparkEntry {
   private val scratchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      // Files.walk holds directory fds — close even when a delete throws
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-
   private val scratchCleanupHook =
-    sys.addShutdownHook(scratchDirs.values.forEach(deleteRecursively(_)))
-
-  /** Copy a build-once artifact directory into a per-run scratch copy
-    * (for queries that MUTATE their store — the streaming incremental
-    * legs append to it, so each run works on its own copy while the
-    * tmpdir original stays the pristine seed). */
-  private def copyRecursively(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(src)
-    try walk.forEach { p =>
-      val target = dst.resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(target)
-      else java.nio.file.Files.copy(p, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    finally walk.close()
-  }
+    sys.addShutdownHook(scratchDirs.values.forEach(graft.io.MutableStore.deleteDir(_)))
 
   /** Stable per-dataset key for artifacts shared across processes in
     * java.io.tmpdir: md5 of the FULL dir path — String.hashCode can
@@ -1882,7 +1857,7 @@ object SparkEntry {
   private def scratchDir(tag: String): String = {
     val fresh = java.nio.file.Files.createTempDirectory(s"graft_$tag")
     val prev = scratchDirs.put(tag, fresh)
-    if (prev != null) deleteRecursively(prev)
+    if (prev != null) graft.io.MutableStore.deleteDir(prev)
     fresh.toString
   }
 
@@ -2030,9 +2005,10 @@ object SparkEntry {
     s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${variant}_$key"
   }
 
-  /** Recursive file copy (test/bench plumbing for the append query: the
-    * cached base layout stays pristine; each invocation appends into a
-    * throwaway copy). */
+  /** Recursive file copy of a build-once artifact directory into a
+    * per-run scratch copy (for queries that MUTATE their store — the
+    * streaming legs append to it, so each run works on its own copy
+    * while the cached original stays the pristine seed). */
   private def copyDir(src: String, dst: String): Unit = {
     val s = java.nio.file.Paths.get(src)
     val d = java.nio.file.Paths.get(dst)
@@ -3124,8 +3100,7 @@ object SparkEntry {
         graft.multimodal.Multimodal.dHash(imgs.filter(_.media_id < 50)).toDF()
           .select(col("media_id"), col("dhash").as("sig")),
         seedDir)
-      copyRecursively(java.nio.file.Paths.get(seedDir),
-        java.nio.file.Paths.get(storeDir))
+      copyDir(seedDir, storeDir)
       // the media corpus as ONE parquet file → one deterministic
       // micro-batch (the stream_incremental replay discipline)
       val mediaPath = s"$scratch/media"
@@ -7643,8 +7618,7 @@ object SparkEntry {
       val cust = tbl(s, dir, "customer")
       graft.ops.FuzzyJoin.ensureFuzzyStore(s,
         cust.filter(col("c_custkey") % 3 === 0), seedDir, "c_custkey", "c_name")
-      copyRecursively(java.nio.file.Paths.get(seedDir),
-        java.nio.file.Paths.get(storeDir))
+      copyDir(seedDir, storeDir)
       val slice = cust.filter(col("c_custkey") % 7 === 0)
         .select(col("c_custkey"), col("c_name"))
       val inDir = s"$scratch/in"
@@ -7675,8 +7649,7 @@ object SparkEntry {
         s"${System.getProperty("java.io.tmpdir")}/graft_seedhash_${dirKey(dir)}"
       graft.dedup.Dedup.ensureHashStore(
         s, docs(s, dir).filter(col("doc_id") % 3 === 0), seedDir)
-      copyRecursively(java.nio.file.Paths.get(seedDir),
-        java.nio.file.Paths.get(storeDir))
+      copyDir(seedDir, storeDir)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -7712,8 +7685,7 @@ object SparkEntry {
         s"${System.getProperty("java.io.tmpdir")}/graft_seedshingle_${dirKey(dir)}"
       graft.dedup.Dedup.ensureShingleStore(
         s, docs(s, dir).filter(col("doc_id") % 3 === 0), seedDir)
-      copyRecursively(java.nio.file.Paths.get(seedDir),
-        java.nio.file.Paths.get(storeDir))
+      copyDir(seedDir, storeDir)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)

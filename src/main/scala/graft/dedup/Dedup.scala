@@ -82,8 +82,6 @@ object Dedup {
   private def storeState(dir: String) = graft.io.MutableStore.state(dir)
   private def storeTombRoot(dir: String) = graft.io.MutableStore.tombRoot(dir)
   private def liveStoreTombs(dir: String) = graft.io.MutableStore.liveTombs(dir)
-  private def deleteStoreDir(p: java.nio.file.Path): Unit =
-    graft.io.MutableStore.deleteDir(p)
 
   /** Live delta tags of the hash store — the COMMITTED live list when
     * the state carries one (the snapshot contract), else the legacy
@@ -358,7 +356,7 @@ object Dedup {
     val survivors = read(excludeTags)
     val newDir = s"$dir/base_v$vNew"
     val building = java.nio.file.Paths.get(s"$dir/_building_base_v$vNew")
-    deleteStoreDir(building)
+    graft.io.MutableStore.deleteDir(building)
     survivors.write.mode("overwrite").parquet(building.toString)
     java.nio.file.Files.move(building, java.nio.file.Paths.get(newDir))
     // ---- COMMIT (no GC after it — lagged to the next compaction) ----
@@ -376,9 +374,6 @@ object Dedup {
           st.v, hashStoreDeltaTagsOf(dir, st), tombs.map(_.tag))))
   }
 
-  /** Drop every delta and tombstone dir — the replay-reset helper
-    * mirroring [[graft.text.InvertedIndex.dropMutations]] (the base
-    * snapshot and its seed sidecar are untouched). */
   /** Policy feeds for the streaming auto-compaction (count + the
     * size-ratio trigger every streaming leg uses). */
   def hashStoreDeltaCount(dir: String): Int = hashStoreDeltaTags(dir).size
@@ -387,11 +382,14 @@ object Dedup {
   def hashStoreDeltaBytes(dir: String): Long =
     graft.io.MutableStore.flatDeltaBytes(dir, hashStoreDeltaTags(dir))
 
+  /** Drop every delta and tombstone dir — the replay-reset helper
+    * mirroring [[graft.text.InvertedIndex.dropMutations]] (the base
+    * snapshot and its seed sidecar are untouched). */
   def dropHashStoreMutations(dir: String): Unit =
       graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
     hashStoreDeltaTags(dir).foreach(t =>
-      deleteStoreDir(java.nio.file.Paths.get(dir, s"delta_$t")))
-    deleteStoreDir(java.nio.file.Paths.get(storeTombRoot(dir)))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, s"delta_$t")))
+    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(storeTombRoot(dir)))
     // the committed state must agree with the wiped disk
     graft.io.MutableStore.patchStringArrays(
       java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName),
@@ -698,7 +696,7 @@ object Dedup {
     gcShinglePrior(dir, st, protectedRefs)
     Seq("sh", "sizes").foreach { part =>
       val building = java.nio.file.Paths.get(s"$dir/_building_${part}_v$vNew")
-      deleteStoreDir(building)
+      graft.io.MutableStore.deleteDir(building)
       readShinglePart(spark, dir, part, excludeTags)
         .write.mode("overwrite").parquet(building.toString)
       java.nio.file.Files.move(building,
@@ -742,7 +740,7 @@ object Dedup {
             (nm.matches("(sh|sizes)_v\\d+") &&
               !keepVs.contains(nm.replaceAll("^[a-z]+_v", "").toInt))
         }
-        .toSeq.foreach(deleteStoreDir)
+        .toSeq.foreach(graft.io.MutableStore.deleteDir)
     } finally gc.close()
     if (st.v > 0 && !protectedRefs.exists(_.v == 0)) Seq("sh", "sizes").foreach { part =>
       // legacy base FILES go; still-live delta subdirs stay
@@ -753,16 +751,16 @@ object Dedup {
           import scala.jdk.CollectionConverters._
           ls.iterator().asScala
             .filter(!_.getFileName.toString.startsWith("delta_"))
-            .toSeq.foreach(deleteStoreDir)
+            .toSeq.foreach(graft.io.MutableStore.deleteDir)
         } finally ls.close()
       }
     }
     st.folded.filterNot(keepDelta).foreach { t =>
-      deleteStoreDir(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
-      deleteStoreDir(java.nio.file.Paths.get(dir, "sizes", s"delta_$t"))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sizes", s"delta_$t"))
     }
     st.deadTombs.filterNot(keepTombs).foreach(t =>
-      deleteStoreDir(java.nio.file.Paths.get(storeTombRoot(dir), t)))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(storeTombRoot(dir), t)))
   }
 
   /** Standalone snapshot expiry for the HASH-layout stores (exact/
@@ -783,8 +781,6 @@ object Dedup {
       prot => gcShinglePrior(dir, st, prot))
   }
 
-  /** Replay-reset: drop every delta and tombstone dir of the shingle
-    * store (base snapshot + seed sidecar untouched). */
   /** Policy feeds for the streaming auto-compaction of the shingle
     * store (both parts; delta dirs live INSIDE the part dirs). */
   def shingleStoreDeltaCount(dir: String): Int = shingleStoreDeltaTags(dir).size
@@ -804,13 +800,15 @@ object Dedup {
     shingleStoreDeltaTags(dir).map(t => graft.io.MutableStore.duBytes(
       java.nio.file.Paths.get(dir, part, s"delta_$t"))).sum
 
+  /** Replay-reset: drop every delta and tombstone dir of the shingle
+    * store (base snapshot + seed sidecar untouched). */
   def dropShingleStoreMutations(dir: String): Unit =
       graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
     shingleStoreDeltaTags(dir).foreach { t =>
-      deleteStoreDir(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
-      deleteStoreDir(java.nio.file.Paths.get(dir, "sizes", s"delta_$t"))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sizes", s"delta_$t"))
     }
-    deleteStoreDir(java.nio.file.Paths.get(storeTombRoot(dir)))
+    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(storeTombRoot(dir)))
     graft.io.MutableStore.patchStringArrays(
       java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName),
       "live" -> Seq.empty, "liveTombs" -> Seq.empty)

@@ -190,14 +190,6 @@ object Binary {
     } finally s.close()
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(p)) return
-    val walk = java.nio.file.Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
-  }
-
   /** One committed-state snapshot (single sidecar read) — the
     * [[graft.index.Sq]] snapshot contract applied to the (delta-less)
     * signature store: base version + live tombstone tags resolve
@@ -270,7 +262,7 @@ object Binary {
         .write.mode("overwrite").parquet(s"$dir/sigs")
       // a rebuild means the corpus changed — stale versions/tombstones go
       listDirs(dir).filter(n => n.startsWith("sigs_v") || n.startsWith("tomb_"))
-        .foreach(n => deleteRecursively(java.nio.file.Paths.get(dir, n)))
+        .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
     }
   }
 
@@ -280,7 +272,7 @@ object Binary {
   def dropMutations(dir: String): Unit =
       graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
     listDirs(dir).filter(_.startsWith("tomb_"))
-      .foreach(n => deleteRecursively(java.nio.file.Paths.get(dir, n)))
+      .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
     graft.io.MutableStore.patchStringArrays(
       java.nio.file.Paths.get(dir, sigSidecar),
       "liveTombs" -> Seq.empty, "deadTombs" -> Seq.empty)
@@ -372,12 +364,12 @@ object Binary {
     val keepTombs = s.tombTags.toSet ++ protectedRefs.flatMap(_.tombs)
     listDirs(dir).foreach { n =>
       val p = java.nio.file.Paths.get(dir, n)
-      if (n.startsWith("_building_")) deleteRecursively(p)
+      if (n.startsWith("_building_")) graft.io.MutableStore.deleteDir(p)
       else if ((n.matches("sigs_v\\d+") || n == "sigs") && !keepBases.contains(n))
-        deleteRecursively(p)
+        graft.io.MutableStore.deleteDir(p)
       else if (n.startsWith("tomb_") && s.dead.contains(n.stripPrefix("tomb_")) &&
           !keepTombs.contains(n.stripPrefix("tomb_")))
-        deleteRecursively(p)
+        graft.io.MutableStore.deleteDir(p)
     }
   }
 
@@ -423,7 +415,7 @@ object Binary {
     }
     val survivors = liveSignatures(spark, dir, idCol)
     val building = java.nio.file.Paths.get(dir, s"_building_sigs_v$vNew")
-    deleteRecursively(building)
+    graft.io.MutableStore.deleteDir(building)
     survivors.write.mode("overwrite").parquet(building.toString)
     java.nio.file.Files.move(building,
       java.nio.file.Paths.get(dir, s"sigs_v$vNew"))

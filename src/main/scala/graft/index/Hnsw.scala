@@ -483,14 +483,6 @@ object Hnsw {
       .collect().map(_.getLong(0)).toSet
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(p)) return
-    val walk = java.nio.file.Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
-  }
-
   /** Persist the layout behind the shared fingerprint sidecar
     * ([[graft.io.Artifact]]): content hash of (id, embedding) + the
     * structural params. One parquet file per shard
@@ -525,7 +517,7 @@ object Hnsw {
               nm == tombstoneDirName || nm.startsWith(deltaDirPrefix) ||
                 nm.matches("layout_v\\d+")
             }
-            .toSeq.foreach(deleteRecursively)
+            .toSeq.foreach(graft.io.MutableStore.deleteDir)
         } finally s.close()
       }
       build(df, p, idCol, embCol)
@@ -712,17 +704,6 @@ object Hnsw {
     * in the current base version. */
   def deltaTags(dir: String): Seq[String] = snapOf(dir).live
 
-  private def duBytes(path: java.nio.file.Path): Long = {
-    if (!java.nio.file.Files.exists(path)) return 0L
-    val walk = java.nio.file.Files.walk(path)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size(_)).sum
-    } finally walk.close()
-  }
-
   /** Bytes of the live delta graph dirs / of the base shards — the
     * size-ratio compaction policy's inputs (fold when deltas reach a
     * fixed fraction of the base, so each canonical-rebuild fold costs
@@ -730,10 +711,11 @@ object Hnsw {
     * every fixed number of micro-batches). */
   def deltaBytes(dir: String): Long =
     deltaTags(dir)
-      .map(t => duBytes(java.nio.file.Paths.get(dir, s"$deltaDirPrefix$t"))).sum
+      .map(t => graft.io.MutableStore.duBytes(java.nio.file.Paths.get(dir, s"$deltaDirPrefix$t")))
+      .sum
 
   def baseBytes(dir: String): Long =
-    duBytes(java.nio.file.Paths.get(layoutPath(dir)))
+    graft.io.MutableStore.duBytes(java.nio.file.Paths.get(layoutPath(dir)))
 
   /** Probe base AND every delta graph, merge ≤ (1+deltas)·parts·k
     * candidates in one TakeOrdered. Deltas are immutable once written,
@@ -835,7 +817,7 @@ object Hnsw {
     // COMMIT below is one atomic sidecar replace (the engine-wide
     // versioned-swap protocol)
     val building = java.nio.file.Paths.get(dir, s"_building_layout_v$vNew")
-    deleteRecursively(building)
+    graft.io.MutableStore.deleteDir(building)
     build(union, p).repartition(p.parts, col("part"))
       .write.mode("overwrite").partitionBy("part").parquet(building.toString)
     writePartCounts(spark, building.toString)
@@ -902,17 +884,17 @@ object Hnsw {
     } finally ls.close()
     names.foreach { nm =>
       val pth = java.nio.file.Paths.get(dir, nm)
-      if (nm.startsWith("_building_")) deleteRecursively(pth)
+      if (nm.startsWith("_building_")) graft.io.MutableStore.deleteDir(pth)
       else if ((nm.matches("layout_v\\d+") || nm == "layout") && !keepBases.contains(nm))
-        deleteRecursively(pth)
+        graft.io.MutableStore.deleteDir(pth)
       else if (nm.startsWith(deltaDirPrefix) &&
           s.folded.contains(nm.stripPrefix(deltaDirPrefix)) &&
           !keepDelta.contains(nm.stripPrefix(deltaDirPrefix)))
-        deleteRecursively(pth)
+        graft.io.MutableStore.deleteDir(pth)
     }
     if (s.tombCommitted) {
       listedTombTags(dir).filterNot(keepTombs).foreach(t =>
-        deleteRecursively(java.nio.file.Paths.get(dir, tombstoneDirName, s"del_$t")))
+        graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, tombstoneDirName, s"del_$t")))
     }
   }
 

@@ -947,25 +947,21 @@ object Ivf {
     * until retention GC and must not count). */
   def deltaDirCount(layout: Layout): Int = snapOf(layout.dir).live.size
 
-  private def duBytesOf(f: java.io.File): Long =
-    if (!f.exists()) 0L
-    else if (f.isFile) f.length()
-    else Option(f.listFiles()).getOrElse(Array.empty).map(duBytesOf).sum
-
   /** Bytes of the live delta dirs / of the base inverted lists — the
     * size-ratio compaction policy's inputs (IVF's fold is O(delta)
     * file moves either way; the ratio trigger just amortizes the
     * per-fold fixed cost over proportionally more appended bytes). */
   def deltaBytes(layout: Layout): Long =
     snapOf(layout.dir).live
-      .map(t => duBytesOf(new java.io.File(layout.dir, s"$deltaDirPrefix$t")))
+      .map(t => graft.io.MutableStore.duBytes(
+        java.nio.file.Paths.get(layout.dir, s"$deltaDirPrefix$t")))
       .sum
 
   def baseBytes(layout: Layout): Long = snapOf(layout.dir).manifestV match {
     case None =>
       Option(new java.io.File(layout.dir).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(duBytesOf).sum
+        .map(f => graft.io.MutableStore.duBytes(f.toPath)).sum
     case Some(mv) =>
       readManifest(layout.dir, mv).files
         .map(f => new java.io.File(layout.dir, f).length()).sum

@@ -461,7 +461,7 @@ object Sq {
       // `codes` dir matches none of these prefixes)
       Seq("codes_v", "delta_", "tomb_").foreach { prefix =>
         listDirs(dir).filter(_.startsWith(prefix))
-          .foreach(n => deleteRecursively(java.nio.file.Paths.get(dir, n)))
+          .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
       }
     }
   }
@@ -476,14 +476,6 @@ object Sq {
         .filter(java.nio.file.Files.isDirectory(_))
         .map(_.getFileName.toString).toSeq
     } finally s.close()
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(p)) return
-    val walk = java.nio.file.Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
   }
 
   /** The persisted artifact's quantization model (dim rows). */
@@ -586,7 +578,7 @@ object Sq {
   def dropMutations(dir: String): Unit =
       graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
     listDirs(dir).filter(n => n.startsWith("delta_") || n.startsWith("tomb_"))
-      .foreach(n => deleteRecursively(java.nio.file.Paths.get(dir, n)))
+      .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
     // the committed state must agree with the wiped disk (folded/dead
     // debris went with the rest; GC at the next compaction sees none)
     graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
@@ -634,21 +626,11 @@ object Sq {
   }
 
   /** Base/delta byte sizes for the size-ratio compaction policy. */
-  def baseBytes(dir: String): Long = duBytes(codesPath(dir))
+  def baseBytes(dir: String): Long =
+    graft.io.MutableStore.duBytes(java.nio.file.Paths.get(codesPath(dir)))
   def deltaBytes(dir: String): Long =
-    deltaTags(dir).map(t => duBytes(s"$dir/delta_$t")).sum
-
-  private def duBytes(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return 0L
-    val walk = java.nio.file.Files.walk(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size(_)).sum
-    } finally walk.close()
-  }
+    deltaTags(dir).map(t =>
+      graft.io.MutableStore.duBytes(java.nio.file.Paths.get(dir, s"delta_$t"))).sum
 
   /** Append a batch of new vectors ENCODED UNDER THE PERSISTED MODEL
     * (the FAISS trained-index contract: adding vectors never retrains
@@ -699,15 +681,15 @@ object Sq {
     val keepTombs = s.tombs.map(_.tag).toSet ++ protectedRefs.flatMap(_.tombs)
     listDirs(dir).foreach { n =>
       val p = java.nio.file.Paths.get(dir, n)
-      if (n.startsWith("_building_")) deleteRecursively(p)
+      if (n.startsWith("_building_")) graft.io.MutableStore.deleteDir(p)
       else if ((n.matches("codes_v\\d+") || n == "codes") && !keepBases.contains(n))
-        deleteRecursively(p)
+        graft.io.MutableStore.deleteDir(p)
       else if (n.startsWith("delta_") && s.folded.contains(n.stripPrefix("delta_")) &&
           !keepDelta.contains(n.stripPrefix("delta_")))
-        deleteRecursively(p)
+        graft.io.MutableStore.deleteDir(p)
       else if (n.startsWith("tomb_") && s.dead.contains(n.stripPrefix("tomb_")) &&
           !keepTombs.contains(n.stripPrefix("tomb_")))
-        deleteRecursively(p)
+        graft.io.MutableStore.deleteDir(p)
     }
   }
 
@@ -786,7 +768,7 @@ object Sq {
           maskFor(spark, dir, tombs, t, idCol), idCol))
       ).reduce(_ unionAll _)
     val building = java.nio.file.Paths.get(dir, s"_building_codes_v$vNew")
-    deleteRecursively(building)
+    graft.io.MutableStore.deleteDir(building)
     union.write.mode("overwrite").parquet(building.toString)
     java.nio.file.Files.move(building,
       java.nio.file.Paths.get(dir, s"codes_v$vNew"))

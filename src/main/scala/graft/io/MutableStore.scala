@@ -353,9 +353,11 @@ private[graft] object MutableStore {
       regexp_extract(input_file_name(), "/delta_([^/]+)/", 1))
       .otherwise(lit("base"))
 
+  /** Recursive delete of a store dir or file; an absent path is a no-op. */
   def deleteDir(p: java.nio.file.Path): Unit = {
     if (!java.nio.file.Files.exists(p)) return
     val walk = java.nio.file.Files.walk(p)
+    // Files.walk holds directory fds — close even when a delete throws
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
       .forEach(f => java.nio.file.Files.deleteIfExists(f))
     finally walk.close()

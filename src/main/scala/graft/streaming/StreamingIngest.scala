@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.index.Ann
-import graft.text.TextAnalysis
+import graft.dedup.Dedup
+import graft.index.{Ann, Hnsw, Ivf, Sq}
+import graft.ops.FuzzyJoin
+import graft.text.{InvertedIndex, TextAnalysis}
 
 /** Structured-Streaming extensions (SURVEY §7.2 item 7).
   *
@@ -34,6 +36,21 @@ object StreamingIngest {
   private def pipelineTag(checkpoint: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+
+  /** The one lifecycle of every batch-tagged sink: a checkpointed
+    * `AvailableNow` foreachBatch query whose `body` gets each
+    * micro-batch with its tag `<pipeline>_b<batchId>` — the key every
+    * store delta, tombstone and sink subdir is written under, so an
+    * at-least-once redelivery overwrites its own outputs. */
+  private def taggedSink(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, String) => Unit): StreamingQuery = {
+    val pipeline = pipelineTag(checkpoint)
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => body(batch, s"${pipeline}_b$batchId") }
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
 
   /** Continuous append ingest into the parquet-backed vector store. */
   def ingest(stream: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
@@ -172,17 +189,10 @@ object StreamingIngest {
       storeDir: String,
       sinkDir: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        graft.dedup.Dedup
-          .incrementalDedupBatch(batch.sparkSession, storeDir, batch,
-            batchTag = Some(tag))
-          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      Dedup.incrementalDedupBatch(batch.sparkSession, storeDir, batch, batchTag = Some(tag))
+        .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 
   /** Streaming TOKENIZATION through the persisted tokenizer artifact —
     * the crawl loop's last mile: every micro-batch of new documents
@@ -205,16 +215,10 @@ object StreamingIngest {
       sinkDir: String,
       checkpoint: String,
       marker: Boolean = true): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        graft.text.Unigram
-          .tokenIdsByteFallback(batch, vocabCounts, marker = marker)
-          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      graft.text.Unigram.tokenIdsByteFallback(batch, vocabCounts, marker = marker)
+        .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 
   /** STORE-backed streaming incremental NEAR-dup — the
     * [[streamingIncrementalDedup]] shape for the near-duplicate leg of
@@ -233,18 +237,11 @@ object StreamingIngest {
       checkpoint: String,
       maxJaccardDist: Double = 0.5,
       shingleN: Int = 3): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        graft.dedup.Dedup
-          .incrementalNearDupBatch(batch.sparkSession, storeDir, batch,
-            batchTag = tag, maxJaccardDist = maxJaccardDist,
-            shingleN = shingleN)
-          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      Dedup.incrementalNearDupBatch(batch.sparkSession, storeDir, batch,
+          batchTag = tag, maxJaccardDist = maxJaccardDist, shingleN = shingleN)
+        .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 
   /** Streaming fuzzy ENTITY RESOLUTION against the persisted FastSS
     * posting store ([[graft.ops.FuzzyJoin.ensureFuzzyStore]]) — the
@@ -264,17 +261,11 @@ object StreamingIngest {
       idCol: String,
       nameCol: String,
       maxDist: Int = 1): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        graft.ops.FuzzyJoin
-          .incrementalFuzzyResolveBatch(batch.sparkSession, storeDir, batch,
-            idCol, nameCol, maxDist, batchTag = Some(tag))
-          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      FuzzyJoin.incrementalFuzzyResolveBatch(batch.sparkSession, storeDir, batch,
+          idCol, nameCol, maxDist, batchTag = Some(tag))
+        .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 
   /** Streaming classifier SCORING through the persisted LR model —
     * the quality-gate leg of the crawl loop: every micro-batch of new
@@ -293,19 +284,131 @@ object StreamingIngest {
       sinkDir: String,
       checkpoint: String,
       labelLang: String = "en"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        graft.text.LogReg.scores(
-            graft.text.LogReg.features(batch, vocab,
-              org.apache.spark.sql.functions.col("lang") === labelLang),
-            weightsMicro)
-          .select("doc_id", "score_micro", "pred")
-          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      graft.text.LogReg.scores(
+          graft.text.LogReg.features(batch, vocab, col("lang") === labelLang),
+          weightsMicro)
+        .select("doc_id", "score_micro", "pred")
+        .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
+
+  /** STORE-backed streaming PERCEPTUAL media dedup — the crawl loop's
+    * multimodal leg, completing the incremental set (exact-dup,
+    * near-dup, ANN, tokenize): every micro-batch of media rows
+    * signatures on the executors (image dHash over the real raster
+    * bytes — non-image rows drop with the signature), Hamming-probes
+    * the persisted signature store through the banded join (complete
+    * for the threshold, never all-pairs), and appends its NOVEL
+    * signatures as a batch-keyed overwrite delta
+    * ([[graft.dedup.Dedup.incrementalSigDedupBatch]]). Durable dedup
+    * memory is 16 bytes per seen image regardless of media size —
+    * the raster bytes never persist and never shuffle; executor state
+    * is ZERO. At-least-once redelivery rewrites the same delta and
+    * sink subdir (batch-id-keyed overwrites). Read the sink with
+    * `recursiveFileLookup`. */
+  def streamingMediaDedup(
+      stream: DataFrame,
+      storeDir: String,
+      sinkDir: String,
+      checkpoint: String,
+      maxHamming: Int = 3): StreamingQuery =
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val sigs = graft.multimodal.Multimodal
+        .dHash(batch.as[graft.multimodal.Multimodal.MediaRecord]).toDF()
+        .select(col("media_id"), col("dhash").as("sig"))
+      Dedup.incrementalSigDedupBatch(spark, storeDir, sigs, tag, maxHamming)
+        .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
+
+  /** The SIZE-RATIO compaction policy shared by every store family with
+    * delta legs: fold when the live deltas have grown to `ratio` ×
+    * base bytes — each fold's IO is then PROPORTIONAL to the delta
+    * bytes it folds (the base it rewrites is at most deltas/ratio), so
+    * total compaction IO stays linear in stream length, where a pure
+    * count trigger makes it quadratic (an O(base) rewrite every fixed
+    * number of micro-batches) — OR when the delta-dir count reaches
+    * `maxDeltaDirs`, the probe fan-out bound (many tiny deltas cost
+    * probe latency even when their bytes are negligible). */
+  private def shouldCompact(deltaCount: Int, maxDeltaDirs: Int,
+      deltaBytes: => Long, baseBytes: => Long, ratio: Double): Boolean =
+    deltaCount > 0 && (deltaCount >= maxDeltaDirs ||
+      deltaBytes.toDouble >= ratio * math.max(baseBytes, 1L).toDouble)
+
+  /** The CDC sink core for an append-only store family: each batch
+    * first folds the store's COMMITTED deltas when [[shouldCompact]]
+    * says so, then runs the family's `body`. The family passes its
+    * compaction feeds — live delta count, delta and base bytes
+    * (by-name: no size walk runs once the count cap has fired) and a
+    * `fold` taking `excludeTags`. The fold always excludes the
+    * CURRENT batch's tag: on at-least-once redelivery the crashed
+    * attempt's delta may already exist, and folding it into the base
+    * right before the body rewrites the same tag would double-insert
+    * its rows. The single-writer foreachBatch serializes the fold
+    * against the body's append. */
+  private def storeSink(stream: DataFrame, checkpoint: String, maxDeltaDirs: Int,
+      ratio: Double)(
+      deltaCount: => Int, deltaBytes: => Long, baseBytes: => Long,
+      fold: (SparkSession, Set[String]) => Unit)(
+      body: (DataFrame, String) => Unit): StreamingQuery =
+    taggedSink(stream, checkpoint) { (batch, tag) =>
+      if (shouldCompact(deltaCount, maxDeltaDirs, deltaBytes, baseBytes, ratio))
+        fold(batch.sparkSession, Set(tag))
+      body(batch, tag)
+    }
+
+  /** The CDC sink core for a MUTATION feed — (op ∈ {add, del}, `key`,
+    * …) rows — built on [[storeSink]]: after the compaction check the
+    * batch is persisted once and ONE narrow projection pass brings
+    * each op's keys to the driver (ids only, bounded by the
+    * micro-batch — no shuffle, unlike a grouped op count). `body` gets
+    * the pinned batch, the tag and `keys(op)` (null keys included);
+    * the batch is unpersisted in `finally`. The covered-leg families
+    * read only op presence from `keys`; the global-mask families
+    * resolve the batch through [[netOut]]. */
+  private def cdcSink(stream: DataFrame, checkpoint: String, maxDeltaDirs: Int,
+      ratio: Double, key: String)(
+      deltaCount: => Int, deltaBytes: => Long, baseBytes: => Long,
+      fold: (SparkSession, Set[String]) => Unit)(
+      body: (DataFrame, String, String => Seq[Any]) => Unit): StreamingQuery =
+    storeSink(stream, checkpoint, maxDeltaDirs, ratio)(
+        deltaCount, deltaBytes, baseBytes, fold) { (batch, tag) =>
+      val b = batch.persist()
+      try {
+        val ops = b.filter(col("op").isin("add", "del")).select(col("op"), col(key)).collect()
+        body(b, tag, op => ops.collect { case r if r.getString(0) == op => r.get(1) }.toSeq)
+      } finally b.unpersist()
+    }
+
+  /** The rows of one op of a pinned CDC batch, projected to `cols`. */
+  private def opRows(b: DataFrame, op: String, cols: String*): DataFrame =
+    b.filter(col("op") === op).select(cols.map(col): _*)
+
+  /** The GLOBAL-MASK families' (IVF, HNSW) batch step: their
+    * tombstones mask ids globally, so the batch semantics differ from
+    * the covered-leg stores. Within a batch, adds that the SAME batch
+    * also deletes are NETTED OUT before anything lands (last-op-wins,
+    * and the only redelivery-safe choice: landing the add first would
+    * leave a tombstone that poisons the redelivered append through the
+    * not-tombstoned guard). Rows with a null `vec_id` are dropped: they
+    * cannot be addressed by id. The net-out and the emptiness checks
+    * are driver-side set arithmetic over the core's keys plus literal
+    * `isin` filters. `append` gets the surviving add rows with the
+    * batch's FULL row schema minus op; `delete` gets the distinct
+    * delete ids. */
+  private def netOut(b: DataFrame, keys: String => Seq[Any])(
+      append: DataFrame => Unit, delete: Seq[Long] => Unit): Unit = {
+    def ids(op: String) = keys(op).collect { case id: java.lang.Number => id.longValue }
+    val addIds = ids("add")
+    val delIds = ids("del").distinct
+    val netted = addIds.toSet.intersect(delIds.toSet)
+    if (addIds.exists(!netted(_))) {
+      val adds = b.filter(col("op") === "add" && col("vec_id").isNotNull).drop("op")
+      append(if (netted.isEmpty) adds else adds.filter(!col("vec_id").isin(netted.toSeq: _*)))
+    }
+    if (delIds.nonEmpty) delete(delIds)
+  }
 
   /** Streaming IVF index maintenance — the embedding leg of the crawl
     * loop, completing the incremental triple (exact-dup store,
@@ -331,7 +434,9 @@ object StreamingIngest {
     * re-added), then appends its delta. The probe-time union width is
     * therefore bounded by `maxDeltaDirs + 1` at every instant, and a
     * mid-stream compaction is invisible to probe results
-    * (spec-pinned). Set `Int.MaxValue` to disable.
+    * (spec-pinned). Set `Int.MaxValue` to disable. IVF's fold is
+    * O(delta) file moves either way; the ratio trigger just amortizes
+    * the per-fold fixed cost.
     *
     * CONCURRENCY CONTRACT: the auto-compaction inherits
     * [[graft.index.Ivf.compactDeltas]]'s single-writer/no-concurrent-
@@ -340,42 +445,20 @@ object StreamingIngest {
     * SEPARATE session racing the fold can see a transient
     * FileNotFoundException and should re-issue — see the contract note
     * on `compactDeltas`. */
-  /** STORE-backed streaming PERCEPTUAL media dedup — the crawl loop's
-    * multimodal leg, completing the incremental set (exact-dup,
-    * near-dup, ANN, tokenize): every micro-batch of media rows
-    * signatures on the executors (image dHash over the real raster
-    * bytes — non-image rows drop with the signature), Hamming-probes
-    * the persisted signature store through the banded join (complete
-    * for the threshold, never all-pairs), and appends its NOVEL
-    * signatures as a batch-keyed overwrite delta
-    * ([[graft.dedup.Dedup.incrementalSigDedupBatch]]). Durable dedup
-    * memory is 16 bytes per seen image regardless of media size —
-    * the raster bytes never persist and never shuffle; executor state
-    * is ZERO. At-least-once redelivery rewrites the same delta and
-    * sink subdir (batch-id-keyed overwrites). Read the sink with
-    * `recursiveFileLookup`. */
-  def streamingMediaDedup(
+  def streamingIvfAppend(
       stream: DataFrame,
-      storeDir: String,
-      sinkDir: String,
+      layoutDir: String,
       checkpoint: String,
-      maxHamming: Int = 3): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val sigs = graft.multimodal.Multimodal
-          .dHash(batch.as[graft.multimodal.Multimodal.MediaRecord]).toDF()
-          .select(org.apache.spark.sql.functions.col("media_id"),
-            org.apache.spark.sql.functions.col("dhash").as("sig"))
-        graft.dedup.Dedup
-          .incrementalSigDedupBatch(spark, storeDir, sigs, tag, maxHamming)
-          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      embCol: String = "embedding",
+      maxDeltaDirs: Int = 16,
+      compactBytesRatio: Double = 1.0): StreamingQuery = {
+    def layout = Ivf.loadLayout(layoutDir) // a small sidecar read, never cached across batches
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
+        Ivf.deltaDirCount(layout), Ivf.deltaBytes(layout), Ivf.baseBytes(layout),
+        (spark, ex) => Ivf.compactDeltas(spark, layout, embCol, excludeTags = ex)) {
+      (batch, tag) => Ivf.appendDelta(layout, batch, tag, embCol)
+    }
+  }
 
   /** Streaming HNSW index maintenance — the graph-index leg of the
     * crawl loop, mirroring [[streamingIvfAppend]]: every micro-batch
@@ -390,66 +473,26 @@ object StreamingIngest {
     * canonically rebuilt base BEFORE the new batch lands (the
     * single-writer foreachBatch serializes compaction against
     * appends). Executor state is ZERO — all memory is the layout on
-    * disk. */
-  /** The SIZE-RATIO compaction policy shared by the six incremental
-    * index families: fold when the live deltas have grown to `ratio` ×
-    * base bytes — each fold's IO is then PROPORTIONAL to the delta
-    * bytes it folds (the base it rewrites is at most deltas/ratio), so
-    * total compaction IO stays linear in stream length, where a pure
-    * count trigger makes it quadratic (an O(base) rewrite every fixed
-    * number of micro-batches) — OR when the delta-dir count reaches
-    * `maxDeltaDirs`, the probe fan-out bound (many tiny deltas cost
-    * probe latency even when their bytes are negligible). */
-  private def shouldCompact(deltaCount: Int, maxDeltaDirs: Int,
-      deltaBytes: => Long, baseBytes: => Long, ratio: Double): Boolean =
-    deltaCount > 0 && (deltaCount >= maxDeltaDirs ||
-      deltaBytes.toDouble >= ratio * math.max(baseBytes, 1L).toDouble)
-
-  /** Pin one micro-batch in executor memory and answer "which CDC ops
-    * does it carry" in a single ≤#ops-row aggregate, replacing the two
-    * separate `isEmpty` scans of the batch source (and letting every
-    * downstream leg — delete ids, add rows — read the cached batch
-    * instead of re-scanning the source file). The batch is
-    * micro-batch-sized by contract; callers unpersist in `finally`. */
-  private def pinBatch(batch: DataFrame): (DataFrame, Set[String]) = {
-    val b = batch.persist()
-    val present = b.groupBy("op").count().collect()
-      .map(_.getString(0)).toSet
-    (b, present)
-  }
-
-  // HNSW fan-out cap = 8, not the family-wide 16: the delta-aware
-  // probe pays one scan + graph-assembly leg per live delta and the
-  // measured latency curve cliffs past 8 (ScaleProbe `hnswfan` at 20x:
-  // warm 0.45 s at 2 deltas, 1.25 s at 8, 4.08 s at 16 — superlinear),
-  // so the count cap folds before the cliff even when the size-ratio
-  // trigger hasn't fired.
+    * disk.
+    *
+    * HNSW fan-out cap = 8, not the family-wide 16: the delta-aware
+    * probe pays one scan + graph-assembly leg per live delta and the
+    * measured latency curve cliffs past 8 (ScaleProbe `hnswfan` at 20x:
+    * warm 0.45 s at 2 deltas, 1.25 s at 8, 4.08 s at 16 — superlinear),
+    * so the count cap folds before the cliff even when the size-ratio
+    * trigger hasn't fired. */
   def streamingHnswAppend(
       stream: DataFrame,
       layoutDir: String,
       checkpoint: String,
-      p: graft.index.Hnsw.Params = graft.index.Hnsw.Params(),
+      p: Hnsw.Params = Hnsw.Params(),
       maxDeltaDirs: Int = 8,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        // excludeTags = the CURRENT batch's tag: on at-least-once
-        // redelivery the crashed attempt's delta may already exist —
-        // folding it into the base here, right before appendDelta
-        // rewrites the same tag, would double-insert those vectors
-        // (the Ivf leg below has the identical guard)
-        if (shouldCompact(graft.index.Hnsw.deltaTags(layoutDir).size, maxDeltaDirs,
-            graft.index.Hnsw.deltaBytes(layoutDir),
-            graft.index.Hnsw.baseBytes(layoutDir), compactBytesRatio))
-          graft.index.Hnsw.compactDeltas(batch.sparkSession, layoutDir, p,
-            excludeTags = Set(tag))
-        graft.index.Hnsw.appendDelta(batch.sparkSession, layoutDir, batch, tag, p)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
+        Hnsw.deltaTags(layoutDir).size, Hnsw.deltaBytes(layoutDir), Hnsw.baseBytes(layoutDir),
+        Hnsw.compactDeltas(_, layoutDir, p, _)) { (batch, tag) =>
+      Hnsw.appendDelta(batch.sparkSession, layoutDir, batch, tag, p)
+    }
 
   /** Streaming BM25 postings maintenance — the TEXT-index leg of the
     * crawl loop, completing the incremental-store family (exact, near,
@@ -471,29 +514,18 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        // excludeTags = the current batch's tag (redelivery safety —
-        // the HNSW/IVF legs' identical guard)
-        if (shouldCompact(graft.text.InvertedIndex.deltaTags(dir).size, maxDeltaDirs,
-            graft.text.InvertedIndex.deltaBytes(dir),
-            graft.text.InvertedIndex.baseBytes(dir), compactBytesRatio))
-          graft.text.InvertedIndex.compactDeltas(batch.sparkSession, table, dir,
-            buckets, excludeTags = Set(tag))
-        graft.text.InvertedIndex.appendDelta(batch.sparkSession, dir, batch, tag)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
+        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
+        InvertedIndex.baseBytes(dir),
+        InvertedIndex.compactDeltas(_, table, dir, buckets, _)) { (batch, tag) =>
+      InvertedIndex.appendDelta(batch.sparkSession, dir, batch, tag)
+    }
 
   /** Streaming maintenance of the POSITIONAL index — the phrase-query
     * leg of the incremental text-index family: each micro-batch lands
     * as a tag-keyed positional delta dir (idempotent overwrite), and
     * crossing `maxDeltaDirs` live deltas triggers a compaction that
-    * excludes the current batch's tag (redelivery safety — the
-    * HNSW/IVF/postings legs' identical guard). */
+    * excludes the current batch's tag (redelivery safety). */
   def streamingPositionalAppend(
       stream: DataFrame,
       table: String,
@@ -502,21 +534,12 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.text.InvertedIndex.deltaTags(dir).size, maxDeltaDirs,
-            graft.text.InvertedIndex.deltaBytes(dir),
-            graft.text.InvertedIndex.baseBytes(dir), compactBytesRatio))
-          graft.text.InvertedIndex.compactPositionalDeltas(
-            batch.sparkSession, table, dir, buckets, excludeTags = Set(tag))
-        graft.text.InvertedIndex.appendPositionalDelta(
-          batch.sparkSession, dir, batch, tag)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
+        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
+        InvertedIndex.baseBytes(dir),
+        InvertedIndex.compactPositionalDeltas(_, table, dir, buckets, _)) {
+      (batch, tag) => InvertedIndex.appendPositionalDelta(batch.sparkSession, dir, batch, tag)
+    }
 
   /** Streaming maintenance of the TRIGRAM (substring) index — the
     * third text-index leg; identical delta/compaction discipline. */
@@ -528,21 +551,12 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.text.InvertedIndex.deltaTags(dir).size, maxDeltaDirs,
-            graft.text.InvertedIndex.deltaBytes(dir),
-            graft.text.InvertedIndex.baseBytes(dir), compactBytesRatio))
-          graft.text.InvertedIndex.compactTrigramDeltas(
-            batch.sparkSession, table, dir, buckets, excludeTags = Set(tag))
-        graft.text.InvertedIndex.appendTrigramDelta(
-          batch.sparkSession, dir, batch, tag)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
+        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
+        InvertedIndex.baseBytes(dir),
+        InvertedIndex.compactTrigramDeltas(_, table, dir, buckets, _)) {
+      (batch, tag) => InvertedIndex.appendTrigramDelta(batch.sparkSession, dir, batch, tag)
+    }
 
   /** Streaming maintenance of the SQ8 code store — new vectors encode
     * under the PERSISTED quantization model (the trained-index
@@ -555,37 +569,28 @@ object StreamingIngest {
       checkpoint: String,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.index.Sq.deltaDirCount(dir), maxDeltaDirs,
-            graft.index.Sq.deltaBytes(dir),
-            graft.index.Sq.baseBytes(dir), compactBytesRatio))
-          graft.index.Sq.compactDeltas(batch.sparkSession, dir,
-            excludeTags = Set(tag))
-        graft.index.Sq.appendDelta(batch.sparkSession, dir, batch, tag)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
+        Sq.deltaDirCount(dir), Sq.deltaBytes(dir), Sq.baseBytes(dir),
+        Sq.compactDeltas(_, dir, _)) { (batch, tag) =>
+      Sq.appendDelta(batch.sparkSession, dir, batch, tag)
+    }
 
-  /** The ONE body behind the three text-index CDC mutation streams —
-    * each micro-batch of (op, doc_id, text) rows, op ∈ {"add", "del"},
-    * applies its deletes as ONE tag-keyed tombstone and its adds as
-    * ONE tag-keyed delta, sharing the batch tag. Deletes cover only
-    * the legs live BEFORE this batch (`excludeCovered` = the batch's
-    * own tag), so within a batch ADDS WIN: a same-batch delete+re-add
-    * of a doc is the UPSERT shape — the ONLY way an append-only
-    * posting store can take an update (a bare add of an already-live
-    * doc_id would duplicate it) — and an at-least-once redelivery,
-    * where the crashed attempt's delta already sits on disk under
-    * this tag, cannot mask its own appends. NOTE the deliberate
-    * asymmetry with the global-mask families
-    * ([[streamingIvfMutations]] / [[streamingHnswMutations]], where
-    * same-batch pairs net out and the DELETE wins): a feed that means
-    * add-then-delete ordering against a text store must put the two
-    * ops in separate batches.
+  /** CDC MUTATION stream for the BM25 posting store — each micro-batch
+    * of (op, doc_id, text) rows, op ∈ {"add", "del"}, applies its
+    * deletes as ONE tag-keyed tombstone and its adds as ONE tag-keyed
+    * delta, sharing the batch tag. Deletes cover only the legs live
+    * BEFORE this batch (`excludeCovered` = the batch's own tag), so
+    * within a batch ADDS WIN: a same-batch delete+re-add of a doc is
+    * the UPSERT shape — the ONLY way an append-only posting store can
+    * take an update (a bare add of an already-live doc_id would
+    * duplicate it) — and an at-least-once redelivery, where the
+    * crashed attempt's delta already sits on disk under this tag,
+    * cannot mask its own appends. The positional and trigram streams
+    * share these semantics. NOTE the deliberate asymmetry with the
+    * global-mask families ([[streamingIvfMutations]] /
+    * [[streamingHnswMutations]], where same-batch pairs net out and
+    * the DELETE wins): a feed that means add-then-delete ordering
+    * against a text store must put the two ops in separate batches.
     *
     * FEED CONTRACT (the [[graft.text.InvertedIndex.deleteDocs]]
     * contract, surfaced here): every delete row must be the doc's
@@ -597,45 +602,11 @@ object StreamingIngest {
     * redelivery (the checkpoint's own retry path) is safe.
     *
     * Redelivery × compaction: if the crashed attempt's tombstone was
-    * already CONSUMED by the compaction below (its covered legs all
+    * already CONSUMED by the batch's compaction (its covered legs all
     * folded — rows physically dropped, terms subtracted), the rerun's
     * rewrite lands in `deadTombs` and stays invisible; the committed
     * state is already the post-delete corpus, and the next
     * compaction garbage-collects the rewritten dir. */
-  private def textMutationStream(
-      stream: DataFrame,
-      dir: String,
-      checkpoint: String,
-      maxDeltaDirs: Int,
-      compactBytesRatio: Double)(
-      compact: (DataFrame, Set[String]) => Unit)(
-      append: (DataFrame, String) => Unit): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.text.InvertedIndex.deltaTags(dir).size, maxDeltaDirs,
-            graft.text.InvertedIndex.deltaBytes(dir),
-            graft.text.InvertedIndex.baseBytes(dir), compactBytesRatio))
-          compact(batch, Set(tag))
-        val (b, present) = pinBatch(batch)
-        try {
-          val dels = b.filter(col("op") === "del").select("doc_id", "text")
-          val adds = b.filter(col("op") === "add").select("doc_id", "text")
-          if (present("del"))
-            graft.text.InvertedIndex.deleteDocs(batch.sparkSession, dir, dels, tag,
-              excludeCovered = Set(tag))
-          if (present("add"))
-            append(adds, tag)
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** CDC MUTATION stream for the BM25 posting store — see
-    * [[textMutationStream]] for the shared semantics and the feed
-    * contract. */
   def streamingPostingsMutations(
       stream: DataFrame,
       table: String,
@@ -644,14 +615,20 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    textMutationStream(stream, dir, checkpoint, maxDeltaDirs, compactBytesRatio)(
-      (b, ex) => graft.text.InvertedIndex.compactDeltas(
-        b.sparkSession, table, dir, buckets, excludeTags = ex))(
-      (adds, tag) => graft.text.InvertedIndex.appendDelta(
-        adds.sparkSession, dir, adds, tag))
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
+        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
+        InvertedIndex.baseBytes(dir),
+        InvertedIndex.compactDeltas(_, table, dir, buckets, _)) {
+      (b, tag, keys) =>
+        if (keys("del").nonEmpty)
+          InvertedIndex.deleteDocs(b.sparkSession, dir, opRows(b, "del", "doc_id", "text"),
+            tag, excludeCovered = Set(tag))
+        if (keys("add").nonEmpty)
+          InvertedIndex.appendDelta(b.sparkSession, dir, opRows(b, "add", "doc_id", "text"), tag)
+    }
 
   /** CDC mutation stream for the POSITIONAL index — the phrase-query
-    * leg; see [[textMutationStream]]. */
+    * leg; see [[streamingPostingsMutations]]. */
   def streamingPositionalMutations(
       stream: DataFrame,
       table: String,
@@ -660,14 +637,21 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    textMutationStream(stream, dir, checkpoint, maxDeltaDirs, compactBytesRatio)(
-      (b, ex) => graft.text.InvertedIndex.compactPositionalDeltas(
-        b.sparkSession, table, dir, buckets, excludeTags = ex))(
-      (adds, tag) => graft.text.InvertedIndex.appendPositionalDelta(
-        adds.sparkSession, dir, adds, tag))
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
+        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
+        InvertedIndex.baseBytes(dir),
+        InvertedIndex.compactPositionalDeltas(_, table, dir, buckets, _)) {
+      (b, tag, keys) =>
+        if (keys("del").nonEmpty)
+          InvertedIndex.deleteDocs(b.sparkSession, dir, opRows(b, "del", "doc_id", "text"),
+            tag, excludeCovered = Set(tag))
+        if (keys("add").nonEmpty)
+          InvertedIndex.appendPositionalDelta(b.sparkSession, dir,
+            opRows(b, "add", "doc_id", "text"), tag)
+    }
 
   /** CDC mutation stream for the TRIGRAM (substring) index — the third
-    * text-index leg; see [[textMutationStream]]. */
+    * text-index leg; see [[streamingPostingsMutations]]. */
   def streamingTrigramMutations(
       stream: DataFrame,
       table: String,
@@ -676,11 +660,18 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    textMutationStream(stream, dir, checkpoint, maxDeltaDirs, compactBytesRatio)(
-      (b, ex) => graft.text.InvertedIndex.compactTrigramDeltas(
-        b.sparkSession, table, dir, buckets, excludeTags = ex))(
-      (adds, tag) => graft.text.InvertedIndex.appendTrigramDelta(
-        adds.sparkSession, dir, adds, tag))
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
+        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
+        InvertedIndex.baseBytes(dir),
+        InvertedIndex.compactTrigramDeltas(_, table, dir, buckets, _)) {
+      (b, tag, keys) =>
+        if (keys("del").nonEmpty)
+          InvertedIndex.deleteDocs(b.sparkSession, dir, opRows(b, "del", "doc_id", "text"),
+            tag, excludeCovered = Set(tag))
+        if (keys("add").nonEmpty)
+          InvertedIndex.appendTrigramDelta(b.sparkSession, dir,
+            opRows(b, "add", "doc_id", "text"), tag)
+    }
 
   /** CDC MUTATION stream for the SQ8 code store — the vector-side twin
     * of [[streamingPostingsMutations]]: (op, vec_id, embedding) rows,
@@ -688,61 +679,38 @@ object StreamingIngest {
     * a batch; redelivery cannot mask its own appends), adds encode
     * under the PERSISTED quantizer (trained-index contract) as a
     * tag-keyed delta. Same redelivery × compaction reasoning — and the
-    * same FEED CONTRACT as [[textMutationStream]]: delete rows must be
-    * currently-LIVE full rows, exactly once per deletion (a delete
-    * re-delivered under a DIFFERENT batch tag, or of a never-indexed
-    * id, mis-subtracts the fingerprint terms silently). */
+    * same FEED CONTRACT as [[streamingPostingsMutations]]: delete rows
+    * must be currently-LIVE full rows, exactly once per deletion (a
+    * delete re-delivered under a DIFFERENT batch tag, or of a
+    * never-indexed id, mis-subtracts the fingerprint terms silently). */
   def streamingSq8Mutations(
       stream: DataFrame,
       dir: String,
       checkpoint: String,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.index.Sq.deltaDirCount(dir), maxDeltaDirs,
-            graft.index.Sq.deltaBytes(dir),
-            graft.index.Sq.baseBytes(dir), compactBytesRatio))
-          graft.index.Sq.compactDeltas(batch.sparkSession, dir,
-            excludeTags = Set(tag))
-        val (b, present) = pinBatch(batch)
-        try {
-          val dels = b.filter(col("op") === "del").select("vec_id", "embedding")
-          val adds = b.filter(col("op") === "add").select("vec_id", "embedding")
-          if (present("del"))
-            graft.index.Sq.deleteVectors(batch.sparkSession, dir, dels, tag,
-              excludeCovered = Set(tag))
-          if (present("add"))
-            graft.index.Sq.appendDelta(batch.sparkSession, dir, adds, tag)
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(
+        Sq.deltaDirCount(dir), Sq.deltaBytes(dir), Sq.baseBytes(dir),
+        Sq.compactDeltas(_, dir, _)) { (b, tag, keys) =>
+      if (keys("del").nonEmpty)
+        Sq.deleteVectors(b.sparkSession, dir, opRows(b, "del", "vec_id", "embedding"), tag,
+          excludeCovered = Set(tag))
+      if (keys("add").nonEmpty)
+        Sq.appendDelta(b.sparkSession, dir, opRows(b, "add", "vec_id", "embedding"), tag)
+    }
 
   /** CDC mutation stream for the persisted IVF layout — the
-    * GLOBAL-MASK families' variant of [[streamingPostingsMutations]]:
-    * IVF (and HNSW) tombstones mask ids globally, so the batch
-    * semantics differ from the covered-leg stores and are made
-    * explicit here. Within a batch, adds that the SAME batch also
-    * deletes are NETTED OUT before anything lands (last-op-wins, and
-    * the only redelivery-safe choice: landing the add first would
-    * leave a tombstone that poisons the redelivered append through
-    * the not-tombstoned guard). Deletes of ids absent from the layout
-    * are ignored (delete is idempotent). Re-adding an id deleted by
-    * an EARLIER batch fails loudly via the append guard — the
-    * supported revival path is compactLayout, then re-add. Rows with a
-    * null `vec_id` are dropped: they cannot be addressed by id.
+    * GLOBAL-MASK families' variant of [[streamingPostingsMutations]]
+    * (see [[netOut]] for the same-batch net-out and the null-key
+    * rule). Deletes of ids absent from the layout are ignored (delete
+    * is idempotent). Re-adding an id deleted by an EARLIER batch fails
+    * loudly via the append guard — the supported revival path is
+    * compactLayout, then re-add.
     *
     * Per-batch job plan (a fixed budget, independent of the layout's
-    * leg count): the pinned batch is read ONCE to bring each op's ids
-    * to the driver — ids only, bounded by the micro-batch, the
-    * contract the HNSW sink and [[graft.ops.Takedown]] already use;
-    * the net-out and the emptiness checks are then driver-side set
-    * arithmetic and literal `isin` filters. [[graft.index.Ivf.appendDelta]]
-    * adds at most three jobs (materialize + ids, mask guard, write) and
+    * leg count): the core's one id pass over the pinned batch;
+    * [[graft.index.Ivf.appendDelta]] adds at most three jobs
+    * (materialize + ids, mask guard, write) and
     * [[graft.index.Ivf.deleteFromLayout]] two (one id lookup, the
     * tombstone write); every leg read is schema-pinned, so no read
     * starts a schema-inference job. A compacting batch adds the fold
@@ -753,89 +721,47 @@ object StreamingIngest {
       checkpoint: String,
       embCol: String = "embedding",
       maxDeltaDirs: Int = 16,
-      compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        val layout = graft.index.Ivf.loadLayout(layoutDir)
-        if (shouldCompact(graft.index.Ivf.deltaDirCount(layout), maxDeltaDirs,
-            graft.index.Ivf.deltaBytes(layout),
-            graft.index.Ivf.baseBytes(layout), compactBytesRatio))
-          graft.index.Ivf.compactDeltas(batch.sparkSession, layout, embCol,
-            excludeTags = Set(tag))
-        val b = batch.persist()
-        try {
-          val ops = b.filter(col("op").isin("add", "del") && col("vec_id").isNotNull)
-            .select(col("op"), col("vec_id").cast("long")).collect()
-          def opIds(op: String) = ops.collect { case r if r.getString(0) == op => r.getLong(1) }
-          val addIds = opIds("add")
-          val delIds = opIds("del").distinct.toSeq
-          // same-batch add+delete pairs net out before anything lands
-          val netted = addIds.toSet.intersect(delIds.toSet)
-          if (addIds.exists(!netted(_))) {
-            // adds keep the batch's FULL row schema minus op (the layout's
-            // delta rows must carry every base column — label etc. — for
-            // the positional base ∪ delta union)
-            val adds = b.filter(col("op") === "add" && col("vec_id").isNotNull).drop("op")
-            graft.index.Ivf.appendDelta(layout,
-              if (netted.isEmpty) adds else adds.filter(!col("vec_id").isin(netted.toSeq: _*)),
-              tag, embCol)
-          }
-          if (delIds.nonEmpty)
-            // batch-keyed tombstone tag: an at-least-once redelivery
-            // OVERWRITES its own batch dir (and the already-masked ids
-            // filter to an empty affected set — no double-xor either way)
-            graft.index.Ivf.deleteFromLayout(batch.sparkSession, layout, delIds,
-              "vec_id", embCol, s"${tag}_del")
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      compactBytesRatio: Double = 1.0): StreamingQuery = {
+    def layout = Ivf.loadLayout(layoutDir) // a small sidecar read, never cached across batches
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(
+        Ivf.deltaDirCount(layout), Ivf.deltaBytes(layout), Ivf.baseBytes(layout),
+        (spark, ex) => Ivf.compactDeltas(spark, layout, embCol, excludeTags = ex)) {
+      (b, tag, keys) =>
+        val ivf = layout
+        netOut(b, keys)(
+          // the layout's delta rows carry every base column (label etc.)
+          // for the positional base ∪ delta union
+          Ivf.appendDelta(ivf, _, tag, embCol),
+          // batch-keyed tombstone tag: an at-least-once redelivery
+          // OVERWRITES its own batch dir (and the already-masked ids
+          // filter to an empty affected set — no double-xor either way)
+          Ivf.deleteFromLayout(b.sparkSession, ivf, _, "vec_id", embCol, s"${tag}_del"))
+    }
+  }
 
   /** CDC mutation stream for the sharded HNSW layout — same
     * global-mask semantics as [[streamingIvfMutations]] (net-out of
-    * same-batch add+delete pairs; phantom deletes ignored; re-add of
-    * an earlier batch's delete fails loudly — revival path is
-    * compactDeltas(dropTombstoned = true), then re-add). Delete ids
-    * come to the driver (batch-sized) for the tag-keyed tombstone
-    * write. Fan-out cap 8 — see [[streamingHnswAppend]]'s measured
-    * rationale. */
+    * same-batch add+delete pairs; null-key rows dropped; phantom
+    * deletes ignored; re-add of an earlier batch's delete fails loudly
+    * — revival path is compactDeltas(dropTombstoned = true), then
+    * re-add). Delete ids come to the driver (batch-sized) for the
+    * tag-keyed tombstone write. Fan-out cap 8 — see
+    * [[streamingHnswAppend]]'s measured rationale. */
   def streamingHnswMutations(
       stream: DataFrame,
       layoutDir: String,
       checkpoint: String,
-      p: graft.index.Hnsw.Params = graft.index.Hnsw.Params(),
+      p: Hnsw.Params = Hnsw.Params(),
       maxDeltaDirs: Int = 8,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.index.Hnsw.deltaTags(layoutDir).size, maxDeltaDirs,
-            graft.index.Hnsw.deltaBytes(layoutDir),
-            graft.index.Hnsw.baseBytes(layoutDir), compactBytesRatio))
-          graft.index.Hnsw.compactDeltas(batch.sparkSession, layoutDir, p,
-            excludeTags = Set(tag))
-        val (b, present) = pinBatch(batch)
-        try {
-          val dels = b.filter(col("op") === "del").select("vec_id")
-          val adds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("embedding"))
-            .join(broadcast(dels), Seq("vec_id"), "left_anti")
-          if (present("add") && !adds.isEmpty) // see the IVF net-out note
-            graft.index.Hnsw.appendDelta(batch.sparkSession, layoutDir, adds, tag, p)
-          if (present("del")) {
-            val delIds = dels.distinct().collect().map(_.getLong(0)).toIndexedSeq
-            graft.index.Hnsw.deleteFromLayout(batch.sparkSession, layoutDir, delIds,
-              tag = tag)
-          }
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(
+        Hnsw.deltaTags(layoutDir).size, Hnsw.deltaBytes(layoutDir), Hnsw.baseBytes(layoutDir),
+        Hnsw.compactDeltas(_, layoutDir, p, _)) { (b, tag, keys) =>
+      netOut(b, keys)(
+        adds => Hnsw.appendDelta(b.sparkSession, layoutDir,
+          adds.select("vec_id", "embedding"), tag, p),
+        Hnsw.deleteFromLayout(b.sparkSession, layoutDir, _, tag = tag))
+    }
 
   /** CDC MUTATION stream for the incremental EXACT-DEDUP HASH STORE —
     * the derived-store leg of the mutation family (r14 VERDICT task 4):
@@ -863,32 +789,18 @@ object StreamingIngest {
       checkpoint: String,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.dedup.Dedup.hashStoreDeltaCount(storeDir),
-            maxDeltaDirs, graft.dedup.Dedup.hashStoreDeltaBytes(storeDir),
-            graft.dedup.Dedup.hashStoreBaseBytes(storeDir), compactBytesRatio))
-          graft.dedup.Dedup.compactHashStore(batch.sparkSession, storeDir,
-            excludeTags = Set(tag))
-        val (b, present) = pinBatch(batch)
-        try {
-          val dels = b.filter(col("op") === "del").select("doc_id", "text")
-          if (present("del"))
-            graft.dedup.Dedup.deleteFromHashStore(batch.sparkSession, storeDir,
-              dels, tag, excludeCovered = Set(tag))
-          val adds = b.filter(col("op") === "add").select("doc_id", "text")
-          if (present("add"))
-            graft.dedup.Dedup
-              .incrementalDedupBatch(batch.sparkSession, storeDir, adds,
-                batchTag = Some(tag))
-              .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
+        Dedup.hashStoreDeltaCount(storeDir), Dedup.hashStoreDeltaBytes(storeDir),
+        Dedup.hashStoreBaseBytes(storeDir),
+        Dedup.compactHashStore(_, storeDir, _)) { (b, tag, keys) =>
+      if (keys("del").nonEmpty)
+        Dedup.deleteFromHashStore(b.sparkSession, storeDir, opRows(b, "del", "doc_id", "text"),
+          tag, excludeCovered = Set(tag))
+      if (keys("add").nonEmpty)
+        Dedup.incrementalDedupBatch(b.sparkSession, storeDir, opRows(b, "add", "doc_id", "text"),
+            batchTag = Some(tag))
+          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 
   /** CDC mutation stream for the NEAR-DUP SHINGLE STORE — the same
     * covered-leg upsert semantics as [[streamingDedupMutations]]
@@ -906,33 +818,19 @@ object StreamingIngest {
       shingleN: Int = 3,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.dedup.Dedup.shingleStoreDeltaCount(storeDir),
-            maxDeltaDirs, graft.dedup.Dedup.shingleStoreDeltaBytes(storeDir),
-            graft.dedup.Dedup.shingleStoreBaseBytes(storeDir), compactBytesRatio))
-          graft.dedup.Dedup.compactShingleStore(batch.sparkSession, storeDir,
-            excludeTags = Set(tag))
-        val (b, present) = pinBatch(batch)
-        try {
-          val dels = b.filter(col("op") === "del").select("doc_id")
-          if (present("del"))
-            graft.dedup.Dedup.deleteFromShingleStore(batch.sparkSession, storeDir,
-              dels, tag, excludeCovered = Set(tag))
-          val adds = b.filter(col("op") === "add").select("doc_id", "text")
-          if (present("add"))
-            graft.dedup.Dedup
-              .incrementalNearDupBatch(batch.sparkSession, storeDir, adds,
-                batchTag = tag, maxJaccardDist = maxJaccardDist,
-                shingleN = shingleN)
-              .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
+        Dedup.shingleStoreDeltaCount(storeDir), Dedup.shingleStoreDeltaBytes(storeDir),
+        Dedup.shingleStoreBaseBytes(storeDir),
+        Dedup.compactShingleStore(_, storeDir, _)) { (b, tag, keys) =>
+      if (keys("del").nonEmpty)
+        Dedup.deleteFromShingleStore(b.sparkSession, storeDir, opRows(b, "del", "doc_id"),
+          tag, excludeCovered = Set(tag))
+      if (keys("add").nonEmpty)
+        Dedup.incrementalNearDupBatch(b.sparkSession, storeDir,
+            opRows(b, "add", "doc_id", "text"), batchTag = tag,
+            maxJaccardDist = maxJaccardDist, shingleN = shingleN)
+          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 
   /** CDC mutation stream for the FUZZY SIGNATURE STORE — the
     * entity-resolution leg of the mutation family, same covered-leg
@@ -951,55 +849,16 @@ object StreamingIngest {
       maxDist: Int = 1,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        if (shouldCompact(graft.ops.FuzzyJoin.fuzzyStoreDeltaCount(storeDir),
-            maxDeltaDirs, graft.ops.FuzzyJoin.fuzzyStoreDeltaBytes(storeDir),
-            graft.ops.FuzzyJoin.fuzzyStoreBaseBytes(storeDir), compactBytesRatio))
-          graft.ops.FuzzyJoin.compactFuzzyStore(batch.sparkSession, storeDir,
-            excludeTags = Set(tag))
-        val (b, present) = pinBatch(batch)
-        try {
-          val dels = b.filter(col("op") === "del").select(idCol)
-          if (present("del"))
-            graft.ops.FuzzyJoin.deleteFromFuzzyStore(batch.sparkSession, storeDir,
-              dels, tag, idCol = idCol, excludeCovered = Set(tag))
-          val adds = b.filter(col("op") === "add").select(idCol, nameCol)
-          if (present("add"))
-            graft.ops.FuzzyJoin
-              .incrementalFuzzyResolveBatch(batch.sparkSession, storeDir, adds,
-                idCol, nameCol, maxDist, batchTag = Some(tag))
-              .write.mode("overwrite").parquet(s"$sinkDir/$tag")
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  def streamingIvfAppend(
-      stream: DataFrame,
-      layoutDir: String,
-      checkpoint: String,
-      embCol: String = "embedding",
-      maxDeltaDirs: Int = 16,
-      compactBytesRatio: Double = 1.0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tag = s"${pipelineTag(checkpoint)}_b$batchId"
-        val layout = graft.index.Ivf.loadLayout(layoutDir)
-        // IVF's fold is O(delta) file moves either way; the ratio
-        // trigger just amortizes the per-fold fixed cost
-        if (shouldCompact(graft.index.Ivf.deltaDirCount(layout), maxDeltaDirs,
-            graft.index.Ivf.deltaBytes(layout),
-            graft.index.Ivf.baseBytes(layout), compactBytesRatio))
-          graft.index.Ivf.compactDeltas(batch.sparkSession, layout, embCol,
-            excludeTags = Set(tag))
-        graft.index.Ivf.appendDelta(layout, batch, tag, embCol)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, idCol)(
+        FuzzyJoin.fuzzyStoreDeltaCount(storeDir), FuzzyJoin.fuzzyStoreDeltaBytes(storeDir),
+        FuzzyJoin.fuzzyStoreBaseBytes(storeDir),
+        FuzzyJoin.compactFuzzyStore(_, storeDir, _)) { (b, tag, keys) =>
+      if (keys("del").nonEmpty)
+        FuzzyJoin.deleteFromFuzzyStore(b.sparkSession, storeDir, opRows(b, "del", idCol),
+          tag, idCol = idCol, excludeCovered = Set(tag))
+      if (keys("add").nonEmpty)
+        FuzzyJoin.incrementalFuzzyResolveBatch(b.sparkSession, storeDir,
+            opRows(b, "add", idCol, nameCol), idCol, nameCol, maxDist, batchTag = Some(tag))
+          .write.mode("overwrite").parquet(s"$sinkDir/$tag")
+    }
 }

@@ -631,8 +631,8 @@ object InvertedIndex {
     * other mutation. */
   def dropMutations(dir: String): Unit =
       graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    deleteRecursively(java.nio.file.Paths.get(deltaRoot(dir)))
-    deleteRecursively(java.nio.file.Paths.get(tombRoot(dir)))
+    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(deltaRoot(dir)))
+    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(tombRoot(dir)))
     // the committed state must agree with the wiped disk
     graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
       "live" -> Seq.empty, "liveTombs" -> Seq.empty,
@@ -728,7 +728,7 @@ object InvertedIndex {
     * denominator of the size-ratio compaction policy. */
   def baseBytes(dir: String): Long = {
     val v = sidecarNode(dir).filter(_.hasNonNull("v")).map(_.get("v").asInt()).getOrElse(0)
-    duBytes(if (v > 0) s"${dir}_v$v" else dir)
+    graft.io.MutableStore.duBytes(java.nio.file.Paths.get(if (v > 0) s"${dir}_v$v" else dir))
   }
 
   /** Total bytes of the live delta dirs — the numerator of the
@@ -737,19 +737,8 @@ object InvertedIndex {
     * the delta bytes it folds and total compaction IO stays LINEAR in
     * stream length — a count trigger makes it quadratic). */
   def deltaBytes(dir: String): Long =
-    deltaTags(dir).map(t => duBytes(s"${deltaRoot(dir)}/$t")).sum
-
-  private def duBytes(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return 0L
-    val walk = java.nio.file.Files.walk(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size(_)).sum
-    } finally walk.close()
-  }
+    deltaTags(dir).map(t =>
+      graft.io.MutableStore.duBytes(java.nio.file.Paths.get(deltaRoot(dir), t))).sum
 
   /** The base table's corpus stats, read from its sidecar — the
     * probe-time source of truth (a captured value goes stale the
@@ -1022,14 +1011,6 @@ object InvertedIndex {
       textCol: String = "text"): DataFrame =
     substringOver(withDeltas(spark, table, dir), corpus, needle, idCol, textCol)
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(p)) return
-    val walk = java.nio.file.Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
-  }
-
   /** Fold every live delta (minus `excludeTags` — the redelivery-
     * safety contract) and every tombstone into a rebuilt bucketed
     * base: per-leg tombstone anti-joins drop deleted rows physically,
@@ -1122,7 +1103,7 @@ object InvertedIndex {
     // version path — the MutableStore protocol Dedup/FuzzyJoin pioneered
     val newDir = s"${dir}_v$vNew"
     val building = java.nio.file.Paths.get(parent, s"_building_${stem}_v$vNew")
-    deleteRecursively(building)
+    graft.io.MutableStore.deleteDir(building)
     val tmpTable = s"${table}__compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
     union.write
@@ -1204,10 +1185,10 @@ object InvertedIndex {
       } finally ls.close()
       names.foreach { nm =>
         if (nm.startsWith(s"_building_${stem}_v"))
-          deleteRecursively(parent.resolve(nm))
+          graft.io.MutableStore.deleteDir(parent.resolve(nm))
         else if (nm.matches(java.util.regex.Pattern.quote(stem) + "_v\\d+") &&
             !keepVersions.contains(s"${dir}_v${nm.substring(stem.length + 2)}"))
-          deleteRecursively(parent.resolve(nm))
+          graft.io.MutableStore.deleteDir(parent.resolve(nm))
       }
     }
     if (s.v > 0 && !protectedRefs.exists(_.v == 0)) {
@@ -1217,13 +1198,13 @@ object InvertedIndex {
         import scala.jdk.CollectionConverters._
         ls.iterator().asScala
           .filter(p => !allSidecarNames.contains(p.getFileName.toString))
-          .toSeq.foreach(deleteRecursively)
+          .toSeq.foreach(graft.io.MutableStore.deleteDir)
       } finally ls.close()
     }
     s.folded.filterNot(keepDelta).foreach(t =>
-      deleteRecursively(java.nio.file.Paths.get(deltaRoot(dir), t)))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(deltaRoot(dir), t)))
     s.dead.filterNot(keepTombs).foreach(t =>
-      deleteRecursively(java.nio.file.Paths.get(tombRoot(dir), t)))
+      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(tombRoot(dir), t)))
   }
 
   def compactPositionalDeltas(

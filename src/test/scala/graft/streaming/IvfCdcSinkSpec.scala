@@ -8,14 +8,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.index.Ivf
+import graft.index.{Hnsw, Ivf, Sq}
 
-/** The IVF CDC sink ([[StreamingIngest.streamingIvfMutations]]) as a
-  * fixed per-batch job budget: a SparkListener count of one
-  * micro-batch's Spark jobs (so the per-batch floor cannot creep back
-  * unnoticed), and the sidecar fingerprint the driver-side delete
-  * arithmetic maintains, checked against a full recount over a seeded
-  * schedule. */
+/** The CDC sinks as a fixed per-batch job budget: a SparkListener
+  * count of one micro-batch's Spark jobs through the IVF
+  * ([[StreamingIngest.streamingIvfMutations]]), HNSW and SQ8 sinks (so
+  * the per-batch floor cannot creep back unnoticed), and the IVF
+  * sidecar fingerprint the driver-side delete arithmetic maintains,
+  * checked against a full recount over a seeded schedule. */
 class IvfCdcSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -50,14 +50,46 @@ class IvfCdcSinkSpec extends AnyFunSuite {
       b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append").parquet(inDir)
     }
 
-  private def runSink(layout: Ivf.Layout, inDir: String, chk: String,
-      maxDeltaDirs: Int): Seq[Long] = {
-    val q = StreamingIngest.streamingIvfMutations(
-      spark.readStream.schema(op("add")(0L).schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir),
-      layout.dir, chk, maxDeltaDirs = maxDeltaDirs, compactBytesRatio = 1e9)
+  private def feed(inDir: String): DataFrame =
+    spark.readStream.schema(op("add")(0L).schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+
+  /** Runs a sink to completion; returns the ids of its non-empty batches. */
+  private def await(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Long] = {
     q.awaitTermination()
     q.recentProgress.toSeq.filter(_.numInputRows > 0).map(_.batchId)
+  }
+
+  private def runSink(layout: Ivf.Layout, inDir: String, chk: String,
+      maxDeltaDirs: Int): Seq[Long] =
+    await(StreamingIngest.streamingIvfMutations(feed(inDir), layout.dir, chk,
+      maxDeltaDirs = maxDeltaDirs, compactBytesRatio = 1e9))
+
+  /** The call-site names of the Spark jobs `run` starts, in order. */
+  private def jobsOf(run: => Unit): List[String] = {
+    val sites = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = sites.synchronized {
+        sites += (if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
+      }
+    }
+    val marker = "budget marker"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the batch has been counted
+      graft.io.MutableStore.withCallSite(spark, marker) {
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+      }
+      val deadline = System.currentTimeMillis() + 30000
+      while (sites.synchronized(!sites.contains(marker)) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = sites.synchronized(sites.takeWhile(_ != marker).toList)
+    assert(jobs.nonEmpty && sites.contains(marker))
+    info(s"${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
+    jobs
   }
 
   test("one micro-batch with adds and deletes over a live delta and tombstone runs a fixed job budget") {
@@ -69,29 +101,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     land(s"$root/in", Seq(op("add")(300L to 307L: _*)
       .unionAll(op("del")(1L, 200L, 307L))))
 
-    val sites = ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = sites.synchronized {
-        sites += (if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
-      }
-    }
-    val marker = "budget marker"
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 16)
-      // listener events arrive in order: once the marker job is seen,
-      // every job of the batch has been counted
-      graft.io.MutableStore.withCallSite(spark, marker) {
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-      }
-      val deadline = System.currentTimeMillis() + 30000
-      while (sites.synchronized(!sites.contains(marker)) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally spark.sparkContext.removeSparkListener(listener)
-
-    val batchJobs = sites.synchronized(sites.takeWhile(_ != marker).toList)
-    assert(batchJobs.nonEmpty && sites.contains(marker))
-    info(s"${batchJobs.size} Spark jobs: ${batchJobs.mkString("; ")}")
+    val batchJobs = jobsOf(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 16))
     // measured: 6 (the id pass, appendDelta's materialization, mask
     // guard and write, deleteFromLayout's lookup and tombstone write)
     assert(batchJobs.size <= 7,
@@ -104,6 +114,53 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     val got = Ivf.layoutRows(spark, Ivf.loadLayout(layout.dir))
       .select("vec_id").as[Long].collect().toSet
     val want = (0L until 40L).toSet -- Set(1L, 7L) ++ Set(201L) ++ (300L to 306L)
+    assert(got == want, s"live ids after the batch: ${got -- want} extra, ${want -- got} missing")
+  }
+
+  test("one HNSW CDC micro-batch with adds and deletes over a live delta and tombstone stays within its job budget") {
+    val root = java.nio.file.Files.createTempDirectory("hnswbudget").toString
+    val dir = s"$root/layout"
+    Hnsw.ensureLayout(corpus, dir)
+    Hnsw.appendDelta(spark, dir, op("add")(200L, 201L).drop("op"), "pre")
+    Hnsw.deleteFromLayout(spark, dir, Seq(7L), "pre_del")
+    land(s"$root/in", Seq(op("add")(300L to 307L: _*)
+      .unionAll(op("del")(1L, 200L, 307L))))
+
+    val batchJobs = jobsOf(await(StreamingIngest.streamingHnswMutations(
+      feed(s"$root/in"), dir, s"$root/chk", maxDeltaDirs = 16, compactBytesRatio = 1e9)))
+    // before the shared sink core this batch ran 28 jobs (a grouped op
+    // count, an isEmpty probe, a broadcast anti-join and a second delete
+    // id collect), 20 with it; the bound keeps it from growing back
+    assert(batchJobs.size <= 28,
+      s"the HNSW CDC micro-batch ran ${batchJobs.size} Spark jobs, budget 28:\n${batchJobs.mkString("\n")}")
+
+    val nodes = (Hnsw.layout(spark, dir) +: Hnsw.deltaTags(dir)
+        .map(t => spark.read.parquet(s"$dir/layout_delta_$t")))
+      .map(_.select("vec_id")).reduce(_ unionAll _).as[Long].collect().toSet
+    val got = nodes -- Hnsw.tombstonedIds(spark, dir)
+    val want = (0L until 40L).toSet -- Set(1L, 7L) ++ Set(201L) ++ (300L to 306L)
+    assert(got == want, s"live ids after the batch: ${got -- want} extra, ${want -- got} missing")
+  }
+
+  test("one SQ8 CDC micro-batch with adds and deletes over a live delta and tombstone stays within its job budget") {
+    val root = java.nio.file.Files.createTempDirectory("sqbudget").toString
+    val dir = s"$root/sq8"
+    Sq.ensureCodesArtifact(corpus, dir)
+    Sq.appendDelta(spark, dir, op("add")(200L, 201L).drop("op"), "pre")
+    Sq.deleteVectors(spark, dir, op("del")(7L).drop("op"), "pre_del")
+    land(s"$root/in", Seq(op("add")(300L to 307L: _*)
+      .unionAll(op("del")(1L, 200L))))
+
+    val batchJobs = jobsOf(await(StreamingIngest.streamingSq8Mutations(
+      feed(s"$root/in"), dir, s"$root/chk", maxDeltaDirs = 16, compactBytesRatio = 1e9)))
+    // before the shared sink core this batch ran 12 jobs (its op
+    // presence came from a grouped aggregate), 10 with it; the bound
+    // keeps it from growing back
+    assert(batchJobs.size <= 12,
+      s"the SQ8 CDC micro-batch ran ${batchJobs.size} Spark jobs, budget 12:\n${batchJobs.mkString("\n")}")
+
+    val got = Sq.codesWithDeltas(spark, dir).select("vec_id").as[Long].collect().toSet
+    val want = (0L until 40L).toSet -- Set(1L, 7L) ++ Set(201L) ++ (300L to 307L)
     assert(got == want, s"live ids after the batch: ${got -- want} extra, ${want -- got} missing")
   }
 

@@ -207,47 +207,77 @@ class StreamMutationsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding").localCheckpoint()
   }
 
-  test("IVF CDC (global mask): same-batch add+del nets out; delete of a streamed row; re-add fails loud") {
-    import graft.index.Ivf
-    val root = scratch("ivfcdc")
-    val corpus2 = Seq(
-      (1L, Seq(0.0f, 0.1f)), (2L, Seq(0.1f, 0.0f)), (3L, Seq(0.2f, 0.2f)),
-      (4L, Seq(10.0f, 10.1f)), (5L, Seq(10.1f, 10.0f)), (6L, Seq(10.2f, 10.2f))
-    ).toDF("vec_id", "embedding")
-    val layout = Ivf.buildLayout(spark, corpus2, s"$root/layout", nlist = 2, maxIter = 5)
-    def op(o: String)(rows: (Long, Seq[Float])*): DataFrame =
-      rows.toDF("vec_id", "embedding")
-        .select(lit(o).as("op"), col("vec_id"), col("embedding"))
-    // b0: add 101 and 102; same batch also deletes 102 (nets out) and
-    //     deletes base id 3
-    val b0 = op("add")((101L, Seq(0.05f, 0.05f)), (102L, Seq(0.06f, 0.04f)))
-      .unionAll(op("del")((102L, Seq(0.06f, 0.04f)), (3L, Seq(0.2f, 0.2f))))
-    // b1: delete the JUST-STREAMED 101
-    val b1 = op("del")((101L, Seq(0.05f, 0.05f)))
-    val inDir = s"$root/in"
-    writeBatches(inDir, Seq(b0, b1))
-    val q = StreamingIngest.streamingIvfMutations(
-      spark.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir),
-      layout.dir, s"$root/chk")
-    q.awaitTermination()
-    val got = Ivf.searchLayoutDeltaAware(
-        spark, Ivf.loadLayout(layout.dir), Array(0.0f, 0.0f), k = 6, nprobe = 1)
-      .select("vec_id").as[Long].collect().toSet
-    assert(got == Set(1L, 2L),
-      s"survivors of the near cluster must be exactly 1 and 2, got $got")
-    // re-adding the earlier-deleted 101 must fail LOUD mid-stream
-    val b2 = op("add")((101L, Seq(0.05f, 0.05f)))
-    writeBatches(s"$root/in2", Seq(b2))
-    val q2 = StreamingIngest.streamingIvfMutations(
-      spark.readStream.schema(b2.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$root/in2"),
-      layout.dir, s"$root/chk2")
-    val e = intercept[Exception] { q2.awaitTermination() }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("tombstoned")),
-      s"the append guard must surface through the stream, got: ${messages(e)}")
+  /** A global-mask family under test: its CDC sink over a layout at
+    * `dir` (built from `corpus`), and a probe of that layout. */
+  private case class GlobalMaskFamily(
+      name: String,
+      build: (DataFrame, String) => Unit,
+      sink: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery,
+      probe: (String, Array[Float]) => Set[Long],
+      nearSurvivors: Set[Long])
+
+  private val hnswParams = graft.index.Hnsw.Params(parts = 1)
+
+  private val globalMaskFamilies = Seq(
+    GlobalMaskFamily("IVF",
+      (corpus, dir) => graft.index.Ivf.buildLayout(spark, corpus, dir, nlist = 2, maxIter = 5),
+      (stream, dir, chk) => StreamingIngest.streamingIvfMutations(stream, dir, chk),
+      (dir, q) => graft.index.Ivf.searchLayoutDeltaAware(
+          spark, graft.index.Ivf.loadLayout(dir), q, k = 6, nprobe = 1)
+        .select("vec_id").as[Long].collect().toSet,
+      // nprobe = 1: the near cluster's survivors only
+      Set(1L, 2L)),
+    GlobalMaskFamily("HNSW",
+      (corpus, dir) => graft.index.Hnsw.ensureLayout(corpus, dir, hnswParams),
+      (stream, dir, chk) => StreamingIngest.streamingHnswMutations(stream, dir, chk, hnswParams),
+      (dir, q) => graft.index.Hnsw.searchLayoutDeltaAware(spark, dir, q, k = 3, hnswParams)
+        .select("vec_id").as[Long].collect().toSet,
+      // k = 3: the near cluster's two survivors, then the far cluster's closest
+      Set(1L, 2L, 4L)))
+
+  globalMaskFamilies.foreach { fam =>
+    test(s"${fam.name} CDC (global mask): same-batch add+del nets out; delete of a streamed row; re-add fails loud") {
+      val root = scratch(s"${fam.name.toLowerCase}cdc")
+      val corpus2 = Seq(
+        (1L, Seq(0.0f, 0.1f)), (2L, Seq(0.1f, 0.0f)), (3L, Seq(0.2f, 0.2f)),
+        (4L, Seq(10.0f, 10.1f)), (5L, Seq(10.1f, 10.0f)), (6L, Seq(10.2f, 10.2f))
+      ).toDF("vec_id", "embedding")
+      val layoutDir = s"$root/layout"
+      fam.build(corpus2, layoutDir)
+      def op(o: String)(rows: (Long, Seq[Float])*): DataFrame =
+        rows.toDF("vec_id", "embedding")
+          .select(lit(o).as("op"), col("vec_id"), col("embedding"))
+      // rows with a null vec_id cannot be addressed by id: dropped
+      def nullKey(o: String): DataFrame =
+        Seq((o, Option.empty[Long], Seq(0.07f, 0.07f))).toDF("op", "vec_id", "embedding")
+      // b0: add 101 and 102; same batch also deletes 102 (nets out) and
+      //     deletes base id 3; one null-key add and one null-key delete
+      val b0 = op("add")((101L, Seq(0.05f, 0.05f)), (102L, Seq(0.06f, 0.04f)))
+        .unionAll(op("del")((102L, Seq(0.06f, 0.04f)), (3L, Seq(0.2f, 0.2f))))
+        .unionAll(nullKey("add")).unionAll(nullKey("del"))
+      // b1: delete the JUST-STREAMED 101
+      val b1 = op("del")((101L, Seq(0.05f, 0.05f)))
+      val inDir = s"$root/in"
+      writeBatches(inDir, Seq(b0, b1))
+      val q = fam.sink(spark.readStream.schema(b0.schema)
+          .option("maxFilesPerTrigger", 1).parquet(inDir),
+        layoutDir, s"$root/chk")
+      q.awaitTermination()
+      val got = fam.probe(layoutDir, Array(0.0f, 0.0f))
+      assert(got == fam.nearSurvivors,
+        s"the probe must see exactly the survivors ${fam.nearSurvivors}, got $got")
+      // re-adding the earlier-deleted 101 must fail LOUD mid-stream
+      val b2 = op("add")((101L, Seq(0.05f, 0.05f)))
+      writeBatches(s"$root/in2", Seq(b2))
+      val q2 = fam.sink(spark.readStream.schema(b2.schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/in2"),
+        layoutDir, s"$root/chk2")
+      val e = intercept[Exception] { q2.awaitTermination() }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(e).exists(_.contains("tombstoned")),
+        s"the append guard must surface through the stream, got: ${messages(e)}")
+    }
   }
 
   test("SQ8 CDC lifecycle: delete, revive, compaction under the untouched quantizer") {
