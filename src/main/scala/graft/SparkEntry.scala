@@ -52,17 +52,6 @@ object SparkEntry {
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
-  /** Spread a tiny-split corpus across the cores before a heavy
-    * narrow per-row kernel (tokenizer/classifier passes): the fixture
-    * files arrive as one scan split, so the kernel otherwise runs
-    * single-task — and, feeding a global sort directly, runs TWICE
-    * (range-bound sampling re-executes an unmaterialized child). The
-    * explicit count keeps AQE from coalescing the small-bytes/heavy-CPU
-    * shuffle back to one partition; at scale inputs arrive pre-split
-    * and the hash exchange just becomes the sort barrier. */
-  private def parDocs(s: SparkSession, df: DataFrame): DataFrame =
-    df.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-
   /** Fixture rows for the byte-level tokenizer queries: punctuation,
     * case, accents, typographic dashes/quotes, currency, CJK, emoji —
     * everything the char-level normalized-alphanumeric path drops.
@@ -1836,8 +1825,7 @@ object SparkEntry {
   private val scratchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  private val scratchCleanupHook =
-    sys.addShutdownHook(scratchDirs.values.forEach(graft.io.MutableStore.deleteDir(_)))
+  sys.addShutdownHook(scratchDirs.values.forEach(graft.io.MutableStore.deleteDir(_)))
 
   /** Stable per-dataset key for artifacts shared across processes in
     * java.io.tmpdir: md5 of the FULL dir path — String.hashCode can
@@ -3013,7 +3001,6 @@ object SparkEntry {
     // the features AND the brute-force cosine join in SQL — media bytes
     // to ANN verdict, one hash-pinned path.
     "media_feature_dups" -> ((s, dir) => {
-      import s.implicits._
       val imgs = mediaFeatFixture(s).filter(_.modality == "image")
       val feats = graft.multimodal.Multimodal.extractFeatures(imgs, grid = 4).toDF()
         .select(col("media_id").as("vec_id"), col("embedding"))
@@ -3030,7 +3017,6 @@ object SparkEntry {
     // bytes out per image; at 100 TB the signature table is 32,000,000×
     // smaller than a 1 MB-image corpus.
     "media_dhash" -> ((s, dir) => {
-      import s.implicits._
       val imgs = mediaFeatFixture(s).filter(_.modality == "image")
       graft.multimodal.Multimodal.dHash(imgs).toDF()
         .orderBy(col("media_id"))
@@ -3045,7 +3031,6 @@ object SparkEntry {
     // dedup can never see. The oracle replays hashes AND the
     // brute-force pair truth; banded candidates must equal it exactly.
     "media_dhash_dedup" -> ((s, dir) => {
-      import s.implicits._
       val imgs = mediaFeatFixture(s).filter(_.modality == "image")
       val sigs = graft.multimodal.Multimodal.dHash(imgs).toDF()
         .select(col("media_id"), col("dhash"))
@@ -3090,7 +3075,6 @@ object SparkEntry {
     // oracle replays the seed store and the single-file micro-batch:
     // verdict = min-(hamming, id) seed match within ≤ 3.
     "stream_media_dedup" -> ((s, dir) => {
-      import s.implicits._
       val scratch = scratchDir("stream_media_dedup")
       val storeDir = s"$scratch/store"
       val seedDir =
@@ -4236,7 +4220,7 @@ object SparkEntry {
     // reload it, report its observable state.
     "vec_init" -> ((s, _) => {
       val tmp = scratchDir("init")
-      val store = VectorStore.init(s, s"$tmp/db.json", EmbDim)
+      VectorStore.init(s, s"$tmp/db.json", EmbDim)
       val reloaded = VectorStore.load(s, s"$tmp/db.json")
       import s.implicits._
       Seq((reloaded.getDimensions.toLong, reloaded.toDF.count()))

@@ -79,52 +79,11 @@ object Dedup {
   // covered legs, versioned atomic compaction — machinery shared via
   // [[graft.io.MutableStore]]) ---------------------------------------------
 
-  private def storeState(dir: String) = graft.io.MutableStore.state(dir)
-  private def storeTombRoot(dir: String) = graft.io.MutableStore.tombRoot(dir)
-  private def liveStoreTombs(dir: String) = graft.io.MutableStore.liveTombs(dir)
+  import graft.io.MutableStore
 
-  /** Live delta tags of the hash store — the COMMITTED live list when
-    * the state carries one (the snapshot contract), else the legacy
-    * listing minus the folded list. */
-  private def hashStoreDeltaTags(dir: String): Seq[String] =
-    hashStoreDeltaTagsOf(dir, storeState(dir))
-
-  private def hashStoreDeltaTagsOf(
-      dir: String, st: graft.io.MutableStore.State): Seq[String] =
-    st.live.getOrElse {
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(root)) return Seq.empty
-      val s = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(java.nio.file.Files.isDirectory(_))
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("delta_"))
-          .map(_.stripPrefix("delta_"))
-          .filterNot(st.folded)
-          .toSeq.sorted
-      } finally s.close()
-    }
-
-  /** COMMIT a mutation tag into the store state's live lists (creating
-    * the state for a never-compacted store). A tag the state already
-    * FOLDED (or consumed) is a redelivered batch whose rows are in the
-    * base — debris for the next GC, never re-committed. */
-  private def commitMutationTag(
-      dir: String, tag: String, isTomb: Boolean,
-      liveOf: graft.io.MutableStore.State => Seq[String]): Unit = {
-    val st = storeState(dir)
-    val live = liveOf(st)
-    val tombs = graft.io.MutableStore.liveTombTagsOf(dir, st)
-    if (isTomb) {
-      if (!st.deadTombs.contains(tag))
-        graft.io.MutableStore.commitLiveLists(
-          dir, live, (tombs :+ tag).distinct.sorted)
-    } else if (!st.folded.contains(tag))
-      graft.io.MutableStore.commitLiveLists(
-        dir, (live :+ tag).distinct.sorted, tombs)
-  }
+  /** The hash and signature stores: the FLAT layout
+    * ([[graft.io.MutableStore.flatLayout]]). */
+  private def flatOf(dir: String) = MutableStore.flatLayout(dir, "Dedup")
 
   /** TAKEDOWN from the hash store (GDPR/opt-out: the content hash of a
     * scrubbed document is derived data and must go too). The batch is
@@ -149,29 +108,17 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       excludeCovered: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(storeDir, "deleteFromHashStore") {
-    // excludeCovered: a CDC mutation batch passes its OWN delta tag so
-    // a same-batch delete+re-add leaves the re-add live (adds win) and
-    // an at-least-once redelivery cannot mask its own appends — the
-    // engine-wide covered-leg contract (InvertedIndex.deleteDocs)
-    val covered = ("base" +: hashStoreDeltaTags(storeDir).filterNot(excludeCovered))
-      .map(t => "\"" + t + "\"").mkString("[", ",", "]")
-    val out = s"${storeTombRoot(storeDir)}/$tag"
+      MutableStore.writing(spark, storeDir, "Dedup", "deleteFromHashStore") {
+    val l = flatOf(storeDir)
+    val covered = MutableStore.coveredLegs(l, excludeCovered)
     batch.select(
         graft.text.TextAnalysis.fingerprintMd5(col(textCol)).as("h"),
         col(idCol).cast("long").as("first_id"))
       .distinct()
-      .write.mode("overwrite").parquet(s"$out/pairs")
-    graft.io.Artifact.writeAtomic(
-      java.nio.file.Paths.get(out, "_stats.json"),
-      s"""{"covered":$covered}""")
-    // COMMIT: the tombstone is live once the state names it
-    commitMutationTag(storeDir, tag, isTomb = true,
-      hashStoreDeltaTagsOf(storeDir, _))
+      .write.mode("overwrite").parquet(s"${l.tombDir(tag)}/pairs")
+    MutableStore.writeTombStats(storeDir, tag, covered)
+    MutableStore.commitMutation(l, tag, tomb = true)
   }
-
-  /** The source leg of a store row, derived from its file path. */
-  private def legOf: Column = graft.io.MutableStore.legOf
 
   /** The hash store as a DataFrame — the seed/current base plus live
     * `delta_*` batch-append legs, MINUS tombstoned pairs (each pair
@@ -182,11 +129,12 @@ object Dedup {
     * batch's own (possibly partial) delta. */
   private def readHashStore(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      excludeTags: Set[String] = Set.empty): DataFrame = {
-    val st = storeState(dir) // ONE state read resolves the whole leg set
-    readFlatStore(spark, dir, excludeTags, st, hashStoreDeltaTagsOf(dir, st),
-      tombData = "pairs", maskKeys = Seq("h", "first_id"))
-  }
+      excludeTags: Set[String] = Set.empty): DataFrame =
+    readHashAt(spark, dir, MutableStore.snapOf(flatOf(dir)), excludeTags)
+
+  private def readHashAt(spark: org.apache.spark.sql.SparkSession, dir: String,
+      s: MutableStore.Snap, excludeTags: Set[String] = Set.empty): DataFrame =
+    MutableStore.readFlat(spark, flatOf(dir), s, excludeTags, "pairs", Seq("h", "first_id"))
 
   /** The exact-dedup hash store as a lazy DataFrame (the committed
     * snapshot: base ∪ live deltas − covering tombstones). */
@@ -202,199 +150,65 @@ object Dedup {
   def hashStoreViewAt(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       version: Int): DataFrame = {
-    val st = storeState(dir)
+    val st = MutableStore.state(dir)
     if (st.v == version) readHashStore(spark, dir)
-    else {
-      val ref = graft.io.MutableStore.priorRefOf(dir, st, version)
-      val hist = graft.io.MutableStore.State(ref.v, Set.empty, Set.empty,
-        Some(ref.live), Some(ref.tombs))
-      readFlatStore(spark, dir, Set.empty, hist, ref.live,
-        tombData = "pairs", maskKeys = Seq("h", "first_id"))
-    }
+    else readHashAt(spark, dir,
+      MutableStore.snapAt(flatOf(dir), MutableStore.priorRefOf(dir, st, version)))
   }
 
   /** The hash store exactly as a TAG captured it — the tag's own
     * reference set, NOT the version's retirement state. */
   def hashStoreViewAtTag(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): DataFrame = {
-    val ref = graft.io.MutableStore.resolveTag(dir, name)
-    readFlatStore(spark, dir, Set.empty,
-      graft.io.MutableStore.State(ref.v, Set.empty, Set.empty,
-        Some(ref.live), Some(ref.tombs)), ref.live,
-      tombData = "pairs", maskKeys = Seq("h", "first_id"))
-  }
+      name: String): DataFrame =
+    readHashAt(spark, dir, MutableStore.snapAt(flatOf(dir), MutableStore.resolveTag(dir, name)))
 
   /** NAMED snapshot tag on the exact-dedup hash store — exempts
     * `version` (current by default) from the retention policy until
     * dropped. Returns the tagged version. */
   def tagHashSnapshot(
       dir: String, name: String, version: Option[Int] = None): Int =
-    graft.io.MutableStore.tagSnapshot(dir, name, version)
+    MutableStore.tagSnapshot(dir, name, version)
 
   def dropHashTag(dir: String, name: String): Boolean =
-    graft.io.MutableStore.dropTag(dir, name)
+    MutableStore.dropTag(dir, name)
 
   /** ROLLBACK the hash store to a retained version — one atomic state
     * commit replaying the prior's reference set; the rolled-back-FROM
     * version becomes a retained prior. Returns the version rolled back
     * from. */
   def rollbackHashStore(dir: String, version: Int): Int =
-    graft.io.MutableStore.rollbackTo(dir, version)
+    MutableStore.rollbackTo(dir, version)
 
   /** [[rollbackHashStore]] by tag — restores the tag's EXACT captured
     * snapshot. Returns the version rolled back from. */
   def rollbackHashStoreToTag(dir: String, name: String): Int =
-    graft.io.MutableStore.rollbackToTag(dir, name)
-
-  /** The shared FLAT-LAYOUT store read (seed files at the dir root —
-    * or the committed `base_v<N>` — plus `delta_*` legs), leg-masked:
-    * each tombstone's key rows anti-join only the legs it covers. */
-  private def readFlatStore(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      excludeTags: Set[String], st: graft.io.MutableStore.State,
-      liveDeltaTags: Seq[String],
-      tombData: String, maskKeys: Seq[String]): DataFrame = {
-    val raw =
-      if (st.v == 0)
-        spark.read.option("recursiveFileLookup", "true").parquet(dir)
-      else {
-        val base = spark.read.parquet(s"$dir/base_v${st.v}")
-        liveDeltaTags.filterNot(excludeTags).foldLeft(base) { (acc, t) =>
-          acc.unionAll(spark.read.schema(base.schema).parquet(s"$dir/delta_$t"))
-        }
-      }
-    // leg cuts apply on the raw SCAN (input_file_name is per-row scan
-    // context — meaningless after the mask join below). At v=0 the
-    // recursive scan must also skip any base_v* dir a CRASHED
-    // compaction attempt left behind (uncommitted data — the state
-    // file is the commit point). With a COMMITTED live list, delta
-    // legs are WHITELISTED: a delta dir the state does not name (an
-    // uncommitted crashed append) is not live yet, by definition.
-    val filtered =
-      if (st.v == 0) {
-        val noGhostBase = raw.where(!input_file_name().rlike("/base_v\\d+/"))
-        st.live match {
-          case Some(liveTags) =>
-            val isDelta = input_file_name().rlike("/delta_[^/]+/")
-            val allowed = liveTags.filterNot(excludeTags)
-              .map(t => input_file_name().contains(s"/delta_$t/"))
-              .reduceOption(_ || _).getOrElse(lit(false))
-            noGhostBase.where(!isDelta || allowed)
-          case None =>
-            val cut = (excludeTags ++ st.folded).toSeq.sorted.map(t => s"/delta_$t/")
-            cut.foldLeft(noGhostBase)(
-              (acc, frag) => acc.where(!input_file_name().contains(frag)))
-        }
-      } else raw // versioned base: exclusions already leg-level above
-    val tombs = graft.io.MutableStore.liveTombsOf(dir, st)
-    if (tombs.isEmpty) filtered
-    else {
-      val keys = tombs.map { t =>
-        spark.read.parquet(s"${storeTombRoot(dir)}/${t.tag}/$tombData")
-          .withColumn("_leg", explode(lit(t.covered.toSeq.sorted.toArray)))
-      }.reduce(_ unionAll _)
-      val cols = filtered.columns
-      filtered.withColumn("_leg", legOf)
-        .join(broadcast(keys), "_leg" +: maskKeys, "left_anti")
-        .select(cols.map(col).toIndexedSeq: _*)
-    }
-  }
+    MutableStore.rollbackToTag(dir, name)
 
   /** Fold live deltas and consumed tombstones into a fresh base
-    * version — the engine-wide VERSIONED ATOMIC SWAP applied to the
-    * hash store: survivors land in `base_v<N+1>` while the old base
-    * keeps serving, the commit is one atomic `_graft_store_state.json`
-    * replace (version pointer + folded + consumed lists), GC LAGGED
-    * to the next compaction's start (pinned-probe retention). A
-    * tombstone is consumed when every covered leg folded; one covering
-    * a still-live (excluded) delta stays. Single-writer compactor;
-    * concurrent probes keep the file sets their plans listed. */
+    * version — the engine-wide VERSIONED ATOMIC SWAP
+    * ([[graft.io.MutableStore.compact]]) applied to the hash store:
+    * survivors (the masked union minus any excluded delta legs, which
+    * stay live delta dirs and keep their own tombstone coverage) land
+    * in `base_v<N+1>` while the old base keeps serving; a tombstone is
+    * consumed when every covered leg folded. */
   def compactHashStore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       excludeTags: Set[String] = Set.empty): Unit =
-    compactFlatStore(spark, dir, excludeTags,
-      ex => readHashStore(spark, dir, ex))
-
-  /** The shared FLAT-LAYOUT compaction: fold live deltas + consumed
-    * tombstones into a fresh `base_v<N>` (built under an underscore
-    * temp — invisible to recursive listings even half-written — then
-    * renamed in; the version number skips past any debris so a
-    * version path is NEVER reused and cached file listings cannot
-    * alias fresh data), COMMIT with one atomic state replace, GC last
-    * and best-effort. */
-  private def compactFlatStore(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      excludeTags: Set[String],
-      read: Set[String] => DataFrame): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "compactFlatStore") {
-    val tags = hashStoreDeltaTags(dir).filterNot(excludeTags)
-    val tombs = liveStoreTombs(dir)
-    if (tags.isEmpty && tombs.isEmpty) return
-    val st = storeState(dir)
-    val consumed = graft.io.MutableStore.consumedTombs(
-      tombs, tags, hashStoreDeltaTags(dir).toSet)
-    val vNew = math.max(st.v,
-      graft.io.MutableStore.maxOnDiskVersion(dir, Seq("base_v"))) + 1
-    // LAGGED GC (the engine-wide snapshot-pinned-probe retention): the
-    // PREVIOUS commit's superseded dirs — base versions other than the
-    // committed one, crashed-attempt debris, the legacy v0 root files
-    // once a versioned base is committed, folded deltas, consumed
-    // tombstones — are collected HERE, at the next compaction's start,
-    // never at a commit's own end, so a probe that pinned its file set
-    // before this commit keeps reading through it.
-    // retention-aware: anything the CURRENT snapshot or a protected
-    // prior still names survives (gcRetention = 1 → historical window)
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir, st.priors)
-    graft.io.MutableStore.gcFlatPrior(dir, st, protectedRefs)
-    // survivors AFTER the GC: the masked union minus any excluded delta
-    // legs (they stay live delta dirs and keep their own tombstone
-    // coverage); its eager file listing must not see debris this
-    // compaction is about to collect
-    val survivors = read(excludeTags)
-    val newDir = s"$dir/base_v$vNew"
-    val building = java.nio.file.Paths.get(s"$dir/_building_base_v$vNew")
-    graft.io.MutableStore.deleteDir(building)
-    survivors.write.mode("overwrite").parquet(building.toString)
-    java.nio.file.Files.move(building, java.nio.file.Paths.get(newDir))
-    // ---- COMMIT (no GC after it — lagged to the next compaction) ----
-    def deltaOnDisk(t: String) =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"delta_$t"))
-    def tombOnDisk(t: String) =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(storeTombRoot(dir), t))
-    val folded = (st.folded.filter(deltaOnDisk) ++ tags).toSeq.sorted
-    val dead = (st.deadTombs.filter(tombOnDisk) ++ consumed.map(_.tag)).toSeq.sorted
-    val liveLeft = hashStoreDeltaTagsOf(dir, st).filterNot(tags.contains(_)).sorted
-    val tombsLeft = tombs.map(_.tag).filterNot(consumed.map(_.tag).contains(_)).sorted
-    graft.io.MutableStore.commitState(dir, vNew, folded, dead, liveLeft, tombsLeft,
-      priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-        graft.io.MutableStore.SnapRef(
-          st.v, hashStoreDeltaTagsOf(dir, st), tombs.map(_.tag))))
-  }
+    MutableStore.compactFlat(spark, flatOf(dir), "compactHashStore", excludeTags,
+      "pairs", Seq("h", "first_id"))
 
   /** Policy feeds for the streaming auto-compaction (count + the
     * size-ratio trigger every streaming leg uses). */
-  def hashStoreDeltaCount(dir: String): Int = hashStoreDeltaTags(dir).size
-  def hashStoreBaseBytes(dir: String): Long =
-    graft.io.MutableStore.flatBaseBytes(dir)
-  def hashStoreDeltaBytes(dir: String): Long =
-    graft.io.MutableStore.flatDeltaBytes(dir, hashStoreDeltaTags(dir))
+  def hashStoreDeltaCount(dir: String): Int = MutableStore.deltaTags(flatOf(dir)).size
+  def hashStoreBaseBytes(dir: String): Long = MutableStore.baseBytes(flatOf(dir))
+  def hashStoreDeltaBytes(dir: String): Long = MutableStore.deltaBytes(flatOf(dir))
 
-  /** Drop every delta and tombstone dir — the replay-reset helper
-    * mirroring [[graft.text.InvertedIndex.dropMutations]] (the base
-    * snapshot and its seed sidecar are untouched). */
-  def dropHashStoreMutations(dir: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    hashStoreDeltaTags(dir).foreach(t =>
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, s"delta_$t")))
-    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(storeTombRoot(dir)))
-    // the committed state must agree with the wiped disk
-    graft.io.MutableStore.patchStringArrays(
-      java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName),
-      "live" -> Seq.empty, "liveTombs" -> Seq.empty)
-  }
+  /** Drop every delta and tombstone dir — the replay reset
+    * ([[graft.io.MutableStore.dropMutations]]; the base snapshot and
+    * its seed sidecar are untouched). */
+  def dropHashStoreMutations(dir: String): Unit = MutableStore.dropMutations(flatOf(dir))
 
   /** Novelty check of a crawl `batch` against a persisted hash store
     * ([[ensureHashStore]]): every batch row annotated with
@@ -468,7 +282,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       batchTag: Option[String] = None): DataFrame =
-      graft.io.MutableStore.withWriterLock(storeDir, "incrementalDedupBatch") {
+      MutableStore.writing(spark, storeDir, "Dedup", "incrementalDedupBatch") {
     val bh = batch.select(col(idCol).cast("long").as("_bid"),
       graft.text.TextAnalysis.fingerprintMd5(col(textCol)).as("h"))
     val w = Window.partitionBy(col("h")).orderBy(col("_bid").asc)
@@ -500,9 +314,7 @@ object Dedup {
     batchTag match {
       case Some(tag) =>
         novel.write.mode("overwrite").parquet(s"$storeDir/delta_$tag")
-        // COMMIT: the delta is live once the state names it
-        commitMutationTag(storeDir, tag, isTomb = false,
-          hashStoreDeltaTagsOf(storeDir, _))
+        MutableStore.commitMutation(flatOf(storeDir), tag, tomb = false)
       case None =>
         novel.write.mode("append").parquet(storeDir)
     }
@@ -567,252 +379,56 @@ object Dedup {
       tag: String,
       idCol: String = "doc_id",
       excludeCovered: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(storeDir, "deleteFromShingleStore") {
-    // excludeCovered: the CDC batch's own tag — adds win within a batch
-    val covered = ("base" +: shingleStoreDeltaTags(storeDir).filterNot(excludeCovered))
-      .map(t => "\"" + t + "\"").mkString("[", ",", "]")
-    val out = s"${storeTombRoot(storeDir)}/$tag"
+      MutableStore.writing(spark, storeDir, "Dedup", "deleteFromShingleStore") {
+    val l = shingleOf(storeDir)
+    val covered = MutableStore.coveredLegs(l, excludeCovered)
     ids.select(col(idCol).cast("long").as("c_id")).distinct()
-      .write.mode("overwrite").parquet(s"$out/ids")
-    graft.io.Artifact.writeAtomic(
-      java.nio.file.Paths.get(out, "_stats.json"),
-      s"""{"covered":$covered}""")
-    commitMutationTag(storeDir, tag, isTomb = true,
-      shingleStoreDeltaTagsOf(storeDir, _))
+      .write.mode("overwrite").parquet(s"${l.tombDir(tag)}/ids")
+    MutableStore.writeTombStats(storeDir, tag, covered)
+    MutableStore.commitMutation(l, tag, tomb = true)
   }
 
-  /** Live delta tags of the shingle store — the COMMITTED live list
-    * when the state carries one, else the legacy `sh`-part listing
-    * (appends write both parts under the same tag). */
-  private def shingleStoreDeltaTags(dir: String): Seq[String] =
-    shingleStoreDeltaTagsOf(dir, storeState(dir))
-
-  private def shingleStoreDeltaTagsOf(
-      dir: String, st: graft.io.MutableStore.State): Seq[String] =
-    st.live.getOrElse {
-      val root = java.nio.file.Paths.get(dir, "sh")
-      if (!java.nio.file.Files.exists(root)) return Seq.empty
-      val s = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(java.nio.file.Files.isDirectory(_))
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("delta_"))
-          .map(_.stripPrefix("delta_"))
-          .filterNot(st.folded)
-          .toSeq.sorted
-      } finally s.close()
-    }
-
-  /** One part (`sh`/`sizes`) of the shingle store, leg-masked: the
-    * current base version plus live delta legs, minus tombstoned doc
-    * ids on the legs each tombstone covers (broadcast anti-join on
-    * (leg, c_id); the no-mutation fast path is the original single
-    * recursive scan). */
-  private def readShinglePart(
-      spark: org.apache.spark.sql.SparkSession, dir: String, part: String,
-      excludeTags: Set[String],
-      stOpt: Option[graft.io.MutableStore.State] = None): DataFrame = {
-    val st = stOpt.getOrElse(storeState(dir)) // callers with two parts pass ONE read
-    val raw =
-      if (st.v == 0)
-        spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/$part")
-      else {
-        val base = spark.read.parquet(s"$dir/${part}_v${st.v}")
-        shingleStoreDeltaTagsOf(dir, st).filterNot(excludeTags).foldLeft(base) { (acc, t) =>
-          acc.unionAll(spark.read.schema(base.schema).parquet(s"$dir/$part/delta_$t"))
-        }
-      }
-    val filtered =
-      if (st.v == 0) {
-        val noGhost = raw.where(!input_file_name().rlike("/base_v\\d+/"))
-        st.live match {
-          case Some(liveTags) =>
-            // committed-live WHITELIST: an unnamed delta dir is not live
-            val isDelta = input_file_name().rlike("/delta_[^/]+/")
-            val allowed = liveTags.filterNot(excludeTags)
-              .map(t => input_file_name().contains(s"/delta_$t/"))
-              .reduceOption(_ || _).getOrElse(lit(false))
-            noGhost.where(!isDelta || allowed)
-          case None =>
-            val cut = (excludeTags ++ st.folded).toSeq.sorted.map(t => s"/delta_$t/")
-            cut.foldLeft(noGhost)(
-              (acc, frag) => acc.where(!input_file_name().contains(frag)))
-        }
-      } else raw
-    val tombs = graft.io.MutableStore.liveTombsOf(dir, st)
-    if (tombs.isEmpty) filtered
-    else {
-      val ids = tombs.map { t =>
-        spark.read.parquet(s"${storeTombRoot(dir)}/${t.tag}/ids")
-          .withColumn("_leg", explode(lit(t.covered.toSeq.sorted.toArray)))
-      }.reduce(_ unionAll _)
-      val cols = filtered.columns
-      filtered.withColumn("_leg", legOf)
-        .join(broadcast(ids), Seq("_leg", "c_id"), "left_anti")
-        .select(cols.map(col).toIndexedSeq: _*)
-    }
-  }
+  /** The shingle store's two-part layout: `sh`/`sizes` part dirs (v0)
+    * → `sh_v<N>`/`sizes_v<N>`, each with `delta_<tag>` legs nested in
+    * the part dir (listed through `sh`; an append writes both under one
+    * tag), the flat `_tombstones`. */
+  private def shingleOf(dir: String) = MutableStore.Layout("Dedup", dir,
+    java.nio.file.Paths.get(dir, MutableStore.stateName), flat = true, dir,
+    Seq("sh_v", "sizes_v"), Seq(s"$dir/sh", s"$dir/sizes"),
+    () => Seq("sh", "sizes").flatMap(part => MutableStore.entries(s"$dir/$part")
+      .filterNot(_.getFileName.toString.startsWith("delta_"))),
+    Seq(s"$dir/sh", s"$dir/sizes"), "delta_", None, s"$dir/_tombstones", "", Some("_stats.json"))
 
   /** Fold live deltas + consumed tombstones of BOTH parts into fresh
-    * versioned part dirs (`sh_v<N>` / `sizes_v<N>`, built under
-    * underscore temps, renamed in, never a reused path) and COMMIT
-    * with one atomic state replace — the engine-wide versioned-swap
-    * protocol, GC lagged to the next compaction's start. Single-writer
-    * compactor; concurrent probes keep their listed file sets. */
+    * versioned part dirs (`sh_v<N>` / `sizes_v<N>`) under one atomic
+    * state commit ([[graft.io.MutableStore.compact]]). */
   def compactShingleStore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       excludeTags: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "compactShingleStore") {
-    val tags = shingleStoreDeltaTags(dir).filterNot(excludeTags)
-    val tombs = liveStoreTombs(dir)
-    if (tags.isEmpty && tombs.isEmpty) return
-    val st = storeState(dir)
-    val liveNow = shingleStoreDeltaTags(dir).toSet
-    val consumed = tombs.filter(_.covered.forall(c =>
-      c == "base" || tags.contains(c) || !liveNow.contains(c)))
-    val onDiskMax = {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .collect { case nm if nm.matches("(sh|sizes)_v\\d+") =>
-            nm.replaceAll("^[a-z]+_v", "").toInt }
-          .foldLeft(0)(math.max)
-      } finally s.close()
-    }
-    val vNew = math.max(st.v, onDiskMax) + 1
-    // LAGGED GC (the engine-wide snapshot-pinned-probe retention): the
-    // PREVIOUS commit's superseded part versions, crashed-attempt
-    // debris, legacy v0 part files once a versioned base is committed,
-    // folded delta subdirs and consumed tombstones — collected at the
-    // NEXT compaction's start, never at a commit's own end, BEFORE the
-    // survivor reads list their files.
-    // retention-aware: anything the CURRENT snapshot or a protected
-    // prior still names survives (gcRetention = 1 → historical window)
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir, st.priors)
-    gcShinglePrior(dir, st, protectedRefs)
-    Seq("sh", "sizes").foreach { part =>
-      val building = java.nio.file.Paths.get(s"$dir/_building_${part}_v$vNew")
-      graft.io.MutableStore.deleteDir(building)
-      readShinglePart(spark, dir, part, excludeTags)
-        .write.mode("overwrite").parquet(building.toString)
-      java.nio.file.Files.move(building,
-        java.nio.file.Paths.get(s"$dir/${part}_v$vNew"))
-    }
-    // ---- COMMIT (no GC after it — lagged to the next compaction) ----
-    def deltaOnDisk(t: String) =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
-    def tombOnDisk(t: String) =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(storeTombRoot(dir), t))
-    val folded = (st.folded.filter(deltaOnDisk) ++ tags).toSeq.sorted
-    val dead = (st.deadTombs.filter(tombOnDisk) ++ consumed.map(_.tag)).toSeq.sorted
-    val liveLeft = shingleStoreDeltaTagsOf(dir, st).filterNot(tags.contains(_)).sorted
-    val tombsLeft = tombs.map(_.tag).filterNot(consumed.map(_.tag).contains(_)).sorted
-    graft.io.MutableStore.commitState(dir, vNew, folded, dead, liveLeft, tombsLeft,
-      priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-        graft.io.MutableStore.SnapRef(
-          st.v, shingleStoreDeltaTagsOf(dir, st), tombs.map(_.tag))))
-  }
-
-  /** LAGGED GC of the SHINGLE store (two part dirs `sh`/`sizes`, each
-    * with versioned part files and nested delta subdirs): superseded
-    * part versions, crashed-attempt debris, legacy v0 part files once
-    * a versioned base is committed, folded delta subdirs and consumed
-    * tombstones — minus anything the CURRENT state or a protected
-    * prior still names. Factored out of [[compactShingleStore]] so the
-    * standalone snapshot expiry shares the one implementation. */
-  private def gcShinglePrior(dir: String, st: graft.io.MutableStore.State,
-      protectedRefs: Seq[graft.io.MutableStore.SnapRef]): Unit = {
-    val tombTags = graft.io.MutableStore.liveTombTagsOf(dir, st)
-    val keepVs = Set(st.v) ++ protectedRefs.map(_.v)
-    val keepDelta = shingleStoreDeltaTagsOf(dir, st).toSet ++ protectedRefs.flatMap(_.live)
-    val keepTombs = tombTags.toSet ++ protectedRefs.flatMap(_.tombs)
-    val gc = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try {
-      import scala.jdk.CollectionConverters._
-      gc.iterator().asScala
-        .filter { p =>
-          val nm = p.getFileName.toString
-          nm.startsWith("_building_") ||
-            (nm.matches("(sh|sizes)_v\\d+") &&
-              !keepVs.contains(nm.replaceAll("^[a-z]+_v", "").toInt))
-        }
-        .toSeq.foreach(graft.io.MutableStore.deleteDir)
-    } finally gc.close()
-    if (st.v > 0 && !protectedRefs.exists(_.v == 0)) Seq("sh", "sizes").foreach { part =>
-      // legacy base FILES go; still-live delta subdirs stay
-      val root = java.nio.file.Paths.get(dir, part)
-      if (java.nio.file.Files.exists(root)) {
-        val ls = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          ls.iterator().asScala
-            .filter(!_.getFileName.toString.startsWith("delta_"))
-            .toSeq.foreach(graft.io.MutableStore.deleteDir)
-        } finally ls.close()
-      }
-    }
-    st.folded.filterNot(keepDelta).foreach { t =>
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sizes", s"delta_$t"))
-    }
-    st.deadTombs.filterNot(keepTombs).foreach(t =>
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(storeTombRoot(dir), t)))
-  }
+    MutableStore.compactFlat(spark, shingleOf(dir), "compactShingleStore", excludeTags,
+      "ids", Seq("c_id"))
 
   /** Standalone snapshot expiry for the HASH-layout stores (exact/
     * fuzzy-hash and SimHash signature stores — the shared flat
     * base_v/delta layout): apply the retention policy and collect due
     * priors + debris NOW, without waiting for (or performing) a
-    * content commit. See [[graft.io.MutableStore.expireSnapshotsWith]]. */
-  def expireHashStoreSnapshots(dir: String): Int =
-    graft.io.MutableStore.expireFlatSnapshots(dir)
+    * content commit. See [[graft.io.MutableStore.expire]]. */
+  def expireHashStoreSnapshots(dir: String): Int = MutableStore.expire(flatOf(dir))
 
   /** Standalone snapshot expiry for the SHINGLE store (the near-dup
     * MinHash store's two-part layout). */
-  def expireShingleStoreSnapshots(dir: String): Int = {
-    val p = java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName)
-    if (!java.nio.file.Files.exists(p)) return 0
-    val st = storeState(dir)
-    graft.io.MutableStore.expireSnapshotsWith(dir, p, st.priors,
-      prot => gcShinglePrior(dir, st, prot))
-  }
+  def expireShingleStoreSnapshots(dir: String): Int = MutableStore.expire(shingleOf(dir))
 
   /** Policy feeds for the streaming auto-compaction of the shingle
     * store (both parts; delta dirs live INSIDE the part dirs). */
-  def shingleStoreDeltaCount(dir: String): Int = shingleStoreDeltaTags(dir).size
-  def shingleStoreBaseBytes(dir: String): Long = {
-    val st = storeState(dir)
-    Seq("sh", "sizes").map { part =>
-      if (st.v > 0)
-        graft.io.MutableStore.duBytes(java.nio.file.Paths.get(dir, s"${part}_v${st.v}"))
-      else
-        graft.io.MutableStore.duBytes(java.nio.file.Paths.get(dir, part)) -
-          shingleStorePartDeltaBytes(dir, part)
-    }.sum
-  }
-  def shingleStoreDeltaBytes(dir: String): Long =
-    Seq("sh", "sizes").map(shingleStorePartDeltaBytes(dir, _)).sum
-  private def shingleStorePartDeltaBytes(dir: String, part: String): Long =
-    shingleStoreDeltaTags(dir).map(t => graft.io.MutableStore.duBytes(
-      java.nio.file.Paths.get(dir, part, s"delta_$t"))).sum
+  def shingleStoreDeltaCount(dir: String): Int = MutableStore.deltaTags(shingleOf(dir)).size
+  def shingleStoreBaseBytes(dir: String): Long = MutableStore.baseBytes(shingleOf(dir))
+  def shingleStoreDeltaBytes(dir: String): Long = MutableStore.deltaBytes(shingleOf(dir))
 
   /** Replay-reset: drop every delta and tombstone dir of the shingle
     * store (base snapshot + seed sidecar untouched). */
-  def dropShingleStoreMutations(dir: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    shingleStoreDeltaTags(dir).foreach { t =>
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sh", s"delta_$t"))
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, "sizes", s"delta_$t"))
-    }
-    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(storeTombRoot(dir)))
-    graft.io.MutableStore.patchStringArrays(
-      java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName),
-      "live" -> Seq.empty, "liveTombs" -> Seq.empty)
-  }
+  def dropShingleStoreMutations(dir: String): Unit = MutableStore.dropMutations(shingleOf(dir))
 
   /** Near-duplicate check of a crawl `batch` against a persisted
     * shingle store ([[ensureShingleStore]]): every batch row annotated
@@ -850,13 +466,14 @@ object Dedup {
       .localCheckpoint()
     val bsz = bsh.groupBy("b_id").agg(count(lit(1)).as("b_size"))
     // current base version plus live delta_* legs, minus covering
-    // tombstones ([[readShinglePart]]); a retried batch excludes its
+    // tombstones ([[graft.io.MutableStore.readFlat]]); a retried batch excludes its
     // OWN delta so it cannot self-match and then erase it. BOTH parts
     // resolve against ONE committed-state read (snapshot contract)
-    val shSt = Some(storeState(storeDir))
-    def readPart(part: String): DataFrame =
-      readShinglePart(spark, storeDir, part, excludeTag.toSet, shSt)
-    val store = readPart("sh")
+    val l = shingleOf(storeDir)
+    val snap = MutableStore.snapOf(l)
+    def readPart(part: Int): DataFrame =
+      MutableStore.readFlat(spark, l, snap, excludeTag.toSet, "ids", Seq("c_id"), part)
+    val store = readPart(0)
     // ONE store-probe join (store ⋈ bsh on sh is row-for-row the old
     // hits-on-distinct-then-bsh double join: hits kept each matching
     // store row once per DISTINCT sh, the second join multiplied by
@@ -870,7 +487,7 @@ object Dedup {
     val inter = store.join(broadcast(bsh), "sh")
       .groupBy("b_id", "c_id").agg(count(lit(1)).as("n_inter"))
       .localCheckpoint()
-    val sizes = readPart("sizes")
+    val sizes = readPart(1)
     val candSizes = sizes.join(
         broadcast(inter.select("c_id").distinct()), "c_id")
       // candidate-bounded collapse: duplicate size rows for one corpus
@@ -922,7 +539,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       shingleN: Int = 3): DataFrame =
-      graft.io.MutableStore.withWriterLock(storeDir, "incrementalNearDupBatch") {
+      MutableStore.writing(spark, storeDir, "Dedup", "incrementalNearDupBatch") {
     val verdicts = nearDupsAgainstShingleStore(
         spark, storeDir, batch, maxJaccardDist, idCol, textCol, shingleN,
         excludeTag = Some(batchTag))
@@ -940,8 +557,7 @@ object Dedup {
     novelSh.groupBy("c_id").agg(count(lit(1)).as("c_size"))
       .write.mode("overwrite").parquet(s"$storeDir/sizes/delta_$batchTag")
     // COMMIT after BOTH parts are written (the delta is one unit)
-    commitMutationTag(storeDir, batchTag, isTomb = false,
-      shingleStoreDeltaTagsOf(storeDir, _))
+    MutableStore.commitMutation(shingleOf(storeDir), batchTag, tomb = false)
     verdicts
   }
 
@@ -1115,29 +731,27 @@ object Dedup {
       ids: DataFrame,
       tag: String,
       idCol: String = "s_id"): Unit =
-      graft.io.MutableStore.withWriterLock(storeDir, "deleteFromSigStore") {
-    val covered = "base" +: hashStoreDeltaTags(storeDir)
+      MutableStore.writing(spark, storeDir, "Dedup", "deleteFromSigStore") {
+    val l = flatOf(storeDir)
+    val covered = MutableStore.coveredLegs(l, Set.empty)
     ids.select(col(idCol).cast("long").as("s_id")).distinct()
-      .write.mode("overwrite").parquet(s"${storeTombRoot(storeDir)}/$tag/ids")
-    graft.io.MutableStore.writeTombStats(storeDir, tag, covered)
-    commitMutationTag(storeDir, tag, isTomb = true,
-      hashStoreDeltaTagsOf(storeDir, _))
+      .write.mode("overwrite").parquet(s"${l.tombDir(tag)}/ids")
+    MutableStore.writeTombStats(storeDir, tag, covered)
+    MutableStore.commitMutation(l, tag, tomb = true)
   }
 
   private def readSigStore(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      excludeTags: Set[String]): DataFrame = {
-    val st = storeState(dir) // ONE state read resolves the whole leg set
-    readFlatStore(spark, dir, excludeTags, st, hashStoreDeltaTagsOf(dir, st),
-      tombData = "ids", maskKeys = Seq("s_id"))
-  }
+      excludeTags: Set[String]): DataFrame =
+    MutableStore.readFlat(spark, flatOf(dir), MutableStore.snapOf(flatOf(dir)),
+      excludeTags, "ids", Seq("s_id"))
 
   def compactSigStore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       excludeTags: Set[String] = Set.empty): Unit =
-    compactFlatStore(spark, dir, excludeTags,
-      ex => readSigStore(spark, dir, ex))
+    MutableStore.compactFlat(spark, flatOf(dir), "compactSigStore", excludeTags,
+      "ids", Seq("s_id"))
 
   /** Replay-reset for the signature store — deltas + tombstones go,
     * base snapshot and seed sidecar stay. */
@@ -1162,7 +776,7 @@ object Dedup {
       maxHamming: Int = 3,
       idCol: String = "media_id",
       sigCol: String = "sig"): DataFrame =
-      graft.io.MutableStore.withWriterLock(storeDir, "incrementalSigDedupBatch") {
+      MutableStore.writing(spark, storeDir, "Dedup", "incrementalSigDedupBatch") {
     val batchSigs = sigs
       .select(col(idCol).cast("long").as("b_id"), col(sigCol).as("sig"))
       // bounded: batch-sized — reused by the probe AND the delta write
@@ -1184,8 +798,7 @@ object Dedup {
     verdicts.filter(col("is_novel") === 1L)
       .select(col("b_id").as("s_id"), col("sig"))
       .write.mode("overwrite").parquet(s"$storeDir/delta_$batchTag")
-    commitMutationTag(storeDir, batchTag, isTomb = false,
-      hashStoreDeltaTagsOf(storeDir, _))
+    MutableStore.commitMutation(flatOf(storeDir), batchTag, tomb = false)
     verdicts.select(col("b_id").as(idCol), col("is_novel"),
       col("near_dup_of"), col("hamming"))
   }

@@ -154,79 +154,19 @@ object Binary {
   }
 
   private val sigSidecar = "_binary_sigs.json"
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def sidecarNodeOf(dir: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val p = java.nio.file.Paths.get(dir, sigSidecar)
-    if (java.nio.file.Files.exists(p))
-      Some(mapper.readTree(java.nio.file.Files.readString(p)))
-    else None
-  }
+  /** The signature store as a versioned store ([[graft.io.MutableStore]]):
+    * state in the fingerprint sidecar, base `sigs` → `sigs_v<N>`,
+    * `tomb_<tag>` (ids + `_stats.json`) legs; no deltas. */
+  private def layoutOf(dir: String) = graft.io.MutableStore.Layout("Binary", dir,
+    java.nio.file.Paths.get(dir, sigSidecar), flat = false, dir, Seq("sigs_v"),
+    Seq(s"$dir/sigs"), () => Seq(java.nio.file.Paths.get(dir, "sigs")),
+    Seq(dir), "delta_", Some("_stats.json"), dir, "tomb_", Some("_stats.json"))
 
   /** The current BASE signature location: `sigs` for a never-compacted
     * artifact, the sidecar's committed `sigs_v<N>` after a tombstone
     * compaction (the engine-wide versioned-swap protocol). */
-  def sigsPath(dir: String): String = {
-    val v = sidecarNodeOf(dir).filter(_.hasNonNull("v"))
-      .map(_.get("v").asInt()).getOrElse(0)
-    if (v > 0) s"$dir/sigs_v$v" else s"$dir/sigs"
-  }
-
-  private def deadTombTags(dir: String): Set[String] =
-    sidecarNodeOf(dir).filter(_.has("deadTombs")).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get("deadTombs").elements().asScala.map(_.asText()).toSet
-    }.getOrElse(Set.empty)
-
-  private def listDirs(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) return Seq.empty
-    val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(java.nio.file.Files.isDirectory(_))
-        .map(_.getFileName.toString).toSeq
-    } finally s.close()
-  }
-
-  /** One committed-state snapshot (single sidecar read) — the
-    * [[graft.index.Sq]] snapshot contract applied to the (delta-less)
-    * signature store: base version + live tombstone tags resolve
-    * atomically, lagged GC keeps the named dirs readable through one
-    * subsequent compaction commit. */
-  private final case class Snap(
-      node: Option[com.fasterxml.jackson.databind.JsonNode],
-      v: Int, tombTags: Seq[String]) {
-    def sigsPathOf(dir: String): String =
-      if (v > 0) s"$dir/sigs_v$v" else s"$dir/sigs"
-    def dead: Set[String] = node.filter(_.has("deadTombs")).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get("deadTombs").elements().asScala.map(_.asText()).toSet
-    }.getOrElse(Set.empty)
-  }
-
-  private def snapOf(dir: String): Snap = {
-    val node = sidecarNodeOf(dir)
-    val v = node.filter(_.hasNonNull("v")).map(_.get("v").asInt()).getOrElse(0)
-    val dead = node.filter(_.has("deadTombs")).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get("deadTombs").elements().asScala.map(_.asText()).toSet
-    }.getOrElse(Set.empty[String])
-    val tombTags = graft.io.MutableStore.optStringSeq(node, "liveTombs")
-      .getOrElse(listedTombTags(dir).filterNot(dead))
-    Snap(node, v, tombTags)
-  }
-
-  private def listedTombTags(dir: String): Seq[String] =
-    listDirs(dir)
-      .filter(n => n.startsWith("tomb_") &&
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, n, "_stats.json")))
-      .map(_.stripPrefix("tomb_"))
-      .sorted
-
-  private def liveTombTags(dir: String): Seq[String] = snapOf(dir).tombTags
+  def sigsPath(dir: String): String = graft.io.MutableStore.basePaths(layoutOf(dir)).head
 
   /** Persist thresholds + signatures behind the shared
     * fingerprint-sidecar protocol ([[graft.io.Artifact]]): corpus
@@ -261,22 +201,15 @@ object Binary {
       signatures(df, thr, idCol, embCol)
         .write.mode("overwrite").parquet(s"$dir/sigs")
       // a rebuild means the corpus changed — stale versions/tombstones go
-      listDirs(dir).filter(n => n.startsWith("sigs_v") || n.startsWith("tomb_"))
-        .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
+      graft.io.MutableStore.entries(dir).filter(p => Seq("sigs_v", "tomb_")
+          .exists(p.getFileName.toString.startsWith))
+        .foreach(graft.io.MutableStore.deleteDir)
     }
   }
 
   /** Drop every tombstone dir, returning the store to the BASE
-    * snapshot its sidecar attests — the replay helper mirroring
-    * [[graft.text.InvertedIndex.dropMutations]]. */
-  def dropMutations(dir: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    listDirs(dir).filter(_.startsWith("tomb_"))
-      .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
-    graft.io.MutableStore.patchStringArrays(
-      java.nio.file.Paths.get(dir, sigSidecar),
-      "liveTombs" -> Seq.empty, "deadTombs" -> Seq.empty)
-  }
+    * snapshot its sidecar attests ([[graft.io.MutableStore.dropMutations]]). */
+  def dropMutations(dir: String): Unit = graft.io.MutableStore.dropMutations(layoutOf(dir))
 
   /** DELETE a batch of vectors from the signature store: a tag-keyed
     * tombstone (ids + the batch's mergeable fingerprint terms, derived
@@ -293,7 +226,7 @@ object Binary {
       tag: String,
       idCol: String = "vec_id",
       embCol: String = "embedding"): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "deleteFromArtifact") {
+      graft.io.MutableStore.writing(spark, dir, "Binary", "deleteFromArtifact") {
     val (nRows, dataHash, hashSum) = graft.io.Artifact.hashAgg(
       batch, org.apache.spark.sql.functions.xxhash64(
         col(idCol), col(embCol).cast("array<double>")))
@@ -302,13 +235,7 @@ object Binary {
     graft.io.Artifact.writeAtomic(
       java.nio.file.Paths.get(dir, s"tomb_$tag", "_stats.json"),
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum"}""")
-    // COMMIT: live once the state names it; a consumed (dead) tag is a
-    // redelivered batch — debris, never re-committed (the Sq contract)
-    val s = snapOf(dir)
-    if (!s.dead.contains(tag))
-      graft.io.MutableStore.patchStringArrays(
-        java.nio.file.Paths.get(dir, sigSidecar),
-        "liveTombs" -> (s.tombTags :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = true)
   }
 
   /** The persisted artifact's thresholds (dim doubles) + signature
@@ -329,107 +256,39 @@ object Binary {
 
   /** Signatures minus live tombstones — the probe input of a store
     * with deletes: one broadcast anti-join of the (tiny) tombstoned id
-    * set over the 8-byte-per-row scan. */
+    * set over the 8-byte-per-row scan. Snapshot-pinned: base path and
+    * tombstone set from ONE state read. */
   def liveSignatures(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      idCol: String = "vec_id"): DataFrame = {
-    val s = snapOf(dir) // snapshot-pinned: base path + tomb set from ONE read
-    val base = spark.read.parquet(s.sigsPathOf(dir))
-    if (s.tombTags.isEmpty) base
+      idCol: String = "vec_id"): DataFrame =
+    liveOf(spark, dir, graft.io.MutableStore.snapOf(layoutOf(dir)), idCol)
+
+  private def liveOf(spark: org.apache.spark.sql.SparkSession, dir: String,
+      s: graft.io.MutableStore.Snap, idCol: String): DataFrame = {
+    val base = spark.read.parquet(layoutOf(dir).basePaths(s.v).head)
+    if (s.tombs.isEmpty) base
     else base.join(
       broadcast(s.tombTags.map(t => spark.read.parquet(s"$dir/tomb_$t/ids"))
         .reduce(_ unionAll _).distinct().select(col(idCol))),
       Seq(idCol), "left_anti")
   }
 
-  /** Physically drop tombstoned rows into a NEW `sigs_v<N>` version —
-    * built under an underscore temp, renamed into a NEVER-REUSED
-    * version path ([[graft.io.MutableStore.maxOnDiskVersion]] skips
-    * crashed-attempt debris), committed by one atomic sidecar replace
-    * carrying the subtracted fingerprint terms (a fresh ensure over
-    * the post-delete corpus then REUSES the store) + the emptied
-    * liveTombs list. GC is LAGGED to the next compaction's start (the
-    * Sq/posting-store contract), so a snapshot-pinned probe outlives
-    * one concurrent commit. Single-writer compactor; concurrent probes
-    * safe. */
-  /** LAGGED GC of the signature store (the Sq contract): superseded
-    * `sigs_v` versions, crashed-attempt debris and consumed tombstone
-    * dirs — minus anything the CURRENT snapshot or a protected prior
-    * still names. Factored out of [[compactSignatures]] so the
-    * standalone snapshot expiry shares the one implementation. */
-  private def gcPrior(dir: String, s: Snap,
-      protectedRefs: Seq[graft.io.MutableStore.SnapRef]): Unit = {
-    def baseOf(v: Int) = if (v > 0) s"sigs_v$v" else "sigs"
-    val keepBases = (Set(s.v) ++ protectedRefs.map(_.v)).map(baseOf)
-    val keepTombs = s.tombTags.toSet ++ protectedRefs.flatMap(_.tombs)
-    listDirs(dir).foreach { n =>
-      val p = java.nio.file.Paths.get(dir, n)
-      if (n.startsWith("_building_")) graft.io.MutableStore.deleteDir(p)
-      else if ((n.matches("sigs_v\\d+") || n == "sigs") && !keepBases.contains(n))
-        graft.io.MutableStore.deleteDir(p)
-      else if (n.startsWith("tomb_") && s.dead.contains(n.stripPrefix("tomb_")) &&
-          !keepTombs.contains(n.stripPrefix("tomb_")))
-        graft.io.MutableStore.deleteDir(p)
-    }
-  }
+  /** Standalone snapshot expiry for the binary signature store
+    * ([[graft.io.MutableStore.expire]]). Returns # priors expired. */
+  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
-  /** Standalone snapshot expiry for the binary signature store: apply
-    * the retention policy and collect due priors + debris NOW, under
-    * the writer lease, without a content commit ([[graft.io
-    * .MutableStore.expireSnapshotsWith]]). Returns # priors expired. */
-  def expireSnapshots(dir: String): Int = {
-    val s = snapOf(dir)
-    if (s.node.isEmpty) return 0 // never ensured: nothing retained
-    val priors = graft.io.MutableStore.optStringSeq(s.node, "priors")
-      .getOrElse(Seq.empty)
-    graft.io.MutableStore.expireSnapshotsWith(dir,
-      java.nio.file.Paths.get(dir, sigSidecar), priors,
-      prot => gcPrior(dir, s, prot))
-  }
-
+  /** Physically drop tombstoned rows into a NEW `sigs_v<N>` version
+    * ([[graft.io.MutableStore.compact]]): the committed sidecar carries
+    * the subtracted fingerprint terms (a fresh ensure over the
+    * post-delete corpus then REUSES the store) and the emptied
+    * liveTombs list. */
   def compactSignatures(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String = "vec_id"): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "compactSignatures") {
-    val s = snapOf(dir)
-    if (s.tombTags.isEmpty) return
-    val vNew = math.max(s.v,
-      graft.io.MutableStore.maxOnDiskVersion(dir, Seq("sigs_v"))) + 1
-    // retention-aware lagged GC of superseded dirs + debris: anything
-    // the CURRENT snapshot or a protected prior still names survives
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir,
-      graft.io.MutableStore.optStringSeq(s.node, "priors").getOrElse(Seq.empty))
-    gcPrior(dir, s, protectedRefs)
-    val sidecar = java.nio.file.Paths.get(dir, sigSidecar)
-    val node = s.node.getOrElse(
-      throw new IllegalStateException(s"no $sigSidecar under $dir"))
-    var cnt = node.get("count").asLong()
-    var hsh = node.get("hash").asLong()
-    var hsum = BigInt(node.get("hsum").asText())
-    s.tombTags.foreach { t =>
-      val d = mapper.readTree(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, s"tomb_$t", "_stats.json")))
-      cnt -= d.get("count").asLong()
-      hsh ^= d.get("hash").asLong()
-      hsum -= BigInt(d.get("hsum").asText())
+    graft.io.MutableStore.compact(spark, layoutOf(dir), "compactSignatures", Set.empty) { f =>
+      liveOf(spark, dir, f.snap, idCol).write.mode("overwrite").parquet(f.building.head)
+      f.mergedTerms()
     }
-    val survivors = liveSignatures(spark, dir, idCol)
-    val building = java.nio.file.Paths.get(dir, s"_building_sigs_v$vNew")
-    graft.io.MutableStore.deleteDir(building)
-    survivors.write.mode("overwrite").parquet(building.toString)
-    java.nio.file.Files.move(building,
-      java.nio.file.Paths.get(dir, s"sigs_v$vNew"))
-    def arr(x: Seq[String]) = x.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val dim = node.get("dim").asText()
-    val dead = (s.dead.filter(t =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"tomb_$t"))) ++
-      s.tombTags).toSeq.sorted
-    val priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-      graft.io.MutableStore.SnapRef(s.v, Seq.empty, s.tombTags))
-    graft.io.Artifact.writeAtomic(sidecar,
-      s"""{"count":$cnt,"hash":$hsh,"hsum":"$hsum","dim":"$dim","family":"binary_midrange","v":$vNew,"deadTombs":${arr(dead)},"liveTombs":[],"priors":${arr(priors)}}""")
-    // NO GC here — lagged to the next compaction (pinned-probe retention)
-  }
 
   /** Two-stage retrieval: Hamming shortlist of `shortlist` ids over
     * the 8-byte signatures, then exact float64 L2 rescore of ONLY

@@ -314,7 +314,11 @@ object Hnsw {
     val parted = df
       .select(
         pmod(xxhash64(col(idCol)), lit(p.parts)).cast("int").as("part"),
-        col(idCol).cast("long").as("vec_id"),
+        // a null id fails here, naming its column — not below as an
+        // opaque not-null assertion on a tuple field
+        coalesce(col(idCol).cast("long"), raise_error(lit(
+          s"Hnsw.build: null id in column '$idCol' — every node needs an id")).cast("long"))
+          .as("vec_id"),
         col(embCol).cast("array<float>").as("emb"))
       .as[(Int, Long, Seq[Float])]
       .repartition(p.parts, col("part"))
@@ -372,116 +376,48 @@ object Hnsw {
     Some(m.result())
   }
 
-  private def sidecarNodeOf(dir: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val p = java.nio.file.Paths.get(dir, sidecarName)
-    if (!java.nio.file.Files.exists(p)) return None
-    try Some(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(p)))
-    catch { case _: Throwable => None }
-  }
+  private val tombstoneDirName = "_tombstones"
+  private val deltaDirPrefix = "layout_delta_"
+
+  /** The layout as a versioned store ([[graft.io.MutableStore]]): state
+    * in the fingerprint sidecar, base `layout` → `layout_v<N>`,
+    * `layout_delta_<tag>` graphs beside it, tombstone batches under
+    * `_tombstones/del_<tag>` (global id masks, consumed only by a
+    * `dropTombstoned` fold). */
+  private def layoutOf(dir: String) = graft.io.MutableStore.Layout("Hnsw", dir,
+    java.nio.file.Paths.get(dir, sidecarName), flat = false, dir, Seq("layout_v"),
+    Seq(s"$dir/layout"), () => Seq(java.nio.file.Paths.get(dir, "layout")),
+    Seq(dir), deltaDirPrefix, None, s"$dir/$tombstoneDirName", "del_", None)
+
+  private def snapOf(dir: String) = graft.io.MutableStore.snapOf(layoutOf(dir))
+
+  private def basePathOf(dir: String, s: graft.io.MutableStore.Snap): String =
+    layoutOf(dir).basePaths(s.v).head
 
   /** The current BASE layout location: `layout` for a never-compacted
     * artifact, the sidecar's committed `layout_v<N>` after a
     * compaction (the engine-wide versioned atomic-swap protocol —
     * [[compactDeltas]]). */
-  def layoutPath(dir: String): String = {
-    val v = sidecarNodeOf(dir).filter(_.hasNonNull("v"))
-      .map(_.get("v").asInt()).getOrElse(0)
-    if (v > 0) s"$dir/layout_v$v" else s"$dir/layout"
-  }
+  def layoutPath(dir: String): String = graft.io.MutableStore.basePaths(layoutOf(dir)).head
 
-  /** Delta tags the committed sidecar says are already folded into the
-    * current base version — on disk only inside the commit-to-GC crash
-    * window; probes must skip them or nodes double-count. */
-  private def foldedTags(dir: String): Set[String] =
-    sidecarNodeOf(dir).filter(_.has("folded")).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get("folded").elements().asScala.map(_.asText()).toSet
-    }.getOrElse(Set.empty)
+  /** Stable probe-cache key: base path + content fingerprint (the
+    * mutation-state fields deliberately excluded — a delta append or
+    * tombstone patch must not evict the resident base graphs). */
+  private def cacheKeyOf(dir: String, s: graft.io.MutableStore.Snap): Option[String] =
+    s.node.map(n => s"${basePathOf(dir, s)}#c=${n.get("count").asLong()}" +
+      s"#h=${n.get("hash").asLong()}#s=${if (n.has("hsum")) n.get("hsum").asText() else ""}")
 
-  /** One committed-state SNAPSHOT of the layout store, resolved from a
-    * SINGLE sidecar read — the engine-wide snapshot-pinned-probe
-    * contract ([[graft.index.Sq]]): base version path, live delta
-    * tags, and the live tombstone-batch tags all come from one atomic
-    * read, so a probe can never see a torn mix of two commits; lagged
-    * compaction GC keeps every dir a snapshot names readable through
-    * ONE subsequent commit. `tombCommitted` distinguishes a sidecar
-    * that CARRIES the liveTombs field (committed mode) from a legacy
-    * one (listing fallback; also the pre-first-mutation state). */
-  private final case class Snap(
-      node: Option[com.fasterxml.jackson.databind.JsonNode],
-      v: Int,
-      live: Seq[String],
-      tombTags: Seq[String],
-      tombCommitted: Boolean) {
-    def layoutPathOf(dir: String): String =
-      if (v > 0) s"$dir/layout_v$v" else s"$dir/layout"
-    def folded: Set[String] = node.filter(_.has("folded")).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get("folded").elements().asScala.map(_.asText()).toSet
-    }.getOrElse(Set.empty)
-    /** Stable probe-cache key: layout path + content fingerprint (the
-      * mutation-state fields deliberately excluded — a delta append or
-      * tombstone patch must not evict the resident base graphs). */
-    def cacheKeyOf(dir: String): Option[String] = node.map(n =>
-      s"${layoutPathOf(dir)}#c=${n.get("count").asLong()}" +
-        s"#h=${n.get("hash").asLong()}#s=${if (n.has("hsum")) n.get("hsum").asText() else ""}")
-  }
-
-  private def snapOf(dir: String): Snap = {
-    val node = sidecarNodeOf(dir)
-    val v = node.filter(_.hasNonNull("v")).map(_.get("v").asInt()).getOrElse(0)
-    val folded = node.filter(_.has("folded")).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get("folded").elements().asScala.map(_.asText()).toSet
-    }.getOrElse(Set.empty[String])
-    val live = graft.io.MutableStore.optStringSeq(node, "live")
-      .getOrElse(listedDeltaTags(dir).filterNot(folded))
-    val committed = graft.io.MutableStore.optStringSeq(node, "liveTombs")
-    Snap(node, v, live,
-      committed.getOrElse(listedTombTags(dir)), committed.isDefined)
-  }
-
-  private def sidecarPath(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(dir, sidecarName)
-
-  private def listedDeltaTags(dir: String): Seq[String] = {
-    val d = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(d)) return Seq.empty
-    val s = java.nio.file.Files.list(d)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith(deltaDirPrefix))
-        .map(_.stripPrefix(deltaDirPrefix))
-        .toSeq.sorted
-    } finally s.close()
-  }
-
-  /** On-disk tombstone-batch tags (`_tombstones/del_<tag>`). */
-  private def listedTombTags(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(dir, tombstoneDirName)
-    if (!java.nio.file.Files.exists(root)) return Seq.empty
-    val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("del_"))
-        .map(_.stripPrefix("del_"))
-        .toSeq.sorted
-    } finally s.close()
-  }
-
-  private def tombstonedIdsOf(spark: SparkSession, dir: String, s: Snap): Set[Long] = {
-    if (s.tombTags.isEmpty) return Set.empty
-    s.tombTags
-      .map(t => spark.read.parquet(s"$dir/$tombstoneDirName/del_$t"))
+  /** The ids of tombstone batches `tags` (semi/anti-join sides and the
+    * driver-side set: no distinct, whose shuffle would cost a job). */
+  private def tombIdsOf(spark: SparkSession, dir: String, tags: Seq[String]): DataFrame =
+    tags.map(t => spark.read.parquet(s"$dir/$tombstoneDirName/del_$t"))
       .reduce(_ unionAll _)
-      .select(col("vec_id").cast("long"))
-      .collect().map(_.getLong(0)).toSet
-  }
+      .select(col("vec_id").cast("long").as("vec_id"))
+
+  private def tombstonedIdsOf(spark: SparkSession, dir: String,
+      s: graft.io.MutableStore.Snap): Set[Long] =
+    if (s.tombs.isEmpty) Set.empty
+    else tombIdsOf(spark, dir, s.tombTags).collect().map(_.getLong(0)).toSet
 
   /** Persist the layout behind the shared fingerprint sidecar
     * ([[graft.io.Artifact]]): content hash of (id, embedding) + the
@@ -506,20 +442,10 @@ object Hnsw {
       // a REBUILD (changed corpus/params) owns the whole dir: stale
       // tombstones, deltas and version dirs from the previous layout
       // must not leak into the new corpus's probes
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) {
-        val s = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter { q =>
-              val nm = q.getFileName.toString
-              nm == tombstoneDirName || nm.startsWith(deltaDirPrefix) ||
-                nm.matches("layout_v\\d+")
-            }
-            .toSeq.foreach(graft.io.MutableStore.deleteDir)
-        } finally s.close()
-      }
+      graft.io.MutableStore.entries(dir).filter { q =>
+        val nm = q.getFileName.toString
+        nm == tombstoneDirName || nm.startsWith(deltaDirPrefix) || nm.matches("layout_v\\d+")
+      }.foreach(graft.io.MutableStore.deleteDir)
       build(df, p, idCol, embCol)
         .repartition(p.parts, col("part"))
         .write.mode("overwrite").partitionBy("part")
@@ -636,8 +562,6 @@ object Hnsw {
     }.toDF("q_id", "vec_id", "dist")
   }
 
-  private val deltaDirPrefix = "layout_delta_"
-
   /** Append a batch as a DELTA layout — the IVF delta protocol
     * ([[graft.index.Ivf.appendDelta]]) applied to graphs: the batch
     * builds its own small per-shard HNSW graphs under
@@ -659,7 +583,7 @@ object Hnsw {
       p: Params = Params(),
       idCol: String = "vec_id",
       embCol: String = "embedding"): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "appendDelta") {
+      graft.io.MutableStore.writing(spark, dir, "Hnsw", "appendDelta") {
     // LOUD GUARD (the Ivf.requireNotTombstoned contract): the layout's
     // tombstones are a GLOBAL id mask — an appended id that is
     // currently tombstoned would be silently hidden by every probe,
@@ -670,14 +594,10 @@ object Hnsw {
     // delete-heavy store has 100k+ dead ids; an In expression that
     // size blows up plan/codegen on every micro-batch).
     val snapAtGuard = snapOf(dir)
-    if (snapAtGuard.tombTags.nonEmpty) {
-      import spark.implicits._
-      val deadDf = snapAtGuard.tombTags
-        .map(t => spark.read.parquet(s"$dir/$tombstoneDirName/del_$t"))
-        .reduce(_ unionAll _)
-        .select(col("vec_id").cast("long").as(idCol)).distinct()
+    if (snapAtGuard.tombs.nonEmpty) {
       val clash = batch.select(col(idCol).cast("long").as(idCol)).distinct()
-        .join(broadcast(deadDf), Seq(idCol), "left_semi")
+        .join(broadcast(tombIdsOf(spark, dir, snapAtGuard.tombTags)
+          .withColumnRenamed("vec_id", idCol)), Seq(idCol), "left_semi")
         .limit(1).collect()
       require(clash.isEmpty,
         s"appendDelta: id ${clash.headOption.map(_.getLong(0)).getOrElse(-1L)} is " +
@@ -689,33 +609,23 @@ object Hnsw {
       .write.mode("overwrite").partitionBy("part")
       .parquet(s"$dir/$deltaDirPrefix$tag")
     writePartCounts(spark, s"$dir/$deltaDirPrefix$tag")
-    // COMMIT the mutation (the Sq.appendDelta contract): live once the
-    // state names it; a committed-FOLDED tag is a redelivered batch
-    // whose nodes are in the base — debris, never re-committed
-    val s = snapOf(dir)
-    if (!s.folded.contains(tag))
-      graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-        "live" -> (s.live :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
 
   /** Tags of the live deltas, sorted (the probe fan-out width — the
     * compaction policy bounds it). A committed-but-not-yet-GC'd folded
     * delta (sidecar `folded` list) is NOT live — its nodes are already
     * in the current base version. */
-  def deltaTags(dir: String): Seq[String] = snapOf(dir).live
+  def deltaTags(dir: String): Seq[String] = graft.io.MutableStore.deltaTags(layoutOf(dir))
 
   /** Bytes of the live delta graph dirs / of the base shards — the
     * size-ratio compaction policy's inputs (fold when deltas reach a
     * fixed fraction of the base, so each canonical-rebuild fold costs
     * IO proportional to the deltas it folds, not an O(base) rewrite
     * every fixed number of micro-batches). */
-  def deltaBytes(dir: String): Long =
-    deltaTags(dir)
-      .map(t => graft.io.MutableStore.duBytes(java.nio.file.Paths.get(dir, s"$deltaDirPrefix$t")))
-      .sum
+  def deltaBytes(dir: String): Long = graft.io.MutableStore.deltaBytes(layoutOf(dir))
 
-  def baseBytes(dir: String): Long =
-    graft.io.MutableStore.duBytes(java.nio.file.Paths.get(layoutPath(dir)))
+  def baseBytes(dir: String): Long = graft.io.MutableStore.baseBytes(layoutOf(dir))
 
   /** Probe base AND every delta graph, merge ≤ (1+deltas)·parts·k
     * candidates in one TakeOrdered. Deltas are immutable once written,
@@ -729,9 +639,9 @@ object Hnsw {
       efSearch: Int = 64): DataFrame = {
     val s = snapOf(dir) // snapshot-pinned: ONE committed-state read
     val dead = tombstonedIdsOf(spark, dir, s)
-    val basePath = s.layoutPathOf(dir)
+    val basePath = basePathOf(dir, s)
     val base = searchCandidates(spark.read.parquet(basePath), Seq((0L, query)), k, p,
-      efSearch, cacheKey = s.cacheKeyOf(dir), tombstoned = dead,
+      efSearch, cacheKey = cacheKeyOf(dir, s), tombstoned = dead,
       expectedRows = partCounts(basePath))
     val all = s.live.foldLeft(base) { (acc, tag) =>
       acc.unionAll(searchCandidates(
@@ -775,130 +685,32 @@ object Hnsw {
       p: Params = Params(),
       excludeTags: Set[String] = Set.empty,
       dropTombstoned: Boolean = false): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "compactDeltas") {
-    val s = snapOf(dir)
-    val tags = s.live.filterNot(excludeTags)
-    val dead = if (dropTombstoned) tombstonedIdsOf(spark, dir, s) else Set.empty[Long]
-    if (tags.isEmpty && dead.isEmpty) return
-    // never-reuse allocation BEFORE debris GC: a crashed attempt's
-    // renamed-but-uncommitted layout_v<X> must still bump the counter
-    val vNew = math.max(s.v,
-      graft.io.MutableStore.maxOnDiskVersion(dir, Seq("layout_v"))) + 1
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir,
-      graft.io.MutableStore.optStringSeq(s.node, "priors").getOrElse(Seq.empty))
-    gcPrior(dir, s, protectedRefs)
-    val oldBase = s.layoutPathOf(dir)
-    val unionAllRows = (Seq(oldBase) ++ tags.map(t => s"$dir/$deltaDirPrefix$t"))
-      .map(spark.read.parquet(_).select(col("vec_id"), col("emb").as("embedding")))
-      .reduce(_ unionAll _)
-    // dropTombstoned: the canonical rebuild EXCLUDES the dead nodes —
-    // the physical-drop leg of the delete story (every other store
-    // compacts its tombstones away; without this a delete-heavy HNSW
-    // keeps dead routing waypoints forever). The exclusion is a
-    // broadcast anti-join against the live tombstone batches (never an
-    // isin literal — a delete-heavy store has 100k+ dead ids). The
-    // surviving rows ARE what the new fingerprint attests, so a later
-    // ensureLayout over the live corpus reuses; the consumed tombstone
-    // dirs survive until the next compaction's gcPrior (lagged GC) but
-    // the committed state no longer names them.
-    val union =
-      if (dead.isEmpty) unionAllRows
-      else unionAllRows.join(
-        broadcast(s.tombTags
-          .map(t => spark.read.parquet(s"$dir/$tombstoneDirName/del_$t"))
-          .reduce(_ unionAll _)
-          .select(col("vec_id").cast("long").as("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
-    val (n, h, hs) = graft.io.Artifact.hashAgg(
-      union, xxhash64(col("vec_id"), col("embedding").cast("array<double>")))
-    // the canonical rebuild is BUILT UNDER AN UNDERSCORE TEMP (invisible
-    // to recursive listings even half-written), renamed into a version
-    // path that is never reused, while the old base keeps serving; the
-    // COMMIT below is one atomic sidecar replace (the engine-wide
-    // versioned-swap protocol)
-    val building = java.nio.file.Paths.get(dir, s"_building_layout_v$vNew")
-    graft.io.MutableStore.deleteDir(building)
-    build(union, p).repartition(p.parts, col("part"))
-      .write.mode("overwrite").partitionBy("part").parquet(building.toString)
-    writePartCounts(spark, building.toString)
-    java.nio.file.Files.move(building,
-      java.nio.file.Paths.get(dir, s"layout_v$vNew"))
-    // ---- COMMIT: merged fingerprint + version pointer + leg lists ----
-    def onDisk(t: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"$deltaDirPrefix$t"))
-    def arr(x: Seq[String]) = x.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val folded = (s.folded.filter(onDisk) ++ tags).toSeq.sorted
-    val liveLeft = s.live.filterNot(tags.contains(_)).sorted
-    val tombsLeft = if (dropTombstoned) Seq.empty[String] else s.tombTags
-    val priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-      graft.io.MutableStore.SnapRef(s.v, s.live, s.tombTags))
-    val fields = fingerprintFields(n, h, hs, p) ++ Seq(
-      "v" -> vNew.toString,
-      "folded" -> arr(folded),
-      "live" -> arr(liveLeft),
-      "liveTombs" -> arr(tombsLeft),
-      "priors" -> arr(priors))
-    graft.io.Artifact.writeAtomic(
-      java.nio.file.Paths.get(dir, sidecarName),
-      fields.map { case (k, raw) => s""""$k":$raw""" }.mkString("{", ",", "}"))
-    // NO GC here — lagged to the next compaction's gcPrior, so probes
-    // pinned on the pre-commit snapshot keep every dir they named
-  }
-
-  /** Standalone snapshot expiry for the HNSW layout store: apply the
-    * retention policy and collect due priors + debris NOW, under the
-    * writer lease, without a content commit ([[graft.io.MutableStore
-    * .expireSnapshotsWith]]). Returns the number of priors expired. */
-  def expireSnapshots(dir: String): Int = {
-    val s = snapOf(dir)
-    if (s.node.isEmpty) return 0 // never ensured: nothing retained
-    val priors = graft.io.MutableStore.optStringSeq(s.node, "priors")
-      .getOrElse(Seq.empty)
-    graft.io.MutableStore.expireSnapshotsWith(dir, sidecarPath(dir), priors,
-      prot => gcPrior(dir, s, prot))
-  }
-
-  /** LAGGED GC (the [[graft.index.Sq]] contract): collect the dirs the
-    * PREVIOUS commit superseded — its state already excludes them —
-    * plus crashed-attempt debris, at the START of each compaction.
-    * Every dir the CURRENT committed state names survives until the
-    * next compaction, so a snapshot-pinned probe outlives one
-    * concurrent commit. Consumed tombstone batches are the on-disk
-    * `del_<tag>` dirs the committed liveTombs list no longer names —
-    * only decidable in committed mode (a legacy sidecar has no list;
-    * its tombstones are all live by definition). */
-  private def gcPrior(dir: String, s: Snap,
-      protectedRefs: Seq[graft.io.MutableStore.SnapRef] = Seq.empty): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) return
-    // retention-aware: anything the CURRENT snapshot or a protected
-    // prior still names survives (gcRetention = 1 → historical window)
-    def baseOf(v: Int) = if (v > 0) s"layout_v$v" else "layout"
-    val keepBases = (Set(s.v) ++ protectedRefs.map(_.v)).map(baseOf)
-    val keepDelta = s.live.toSet ++ protectedRefs.flatMap(_.live)
-    val keepTombs = s.tombTags.toSet ++ protectedRefs.flatMap(_.tombs)
-    val ls = java.nio.file.Files.list(root)
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      ls.iterator().asScala.map(_.getFileName.toString).toSeq
-    } finally ls.close()
-    names.foreach { nm =>
-      val pth = java.nio.file.Paths.get(dir, nm)
-      if (nm.startsWith("_building_")) graft.io.MutableStore.deleteDir(pth)
-      else if ((nm.matches("layout_v\\d+") || nm == "layout") && !keepBases.contains(nm))
-        graft.io.MutableStore.deleteDir(pth)
-      else if (nm.startsWith(deltaDirPrefix) &&
-          s.folded.contains(nm.stripPrefix(deltaDirPrefix)) &&
-          !keepDelta.contains(nm.stripPrefix(deltaDirPrefix)))
-        graft.io.MutableStore.deleteDir(pth)
+    graft.io.MutableStore.compact(spark, layoutOf(dir), "compactDeltas", excludeTags,
+        foldsTombs = dropTombstoned) { f =>
+      val rows = (basePathOf(dir, f.snap) +: f.tags.map(t => s"$dir/$deltaDirPrefix$t"))
+        .map(spark.read.parquet(_).select(col("vec_id"), col("emb").as("embedding")))
+        .reduce(_ unionAll _)
+      // dropTombstoned: the canonical rebuild EXCLUDES the dead nodes —
+      // the physical-drop leg of the delete story (without it a
+      // delete-heavy HNSW keeps dead routing waypoints forever). A
+      // broadcast anti-join against the consumed tombstone batches,
+      // never an isin literal (a delete-heavy store has 100k+ dead
+      // ids). The surviving rows ARE what the new fingerprint attests,
+      // so a later ensureLayout over the live corpus reuses.
+      val union = if (f.consumed.isEmpty) rows
+        else rows.join(broadcast(tombIdsOf(spark, dir, f.consumed.map(_.tag))),
+          Seq("vec_id"), "left_anti")
+      val (n, h, hs) = graft.io.Artifact.hashAgg(
+        union, xxhash64(col("vec_id"), col("embedding").cast("array<double>")))
+      build(union, p).repartition(p.parts, col("part"))
+        .write.mode("overwrite").partitionBy("part").parquet(f.building.head)
+      writePartCounts(spark, f.building.head)
+      fingerprintFields(n, h, hs, p)
     }
-    if (s.tombCommitted) {
-      listedTombTags(dir).filterNot(keepTombs).foreach(t =>
-        graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, tombstoneDirName, s"del_$t")))
-    }
-  }
 
-  private val tombstoneDirName = "_tombstones"
+  /** Standalone snapshot expiry for the HNSW layout store
+    * ([[graft.io.MutableStore.expire]]). Returns # priors expired. */
+  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   /** Mark ids deleted — the tombstone protocol ([[graft.index.Ivf]]'s
     * shape): each delete batch is a TAG-KEYED OVERWRITE under
@@ -921,7 +733,7 @@ object Hnsw {
       dir: String,
       ids: Seq[Long],
       tag: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "deleteFromLayout") {
+      graft.io.MutableStore.writing(spark, dir, "Hnsw", "deleteFromLayout") {
     import spark.implicits._
     val s = snapOf(dir)
     val requested = ids.distinct.filterNot(tombstonedIdsOf(spark, dir, s))
@@ -929,7 +741,7 @@ object Hnsw {
     // presence check via a broadcast semi-join, never an isin literal
     // (a bulk takedown's delete batch can be 100k+ ids — an In
     // expression that size blows up the plan)
-    val present = (Seq(s.layoutPathOf(dir)) ++
+    val present = (Seq(basePathOf(dir, s)) ++
         s.live.map(t => s"$dir/$deltaDirPrefix$t"))
       .map(spark.read.parquet(_).select(col("vec_id").cast("long").as("vec_id")))
       .reduce(_ unionAll _)
@@ -939,9 +751,7 @@ object Hnsw {
     present.toDF("vec_id").coalesce(1)
       .write.mode("overwrite")
       .parquet(s"$dir/$tombstoneDirName/del_$tag")
-    // COMMIT: the tombstone batch is live once the state names it
-    graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-      "liveTombs" -> (s.tombTags :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = true)
   }
 
   /** All tombstoned ids — bounded by total delete volume (a crawl's
@@ -963,9 +773,9 @@ object Hnsw {
       p: Params = Params(),
       efSearch: Int = 64): DataFrame = {
     val s = snapOf(dir) // snapshot-pinned: ONE committed-state read
-    val basePath = s.layoutPathOf(dir)
+    val basePath = basePathOf(dir, s)
     val cands = searchCandidates(spark.read.parquet(basePath), Seq((0L, query)), k, p,
-      efSearch, cacheKey = s.cacheKeyOf(dir),
+      efSearch, cacheKey = cacheKeyOf(dir, s),
       tombstoned = tombstonedIdsOf(spark, dir, s),
       expectedRows = partCounts(basePath))
     cands
@@ -992,9 +802,9 @@ object Hnsw {
       p: Params = Params(),
       efSearch: Int = 64): DataFrame = {
     val s = snapOf(dir) // snapshot-pinned: ONE committed-state read
-    val basePath = s.layoutPathOf(dir)
+    val basePath = basePathOf(dir, s)
     val cands = searchCandidates(spark.read.parquet(basePath), queries, k, p,
-      efSearch, cacheKey = s.cacheKeyOf(dir),
+      efSearch, cacheKey = cacheKeyOf(dir, s),
       tombstoned = tombstonedIdsOf(spark, dir, s),
       expectedRows = partCounts(basePath))
     val w = org.apache.spark.sql.expressions.Window

@@ -1,7 +1,6 @@
 package graft.index
 
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -605,14 +604,6 @@ object Ivf {
       s"$dir/${files.head}", Seq(clusterField),
       Some(if (root.isEmpty) dir else s"$dir/$root"))
 
-  /** Names the Spark jobs `body` starts `<primitive> at Ivf.scala`. */
-  private def named[A](spark: SparkSession, primitive: String)(body: => A): A =
-    graft.io.MutableStore.withCallSite(spark, s"$primitive at Ivf.scala")(body)
-
-  /** [[named]] under the layout's writer lease. */
-  private def writing[A](spark: SparkSession, dir: String, primitive: String)(body: => A): A =
-    graft.io.MutableStore.withWriterLock(dir, primitive)(named(spark, primitive)(body))
-
   private[graft] def snapOf(dir: String): IvfSnap = {
     if (!stateFileExists(dir))
       return IvfSnap(0, Set.empty, Set.empty, None,
@@ -920,7 +911,7 @@ object Ivf {
       rows: DataFrame,
       tag: String,
       embCol: String = "embedding"): Long =
-      writing(rows.sparkSession, layout.dir, "appendDelta") {
+      graft.io.MutableStore.writing(rows.sparkSession, layout.dir, "Ivf", "appendDelta") {
     val s = snapOf(layout.dir)
     val assigned = assignByCentroids(layout, rows, embCol).persist()
     try {
@@ -1014,7 +1005,7 @@ object Ivf {
       embCol: String = "embedding",
       idCol: String = "vec_id",
       excludeTags: Set[String] = Set.empty): Int =
-      writing(spark, layout.dir, "compactDeltas") {
+      graft.io.MutableStore.writing(spark, layout.dir, "Ivf", "compactDeltas") {
     val dir = layout.dir
     val s = snapOf(dir)
     val tags = s.live.filterNot(excludeTags)
@@ -1116,7 +1107,7 @@ object Ivf {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val clusters = probeClustersOf(layout.centroids, query, nprobe)
-    named(spark, "searchLayoutDeltaAware") {
+    graft.io.MutableStore.named(spark, "Ivf", "searchLayoutDeltaAware") {
       pinned(layout.dir) { s =>
         val base = baseScanOf(spark, layout.dir, s, Some(clusters))
         val scan = deltaScanOf(spark, layout.dir, s, Some(clusters)) match {
@@ -1164,7 +1155,7 @@ object Ivf {
       idCol: String,
       embCol: String,
       tag: String): Long =
-      writing(spark, layout.dir, "deleteFromLayout") {
+      graft.io.MutableStore.writing(spark, layout.dir, "Ivf", "deleteFromLayout") {
     val dir = layout.dir
     val s = snapOf(dir)
     val hits = lookupIds(spark, dir, s, ids.distinct, idCol, embCol, data = true)

@@ -330,76 +330,20 @@ object Sq {
   // --------------------------------------------------- persisted index
 
   private val codesSidecar = "_sq8_codes.json"
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def sidecarNodeOf(dir: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val p = java.nio.file.Paths.get(dir, codesSidecar)
-    if (java.nio.file.Files.exists(p))
-      Some(mapper.readTree(java.nio.file.Files.readString(p)))
-    else None
-  }
-
-  private def jsonStringSet(
-      node: com.fasterxml.jackson.databind.JsonNode, key: String): Set[String] =
-    if (node == null || !node.has(key)) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      node.get(key).elements().asScala.map(_.asText()).toSet
-    }
-
-  private def foldedTags(dir: String): Set[String] =
-    sidecarNodeOf(dir).map(jsonStringSet(_, "folded")).getOrElse(Set.empty)
-
-  private def deadTombTags(dir: String): Set[String] =
-    sidecarNodeOf(dir).map(jsonStringSet(_, "deadTombs")).getOrElse(Set.empty)
-
-  /** One committed-state SNAPSHOT of the code store, resolved from a
-    * SINGLE sidecar read plus the immutable per-tag stats jsons it
-    * names — the concurrent-reader contract: a probe built from one
-    * snapshot serves wholly the state some commit left behind, never a
-    * torn mix (directory listings can interleave with a compaction
-    * commit; one atomic sidecar read cannot). Data dirs named by a
-    * snapshot stay readable through ONE subsequent compaction commit —
-    * compaction GC is LAGGED (a commit's superseded dirs are collected
-    * at the START of the next compaction, not at its own end), so a
-    * probe outlives at most one concurrent commit by construction.
-    * Sidecars written before the committed-live-leg protocol carry no
-    * `live`/`liveTombs` fields; the snapshot then falls back to the
-    * legacy listing resolution (single-writer stores only). */
-  private final case class Snap(
-      node: Option[com.fasterxml.jackson.databind.JsonNode],
-      v: Int,
-      live: Seq[String],
-      tombs: Seq[Tomb]) {
-    def codesPathOf(dir: String): String =
-      if (v > 0) s"$dir/codes_v$v" else s"$dir/codes"
-    def folded: Set[String] = node.map(jsonStringSet(_, "folded")).getOrElse(Set.empty)
-    def dead: Set[String] = node.map(jsonStringSet(_, "deadTombs")).getOrElse(Set.empty)
-  }
-
-  private def snapOf(dir: String): Snap = {
-    val node = sidecarNodeOf(dir)
-    val v = node.filter(_.hasNonNull("v")).map(_.get("v").asInt()).getOrElse(0)
-    val folded = node.map(jsonStringSet(_, "folded")).getOrElse(Set.empty)
-    val dead = node.map(jsonStringSet(_, "deadTombs")).getOrElse(Set.empty)
-    val live = graft.io.MutableStore.optStringSeq(node, "live")
-      .getOrElse(listedDeltaTags(dir).filterNot(folded))
-    val tombTags = graft.io.MutableStore.optStringSeq(node, "liveTombs")
-      .getOrElse(listedTombTags(dir).filterNot(dead))
-    Snap(node, v, live, tombTags.map(readTomb(dir, _)))
-  }
-
-  private def sidecarPath(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(dir, codesSidecar)
+  /** The code store as a versioned store ([[graft.io.MutableStore]]):
+    * state in the fingerprint sidecar, base `codes` → `codes_v<N>`,
+    * `delta_<tag>` (codes + `_stats.json`) and `tomb_<tag>` (ids +
+    * `_stats.json`) legs at the dir root. */
+  private def layoutOf(dir: String) = graft.io.MutableStore.Layout("Sq", dir,
+    java.nio.file.Paths.get(dir, codesSidecar), flat = false, dir, Seq("codes_v"),
+    Seq(s"$dir/codes"), () => Seq(java.nio.file.Paths.get(dir, "codes")),
+    Seq(dir), "delta_", Some("_stats.json"), dir, "tomb_", Some("_stats.json"))
 
   /** The current BASE codes location: `codes` for a never-compacted
     * artifact, the sidecar's committed `codes_v<N>` after a
     * compaction (the versioned-swap protocol — see [[compactDeltas]]). */
-  def codesPath(dir: String): String = {
-    val v = sidecarNodeOf(dir).filter(_.hasNonNull("v"))
-      .map(_.get("v").asInt()).getOrElse(0)
-    if (v > 0) s"$dir/codes_v$v" else s"$dir/codes"
-  }
+  def codesPath(dir: String): String = graft.io.MutableStore.basePaths(layoutOf(dir)).head
 
   /** Operational introspection of the SQ8 code store — the vector-side
     * twin of [[graft.text.InvertedIndex.describeStore]]: one row per
@@ -412,18 +356,15 @@ object Sq {
   def describeStore(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val s = snapOf(dir) // ONE committed-state read — the report is torn-proof
+    val l = layoutOf(dir)
+    val s = graft.io.MutableStore.snapOf(l) // ONE committed-state read — the report is torn-proof
     val baseCount = s.node.map(_.get("count").asLong()).getOrElse(0L)
-    val deltaCount = s.live.map { t =>
-      mapper.readTree(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, s"delta_$t", "_stats.json")))
-        .get("count").asLong()
-    }.sum
+    val deltaCount = s.live.map(l.deltaStats(_).get("count").asLong()).sum
     Seq(
       ("base_version", s.v.toLong),
       ("live_deltas", s.live.size.toLong),
       ("live_tombstones", s.tombs.size.toLong),
-      ("n_codes", baseCount + deltaCount - s.tombs.map(_.count).sum)
+      ("n_codes", baseCount + deltaCount - s.tombs.map(_.stats.get.get("count").asLong()).sum)
     ).toDF("metric", "value")
   }
 
@@ -459,23 +400,10 @@ object Sq {
       // a REBUILD means the corpus changed: stale version dirs, deltas
       // and tombstones belong to the old corpus (the fresh build's own
       // `codes` dir matches none of these prefixes)
-      Seq("codes_v", "delta_", "tomb_").foreach { prefix =>
-        listDirs(dir).filter(_.startsWith(prefix))
-          .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
-      }
+      graft.io.MutableStore.entries(dir).filter(p => Seq("codes_v", "delta_", "tomb_")
+          .exists(p.getFileName.toString.startsWith))
+        .foreach(graft.io.MutableStore.deleteDir)
     }
-  }
-
-  private def listDirs(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) return Seq.empty
-    val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(java.nio.file.Files.isDirectory(_))
-        .map(_.getFileName.toString).toSeq
-    } finally s.close()
   }
 
   /** The persisted artifact's quantization model (dim rows). */
@@ -489,42 +417,6 @@ object Sq {
     }
     SqModel(rows.length, vmin, vmax)
   }
-
-  /** Live delta tags per the COMMITTED state (one sidecar read). */
-  private def deltaTags(dir: String): Seq[String] = snapOf(dir).live
-
-  /** Legacy (pre-protocol) listing resolution — also the build-time
-    * inventory for ensure's stale-dir cleanup. */
-  private def listedDeltaTags(dir: String): Seq[String] =
-    listDirs(dir)
-      .filter(n => n.startsWith("delta_") &&
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, n, "_stats.json")))
-      .map(_.stripPrefix("delta_"))
-      .sorted
-
-  private def listedTombTags(dir: String): Seq[String] =
-    listDirs(dir)
-      .filter(n => n.startsWith("tomb_") &&
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir, n, "_stats.json")))
-      .map(_.stripPrefix("tomb_"))
-      .sorted
-
-  /** One live tombstone batch: deleted ids + the legs it covers + the
-    * batch's mergeable fingerprint terms (see [[deleteVectors]]). */
-  private final case class Tomb(tag: String, covered: Set[String],
-      count: Long, hash: Long, hsum: BigInt)
-
-  private def readTomb(dir: String, tag: String): Tomb = {
-    val n = mapper.readTree(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dir, s"tomb_$tag", "_stats.json")))
-    Tomb(tag, jsonStringSet(n, "covered"),
-      n.get("count").asLong(), n.get("hash").asLong(),
-      BigInt(n.get("hsum").asText()))
-  }
-
-  private def liveTombs(dir: String): Seq[Tomb] = snapOf(dir).tombs
 
   /** DELETE a batch of vectors from the code store — the HNSW/IVF
     * tombstone pattern applied to the SQ8 artifact. The batch must be
@@ -552,61 +444,45 @@ object Sq {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       excludeCovered: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "deleteVectors") {
+      graft.io.MutableStore.writing(spark, dir, "Sq", "deleteVectors") {
     val (nRows, dataHash, hashSum) = graft.io.Artifact.hashAgg(
       batch, xxhash64(col(idCol), col(embCol).cast("array<double>")))
-    val s = snapOf(dir)
-    val covered = ("base" +: s.live.filterNot(excludeCovered))
+    val l = layoutOf(dir)
+    val covered = graft.io.MutableStore.coveredLegs(l, excludeCovered)
       .map(t => "\"" + t + "\"").mkString("[", ",", "]")
     batch.select(col(idCol).cast("long").as(idCol)).distinct()
       .write.mode("overwrite").parquet(s"$dir/tomb_$tag/ids")
     graft.io.Artifact.writeAtomic(
       java.nio.file.Paths.get(dir, s"tomb_$tag", "_stats.json"),
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum","covered":$covered}""")
-    // COMMIT the mutation: the tombstone is live once the state names
-    // it. A tag the state already CONSUMED (deadTombs) is a redelivered
-    // batch whose terms were already subtracted — debris, never
-    // re-committed (double-subtract at the next consumption)
-    if (!s.dead.contains(tag))
-      graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-        "liveTombs" -> (s.tombs.map(_.tag) :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(l, tag, tomb = true)
   }
 
   /** Drop every delta and tombstone dir, returning the store to the
-    * BASE snapshot its sidecar attests — the replay helper mirroring
-    * [[graft.text.InvertedIndex.dropMutations]]. */
-  def dropMutations(dir: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    listDirs(dir).filter(n => n.startsWith("delta_") || n.startsWith("tomb_"))
-      .foreach(n => graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(dir, n)))
-    // the committed state must agree with the wiped disk (folded/dead
-    // debris went with the rest; GC at the next compaction sees none)
-    graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-      "live" -> Seq.empty, "liveTombs" -> Seq.empty,
-      "folded" -> Seq.empty, "deadTombs" -> Seq.empty)
-  }
+    * BASE snapshot its sidecar attests ([[graft.io.MutableStore.dropMutations]]). */
+  def dropMutations(dir: String): Unit = graft.io.MutableStore.dropMutations(layoutOf(dir))
 
-  private def maskFor(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      tombs: Seq[Tomb], leg: String, idCol: String): Option[DataFrame] = {
-    val covering = tombs.filter(_.covered.contains(leg))
-    if (covering.isEmpty) None
-    else Some(covering.map(t =>
-        spark.read.parquet(s"$dir/tomb_${t.tag}/ids"))
-      .reduce(_ unionAll _).distinct()
-      .select(col(idCol)))
+  /** Codes of the base and the `legs` delta tags of snapshot `s`, each
+    * leg anti-joined with only the (broadcast, tiny) tombstones
+    * covering it — so a vector re-appended after its delete is live
+    * again. The union is positional, so every leg keeps the base's
+    * column order. */
+  private def codesOf(spark: org.apache.spark.sql.SparkSession, dir: String,
+      s: graft.io.MutableStore.Snap, legs: Seq[String], idCol: String): DataFrame = {
+    val base = spark.read.parquet(layoutOf(dir).basePaths(s.v).head)
+    def masked(df: DataFrame, leg: String) =
+      s.tombs.filter(_.covered.contains(leg))
+        .map(t => spark.read.parquet(s"$dir/tomb_${t.tag}/ids"))
+        .reduceOption(_ unionAll _)
+        .fold(df)(m => df.join(broadcast(m.distinct().select(col(idCol))), Seq(idCol), "left_anti")
+          .select(df.columns.map(col).toIndexedSeq: _*))
+    legs.foldLeft(masked(base, "base")) { (acc, t) =>
+      acc.unionAll(masked(spark.read.schema(base.schema).parquet(s"$dir/delta_$t/codes"), t))
+    }
   }
-
-  private def applyMask(df: DataFrame, mask: Option[DataFrame], idCol: String): DataFrame =
-    // re-select in the input's column order: a USING join fronts the
-    // join key, and the leg union downstream is POSITIONAL
-    mask.fold(df)(m => df.join(broadcast(m), Seq(idCol), "left_anti")
-      .select(df.columns.map(col).toIndexedSeq: _*))
 
   /** Codes over (base ∪ live deltas) − covering tombstones — the
-    * probe's input. Each leg anti-joins only the (broadcast, tiny)
-    * tombstones covering it, so a vector re-appended after its delete
-    * is live again. SNAPSHOT-PINNED: the whole leg set (base version
+    * probe's input. SNAPSHOT-PINNED: the whole leg set (base version
     * path, live delta tags, covering tombstones) resolves from ONE
     * committed sidecar read, and lagged GC keeps every named dir
     * readable through one subsequent compaction commit — a probe built
@@ -615,22 +491,13 @@ object Sq {
   def codesWithDeltas(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String = "vec_id"): DataFrame = {
-    val s = snapOf(dir)
-    val base = spark.read.parquet(s.codesPathOf(dir))
-    val baseLeg = applyMask(base, maskFor(spark, dir, s.tombs, "base", idCol), idCol)
-    s.live.foldLeft(baseLeg) { (acc, tag) =>
-      acc.unionAll(applyMask(
-        spark.read.schema(base.schema).parquet(s"$dir/delta_$tag/codes"),
-        maskFor(spark, dir, s.tombs, tag, idCol), idCol))
-    }
+    val s = graft.io.MutableStore.snapOf(layoutOf(dir))
+    codesOf(spark, dir, s, s.live, idCol)
   }
 
   /** Base/delta byte sizes for the size-ratio compaction policy. */
-  def baseBytes(dir: String): Long =
-    graft.io.MutableStore.duBytes(java.nio.file.Paths.get(codesPath(dir)))
-  def deltaBytes(dir: String): Long =
-    deltaTags(dir).map(t =>
-      graft.io.MutableStore.duBytes(java.nio.file.Paths.get(dir, s"delta_$t"))).sum
+  def baseBytes(dir: String): Long = graft.io.MutableStore.baseBytes(layoutOf(dir))
+  def deltaBytes(dir: String): Long = graft.io.MutableStore.deltaBytes(layoutOf(dir))
 
   /** Append a batch of new vectors ENCODED UNDER THE PERSISTED MODEL
     * (the FAISS trained-index contract: adding vectors never retrains
@@ -645,7 +512,7 @@ object Sq {
       tag: String,
       idCol: String = "vec_id",
       embCol: String = "embedding"): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "appendDelta") {
+      graft.io.MutableStore.writing(spark, dir, "Sq", "appendDelta") {
     val (nRows, dataHash, hashSum) = graft.io.Artifact.hashAgg(
       batch, xxhash64(col(idCol), col(embCol).cast("array<double>")))
     val model = modelFromArtifact(spark, dir)
@@ -654,138 +521,30 @@ object Sq {
     graft.io.Artifact.writeAtomic(
       java.nio.file.Paths.get(dir, s"delta_$tag", "_stats.json"),
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum"}""")
-    // COMMIT the mutation: the delta is live once the state names it.
-    // A tag the committed state already FOLDED is a redelivered batch
-    // whose rows are in the base — the rewritten dir is debris (GC'd
-    // at the next compaction), never re-committed (double-count)
-    val s = snapOf(dir)
-    if (!s.folded.contains(tag))
-      graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-        "live" -> (s.live :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
 
-  def deltaDirCount(dir: String): Int = deltaTags(dir).size
+  def deltaDirCount(dir: String): Int = graft.io.MutableStore.deltaTags(layoutOf(dir)).size
 
-  /** LAGGED GC of the dirs the PREVIOUS commit superseded (its state
-    * already excludes them) plus crashed-attempt debris — runs at the
-    * START of each compaction, never at its own end, so every dir the
-    * current committed state names survives until the NEXT compaction
-    * and a snapshot-pinned probe outlives one concurrent commit. */
-  private def gcPrior(dir: String, s: Snap,
-      protectedRefs: Seq[graft.io.MutableStore.SnapRef] = Seq.empty): Unit = {
-    // retention-aware: anything the CURRENT snapshot or a protected
-    // prior still names survives (gcRetention = 1 → historical window)
-    def baseOf(v: Int) = if (v > 0) s"codes_v$v" else "codes"
-    val keepBases = (Set(s.v) ++ protectedRefs.map(_.v)).map(baseOf)
-    val keepDelta = s.live.toSet ++ protectedRefs.flatMap(_.live)
-    val keepTombs = s.tombs.map(_.tag).toSet ++ protectedRefs.flatMap(_.tombs)
-    listDirs(dir).foreach { n =>
-      val p = java.nio.file.Paths.get(dir, n)
-      if (n.startsWith("_building_")) graft.io.MutableStore.deleteDir(p)
-      else if ((n.matches("codes_v\\d+") || n == "codes") && !keepBases.contains(n))
-        graft.io.MutableStore.deleteDir(p)
-      else if (n.startsWith("delta_") && s.folded.contains(n.stripPrefix("delta_")) &&
-          !keepDelta.contains(n.stripPrefix("delta_")))
-        graft.io.MutableStore.deleteDir(p)
-      else if (n.startsWith("tomb_") && s.dead.contains(n.stripPrefix("tomb_")) &&
-          !keepTombs.contains(n.stripPrefix("tomb_")))
-        graft.io.MutableStore.deleteDir(p)
-    }
-  }
-
-  /** Standalone snapshot expiry for the SQ8 codes store: apply the
-    * retention policy and collect due priors + debris NOW, under the
-    * writer lease, without a content commit ([[graft.io.MutableStore
-    * .expireSnapshotsWith]]). Returns the number of priors expired. */
-  def expireSnapshots(dir: String): Int = {
-    val s = snapOf(dir)
-    if (s.node.isEmpty) return 0 // never ensured: nothing retained
-    val priors = graft.io.MutableStore.optStringSeq(s.node, "priors")
-      .getOrElse(Seq.empty)
-    graft.io.MutableStore.expireSnapshotsWith(dir, sidecarPath(dir), priors,
-      prot => gcPrior(dir, s, prot))
-  }
+  /** Standalone snapshot expiry for the SQ8 codes store
+    * ([[graft.io.MutableStore.expire]]). Returns # priors expired. */
+  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   /** Fold live deltas (minus `excludeTags` — redelivery safety) and
-    * tombstones into a NEW base codes version: per-leg tombstone
-    * anti-joins drop deleted rows physically, the folded codes are
-    * BUILT UNDER AN UNDERSCORE TEMP (invisible to recursive listings
-    * even half-written), renamed into a `codes_v<N>` path that is
-    * NEVER REUSED ([[graft.io.MutableStore.maxOnDiskVersion]] skips
-    * past crashed-attempt debris), and the COMMIT is one atomic
-    * sidecar replace carrying the merged fingerprint + version pointer
-    * + folded/consumed lists + the surviving live legs. Tombstones
-    * whose covered legs all folded are CONSUMED (terms subtracted), so
-    * a later [[ensureCodesArtifact]] over the post-delete union corpus
-    * reuses instead of rebuilding. The MODEL is untouched
-    * (trained-index contract). GC is LAGGED ([[gcPrior]]): this
-    * commit's superseded dirs survive until the next compaction, so a
-    * snapshot-pinned probe built before this commit still serves its
-    * wholly-old state. Single-writer (one compactor at a time);
-    * concurrent PROBES are safe — the snapshot contract. */
+    * tombstones into a NEW base codes version
+    * ([[graft.io.MutableStore.compact]]): per-leg tombstone anti-joins
+    * drop deleted rows physically, and the committed sidecar carries
+    * the merged fingerprint — tombstones whose covered legs all folded
+    * are CONSUMED (terms subtracted), so a later [[ensureCodesArtifact]]
+    * over the post-delete union corpus reuses instead of rebuilding.
+    * The MODEL is untouched (trained-index contract). */
   def compactDeltas(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       excludeTags: Set[String] = Set.empty,
       idCol: String = "vec_id"): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "compactDeltas") {
-    val s = snapOf(dir)
-    val tags = s.live.filterNot(excludeTags)
-    val tombs = s.tombs
-    if (tags.isEmpty && tombs.isEmpty) return
-    // never-reuse allocation BEFORE debris GC: a crashed attempt's
-    // renamed-but-uncommitted codes_v<X> must still bump the counter
-    val vNew = math.max(s.v,
-      graft.io.MutableStore.maxOnDiskVersion(dir, Seq("codes_v"))) + 1
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir,
-      s.node.map(jsonStringSet(_, "priors")).getOrElse(Set.empty).toSeq)
-    gcPrior(dir, s, protectedRefs)
-    val sidecar = sidecarPath(dir)
-    val node = s.node.getOrElse(
-      throw new IllegalStateException(s"no $codesSidecar under $dir"))
-    var cnt = node.get("count").asLong()
-    var hsh = node.get("hash").asLong()
-    var hsum = BigInt(node.get("hsum").asText())
-    tags.foreach { tag =>
-      val d = mapper.readTree(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, s"delta_$tag", "_stats.json")))
-      cnt += d.get("count").asLong()
-      hsh ^= d.get("hash").asLong()
-      hsum += BigInt(d.get("hsum").asText())
+    graft.io.MutableStore.compact(spark, layoutOf(dir), "compactDeltas", excludeTags) { f =>
+      codesOf(spark, dir, f.snap, f.tags, idCol).write.mode("overwrite").parquet(f.building.head)
+      f.mergedTerms()
     }
-    val consumed = tombs.filter(_.covered.forall(c =>
-      c == "base" || tags.contains(c) || !s.live.contains(c)))
-    consumed.foreach { t =>
-      cnt -= t.count
-      hsh ^= t.hash
-      hsum -= t.hsum
-    }
-    val base = spark.read.parquet(s.codesPathOf(dir))
-    val union = (
-      applyMask(base, maskFor(spark, dir, tombs, "base", idCol), idCol) +:
-        tags.map(t => applyMask(
-          spark.read.schema(base.schema).parquet(s"$dir/delta_$t/codes"),
-          maskFor(spark, dir, tombs, t, idCol), idCol))
-      ).reduce(_ unionAll _)
-    val building = java.nio.file.Paths.get(dir, s"_building_codes_v$vNew")
-    graft.io.MutableStore.deleteDir(building)
-    union.write.mode("overwrite").parquet(building.toString)
-    java.nio.file.Files.move(building,
-      java.nio.file.Paths.get(dir, s"codes_v$vNew"))
-    // ---- COMMIT: one atomic sidecar replace ----
-    def onDisk(prefix: String)(t: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"$prefix$t"))
-    val folded = (s.folded.filter(onDisk("delta_")) ++ tags).toSeq.sorted
-    val dead = (s.dead.filter(onDisk("tomb_")) ++
-      consumed.map(_.tag)).toSeq.sorted
-    val liveLeft = s.live.filterNot(tags.contains(_)).sorted
-    val tombsLeft = tombs.map(_.tag).filterNot(consumed.map(_.tag).contains(_)).sorted
-    def arr(x: Seq[String]) = x.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-      graft.io.MutableStore.SnapRef(s.v, s.live, tombs.map(_.tag)))
-    graft.io.Artifact.writeAtomic(sidecar,
-      s"""{"count":$cnt,"hash":$hsh,"hsum":"$hsum","family":"sq8_minmax","v":$vNew,"folded":${arr(folded)},"deadTombs":${arr(dead)},"live":${arr(liveLeft)},"liveTombs":${arr(tombsLeft)},"priors":${arr(priors)}}""")
-    // NO GC here — lagged to the next compaction's gcPrior, so probes
-    // pinned on the pre-commit snapshot keep every dir they named
-  }
 }

@@ -1,13 +1,25 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Shared machinery of the MUTABLE-STORE protocol — the tombstone +
-  * versioned-atomic-compaction shape every incremental store in this
-  * engine follows (posting tables, SQ8 codes, binary signatures, the
-  * dedup hash/shingle stores, the fuzzy signature store):
+/** The VERSIONED-STORE lifecycle — the tombstone + versioned atomic
+  * compaction shape every incremental store in this engine follows,
+  * written once here: the posting stores ([[graft.text.InvertedIndex]]
+  * BM25/positional/trigram), SQ8 codes ([[graft.index.Sq]]), HNSW
+  * layouts ([[graft.index.Hnsw]]), binary signatures
+  * ([[graft.index.Binary]]), the dedup hash, signature and shingle
+  * stores ([[graft.dedup.Dedup]]) and the fuzzy signature store
+  * ([[graft.ops.FuzzyJoin]]). A family supplies a layout and a fold —
+  * a [[Layout]] (where its state json and its base/delta/tombstone
+  * legs live) and a function writing the new base from the pinned
+  * legs; the core owns the snapshot read ([[snapOf]]), the mutation
+  * commit ([[commitMutation]]), the compaction frame ([[compact]]),
+  * lagged GC, expiry ([[expire]]), the replay reset
+  * ([[dropMutations]]) and the compaction-policy feeds. The IVF
+  * layout keeps its own manifest-driven variant ([[graft.index.Ivf]])
+  * on the shared state json, lease, retention and tag machinery.
   *
   *  - mutations are TAG-KEYED dirs (idempotent overwrite under
   *    at-least-once redelivery): `delta_<tag>` appends,
@@ -236,28 +248,31 @@ private[graft] object MutableStore {
       live: Option[Seq[String]] = None, liveTombs: Option[Seq[String]] = None,
       priors: Seq[String] = Seq.empty)
 
-  def state(dir: String): State = {
-    val p = java.nio.file.Paths.get(dir, stateName)
-    if (!java.nio.file.Files.exists(p))
-      return State(0, Set.empty, Set.empty)
-    // an EXISTING state file that fails to parse is a loud error, not a
-    // silent fallback: degrading to State(0, ...) would resolve the
-    // legacy base path (`dir` instead of `dir_v<N>`) — serving the
-    // WRONG data. Unreachable under atomic writes + the writer lease,
-    // so reaching it means the store dir was corrupted externally.
+  def state(dir: String): State =
+    readState(java.nio.file.Paths.get(dir, stateName), flat = true)._1
+
+  /** ONE atomic read of a state json (`flat`: the store's own
+    * [[stateName]], where every writer stamps "v"; otherwise a
+    * family's fingerprint sidecar, where a missing "v" is a
+    * never-compacted store). An absent file is the empty v=0 state; an
+    * EXISTING file that fails to parse is a loud error, not a silent
+    * fallback: degrading to v=0 would resolve the legacy base path
+    * (`codes` instead of `codes_v<N>`) — serving the WRONG data.
+    * Unreachable under atomic writes + the writer lease, so reaching it
+    * means the store dir was corrupted externally. */
+  private def readState(p: java.nio.file.Path, flat: Boolean)
+      : (State, Option[com.fasterxml.jackson.databind.JsonNode]) = {
+    if (!java.nio.file.Files.exists(p)) return (State(0, Set.empty, Set.empty), None)
     try {
       val n = mapper.readTree(java.nio.file.Files.readString(p))
       import scala.jdk.CollectionConverters._
-      def set(k: String) = if (n.has(k))
-        n.get(k).elements().asScala.map(_.asText()).toSet else Set.empty[String]
       def opt(k: String) = if (n.has(k))
         Some(n.get(k).elements().asScala.map(_.asText()).toSeq.sorted) else None
-      // every writer stamps "v" — a parseable file without it is as
-      // corrupt as an unparseable one
-      require(n.hasNonNull("v"), s"state file $p carries no version field")
-      State(n.get("v").asInt(),
-        set("folded"), set("deadTombs"), opt("live"), opt("liveTombs"),
-        opt("priors").getOrElse(Seq.empty))
+      require(n.isObject && (n.hasNonNull("v") || !flat),
+        s"state file $p carries no version field")
+      (State(if (n.hasNonNull("v")) n.get("v").asInt() else 0,
+        opt("folded").getOrElse(Nil).toSet, opt("deadTombs").getOrElse(Nil).toSet,
+        opt("live"), opt("liveTombs"), opt("priors").getOrElse(Seq.empty)), Some(n))
     } catch { case e: Throwable =>
       throw new IllegalStateException(
         s"corrupt store state at $p — refusing to fall back to the legacy " +
@@ -285,41 +300,359 @@ private[graft] object MutableStore {
     }
   }
 
-  def tombRoot(dir: String): String = s"$dir/_tombstones"
+  // ------------------------------------------- the family plug-in
+  //
+  // A family is DATA: a [[Layout]] naming where its state json and its
+  // legs live. Everything a store does between two commits — resolve a
+  // snapshot, commit a mutation, compact, collect, expire, reset —
+  // runs here against that layout, so the protocol's invariants
+  // (single state read, never-reused versions, lagged GC,
+  // folded/consumed tags never re-committed) hold for every family by
+  // construction instead of by copy.
 
-  /** One live tombstone batch and the legs it covers. */
-  final case class Tomb(tag: String, covered: Set[String])
+  /** Where a store family keeps its state and legs.
+    *
+    *  - `family` names the store's Spark jobs (`<primitive> at
+    *    <family>.scala`) and `dir` is its writer-lease key;
+    *  - `statePath` is the committed state json: the store's own
+    *    [[stateName]] (`flat`: a file without "v" is corrupt) or the
+    *    family's fingerprint sidecar (a missing "v" is a
+    *    never-compacted store);
+    *  - base version N > 0 of part i is `<versionRoot>/<versionPrefixes(i)><N>`,
+    *    built under `<versionRoot>/_building_<prefix><N>`; the
+    *    never-compacted base reads `base0`, and `v0Base` lists its data
+    *    (the debris a versioned commit leaves behind, and the v0 base
+    *    bytes);
+    *  - the delta leg of `tag` is `<root>/<deltaPrefix><tag>` for each
+    *    of the `deltaRoots` (one per part, listed through the first);
+    *    a tombstone is `<tombRoot>/<tombPrefix><tag>`;
+    *  - a marker file names the leg's stats json, written LAST — the
+    *    legacy listing counts a leg only once it exists. A tombstone's
+    *    stats carry the legs it `covered` (base only when absent) and,
+    *    with a delta's, the mergeable fingerprint terms. */
+  final case class Layout(
+      family: String,
+      dir: String,
+      statePath: java.nio.file.Path,
+      flat: Boolean,
+      versionRoot: String,
+      versionPrefixes: Seq[String],
+      base0: Seq[String],
+      v0Base: () => Seq[java.nio.file.Path],
+      deltaRoots: Seq[String],
+      deltaPrefix: String,
+      deltaMarker: Option[String],
+      tombRoot: String,
+      tombPrefix: String,
+      tombMarker: Option[String]) {
+    def basePaths(v: Int): Seq[String] =
+      if (v > 0) versionPrefixes.map(p => s"$versionRoot/$p$v") else base0
+    def deltaDirs(tag: String): Seq[String] = deltaRoots.map(r => s"$r/$deltaPrefix$tag")
+    def tombDir(tag: String): String = s"$tombRoot/$tombPrefix$tag"
+    def deltaStats(tag: String): com.fasterxml.jackson.databind.JsonNode =
+      mapper.readTree(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(deltaDirs(tag).head, deltaMarker.get)))
+  }
 
-  def liveTombs(dir: String): Seq[Tomb] = liveTombsOf(dir, state(dir))
+  /** The FLAT layout (the dedup hash/signature stores and the fuzzy
+    * store): seed files at the dir root until the first compaction
+    * commits `base_v<N>`, `delta_<tag>` legs at the root,
+    * `_tombstones/<tag>` with a covered-legs `_stats.json`. */
+  def flatLayout(dir: String, family: String): Layout =
+    Layout(family, dir, java.nio.file.Paths.get(dir, stateName), flat = true,
+      dir, Seq("base_v"), Seq(dir),
+      () => entries(dir).filterNot { p =>
+        val nm = p.getFileName.toString
+        nm.startsWith("_") || nm.startsWith(".") || nm.startsWith("delta_") ||
+          nm.startsWith("base_v")
+      },
+      Seq(dir), "delta_", None, s"$dir/_tombstones", "", Some("_stats.json"))
 
-  /** Live tombstones resolved against ONE already-read state — the
-    * committed liveTombs list when the state carries it, the legacy
-    * listing (minus deadTombs) otherwise. Per-tag stats jsons are
-    * immutable once written (tag-keyed overwrite rewrites identical
-    * content), so reading them after the one state read cannot tear. */
-  def liveTombsOf(dir: String, st: State): Seq[Tomb] =
-    liveTombTagsOf(dir, st).map { tag =>
-      val n = mapper.readTree(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(tombRoot(dir), tag, "_stats.json")))
+  /** The entries of a directory (empty when it does not exist). */
+  def entries(dir: String): Seq[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.isDirectory(root)) return Seq.empty
+    val s = java.nio.file.Files.list(root)
+    try {
       import scala.jdk.CollectionConverters._
-      Tomb(tag, n.get("covered").elements().asScala.map(_.asText()).toSet)
+      s.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+    } finally s.close()
+  }
+
+  /** Tags of the `<prefix><tag>` leg dirs under `root` (with `marker`
+    * present when given) — the legacy listing resolution. */
+  private def listed(root: String, prefix: String, marker: Option[String]): Seq[String] =
+    entries(root).filter(p => java.nio.file.Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith(prefix) &&
+        marker.forall(m => java.nio.file.Files.exists(p.resolve(m))))
+      .map(_.getFileName.toString.stripPrefix(prefix))
+
+  /** One live tombstone batch: the legs it covers and its stats json. */
+  final case class Tomb(tag: String, covered: Set[String],
+      stats: Option[com.fasterxml.jackson.databind.JsonNode])
+
+  /** One committed SNAPSHOT: the atomic state read plus the live legs
+    * it names — the committed `live`/`liveTombs` lists, or the legacy
+    * listing (minus folded/consumed tags) for a state written before
+    * them. A probe that derives its whole leg set from one Snap can
+    * never see a torn mix of two commits: per-tag stats jsons are
+    * immutable once written, and lagged GC keeps every dir a snapshot
+    * names readable through the commits its retention protects. */
+  final case class Snap(st: State, node: Option[com.fasterxml.jackson.databind.JsonNode],
+      live: Seq[String], tombs: Seq[Tomb]) {
+    def v: Int = st.v
+    def tombTags: Seq[String] = tombs.map(_.tag)
+    def ref: SnapRef = SnapRef(v, live, tombTags)
+  }
+
+  /** (a) The SNAPSHOT READ — one state read, then the legs it names. */
+  def snapOf(l: Layout): Snap = {
+    val (st, node) = readState(l.statePath, l.flat)
+    val (live, tombs) = liveTagsOf(l, st)
+    Snap(st, node, live, tombs.map(tombOf(l, _)))
+  }
+
+  /** The committed base's read paths (one state read). */
+  def basePaths(l: Layout): Seq[String] = l.basePaths(readState(l.statePath, l.flat)._1.v)
+
+  private def liveTagsOf(l: Layout, st: State): (Seq[String], Seq[String]) = (
+    st.live.getOrElse(listed(l.deltaRoots.head, l.deltaPrefix, l.deltaMarker)
+      .filterNot(st.folded)),
+    st.liveTombs.getOrElse(listed(l.tombRoot, l.tombPrefix, l.tombMarker)
+      .filterNot(st.deadTombs)))
+
+  /** A retained prior's (or a tag's) reference set as a snapshot — the
+    * time-travel read path. */
+  def snapAt(l: Layout, ref: SnapRef): Snap =
+    Snap(State(ref.v, Set.empty, Set.empty, Some(ref.live), Some(ref.tombs)), None,
+      ref.live, ref.tombs.map(tombOf(l, _)))
+
+  private def tombOf(l: Layout, tag: String): Tomb = {
+    val stats = l.tombMarker.map(m => mapper.readTree(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(l.tombDir(tag), m))))
+    import scala.jdk.CollectionConverters._
+    Tomb(tag, stats.filter(_.has("covered"))
+      .map(_.get("covered").elements().asScala.map(_.asText()).toSet)
+      .getOrElse(Set("base")), stats)
+  }
+
+  /** (b) The MUTATION COMMIT: a freshly written delta (or tombstone)
+    * leg is live once the state names it. A tag the state already
+    * FOLDED (or CONSUMED) is a redelivered batch whose rows are in the
+    * base (whose terms were subtracted) — its rewritten dir is debris
+    * for the next GC, never re-committed (double count). A flat store's
+    * state is created on its first mutation; a sidecar family's commit
+    * is a no-op until the store is ensured. Single-writer. */
+  def commitMutation(l: Layout, tag: String, tomb: Boolean): Unit = {
+    val st = readState(l.statePath, l.flat)._1
+    if (!(if (tomb) st.deadTombs else st.folded).contains(tag)) {
+      val (live0, tombs0) = liveTagsOf(l, st)
+      val live = if (tomb) live0 else (live0 :+ tag).distinct
+      val tombs = if (tomb) (tombs0 :+ tag).distinct else tombs0
+      if (l.flat) commitLiveLists(l.dir, live, tombs)
+      else patchStringArrays(l.statePath, "live" -> live, "liveTombs" -> tombs)
+    }
+  }
+
+  /** The legs a tombstone written NOW covers: base + the live delta
+    * tags, minus `excludeCovered` — a CDC batch passes its OWN tag, so
+    * a same-batch delete+re-add leaves the re-add live (adds win within
+    * a batch) and a redelivery, whose crashed attempt's delta may
+    * already sit on disk, cannot mask its own appends. A delta
+    * appended LATER is not covered, so delete-then-re-add revives. */
+  def coveredLegs(l: Layout, excludeCovered: Set[String]): Seq[String] =
+    "base" +: deltaTags(l).filterNot(excludeCovered)
+
+  /** What a family's fold gets: the pinned snapshot, the delta tags it
+    * folds, the tombstones it consumes and one build dir per base
+    * part (an underscore temp the frame renames in). */
+  final case class Fold(layout: Layout, snap: Snap, tags: Seq[String],
+      consumed: Seq[Tomb], building: Seq[String]) {
+    /** The mergeable sidecar terms of the new base: the base's (count,
+      * bit-xor hash, decimal hsum) plus the folded deltas' minus the
+      * consumed tombstones' — bit-equal to a fresh fingerprint of the
+      * folded corpus, so a later ensure over it REUSES. `extra` are
+      * additive build-time stats (the BM25 nDocs/sumDl), merged the
+      * same way. Raw json values, ready for the commit. */
+    def mergedTerms(extra: Seq[String] = Nil): Seq[(String, String)] = {
+      val base = snap.node.getOrElse(throw new IllegalStateException(
+        s"no committed sidecar at ${layout.statePath}"))
+      val terms = (base, 1) +: (tags.map(t => (layout.deltaStats(t), 1)) ++
+        consumed.map(t => (t.stats.get, -1)))
+      def sum(k: String) = terms.map { case (n, s) => s * n.get(k).asLong() }.sum
+      Seq("count" -> sum("count").toString,
+        "hash" -> terms.map(_._1.get("hash").asLong()).reduce(_ ^ _).toString,
+        "hsum" -> ("\"" + terms.map { case (n, s) => BigInt(n.get("hsum").asText()) * s }
+          .sum + "\"")) ++ extra.map(k => k -> sum(k).toString)
+    }
+  }
+
+  /** (c) The COMPACTION FRAME, under the writer lease with its jobs
+    * named `<primitive> at <family>.scala`: fold the live deltas (minus
+    * `excludeTags` — a redelivered batch's own tag) and, when
+    * `foldsTombs`, every tombstone whose covered legs all fold now or
+    * folded earlier. In order: allocate the next version past every
+    * on-disk one (committed or crashed-attempt debris — a version path
+    * is NEVER reused, so a cached listing can never alias fresh data),
+    * run the LAGGED GC of what the retention policy no longer protects
+    * (before the fold lists its inputs), let the family's `fold` write
+    * the new base into `_building_` temps (invisible to recursive
+    * listings even half-written), rename them in, and COMMIT with one
+    * atomic state write: the fold's fields (merged fingerprint), the
+    * version pointer, the folded/consumed lists (kept while their dirs
+    * remain), the surviving live legs, and the pre-compaction snapshot
+    * pushed onto `priors`. No GC after the commit: a probe pinned on
+    * the old snapshot keeps every dir it named. Returns whether it
+    * committed. */
+  def compact(spark: SparkSession, l: Layout, primitive: String,
+      excludeTags: Set[String], foldsTombs: Boolean = true)(
+      fold: Fold => Seq[(String, String)]): Boolean =
+    writing(spark, l.dir, l.family, primitive) {
+      val s = snapOf(l)
+      val tags = s.live.filterNot(excludeTags)
+      if (tags.isEmpty && (!foldsTombs || s.tombs.isEmpty)) false
+      else {
+        val vNew = math.max(s.v, maxOnDiskVersion(l.versionRoot, l.versionPrefixes)) + 1
+        val (prot, _) = splitPriors(l.dir, s.st.priors)
+        gc(l, s, prot)
+        val consumed = if (!foldsTombs) Nil else s.tombs.filter(_.covered.forall(c =>
+          c == "base" || tags.contains(c) || !s.live.contains(c)))
+        def temp(pre: String) = l.versionPrefixes.map(p =>
+          java.nio.file.Paths.get(l.versionRoot, s"$pre$p$vNew"))
+        temp("_building_").foreach(deleteDir)
+        val fields = fold(Fold(l, s, tags, consumed, temp("_building_").map(_.toString)))
+        temp("_building_").zip(temp("")).foreach { case (b, t) => java.nio.file.Files.move(b, t) }
+        def onDisk(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+        val gone = consumed.map(_.tag).toSet
+        assertWriter(s"compact(${l.dir})", l.dir)
+        writeState(l.statePath, s.node, fields :+ ("v" -> vNew.toString),
+          "folded" -> (s.st.folded.filter(t => onDisk(l.deltaDirs(t).head)).toSeq ++ tags),
+          "deadTombs" -> (s.st.deadTombs.filter(t => onDisk(l.tombDir(t))).toSeq ++ gone),
+          "live" -> s.live.filterNot(tags.contains),
+          "liveTombs" -> s.tombTags.filterNot(gone),
+          "priors" -> pushPrior(l.dir, prot, s.ref))
+        true
+      }
     }
 
-  /** Live tombstone TAGS against one already-read state — committed
-    * list when present, legacy listing (minus deadTombs) otherwise. */
-  def liveTombTagsOf(dir: String, st: State): Seq[String] =
-    st.liveTombs.getOrElse {
-      val root = java.nio.file.Paths.get(tombRoot(dir))
-      if (!java.nio.file.Files.exists(root)) Seq.empty[String]
-      else {
-        val s = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(p => java.nio.file.Files.exists(p.resolve("_stats.json")))
-            .map(_.getFileName.toString).filterNot(st.deadTombs).toSeq.sorted
-        } finally s.close()
+  /** (d) The LAGGED GC: superseded base versions, crashed-attempt
+    * `_building_` debris, the v0 base once a versioned base is
+    * committed, folded deltas and consumed tombstones — minus anything
+    * the CURRENT snapshot or a retention-protected prior still names
+    * (retention 1 = a pinned probe outlives exactly one concurrent
+    * commit). Runs at the START of a compaction (or a standalone
+    * expiry), never at a commit's own end. */
+  private def gc(l: Layout, s: Snap, prot: Seq[SnapRef]): Unit = {
+    val keepV = Set(s.v) ++ prot.map(_.v)
+    entries(l.versionRoot).filter { p =>
+      val nm = p.getFileName.toString
+      l.versionPrefixes.exists(pre => nm.startsWith(s"_building_$pre") ||
+        (nm.matches(java.util.regex.Pattern.quote(pre) + "\\d+") &&
+          !keepV(nm.substring(pre.length).toInt)))
+    }.foreach(deleteDir)
+    if (!keepV(0)) l.v0Base().foreach(deleteDir)
+    val keepDelta = s.live.toSet ++ prot.flatMap(_.live)
+    val keepTombs = s.tombTags.toSet ++ prot.flatMap(_.tombs)
+    s.st.folded.filterNot(keepDelta).flatMap(l.deltaDirs)
+      .foreach(d => deleteDir(java.nio.file.Paths.get(d)))
+    s.st.deadTombs.filterNot(keepTombs)
+      .foreach(t => deleteDir(java.nio.file.Paths.get(l.tombDir(t))))
+  }
+
+  /** (d) STANDALONE snapshot expiry of a family's store (see
+    * [[expireSnapshotsWith]]); 0 for a store with no committed state. */
+  def expire(l: Layout): Int =
+    if (!java.nio.file.Files.exists(l.statePath)) 0
+    else withWriterLock(l.dir, "expireSnapshots") {
+      val s = snapOf(l)
+      expireSnapshotsWith(l.dir, l.statePath, s.st.priors, gc(l, s, _))
+    }
+
+  /** (d) The REPLAY RESET: drop every delta and tombstone dir and empty
+    * the committed leg lists, returning the store to the BASE snapshot
+    * its state attests (base data untouched). Harnesses that re-run a
+    * delete/append scenario against a persisted store call it first:
+    * without it, a re-run's tombstone would cover the PREVIOUS run's
+    * re-append delta and mask it. Single-writer. */
+  def dropMutations(l: Layout): Unit = withWriterLock(l.dir, "dropMutations") {
+    listed(l.deltaRoots.head, l.deltaPrefix, None).flatMap(l.deltaDirs)
+      .foreach(d => deleteDir(java.nio.file.Paths.get(d)))
+    listed(l.tombRoot, l.tombPrefix, None)
+      .foreach(t => deleteDir(java.nio.file.Paths.get(l.tombDir(t))))
+    patchStringArrays(l.statePath,
+      "live" -> Nil, "liveTombs" -> Nil, "folded" -> Nil, "deadTombs" -> Nil)
+  }
+
+  /** (d) The compaction-policy feeds: the live delta tags (the count
+    * feed and probe fan-out), live delta bytes, and base bytes (the
+    * committed version, or the v0 data). */
+  def deltaTags(l: Layout): Seq[String] = liveTagsOf(l, readState(l.statePath, l.flat)._1)._1
+  def deltaBytes(l: Layout): Long =
+    deltaTags(l).flatMap(l.deltaDirs).map(d => duBytes(java.nio.file.Paths.get(d))).sum
+  def baseBytes(l: Layout): Long = {
+    val v = readState(l.statePath, l.flat)._1.v
+    (if (v > 0) l.basePaths(v).map(java.nio.file.Paths.get(_)) else l.v0Base())
+      .map(duBytes).sum
+  }
+
+  /** The FLAT-layout leg-masked read, shared by every flat store (the
+    * dedup hash/signature stores, the fuzzy store, each shingle part):
+    * part `part` of the snapshot's base plus its live delta legs (minus
+    * `excludeTags`), minus each tombstone's `<tombData>` key rows on
+    * the legs it covers (one broadcast anti-join on (leg, `maskKeys`);
+    * with no tombstones the v0 read is the original single recursive
+    * scan). At v0 the recursive scan skips crashed-attempt version
+    * dirs and — with a committed live list — whitelists the delta legs
+    * the state names (an uncommitted crashed append is not live). */
+  def readFlat(spark: SparkSession, l: Layout, s: Snap, excludeTags: Set[String],
+      tombData: String, maskKeys: Seq[String], part: Int = 0): DataFrame = {
+    val file = input_file_name()
+    val raw =
+      if (s.v == 0) {
+        val noGhost = spark.read.option("recursiveFileLookup", "true")
+          .parquet(l.base0(part))
+          .where(!file.rlike(l.versionPrefixes.map(p => s"/$p\\d+/").mkString("|")))
+        def leg(t: String) = file.contains(s"/${l.deltaPrefix}$t/")
+        s.st.live match {
+          case Some(liveTags) =>
+            noGhost.where(!file.rlike(s"/${l.deltaPrefix}[^/]+/") ||
+              liveTags.filterNot(excludeTags).map(leg).reduceOption(_ || _).getOrElse(lit(false)))
+          case None =>
+            (excludeTags ++ s.st.folded).toSeq.sorted.foldLeft(noGhost)((acc, t) => acc.where(!leg(t)))
+        }
+      } else {
+        val base = spark.read.parquet(l.basePaths(s.v)(part))
+        s.live.filterNot(excludeTags).foldLeft(base) { (acc, t) =>
+          acc.unionAll(spark.read.schema(base.schema).parquet(l.deltaDirs(t)(part)))
+        }
       }
+    if (s.tombs.isEmpty) raw
+    else {
+      val keys = s.tombs.map { t =>
+        spark.read.parquet(s"${l.tombDir(t.tag)}/$tombData")
+          .withColumn("_leg", explode(lit(t.covered.toSeq.sorted.toArray)))
+      }.reduce(_ unionAll _)
+      // the leg is per-row scan context: derive it before the join
+      raw.withColumn("_leg",
+          when(file.rlike(s"/${l.deltaPrefix}[^/]+/"),
+            regexp_extract(file, s"/${l.deltaPrefix}([^/]+)/", 1)).otherwise(lit("base")))
+        .join(broadcast(keys), "_leg" +: maskKeys, "left_anti")
+        .select(raw.columns.map(col).toIndexedSeq: _*)
+    }
+  }
+
+  /** The flat-layout compaction (hash, signature, shingle and fuzzy
+    * stores): every base part rewritten from its leg-masked
+    * [[readFlat]] minus the excluded deltas, which stay live legs with
+    * their own tombstone coverage. */
+  def compactFlat(spark: SparkSession, l: Layout, primitive: String,
+      excludeTags: Set[String], tombData: String, maskKeys: Seq[String]): Unit =
+    compact(spark, l, primitive, excludeTags) { f =>
+      f.building.zipWithIndex.foreach { case (b, part) =>
+        readFlat(spark, l, f.snap, excludeTags, tombData, maskKeys, part)
+          .write.mode("overwrite").parquet(b)
+      }
+      Nil
     }
 
   /** Write a tombstone's stats json (LAST — a tombstone is live only
@@ -328,7 +661,7 @@ private[graft] object MutableStore {
     assertWriter(s"writeTombStats($dir, $tag)", dir)
     requireCleanTags(Seq(tag), s"writeTombStats($dir)")
     Artifact.writeAtomic(
-      java.nio.file.Paths.get(tombRoot(dir), tag, "_stats.json"),
+      java.nio.file.Paths.get(dir, "_tombstones", tag, "_stats.json"),
       covered.map(t => "\"" + t + "\"")
         .mkString("""{"covered":[""", ",", "]}"))
   }
@@ -346,12 +679,6 @@ private[graft] object MutableStore {
       java.nio.file.Paths.get(dir, stateName),
       s"""{"v":$v,"folded":${arr(folded.sorted)},"deadTombs":${arr(deadTombs.sorted)},"live":${arr(live.sorted)},"liveTombs":${arr(liveTombs.sorted)},"priors":${arr(priors.sorted)}}""")
   }
-
-  /** The source leg of a store row, derived from its file path. */
-  def legOf: Column =
-    when(input_file_name().rlike("/delta_[^/]+/"),
-      regexp_extract(input_file_name(), "/delta_([^/]+)/", 1))
-      .otherwise(lit("base"))
 
   /** Recursive delete of a store dir or file; an absent path is a no-op. */
   def deleteDir(p: java.nio.file.Path): Unit = {
@@ -569,9 +896,10 @@ private[graft] object MutableStore {
   /** The CURRENT snapshot's full reference set (committed lists; the
     * legacy listing fallback otherwise) — what a tag of the current
     * version captures, and what a rollback pushes as the from-prior. */
-  private def currentRef(dir: String, st: State): SnapRef =
-    SnapRef(st.v, st.live.getOrElse(flatDeltaTagsOf(dir, st)),
-      liveTombTagsOf(dir, st), System.currentTimeMillis())
+  private def currentRef(dir: String, st: State): SnapRef = {
+    val (live, tombs) = liveTagsOf(flatLayout(dir, "MutableStore"), st)
+    SnapRef(st.v, live, tombs, System.currentTimeMillis())
+  }
 
   /** TAG a snapshot with `name`: the CURRENT one by default (capturing
     * its exact reference set — deltas committed after the tag are NOT
@@ -792,9 +1120,9 @@ private[graft] object MutableStore {
     * crashed-attempt debris), and commits the pruned priors list with
     * one atomic patch of the state/sidecar json — NO content commit,
     * NO version bump. A pinned view within retention survives (its
-    * prior stays protected); each family exposes its own
-    * `expireSnapshots(dir)` wrapper supplying its dir-layout-specific
-    * GC. Returns the number of prior snapshots expired. */
+    * prior stays protected); [[expire]] supplies a family layout's GC,
+    * the IVF layout its manifest-driven one. Returns the number of
+    * prior snapshots expired. */
   def expireSnapshotsWith(
       dir: String, statePath: java.nio.file.Path, priors: Seq[String],
       gc: Seq[SnapRef] => Unit): Int =
@@ -804,85 +1132,6 @@ private[graft] object MutableStore {
       if (java.nio.file.Files.exists(statePath))
         patchStringArrays(statePath, "priors" -> prot.map(encodeRef).sorted)
       due.length
-    }
-
-  /** Live delta tags of a FLAT-layout store against one read state —
-    * committed list when present, root `delta_*` listing minus folded
-    * otherwise (the legacy resolution every flat family uses). */
-  def flatDeltaTagsOf(dir: String, st: State): Seq[String] =
-    st.live.getOrElse {
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(root)) Seq.empty
-      else {
-        val s = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("delta_")).map(_.stripPrefix("delta_"))
-            .filterNot(st.folded).toSeq.sorted
-        } finally s.close()
-      }
-    }
-
-  /** The shared FLAT-layout lagged GC (base_v<N> + delta_<tag> at the
-    * dir root, `_tombstones/<tag>`): collect superseded base versions,
-    * crashed-attempt debris, legacy v0 root files once a versioned
-    * base is committed, folded deltas and consumed tombstones — minus
-    * anything the CURRENT state or a protected prior still names.
-    * Factored out of the hash/fuzzy compactions so the standalone
-    * [[expireSnapshotsWith]] shares one implementation. */
-  def gcFlatPrior(dir: String, st: State, protectedRefs: Seq[SnapRef]): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) return
-    val tombs = liveTombTagsOf(dir, st)
-    val keepBases = (Set(st.v) ++ protectedRefs.map(_.v)).map(v => s"base_v$v")
-    val keepDelta = flatDeltaTagsOf(dir, st).toSet ++ protectedRefs.flatMap(_.live)
-    val keepTombs = tombs.toSet ++ protectedRefs.flatMap(_.tombs)
-    val gc = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      gc.iterator().asScala
-        .filter { p =>
-          val nm = p.getFileName.toString
-          nm.startsWith("_building_") ||
-            (nm.matches("base_v\\d+") && !keepBases.contains(nm)) ||
-            (st.v > 0 && !protectedRefs.exists(_.v == 0) &&
-              !nm.startsWith("_") && !nm.startsWith(".") &&
-              !nm.startsWith("delta_") && !nm.startsWith("base_v"))
-        }
-        .toSeq.foreach(deleteDir)
-    } finally gc.close()
-    st.folded.filterNot(keepDelta).foreach(t =>
-      deleteDir(java.nio.file.Paths.get(dir, s"delta_$t")))
-    st.deadTombs.filterNot(keepTombs).foreach(t =>
-      deleteDir(java.nio.file.Paths.get(tombRoot(dir), t)))
-  }
-
-  /** [[expireSnapshotsWith]] for the FLAT-layout stores (the dedup
-    * hash/sig stores and the fuzzy store share this exact layout). */
-  def expireFlatSnapshots(dir: String): Int = {
-    val p = java.nio.file.Paths.get(dir, stateName)
-    if (!java.nio.file.Files.exists(p)) return 0 // never committed: nothing retained
-    val st = state(dir)
-    expireSnapshotsWith(dir, p, st.priors, prot => gcFlatPrior(dir, st, prot))
-  }
-
-  /** A tombstone is consumed when every covered leg is the base, is
-    * folding now, or folded earlier (its dir is gone). */
-  def consumedTombs(tombs: Seq[Tomb], folding: Seq[String], liveNow: Set[String]): Seq[Tomb] =
-    tombs.filter(_.covered.forall(c =>
-      c == "base" || folding.contains(c) || !liveNow.contains(c)))
-
-  /** A sorted string-array field of a committed state/sidecar json —
-    * None when the FIELD is absent (a sidecar written before the
-    * committed-live-leg protocol; callers then fall back to the legacy
-    * directory-listing resolution). */
-  def optStringSeq(
-      node: Option[com.fasterxml.jackson.databind.JsonNode],
-      key: String): Option[Seq[String]] =
-    node.filter(_.has(key)).map { n =>
-      import scala.jdk.CollectionConverters._
-      n.get(key).elements().asScala.map(_.asText()).toSeq.sorted
     }
 
   /** Recursive on-disk byte size — the numerator/denominator feeds of
@@ -900,25 +1149,7 @@ private[graft] object MutableStore {
 
   /** Base bytes of a FLAT-layout store (seed files at the dir root, or
     * the committed `base_v<N>` dir after a compaction). */
-  def flatBaseBytes(dir: String): Long = {
-    val st = state(dir)
-    if (st.v > 0) duBytes(java.nio.file.Paths.get(dir, s"base_v${st.v}"))
-    else {
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(root)) return 0L
-      val s = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter { p =>
-            val nm = p.getFileName.toString
-            !nm.startsWith("delta_") && !nm.startsWith("base_v") &&
-              !nm.startsWith("_") && !nm.startsWith(".")
-          }
-          .map(duBytes).sum
-      } finally s.close()
-    }
-  }
+  def flatBaseBytes(dir: String): Long = baseBytes(flatLayout(dir, "MutableStore"))
 
   /** Live delta bytes of a flat-layout store. */
   def flatDeltaBytes(dir: String, liveTags: Seq[String]): Long =
@@ -941,15 +1172,37 @@ private[graft] object MutableStore {
       path.toAbsolutePath.normalize.getParent.toString)
     updates.collect { case (k, vs) if k == "live" || k == "liveTombs" =>
       requireCleanTags(vs, s"patchStringArrays($path, $k)") }
-    if (!java.nio.file.Files.exists(path)) return
-    val node = mapper.readTree(java.nio.file.Files.readString(path))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    updates.foreach { case (k, vs) =>
-      val arr = node.putArray(k)
+    if (java.nio.file.Files.exists(path))
+      writeState(path, Some(mapper.readTree(java.nio.file.Files.readString(path))),
+        Nil, updates: _*)
+  }
+
+  /** One atomic replace of a state json: `node` (or an empty object)
+    * with the raw-json `fields` set and the string-array `lists`
+    * replaced (sorted); every other field is carried over. */
+  private def writeState(path: java.nio.file.Path,
+      node: Option[com.fasterxml.jackson.databind.JsonNode],
+      fields: Seq[(String, String)], lists: (String, Seq[String])*): Unit = {
+    val n = node.fold(mapper.createObjectNode())(_.deepCopy[com.fasterxml.jackson.databind.JsonNode]()
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+    fields.foreach { case (k, raw) => n.set[com.fasterxml.jackson.databind.JsonNode](k, mapper.readTree(raw)) }
+    lists.foreach { case (k, vs) =>
+      val arr = n.putArray(k)
       vs.sorted.foreach(arr.add)
     }
-    Artifact.writeAtomic(path, node.toString)
+    Artifact.writeAtomic(path, n.toString)
   }
+
+  /** Names the Spark jobs `body` starts `<primitive> at <family>.scala`
+    * — the per-source-file call-site buckets traces attribute store
+    * work by. */
+  def named[A](spark: SparkSession, family: String, primitive: String)(body: => A): A =
+    withCallSite(spark, s"$primitive at $family.scala")(body)
+
+  /** [[named]] under the store's writer lease. */
+  def writing[A](spark: SparkSession, dir: String, family: String, primitive: String)(
+      body: => A): A =
+    withWriterLock(dir, primitive)(named(spark, family, primitive)(body))
 
   /** Runs `body` with the Spark jobs it starts named `site` (e.g.
     * `appendDelta at Ivf.scala` — the call site the UI, the event log

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing for LLM training-data pipelines.

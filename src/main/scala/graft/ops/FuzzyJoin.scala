@@ -133,44 +133,8 @@ object FuzzyJoin {
 
   import graft.io.MutableStore
 
-  /** Live delta tags of the fuzzy store. */
-  private def storeDeltaTags(dir: String): Seq[String] =
-    storeDeltaTagsOf(dir, MutableStore.state(dir))
-
-  /** Live delta tags against one already-read state — the COMMITTED
-    * live list when present (snapshot contract), else the legacy
-    * listing minus the folded list. */
-  private def storeDeltaTagsOf(dir: String, st: MutableStore.State): Seq[String] =
-    st.live.getOrElse {
-      val root = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(root)) return Seq.empty
-      val s = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(java.nio.file.Files.isDirectory(_))
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("delta_"))
-          .map(_.stripPrefix("delta_"))
-          .filterNot(st.folded)
-          .toSeq.sorted
-      } finally s.close()
-    }
-
-  /** COMMIT a mutation tag into the store state's live lists (the
-    * engine-wide snapshot contract; see
-    * [[graft.io.MutableStore.commitLiveLists]]). Folded/consumed tags
-    * are never re-committed (redelivered batches). */
-  private def commitMutationTag(dir: String, tag: String, isTomb: Boolean): Unit = {
-    val st = MutableStore.state(dir)
-    val live = storeDeltaTagsOf(dir, st)
-    val tombs = MutableStore.liveTombTagsOf(dir, st)
-    if (isTomb) {
-      if (!st.deadTombs.contains(tag))
-        MutableStore.commitLiveLists(dir, live, (tombs :+ tag).distinct.sorted)
-    } else if (!st.folded.contains(tag))
-      MutableStore.commitLiveLists(dir, (live :+ tag).distinct.sorted, tombs)
-  }
+  /** The fuzzy store: the FLAT layout ([[graft.io.MutableStore.flatLayout]]). */
+  private def flatOf(dir: String) = MutableStore.flatLayout(dir, "FuzzyJoin")
 
   /** TAKEDOWN from the fuzzy signature store: a scrubbed entity's
     * deletion-neighborhood postings are derived data too. Ids-only
@@ -185,127 +149,44 @@ object FuzzyJoin {
       tag: String,
       idCol: String = "store_id",
       excludeCovered: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(storeDir, "deleteFromFuzzyStore") {
-    // excludeCovered: the CDC batch's own tag — adds win within a batch
-    val covered = "base" +: storeDeltaTags(storeDir).filterNot(excludeCovered)
+      MutableStore.writing(spark, storeDir, "FuzzyJoin", "deleteFromFuzzyStore") {
+    val l = flatOf(storeDir)
+    val covered = MutableStore.coveredLegs(l, excludeCovered)
     ids.select(col(idCol).cast("long").as("store_id")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${MutableStore.tombRoot(storeDir)}/$tag/ids")
+      .write.mode("overwrite").parquet(s"${l.tombDir(tag)}/ids")
     MutableStore.writeTombStats(storeDir, tag, covered)
-    // COMMIT: the tombstone is live once the state names it
-    commitMutationTag(storeDir, tag, isTomb = true)
+    MutableStore.commitMutation(l, tag, tomb = true)
   }
 
-  /** The fuzzy store, leg-masked: current base version plus live delta
-    * legs, minus tombstoned store_ids on the legs each tombstone
-    * covers (broadcast anti-join; the no-mutation fast path is the
-    * original single recursive scan). */
+  /** The fuzzy store, leg-masked ([[graft.io.MutableStore.readFlat]]):
+    * snapshot `s`'s base version plus its live delta legs, minus
+    * tombstoned store_ids on the legs each tombstone covers. */
   private def readFuzzyStore(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      excludeTags: Set[String]): DataFrame =
-    // ONE state read resolves the whole leg set
-    readFuzzyStoreAt(spark, dir, MutableStore.state(dir), excludeTags)
-
-  /** [[readFuzzyStore]] against an EXPLICIT state — the current one,
-    * or a retained prior's reference set re-expressed as a State (the
-    * time-travel read path). */
-  private def readFuzzyStoreAt(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      st: graft.io.MutableStore.State,
-      excludeTags: Set[String]): DataFrame = {
-    val raw =
-      if (st.v == 0)
-        spark.read.option("recursiveFileLookup", "true").parquet(dir)
-      else {
-        val base = spark.read.parquet(s"$dir/base_v${st.v}")
-        storeDeltaTagsOf(dir, st).filterNot(excludeTags).foldLeft(base) { (acc, t) =>
-          acc.unionAll(spark.read.schema(base.schema).parquet(s"$dir/delta_$t"))
-        }
-      }
-    val filtered =
-      if (st.v == 0) {
-        val noGhost = raw.where(!input_file_name().rlike("/base_v\\d+/"))
-        st.live match {
-          case Some(liveTags) =>
-            // committed-live WHITELIST: an unnamed delta dir is not live
-            val isDelta = input_file_name().rlike("/delta_[^/]+/")
-            val allowed = liveTags.filterNot(excludeTags)
-              .map(t => input_file_name().contains(s"/delta_$t/"))
-              .reduceOption(_ || _).getOrElse(lit(false))
-            noGhost.where(!isDelta || allowed)
-          case None =>
-            val cut = (excludeTags ++ st.folded).toSeq.sorted.map(t => s"/delta_$t/")
-            cut.foldLeft(noGhost)(
-              (acc, frag) => acc.where(!input_file_name().contains(frag)))
-        }
-      } else raw
-    val tombs = MutableStore.liveTombsOf(dir, st)
-    if (tombs.isEmpty) filtered
-    else {
-      val ids = tombs.map { t =>
-        spark.read.parquet(s"${MutableStore.tombRoot(dir)}/${t.tag}/ids")
-          .withColumn("_leg", explode(lit(t.covered.toSeq.sorted.toArray)))
-      }.reduce(_ unionAll _)
-      val cols = filtered.columns
-      filtered.withColumn("_leg", MutableStore.legOf)
-        .join(broadcast(ids), Seq("_leg", "store_id"), "left_anti")
-        .select(cols.map(col).toIndexedSeq: _*)
-    }
+      excludeTags: Set[String],
+      s: Option[MutableStore.Snap] = None): DataFrame = {
+    val l = flatOf(dir)
+    MutableStore.readFlat(spark, l, s.getOrElse(MutableStore.snapOf(l)), excludeTags,
+      "ids", Seq("store_id"))
   }
 
   /** Fold live deltas + consumed tombstones into a fresh versioned
-    * base (`base_v<N>`, built under an underscore temp, renamed in,
-    * never a reused path), committed with one atomic state replace —
-    * the engine-wide versioned-swap protocol. Single-writer. */
+    * base (`base_v<N>`) under one atomic state commit — the
+    * engine-wide versioned-swap protocol
+    * ([[graft.io.MutableStore.compact]]). Single-writer. */
   def compactFuzzyStore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       excludeTags: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "compactFuzzyStore") {
-    val tags = storeDeltaTags(dir).filterNot(excludeTags)
-    val tombs = MutableStore.liveTombs(dir)
-    if (tags.isEmpty && tombs.isEmpty) return
-    val st = MutableStore.state(dir)
-    val consumed = MutableStore.consumedTombs(tombs, tags,
-      storeDeltaTags(dir).toSet)
-    val vNew = math.max(st.v,
-      MutableStore.maxOnDiskVersion(dir, Seq("base_v"))) + 1
-    // LAGGED GC (the engine-wide snapshot-pinned-probe retention): the
-    // PREVIOUS commit's superseded dirs and crashed-attempt debris are
-    // collected at the NEXT compaction's start, never at a commit's
-    // own end — and BEFORE the survivor read lists its files.
-    // retention-aware: anything the CURRENT snapshot or a protected
-    // prior still names survives (gcRetention = 1 → historical window)
-    val (protectedRefs, _) = MutableStore.splitPriors(dir, st.priors)
-    MutableStore.gcFlatPrior(dir, st, protectedRefs)
-    val building = java.nio.file.Paths.get(s"$dir/_building_base_v$vNew")
-    MutableStore.deleteDir(building)
-    readFuzzyStore(spark, dir, excludeTags)
-      .write.mode("overwrite").parquet(building.toString)
-    java.nio.file.Files.move(building,
-      java.nio.file.Paths.get(s"$dir/base_v$vNew"))
-    // ---- COMMIT (no GC after it — lagged to the next compaction) ----
-    def deltaOnDisk(t: String) =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"delta_$t"))
-    def tombOnDisk(t: String) =
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(MutableStore.tombRoot(dir), t))
-    val folded = (st.folded.filter(deltaOnDisk) ++ tags).toSeq.sorted
-    val dead = (st.deadTombs.filter(tombOnDisk) ++ consumed.map(_.tag)).toSeq.sorted
-    val liveLeft = storeDeltaTagsOf(dir, st).filterNot(tags.contains(_)).sorted
-    val tombsLeft = tombs.map(_.tag).filterNot(consumed.map(_.tag).contains(_)).sorted
-    MutableStore.commitState(dir, vNew, folded, dead, liveLeft, tombsLeft,
-      priors = MutableStore.pushPrior(dir, protectedRefs,
-        MutableStore.SnapRef(st.v, storeDeltaTagsOf(dir, st), tombs.map(_.tag))))
-  }
+    MutableStore.compactFlat(spark, flatOf(dir), "compactFuzzyStore", excludeTags,
+      "ids", Seq("store_id"))
 
   /** Standalone snapshot expiry for the fuzzy signature store (the
     * Iceberg `expireSnapshots` analogue): apply the retention policy
     * and collect due priors + debris NOW, under the writer lease,
     * without a content commit — a store that stopped compacting
     * reclaims on demand. Returns the number of priors expired. */
-  def expireFuzzyStoreSnapshots(dir: String): Int =
-    MutableStore.expireFlatSnapshots(dir)
+  def expireFuzzyStoreSnapshots(dir: String): Int = MutableStore.expire(flatOf(dir))
 
   /** The persisted fuzzy store as a LAZY DataFrame — current base
     * version ∪ committed live deltas, minus covering tombstones,
@@ -329,13 +210,9 @@ object FuzzyJoin {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       version: Int): DataFrame = {
     val st = MutableStore.state(dir)
-    if (st.v == version) readFuzzyStoreAt(spark, dir, st, Set.empty)
-    else {
-      val ref = MutableStore.priorRefOf(dir, st, version)
-      readFuzzyStoreAt(spark, dir,
-        MutableStore.State(ref.v, Set.empty, Set.empty,
-          Some(ref.live), Some(ref.tombs)), Set.empty)
-    }
+    if (st.v == version) readFuzzyStore(spark, dir, Set.empty)
+    else readFuzzyStore(spark, dir, Set.empty,
+      Some(MutableStore.snapAt(flatOf(dir), MutableStore.priorRefOf(dir, st, version))))
   }
 
   /** NAMED snapshot tag (the Iceberg tag analogue): captures the
@@ -356,10 +233,8 @@ object FuzzyJoin {
   def fuzzyStoreViewAtTag(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       name: String): org.apache.spark.sql.DataFrame = {
-    val ref = MutableStore.resolveTag(dir, name)
-    readFuzzyStoreAt(spark, dir,
-      MutableStore.State(ref.v, Set.empty, Set.empty,
-        Some(ref.live), Some(ref.tombs)), Set.empty)
+    readFuzzyStore(spark, dir, Set.empty,
+      Some(MutableStore.snapAt(flatOf(dir), MutableStore.resolveTag(dir, name))))
   }
 
   /** ROLLBACK to a retained version (the write companion of
@@ -376,22 +251,13 @@ object FuzzyJoin {
     MutableStore.rollbackToTag(dir, name)
 
   /** Policy feeds for the streaming auto-compaction. */
-  def fuzzyStoreDeltaCount(dir: String): Int = storeDeltaTags(dir).size
-  def fuzzyStoreBaseBytes(dir: String): Long = MutableStore.flatBaseBytes(dir)
-  def fuzzyStoreDeltaBytes(dir: String): Long =
-    MutableStore.flatDeltaBytes(dir, storeDeltaTags(dir))
+  def fuzzyStoreDeltaCount(dir: String): Int = MutableStore.deltaTags(flatOf(dir)).size
+  def fuzzyStoreBaseBytes(dir: String): Long = MutableStore.baseBytes(flatOf(dir))
+  def fuzzyStoreDeltaBytes(dir: String): Long = MutableStore.deltaBytes(flatOf(dir))
 
   /** Replay-reset: drop every delta and tombstone dir (base snapshot +
-    * seed sidecar untouched). */
-  def dropFuzzyStoreMutations(dir: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    storeDeltaTags(dir).foreach(t =>
-      MutableStore.deleteDir(java.nio.file.Paths.get(dir, s"delta_$t")))
-    MutableStore.deleteDir(java.nio.file.Paths.get(MutableStore.tombRoot(dir)))
-    MutableStore.patchStringArrays(
-      java.nio.file.Paths.get(dir, MutableStore.stateName),
-      "live" -> Seq.empty, "liveTombs" -> Seq.empty)
-  }
+    * seed sidecar untouched; [[graft.io.MutableStore.dropMutations]]). */
+  def dropFuzzyStoreMutations(dir: String): Unit = MutableStore.dropMutations(flatOf(dir))
 
   /** Resolve a crawl `batch` against the persisted fuzzy store AND
     * against its own earlier rows, then append the NOVEL rows'
@@ -417,7 +283,7 @@ object FuzzyJoin {
       maxDist: Int = 1,
       maxLen: Int = 64,
       batchTag: Option[String] = None): DataFrame =
-      graft.io.MutableStore.withWriterLock(storeDir, "incrementalFuzzyResolveBatch") {
+      MutableStore.writing(spark, storeDir, "FuzzyJoin", "incrementalFuzzyResolveBatch") {
     val b = batch.select(col(idCol).cast("long").as("_bid"), col(nameCol).as("_bn"))
     val bs = signatures(b, "_bn", maxDist, maxLen)
     // current base version plus live delta legs, minus covering
@@ -445,7 +311,7 @@ object FuzzyJoin {
     batchTag match {
       case Some(tag) =>
         novelSigs.write.mode("overwrite").parquet(s"$storeDir/delta_$tag")
-        commitMutationTag(storeDir, tag, isTomb = false)
+        MutableStore.commitMutation(flatOf(storeDir), tag, tomb = false)
       case None =>
         novelSigs.write.mode("append").parquet(storeDir)
     }

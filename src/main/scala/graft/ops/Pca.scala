@@ -43,7 +43,6 @@ object Pca {
     import spark.implicits._
     val d = df.select(size(col(embCol))).head().getInt(0)
     require(k >= 1 && k <= d, s"k must be in [1, $d], got $k")
-    val zero = (0L, new Array[Double](d), new Array[Double](d * d))
     val (n, s, g) = df.select(col(embCol)).as[Array[Float]]
       .mapPartitions { it =>
         var cnt = 0L

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful sessionization over an event stream — the custom-state

@@ -410,85 +410,7 @@ object InvertedIndex {
   private def tombRoot(dir: String) = s"${dir}_tombstones"
   private val tombStatsName = "_graft_tomb_stats.json"
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val allSidecarNames = Seq(sidecarName, posSidecarName, triSidecarName)
-
-  /** The store's sidecar node, whichever of the three index families
-    * owns `dir` (a dir hosts exactly one posting table). */
-  private def sidecarNode(dir: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-    allSidecarNames.iterator
-      .map(n => java.nio.file.Paths.get(dir, n))
-      .find(java.nio.file.Files.exists(_))
-      .map(p => mapper.readTree(java.nio.file.Files.readString(p)))
-
-  private def jsonStringSet(
-      node: com.fasterxml.jackson.databind.JsonNode, key: String): Set[String] =
-    if (node == null || !node.has(key)) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      node.get(key).elements().asScala.map(_.asText()).toSet
-    }
-
-  /** Delta tags the COMMITTED sidecar says are already folded into the
-    * current base version — still on disk only inside the
-    * commit-to-GC crash window; probes and compactions must skip
-    * them or rows double-count. */
-  private def foldedTags(dir: String): Set[String] =
-    sidecarNode(dir).map(jsonStringSet(_, "folded")).getOrElse(Set.empty)
-
-  /** Tombstone tags already consumed by a committed compaction (their
-    * rows physically dropped, their terms subtracted) — a still-on-
-    * disk dir in this set is GC debt, not a live tombstone. */
-  private def deadTombTags(dir: String): Set[String] =
-    sidecarNode(dir).map(jsonStringSet(_, "deadTombs")).getOrElse(Set.empty)
-
-  /** One live tombstone batch: the deleted ids' dir tag, the legs it
-    * covers, and the batch's mergeable terms. */
-  private final case class Tomb(tag: String, covered: Set[String],
-      count: Long, hash: Long, hsum: BigInt, nDocs: Long, sumDl: Long)
-
-  private def readTomb(dir: String, tag: String): Tomb = {
-    val n = mapper.readTree(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(tombRoot(dir), tag, tombStatsName)))
-    Tomb(tag, jsonStringSet(n, "covered"),
-      n.get("count").asLong(), n.get("hash").asLong(),
-      BigInt(n.get("hsum").asText()),
-      n.get("nDocs").asLong(), n.get("sumDl").asLong())
-  }
-
-  /** One committed-state SNAPSHOT of a posting store, resolved from a
-    * SINGLE sidecar read plus the immutable per-tag stats jsons it
-    * names — the engine-wide snapshot-pinned-probe contract
-    * ([[graft.index.Sq]]): base version, live delta tags and live
-    * tombstones come from one atomic read, so a probe can never see a
-    * torn mix of two commits; lagged compaction GC keeps every dir a
-    * snapshot names readable through ONE subsequent commit. Sidecars
-    * written before the protocol (no `live`/`liveTombs` fields) fall
-    * back to the legacy listing resolution. */
-  private final case class Snap(
-      node: Option[com.fasterxml.jackson.databind.JsonNode],
-      v: Int,
-      live: Seq[String],
-      tombs: Seq[Tomb]) {
-    def basePathOf(dir: String): String = if (v > 0) s"${dir}_v$v" else dir
-    def folded: Set[String] =
-      node.map(jsonStringSet(_, "folded")).getOrElse(Set.empty)
-    def dead: Set[String] =
-      node.map(jsonStringSet(_, "deadTombs")).getOrElse(Set.empty)
-    def stateKey: (Int, Seq[String], Seq[String]) = (v, live, tombs.map(_.tag))
-  }
-
-  private def snapOf(dir: String): Snap = {
-    val node = sidecarNode(dir)
-    val v = node.filter(_.hasNonNull("v")).map(_.get("v").asInt()).getOrElse(0)
-    val folded = node.map(jsonStringSet(_, "folded")).getOrElse(Set.empty[String])
-    val dead = node.map(jsonStringSet(_, "deadTombs")).getOrElse(Set.empty[String])
-    val live = graft.io.MutableStore.optStringSeq(node, "live")
-      .getOrElse(listedDeltaTags(dir).filterNot(folded))
-    val tombTags = graft.io.MutableStore.optStringSeq(node, "liveTombs")
-      .getOrElse(listedTombTags(dir).filterNot(dead))
-    Snap(node, v, live, tombTags.map(readTomb(dir, _)))
-  }
 
   /** The owning sidecar's path (a dir hosts exactly one posting
     * table), if the store was ever ensured. */
@@ -498,20 +420,21 @@ object InvertedIndex {
       .find(java.nio.file.Files.exists(_))
       .getOrElse(java.nio.file.Paths.get(dir, sidecarName))
 
-  private def listedTombTags(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(tombRoot(dir))
-    if (!java.nio.file.Files.exists(root)) return Seq.empty
-    val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => java.nio.file.Files.exists(p.resolve(tombStatsName)))
-        .map(_.getFileName.toString)
-        .toSeq.sorted
-    } finally s.close()
+  /** A posting store as a versioned store ([[graft.io.MutableStore]]):
+    * state in the owning sidecar, the v0 base is the bucketed data at
+    * `dir` itself (everything there but the sidecars), versions are
+    * SIBLING `<dir>_v<N>` dirs, deltas `<dir>_deltas/<tag>` and
+    * tombstones `<dir>_tombstones/<tag>` beside it. */
+  private def layoutOf(dir: String) = {
+    val d = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
+    graft.io.MutableStore.Layout("InvertedIndex", dir, sidecarPath(dir), flat = false,
+      d.getParent.toString, Seq(s"${d.getFileName}_v"), Seq(dir),
+      () => graft.io.MutableStore.entries(dir)
+        .filterNot(p => allSidecarNames.contains(p.getFileName.toString)),
+      Seq(deltaRoot(dir)), "", Some(deltaStatsName), tombRoot(dir), "", Some(tombStatsName))
   }
 
-  private def liveTombs(dir: String): Seq[Tomb] = snapOf(dir).tombs
+  private def snapOf(dir: String) = graft.io.MutableStore.snapOf(layoutOf(dir))
 
   /** The catalog table's current resolved location, normalized to a
     * filesystem path (None when unresolvable — validation then rests
@@ -540,7 +463,7 @@ object InvertedIndex {
   private[graft] val pinRetries = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private def pinned[A](spark: SparkSession, table: String, dir: String)
-      (build: (DataFrame, Snap) => A): A = {
+      (build: (DataFrame, graft.io.MutableStore.Snap) => A): A = {
     var attempt = 0
     while (attempt < 8) {
       val s0 = snapOf(dir)
@@ -550,10 +473,10 @@ object InvertedIndex {
       // which is always absolute) — with a RELATIVE store dir a bare
       // normalize can never equal the catalog location and the retry
       // loop would exhaust even with no concurrent commit
-      val expected = java.nio.file.Paths.get(s0.basePathOf(dir))
+      val expected = java.nio.file.Paths.get(layoutOf(dir).basePaths(s0.v).head)
         .toAbsolutePath.normalize.toString
       val s1 = snapOf(dir)
-      if (s1.stateKey == s0.stateKey && loc.forall(_ == expected))
+      if (s1.ref == s0.ref && loc.forall(_ == expected))
         return build(base, s0)
       pinRetries.incrementAndGet()
       attempt += 1
@@ -597,15 +520,14 @@ object InvertedIndex {
       idCol: String = "doc_id",
       textCol: String = "text",
       excludeCovered: Set[String] = Set.empty): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "deleteDocs") {
+      graft.io.MutableStore.writing(spark, dir, "InvertedIndex", "deleteDocs") {
     val (nRows, dataHash, hashSum) = fingerprint(batch, idCol, textCol)
     val d = batch.select(col(idCol).cast("long").as("doc_id"),
       size(TextAnalysis.tokens(col(textCol))).cast("long").as("dl"))
     val stats = d.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")).head()
     val nDocs = stats.getLong(0)
     val sumDl = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    val s = snapOf(dir)
-    val covered = ("base" +: s.live.filterNot(excludeCovered))
+    val covered = graft.io.MutableStore.coveredLegs(layoutOf(dir), excludeCovered)
       .map(t => "\"" + t + "\"").mkString("[", ",", "]")
     val out = s"${tombRoot(dir)}/$tag"
     d.select(col("doc_id")).distinct()
@@ -613,36 +535,18 @@ object InvertedIndex {
     graft.io.Artifact.writeAtomic(
       java.nio.file.Paths.get(out, tombStatsName),
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum","nDocs":$nDocs,"sumDl":$sumDl,"covered":$covered}""")
-    // COMMIT: live once the state names it; a consumed (dead) tag is a
-    // redelivered batch whose terms were already subtracted — debris
-    if (!s.dead.contains(tag))
-      graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-        "liveTombs" -> (s.tombs.map(_.tag) :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = true)
   }
 
   /** Drop every delta and tombstone dir, returning the store to the
-    * BASE snapshot its sidecar attests (the sidecar/base data are
-    * untouched — deletes and appends never modify them until a
-    * compaction folds). Replay helper for harnesses that re-run a
-    * delete/append scenario against a persisted store: without the
-    * reset, a re-run's tombstone would record the PREVIOUS run's
-    * re-append delta among its covered legs and mask it — correct
-    * covered-leg semantics, wrong scenario. Single-writer, like every
-    * other mutation. */
-  def dropMutations(dir: String): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "dropMutations") {
-    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(deltaRoot(dir)))
-    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(tombRoot(dir)))
-    // the committed state must agree with the wiped disk
-    graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-      "live" -> Seq.empty, "liveTombs" -> Seq.empty,
-      "folded" -> Seq.empty, "deadTombs" -> Seq.empty)
-  }
+    * BASE snapshot its sidecar attests — the replay reset
+    * ([[graft.io.MutableStore.dropMutations]]). */
+  def dropMutations(dir: String): Unit = graft.io.MutableStore.dropMutations(layoutOf(dir))
 
   /** The tombstoned doc ids covering one leg, as a broadcast anti-join
     * (None when no tombstone covers it). */
-  private def maskFor(
-      spark: SparkSession, dir: String, tombs: Seq[Tomb], leg: String): Option[DataFrame] = {
+  private def maskFor(spark: SparkSession, dir: String,
+      tombs: Seq[graft.io.MutableStore.Tomb], leg: String): Option[DataFrame] = {
     val covering = tombs.filter(_.covered.contains(leg))
     if (covering.isEmpty) None
     else Some(covering.map(t =>
@@ -668,7 +572,7 @@ object InvertedIndex {
       tag: String,
       idCol: String = "doc_id",
       textCol: String = "text"): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "appendDelta") {
+      graft.io.MutableStore.writing(spark, dir, "InvertedIndex", "appendDelta") {
     val (nRows, dataHash, hashSum) = fingerprint(batch, idCol, textCol)
     val d = batch.select(col(idCol).cast("long").as("doc_id"),
         TextAnalysis.tokens(col(textCol)).as("t"))
@@ -686,67 +590,31 @@ object InvertedIndex {
     graft.io.Artifact.writeAtomic(
       java.nio.file.Paths.get(out, deltaStatsName),
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum","nDocs":$nDocs,"sumDl":$sumDl}""")
-    commitDeltaTag(dir, tag)
-  }
-
-  /** COMMIT a freshly written delta: live once the state names it. A
-    * committed-FOLDED tag is a redelivered batch whose rows are in the
-    * base — debris, never re-committed (double-count). */
-  private def commitDeltaTag(dir: String, tag: String): Unit = {
-    val s = snapOf(dir)
-    if (!s.folded.contains(tag))
-      graft.io.MutableStore.patchStringArrays(sidecarPath(dir),
-        "live" -> (s.live :+ tag).distinct)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
 
   /** Tags of the live deltas, sorted (probe fan-out width — bounded by
     * the compaction policy), per the COMMITTED state (one sidecar
     * read). A delta is live only once the state names it. */
-  def deltaTags(dir: String): Seq[String] = snapOf(dir).live
-
-  /** Legacy listing resolution (pre-protocol sidecars) — a delta dir
-    * counts only once its stats json exists (written last). */
-  private def listedDeltaTags(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(deltaRoot(dir))
-    if (!java.nio.file.Files.exists(root)) return Seq.empty
-    val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => java.nio.file.Files.exists(p.resolve(deltaStatsName)))
-        .map(_.getFileName.toString)
-        .toSeq.sorted
-    } finally s.close()
-  }
-
-  private def deltaStats(dir: String, tag: String): com.fasterxml.jackson.databind.JsonNode =
-    mapper.readTree(
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(deltaRoot(dir), tag, deltaStatsName)))
+  def deltaTags(dir: String): Seq[String] = graft.io.MutableStore.deltaTags(layoutOf(dir))
 
   /** Total bytes of the current BASE version's data files — the
     * denominator of the size-ratio compaction policy. */
-  def baseBytes(dir: String): Long = {
-    val v = sidecarNode(dir).filter(_.hasNonNull("v")).map(_.get("v").asInt()).getOrElse(0)
-    graft.io.MutableStore.duBytes(java.nio.file.Paths.get(if (v > 0) s"${dir}_v$v" else dir))
-  }
+  def baseBytes(dir: String): Long = graft.io.MutableStore.baseBytes(layoutOf(dir))
 
   /** Total bytes of the live delta dirs — the numerator of the
     * size-ratio compaction policy (fold when deltas have grown to a
     * fixed fraction of the base, so each fold's IO is proportional to
     * the delta bytes it folds and total compaction IO stays LINEAR in
     * stream length — a count trigger makes it quadratic). */
-  def deltaBytes(dir: String): Long =
-    deltaTags(dir).map(t =>
-      graft.io.MutableStore.duBytes(java.nio.file.Paths.get(deltaRoot(dir), t))).sum
+  def deltaBytes(dir: String): Long = graft.io.MutableStore.deltaBytes(layoutOf(dir))
 
   /** The base table's corpus stats, read from its sidecar — the
     * probe-time source of truth (a captured value goes stale the
     * moment an auto-compaction folds deltas into the base). */
   def sidecarStats(dir: String): CorpusStats = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, sidecarName)))
+    val node = snapOf(dir).node.getOrElse(
+      throw new IllegalStateException(s"no sidecar under $dir"))
     CorpusStats(node.get("nDocs").asLong(), node.get("sumDl").asLong())
   }
 
@@ -756,17 +624,13 @@ object InvertedIndex {
     * exactly one covered leg — the [[deleteDocs]] contract). */
   def statsDeltaAware(dir: String): CorpusStats = statsOf(dir, snapOf(dir))
 
-  private def statsOf(dir: String, s: Snap): CorpusStats = {
+  private def statsOf(dir: String, s: graft.io.MutableStore.Snap): CorpusStats = {
     val node = s.node.getOrElse(
       throw new IllegalStateException(s"no sidecar under $dir"))
-    val base = CorpusStats(node.get("nDocs").asLong(), node.get("sumDl").asLong())
-    val added = s.live.foldLeft(base) { (acc, tag) =>
-      val n = deltaStats(dir, tag)
-      CorpusStats(acc.nDocs + n.get("nDocs").asLong(), acc.sumDl + n.get("sumDl").asLong())
-    }
-    s.tombs.foldLeft(added) { (acc, t) =>
-      CorpusStats(acc.nDocs - t.nDocs, acc.sumDl - t.sumDl)
-    }
+    def total(k: String) = node.get(k).asLong() +
+      s.live.map(layoutOf(dir).deltaStats(_).get(k).asLong()).sum -
+      s.tombs.map(_.stats.get.get(k).asLong()).sum
+    CorpusStats(total("nDocs"), total("sumDl"))
   }
 
   /** Operational introspection of a posting store — the engine's
@@ -882,8 +746,8 @@ object InvertedIndex {
       dir: String,
       buckets: Int,
       excludeTags: Set[String] = Set.empty): Unit =
-    compactSimpleDeltas(spark, table, dir, buckets, sidecarName, "token",
-      postingsDdl, excludeTags, extraLongKeys = Seq("nDocs", "sumDl"))
+    compactSimpleDeltas(spark, table, dir, buckets, "token", excludeTags,
+      extraLongKeys = Seq("nDocs", "sumDl"))
 
   // ---------------------------------------------------------------
   // Positional- and trigram-index deltas — the same protocol applied
@@ -930,16 +794,16 @@ object InvertedIndex {
     * with the batch's mergeable source-fingerprint terms in the stats
     * json (written last). Idempotent overwrite under redelivery. */
   private def appendSimpleDelta(
-      dir: String, tag: String, postings: DataFrame,
-      batchFingerprint: (Long, Long, String)): Unit =
-      graft.io.MutableStore.withWriterLock(dir, "appendSimpleDelta") {
+      spark: SparkSession, dir: String, tag: String, postings: DataFrame,
+      batchFingerprint: (Long, Long, String), primitive: String): Unit =
+      graft.io.MutableStore.writing(spark, dir, "InvertedIndex", primitive) {
     val (nRows, dataHash, hashSum) = batchFingerprint
     val out = s"${deltaRoot(dir)}/$tag"
     postings.write.mode("overwrite").parquet(out)
     graft.io.Artifact.writeAtomic(
       java.nio.file.Paths.get(out, deltaStatsName),
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum"}""")
-    commitDeltaTag(dir, tag)
+    graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
 
   /** Positional delta: the batch pays its own tokenize + posexplode
@@ -951,8 +815,8 @@ object InvertedIndex {
       tag: String,
       idCol: String = "doc_id",
       textCol: String = "text"): Unit =
-    appendSimpleDelta(dir, tag, positionalPostingsOf(batch, idCol, textCol),
-      fingerprint(batch, idCol, textCol))
+    appendSimpleDelta(spark, dir, tag, positionalPostingsOf(batch, idCol, textCol),
+      fingerprint(batch, idCol, textCol), "appendPositionalDelta")
 
   /** Trigram delta: the batch pays its own normalize + trigram
     * explode (batch-sized). */
@@ -963,8 +827,8 @@ object InvertedIndex {
       tag: String,
       idCol: String = "doc_id",
       textCol: String = "text"): Unit =
-    appendSimpleDelta(dir, tag, trigramPostingsOf(batch, idCol, textCol),
-      fingerprint(batch, idCol, textCol))
+    appendSimpleDelta(spark, dir, tag, trigramPostingsOf(batch, idCol, textCol),
+      fingerprint(batch, idCol, textCol), "appendTrigramDelta")
 
   /** Postings over (base ∪ live deltas) − covering tombstones: the
     * base leg is the bucket-prunable registered table, each delta leg
@@ -976,11 +840,11 @@ object InvertedIndex {
       spark: SparkSession, table: String, dir: String): DataFrame =
     pinned(spark, table, dir)((base, s) => withDeltasOf(spark, base, dir, s))
 
-  /** The masked base ∪ delta union over one PINNED snapshot. */
-  private def withDeltasOf(
-      spark: SparkSession, base: DataFrame, dir: String, s: Snap): DataFrame = {
+  /** The masked base ∪ `legs` delta union over one PINNED snapshot. */
+  private def withDeltasOf(spark: SparkSession, base: DataFrame, dir: String,
+      s: graft.io.MutableStore.Snap, legs: Option[Seq[String]] = None): DataFrame = {
     val baseLeg = applyMask(base, maskFor(spark, dir, s.tombs, "base"))
-    s.live.foldLeft(baseLeg) { (acc, tag) =>
+    legs.getOrElse(s.live).foldLeft(baseLeg) { (acc, tag) =>
       acc.unionAll(applyMask(
         spark.read.schema(base.schema).parquet(s"${deltaRoot(dir)}/$tag"),
         maskFor(spark, dir, s.tombs, tag)))
@@ -1013,199 +877,56 @@ object InvertedIndex {
 
   /** Fold every live delta (minus `excludeTags` — the redelivery-
     * safety contract) and every tombstone into a rebuilt bucketed
-    * base: per-leg tombstone anti-joins drop deleted rows physically,
-    * the folded base lands in a FRESH sibling version dir
-    * (`<dir>_v<N+1>`) while the old base keeps serving (no
-    * localCheckpoint pinning, no in-place overwrite), and the COMMIT
-    * is ONE atomic sidecar replace carrying the merged fingerprint,
-    * the version pointer, the folded tags and the consumed tombstone
-    * tags — at every instant the store is either wholly the old state
-    * or wholly the new one. Tombstones whose covered legs all folded
-    * are CONSUMED (terms subtracted — the sidecar then attests exactly
-    * the post-delete corpus, so a fresh ensure over it REUSES);
-    * tombstones covering a still-live (excluded) delta stay live.
-    * `extraLongKeys` are additive build-time stats carried by the
-    * sidecar, every delta stats json, and every tombstone (the BM25
-    * table's nDocs/sumDl) — merged by summation. GC of the old
-    * version / folded deltas / consumed tombstones is LAGGED to the
-    * START of the next compaction: a snapshot-pinned probe built
-    * before this commit keeps every dir it named. Single-writer
-    * compactor; concurrent probes are safe (the snapshot contract).
-    * Shared by the BM25, positional, and trigram compactions. */
+    * base in a FRESH sibling version dir (`<dir>_v<N+1>`) while the old
+    * base keeps serving ([[graft.io.MutableStore.compact]]): per-leg
+    * tombstone anti-joins drop deleted rows physically, tombstones
+    * whose covered legs all folded are CONSUMED (terms subtracted — the
+    * sidecar then attests exactly the post-delete corpus, so a fresh
+    * ensure over it REUSES), and tombstones covering a still-live
+    * (excluded) delta stay live. `extraLongKeys` are additive
+    * build-time stats carried by the sidecar, every delta stats json
+    * and every tombstone (the BM25 table's nDocs/sumDl). After the
+    * commit this session's catalog follows the new version. Shared by
+    * the BM25, positional, and trigram compactions. */
   private def compactSimpleDeltas(
       spark: SparkSession,
       table: String,
       dir: String,
       buckets: Int,
-      sidecarFile: String,
       key: String,
-      ddl: String,
       excludeTags: Set[String],
       extraLongKeys: Seq[String] = Seq.empty): Unit =
       graft.io.MutableStore.withWriterLock(dir, "compactDeltas") {
-    val snap = snapOf(dir)
-    val tags = snap.live.filterNot(excludeTags)
-    val tombs = snap.tombs
-    if (tags.isEmpty && tombs.isEmpty) return
-    // never-reuse allocation BEFORE debris GC: a crashed attempt's
-    // renamed-but-uncommitted `<dir>_v<X>` sibling still bumps the
-    // counter, so a version path can never alias fresh data
-    val dirPath = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val parent = dirPath.getParent.toString
-    val stem = dirPath.getFileName.toString
-    val vNew = math.max(snap.v, graft.io.MutableStore.maxOnDiskVersion(
-      parent, Seq(s"${stem}_v"))) + 1
-    // retention-aware lagged GC: protect the newest (gcRetention - 1)
-    // prior snapshots' refs, drop the rest
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir,
-      snap.node.map(jsonStringSet(_, "priors")).getOrElse(Set.empty).toSeq)
-    gcPriorSimple(dir, sidecarFile, snap, protectedRefs)
-    val sidecar = java.nio.file.Paths.get(dir, sidecarFile)
-    val node = snap.node.getOrElse(
-      throw new IllegalStateException(s"no $sidecarFile under $dir"))
-    var cnt = node.get("count").asLong()
-    var hsh = node.get("hash").asLong()
-    var hsum = BigInt(node.get("hsum").asText())
-    val extras = scala.collection.mutable.LinkedHashMap(
-      extraLongKeys.map(k => k -> node.get(k).asLong()): _*)
-    tags.foreach { tag =>
-      val d = deltaStats(dir, tag)
-      cnt += d.get("count").asLong()
-      hsh ^= d.get("hash").asLong()
-      hsum += BigInt(d.get("hsum").asText())
-      extraLongKeys.foreach(k => extras(k) += d.get(k).asLong())
+    val l = layoutOf(dir)
+    val committed = graft.io.MutableStore.compact(spark, l, "compactDeltas", excludeTags) { f =>
+      val tmpTable = s"${table}__compact"
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+      withDeltasOf(spark, spark.table(table), dir, f.snap, Some(f.tags)).write
+        .mode("overwrite")
+        .option("path", f.building.head)
+        .bucketBy(buckets, key)
+        .sortBy(key)
+        .format("parquet")
+        .saveAsTable(tmpTable)
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
+      f.mergedTerms(extraLongKeys) ++
+        Seq("buckets" -> buckets.toString, "key" -> graft.io.Artifact.jsonStr(key))
     }
-    // a tombstone is consumed when every covered leg is folding now,
-    // was folded earlier (its dir is gone), or is the base; one whose
-    // covered tag sits in excludeTags stays live — its terms subtract
-    // at the compaction that folds that leg
-    val consumed = tombs.filter(_.covered.forall(c =>
-      c == "base" || tags.contains(c) || !snap.live.contains(c)))
-    consumed.foreach { t =>
-      cnt -= t.count
-      hsh ^= t.hash
-      hsum -= t.hsum
-      extraLongKeys.foreach {
-        case "nDocs" => extras("nDocs") -= t.nDocs
-        case "sumDl" => extras("sumDl") -= t.sumDl
-        case _ => ()
-      }
-    }
-    val base = spark.table(table)
-    val union = (
-      applyMask(base, maskFor(spark, dir, tombs, "base")) +:
-        tags.map(t => applyMask(
-          spark.read.schema(base.schema).parquet(s"${deltaRoot(dir)}/$t"),
-          maskFor(spark, dir, tombs, t)))
-      ).reduce(_ unionAll _)
-    // BUILD UNDER AN UNDERSCORE TEMP sibling (invisible to recursive
-    // listings even half-written), then rename into the never-reused
-    // version path — the MutableStore protocol Dedup/FuzzyJoin pioneered
-    val newDir = s"${dir}_v$vNew"
-    val building = java.nio.file.Paths.get(parent, s"_building_${stem}_v$vNew")
-    graft.io.MutableStore.deleteDir(building)
-    val tmpTable = s"${table}__compact"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    union.write
-      .mode("overwrite")
-      .option("path", building.toString)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
-    java.nio.file.Files.move(building, java.nio.file.Paths.get(newDir))
-    // ---- COMMIT: one atomic sidecar replace ----
-    def onDisk(root: String)(t: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(root, t))
-    val folded = (snap.folded.filter(onDisk(deltaRoot(dir))) ++ tags).toSeq.sorted
-    val dead = (snap.dead.filter(onDisk(tombRoot(dir))) ++
-      consumed.map(_.tag)).toSeq.sorted
-    val liveLeft = snap.live.filterNot(tags.contains(_)).sorted
-    val tombsLeft = tombs.map(_.tag).filterNot(consumed.map(_.tag).contains(_)).sorted
-    def arr(s: Seq[String]) = s.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val extraJson = extras.map { case (k, v) => s""","$k":$v""" }.mkString
-    // the PRE-compaction snapshot joins the retained priors — its refs
-    // stay GC-protected for gcRetention commits
-    val priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-      graft.io.MutableStore.SnapRef(snap.v, snap.live, tombs.map(_.tag)))
-    graft.io.Artifact.writeAtomic(sidecar,
-      s"""{"count":$cnt,"hash":$hsh,"hsum":"$hsum","buckets":$buckets,"key":"$key","v":$vNew,"folded":${arr(folded)},"deadTombs":${arr(dead)},"live":${arr(liveLeft)},"liveTombs":${arr(tombsLeft)},"priors":${arr(priors)}$extraJson}""")
     // this session's catalog follows the committed version — ONE
     // catalog call (no drop-then-create window for concurrent name
-    // resolution), then a refresh to drop the cached file listing
-    // ABSOLUTE location (the ensureBucketedTable contract): a relative
-    // path here would be warehouse-qualified by the catalog while every
-    // other store path resolves against the cwd
-    spark.sql(s"ALTER TABLE $table SET LOCATION " +
-      s"'${java.nio.file.Paths.get(newDir).toAbsolutePath.normalize}'")
-    spark.sql(s"REFRESH TABLE $table")
-    // NO GC here — lagged to the next compaction's gcPriorSimple, so
-    // probes pinned on the pre-commit snapshot keep every dir they named
+    // resolution), then a refresh to drop the cached file listing.
+    // ABSOLUTE location (the ensureBucketedTable contract)
+    if (committed) {
+      val v = graft.io.MutableStore.snapOf(l).v
+      spark.sql(s"ALTER TABLE $table SET LOCATION '${l.basePaths(v).head}'")
+      spark.sql(s"REFRESH TABLE $table")
+    }
   }
 
   /** Standalone snapshot expiry for a posting store (BM25/positional/
-    * trigram — whichever sidecar owns `dir`): apply the retention
-    * policy and collect due priors + debris NOW, under the writer
-    * lease, without a content commit ([[graft.io.MutableStore
-    * .expireSnapshotsWith]]). Returns the number of priors expired. */
-  def expireSnapshots(dir: String): Int = {
-    val s = snapOf(dir)
-    if (s.node.isEmpty) return 0 // never ensured: nothing retained
-    val priors = s.node.map(jsonStringSet(_, "priors"))
-      .getOrElse(Set.empty[String]).toSeq.sorted
-    val sidecar = sidecarPath(dir)
-    graft.io.MutableStore.expireSnapshotsWith(dir, sidecar, priors,
-      prot => gcPriorSimple(dir, sidecar.getFileName.toString, s, prot))
-  }
-
-  /** LAGGED GC for the posting stores (the [[graft.index.Sq]]
-    * contract): collect the dirs the PREVIOUS commit superseded — its
-    * state already excludes them — plus crashed-attempt debris, at the
-    * START of each compaction. Version dirs are SIBLINGS
-    * (`<dir>_v<N>`); the v0 base data lives flat at the dir root next
-    * to the sidecar and is collected once a versioned base is
-    * committed. */
-  private def gcPriorSimple(dir: String, sidecarFile: String, s: Snap,
-      protectedRefs: Seq[graft.io.MutableStore.SnapRef] = Seq.empty): Unit = {
-    // anything the CURRENT snapshot or a retention-PROTECTED prior
-    // still names survives; with gcRetention = 1 (protected empty) this
-    // reduces exactly to the historical one-commit window
-    val keepVersions = (Set(s.v) ++ protectedRefs.map(_.v)).map(v => s"${dir}_v$v")
-    val keepDelta = s.live.toSet ++ protectedRefs.flatMap(_.live)
-    val keepTombs = s.tombs.map(_.tag).toSet ++ protectedRefs.flatMap(_.tombs)
-    val dirPath = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val parent = dirPath.getParent
-    val stem = dirPath.getFileName.toString
-    if (java.nio.file.Files.exists(parent)) {
-      val ls = java.nio.file.Files.list(parent)
-      val names = try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala.map(_.getFileName.toString).toSeq
-      } finally ls.close()
-      names.foreach { nm =>
-        if (nm.startsWith(s"_building_${stem}_v"))
-          graft.io.MutableStore.deleteDir(parent.resolve(nm))
-        else if (nm.matches(java.util.regex.Pattern.quote(stem) + "_v\\d+") &&
-            !keepVersions.contains(s"${dir}_v${nm.substring(stem.length + 2)}"))
-          graft.io.MutableStore.deleteDir(parent.resolve(nm))
-      }
-    }
-    if (s.v > 0 && !protectedRefs.exists(_.v == 0)) {
-      // the flat v0 root data (everything but the sidecars) is debris
-      val ls = java.nio.file.Files.list(dirPath)
-      try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala
-          .filter(p => !allSidecarNames.contains(p.getFileName.toString))
-          .toSeq.foreach(graft.io.MutableStore.deleteDir)
-      } finally ls.close()
-    }
-    s.folded.filterNot(keepDelta).foreach(t =>
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(deltaRoot(dir), t)))
-    s.dead.filterNot(keepTombs).foreach(t =>
-      graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(tombRoot(dir), t)))
-  }
+    * trigram — whichever sidecar owns `dir`;
+    * [[graft.io.MutableStore.expire]]). Returns # priors expired. */
+  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   def compactPositionalDeltas(
       spark: SparkSession,
@@ -1213,8 +934,7 @@ object InvertedIndex {
       dir: String,
       buckets: Int,
       excludeTags: Set[String] = Set.empty): Unit =
-    compactSimpleDeltas(spark, table, dir, buckets, posSidecarName, "token",
-      posDdl, excludeTags)
+    compactSimpleDeltas(spark, table, dir, buckets, "token", excludeTags)
 
   def compactTrigramDeltas(
       spark: SparkSession,
@@ -1222,8 +942,7 @@ object InvertedIndex {
       dir: String,
       buckets: Int,
       excludeTags: Set[String] = Set.empty): Unit =
-    compactSimpleDeltas(spark, table, dir, buckets, triSidecarName, "tri",
-      triDdl, excludeTags)
+    compactSimpleDeltas(spark, table, dir, buckets, "tri", excludeTags)
 
   /** BM25 top-`topN` over the persisted postings: the probe filter on
     * the query terms prunes the bucketed scan to the terms' buckets

@@ -609,7 +609,7 @@ object TextAnalysis {
       bi: DataFrame, cxt: DataFrame, nbw: DataFrame, consts: DataFrame)
 
   private def knBigramModel(trainDf: DataFrame, textCol: String,
-      materialize: Boolean = true): KnModel = {
+      materialize: Boolean): KnModel = {
     val occT = trainDf.select(tokens(col(textCol)).as("t"))
       .select(explode(rawNgrams(col("t"), 2)).as("gram"))
     // ONE corpus tokenize+explode pass builds the bigram TYPE table;

@@ -388,4 +388,37 @@ class HnswSpec extends AnyFunSuite {
       assert(mine == exactTopK(c, q, 10), s"query $qid: batch != exact")
     }
   }
+
+  test("a corrupt sidecar fails the probe loudly instead of resolving the v=0 legs") {
+    val c = corpus(120, seed = 53)
+    val p = Hnsw.Params(m = 4, efConstruction = 16, parts = 2)
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_torn").toString
+    Hnsw.ensureLayout(c, dir, p)
+    val batch = c.filter(col("vec_id") < 3L)
+      .select((col("vec_id") + 7000000L).as("vec_id"), col("embedding"))
+    Hnsw.appendDelta(spark, dir, batch, tag = "a1", p)
+    Hnsw.compactDeltas(spark, dir, p)
+    val q = c.filter(col("vec_id") === 1L).as[(Long, Array[Float])].head()._2
+    assert(Hnsw.searchLayoutDeltaAware(spark, dir, q, 5, p).count() == 5)
+    // v=0 would serve the superseded `layout` plus the folded delta
+    // (duplicates) while lagged GC keeps them, and fail once it drops them
+    graft.io.Artifact.writeAtomic(java.nio.file.Paths.get(dir, "_hnsw_sidecar.json"), "{torn")
+    val e = intercept[IllegalStateException] {
+      Hnsw.searchLayoutDeltaAware(spark, dir, q, 5, p).collect()
+    }
+    assert(e.getMessage.contains("corrupt store state"), e.getMessage)
+  }
+
+  test("a null id fails the build with a message naming the id column") {
+    val p = Hnsw.Params(m = 4, efConstruction = 16, parts = 2)
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_nullid").toString
+    Hnsw.ensureLayout(corpus(40, seed = 59), dir, p)
+    val batch = Seq((Some(9000000L), Array.fill(dim)(0.1f)), (None, Array.fill(dim)(0.2f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[Exception](Hnsw.appendDelta(spark, dir, batch, tag = "n1", p))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("vec_id")), msgs.mkString("\n"))
+    assert(!msgs.exists(_.contains("NOT_NULL_ASSERT_VIOLATION")), msgs.mkString("\n"))
+  }
 }

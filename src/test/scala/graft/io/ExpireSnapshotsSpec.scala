@@ -177,6 +177,34 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     assert(!exists(s"$shDir/sh/delta_b1"),
       "shingle expiry reclaims the folded delta subdirs on demand")
     assert(Dedup.expireShingleStoreSnapshots(shDir) == 0, "idempotent")
+
+    // HASH: one novel batch folded → base_v1; the v0 root files and the
+    // folded delta are retained until the explicit expiry
+    val hDir2 = tmp("exp_hash")
+    Dedup.ensureHashStore(spark, docsDf, hDir2)
+    Dedup.incrementalDedupBatch(spark, hDir2,
+      Seq((10L, "totally fresh content batch")).toDF("doc_id", "text"),
+      batchTag = Some("b1")).collect()
+    Dedup.compactHashStore(spark, hDir2)
+    val nHash = Dedup.hashStoreView(spark, hDir2).count()
+    assert(exists(s"$hDir2/delta_b1"), "lagged GC kept the folded delta leg")
+    assert(Dedup.expireHashStoreSnapshots(hDir2) >= 1)
+    assert(!exists(s"$hDir2/delta_b1"), "hash expiry reclaims the folded delta")
+    assert(Dedup.hashStoreView(spark, hDir2).count() == nHash)
+    assert(Dedup.expireHashStoreSnapshots(hDir2) == 0, "idempotent")
+
+    // SIG: a takedown compacted → base_v1; the consumed tombstone is
+    // retained until the explicit expiry
+    val sDir = tmp("exp_sig")
+    Dedup.ensureSigStore(spark,
+      Seq((0L, 0x0F0FL), (3L, 0x7777L)).toDF("media_id", "sig"), sDir)
+    Dedup.deleteFromSigStore(spark, sDir, Seq(0L).toDF("s_id"), tag = "d1")
+    Dedup.compactSigStore(spark, sDir)
+    assert(exists(s"$sDir/_tombstones/d1"), "lagged GC kept the consumed tombstone")
+    assert(Dedup.expireHashStoreSnapshots(sDir) >= 1)
+    assert(!exists(s"$sDir/_tombstones/d1"), "sig expiry reclaims the consumed tombstone")
+    assert(spark.read.parquet(s"$sDir/base_v1").select("s_id").as[Long].collect().toSeq == Seq(3L))
+    assert(Dedup.expireHashStoreSnapshots(sDir) == 0, "idempotent")
   }
 
   test("posting store: expiry collects the superseded v0 root data of a quiescent store; search unchanged") {

@@ -237,6 +237,82 @@ class SnapshotPinSpec extends AnyFunSuite {
       "fresh view must serve the wholly-new state")
   }
 
+  // ------------------------------------------------- binary signature store
+
+  test("binary store: probe pinned before a delete+compaction commit serves wholly-old; fresh probe wholly-new") {
+    import graft.index.Binary
+    val rng = new scala.util.Random(13)
+    val corpus = (0L until 40L)
+      .map(i => (i, Array.fill(8)(rng.nextFloat())))
+      .toDF("vec_id", "embedding").localCheckpoint()
+    val dir = tmp("pin_bin")
+    Binary.ensureSignatureArtifact(corpus, dir, 8)
+    Binary.deleteFromArtifact(spark, dir, corpus.filter(col("vec_id") === 2L), tag = "d0")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("vec_id").as[Long].collect().toSet
+    val wantOld = ids(Binary.liveSignatures(spark, dir))
+    assert(wantOld == (0L until 40L).toSet - 2L)
+    val pinned = Binary.liveSignatures(spark, dir) // in flight across the commit
+
+    Binary.deleteFromArtifact(spark, dir, corpus.filter(col("vec_id") === 7L), tag = "d1")
+    Binary.compactSignatures(spark, dir)
+
+    assert(ids(pinned) == wantOld,
+      "pinned signature probe must serve the wholly-old state (deleted id present)")
+    assert(ids(Binary.liveSignatures(spark, dir)) == wantOld - 7L,
+      "fresh probe must serve the wholly-new state")
+  }
+
+  // ------------------------------------------------- dedup shingle store
+
+  test("shingle store: probe pinned before a delete+compaction commit serves wholly-old; fresh probe wholly-new") {
+    import graft.dedup.Dedup
+    val docs = Seq(
+      (0L, "alpha beta gamma delta epsilon"), (1L, "zeta eta theta iota kappa"),
+      (2L, "lambda mu nu xi omicron")).toDF("doc_id", "text")
+    val dir = tmp("pin_shingle")
+    Dedup.ensureShingleStore(spark, docs, dir)
+    Dedup.incrementalNearDupBatch(spark, dir,
+      Seq((10L, "pi rho sigma tau upsilon")).toDF("doc_id", "text"), batchTag = "a1").collect()
+    val probeBatch = Seq((100L, "zeta eta theta iota kappa"), (101L, "pi rho sigma tau upsilon"))
+      .toDF("doc_id", "text")
+    def verdicts(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] =
+      df.collect().map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+    val wantOld = verdicts(Dedup.nearDupsAgainstShingleStore(spark, dir, probeBatch))
+    assert(wantOld == Map(100L -> Some(1L), 101L -> Some(10L)))
+    val pinned = Dedup.nearDupsAgainstShingleStore(spark, dir, probeBatch) // in flight
+
+    Dedup.deleteFromShingleStore(spark, dir, Seq(1L).toDF("doc_id"), tag = "d1")
+    Dedup.compactShingleStore(spark, dir)
+
+    assert(verdicts(pinned) == wantOld,
+      "pinned shingle probe must serve the wholly-old state (the deleted doc still matching)")
+    assert(verdicts(Dedup.nearDupsAgainstShingleStore(spark, dir, probeBatch)) ==
+      Map(100L -> None, 101L -> Some(10L)), "fresh probe must see the takedown")
+  }
+
+  // ------------------------------------------------- dedup signature store
+
+  test("sig store: verdict pinned before a delete+compaction commit serves wholly-old; fresh verdict wholly-new") {
+    import graft.dedup.Dedup
+    val sigs = Seq((0L, 0x0F0FL), (3L, 0x7777_0000_0000_0000L)).toDF("media_id", "sig")
+    val dir = tmp("pin_sig")
+    Dedup.ensureSigStore(spark, sigs, dir)
+    def verdict(df: org.apache.spark.sql.DataFrame): (Long, Option[Long]) =
+      df.collect().map(r => (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))).head
+    def probe(tag: String) = Dedup.incrementalSigDedupBatch(spark, dir,
+      Seq((100L, 0x0F0FL)).toDF("media_id", "sig"), batchTag = tag)
+    val pinned = probe("p1") // the store matched before the commit
+    assert(verdict(pinned) == (0L, Some(0L)))
+
+    Dedup.deleteFromSigStore(spark, dir, Seq(0L).toDF("s_id"), tag = "d1")
+    Dedup.compactSigStore(spark, dir)
+
+    assert(verdict(pinned) == (0L, Some(0L)),
+      "the verdict pinned before the commit must keep the wholly-old match")
+    assert(verdict(probe("p2")) == (1L, None),
+      "a fresh verdict must serve the wholly-new state (the taken-down signature gone)")
+  }
+
   // ------------------------------------------------- IVF layout
 
   test("ivf layout: probe pinned before a delete+fold+reclaim commit serves wholly-old; fresh probe wholly-new") {

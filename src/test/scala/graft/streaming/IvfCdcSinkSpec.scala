@@ -133,6 +133,10 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     // id collect), 20 with it; the bound keeps it from growing back
     assert(batchJobs.size <= 28,
       s"the HNSW CDC micro-batch ran ${batchJobs.size} Spark jobs, budget 28:\n${batchJobs.mkString("\n")}")
+    // every store job is named after its primitive
+    val named = batchJobs.filter(_.endsWith("at Hnsw.scala")).toSet
+    assert(named == Set("appendDelta at Hnsw.scala", "deleteFromLayout at Hnsw.scala"),
+      s"store jobs must carry their primitive's call site: $batchJobs")
 
     val nodes = (Hnsw.layout(spark, dir) +: Hnsw.deltaTags(dir)
         .map(t => spark.read.parquet(s"$dir/layout_delta_$t")))
@@ -158,6 +162,10 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     // keeps it from growing back
     assert(batchJobs.size <= 12,
       s"the SQ8 CDC micro-batch ran ${batchJobs.size} Spark jobs, budget 12:\n${batchJobs.mkString("\n")}")
+    // every store job is named after its primitive
+    val named = batchJobs.filter(_.endsWith("at Sq.scala")).toSet
+    assert(named == Set("appendDelta at Sq.scala", "deleteVectors at Sq.scala"),
+      s"store jobs must carry their primitive's call site: $batchJobs")
 
     val got = Sq.codesWithDeltas(spark, dir).select("vec_id").as[Long].collect().toSet
     val want = (0L until 40L).toSet -- Set(1L, 7L) ++ Set(201L) ++ (300L to 307L)
