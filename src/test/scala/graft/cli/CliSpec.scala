@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{ReferenceSample, SparkTestSession}
 
 class CliSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -28,13 +28,17 @@ class CliSpec extends AnyFunSuite {
   test("search over the reference sample db prints the verified fixture bytes") {
     // FIXTURES §A2 [verified against the compiled reference]:
     // query (1.0,1.05) k=2 → "- ID: 1, Dist: 0.05" / "- ID: 2, Dist: 0.180278"
-    val db = tmpDb()
-    Files.copy(Paths.get("/root/reference/my_db.json"), Paths.get(db + ".json"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val (code, out) = captureOut(Cli.run(spark, Array(db, "search", "2", "1.0,1.05")))
-    assert(code == 0)
-    assert(out ==
-      "Search results (ID, Distance):\n- ID: 1, Dist: 0.05\n- ID: 2, Dist: 0.180278\n")
+    ReferenceSample.all.foreach { sample =>
+      withClue(s"$sample: ") {
+        val db = tmpDb()
+        Files.copy(Paths.get(sample), Paths.get(db + ".json"),
+          StandardCopyOption.REPLACE_EXISTING)
+        val (code, out) = captureOut(Cli.run(spark, Array(db, "search", "2", "1.0,1.05")))
+        assert(code == 0)
+        assert(out ==
+          "Search results (ID, Distance):\n- ID: 1, Dist: 0.05\n- ID: 2, Dist: 0.180278\n")
+      }
+    }
   }
 
   test("full lifecycle: init → add → get → update → delete with reference messages") {

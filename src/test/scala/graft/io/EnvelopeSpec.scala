@@ -5,23 +5,28 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ReferenceSample
 import graft.core.VectorRecord
 
 /** Envelope parity against the reference's on-disk format
   * (FIXTURES.md §A1; writer /root/reference/src/vectordb.cpp:158-178). */
 class EnvelopeSpec extends AnyFunSuite {
 
-  private val refDb = "/root/reference/my_db.json"
+  private val refDb = ReferenceSample.committed
 
   test("load parses the reference sample db") {
-    val db = Envelope.load(refDb).get
-    assert(db.dim == 2)
-    assert(db.nextId == 5)
-    assert(db.records.map(_.id) == Seq(1L, 2L, 3L, 4L))
-    assert(db.records.head.embedding.toSeq == Seq(1.0f, 1.0f))
-    // float32 artifacts narrow back exactly
-    assert(db.records(1).embedding.toSeq == Seq(1.1f, 1.2f))
-    assert(db.records.head.metadata == """{"name":"point_A"}""")
+    ReferenceSample.all.foreach { refDb =>
+      withClue(s"$refDb: ") {
+        val db = Envelope.load(refDb).get
+        assert(db.dim == 2)
+        assert(db.nextId == 5)
+        assert(db.records.map(_.id) == Seq(1L, 2L, 3L, 4L))
+        assert(db.records.head.embedding.toSeq == Seq(1.0f, 1.0f))
+        // float32 artifacts narrow back exactly
+        assert(db.records(1).embedding.toSeq == Seq(1.1f, 1.2f))
+        assert(db.records.head.metadata == """{"name":"point_A"}""")
+      }
+    }
   }
 
   test("save round-trips the reference sample db byte-for-byte") {
@@ -31,6 +36,11 @@ class EnvelopeSpec extends AnyFunSuite {
     val expected = Files.readString(Paths.get(refDb), StandardCharsets.UTF_8)
     val actual = Files.readString(Paths.get(out), StandardCharsets.UTF_8)
     assert(actual == expected)
+    // the committed copy must be the reference's own file, byte for byte
+    ReferenceSample.reference.foreach { ref =>
+      assert(Files.mismatch(Paths.get(refDb), Paths.get(ref)) == -1L,
+        s"(first differing byte) $refDb vs $ref")
+    }
   }
 
   test("num matches nlohmann dump() byte-for-byte across its format regimes") {
