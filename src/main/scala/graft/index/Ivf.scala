@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.MutableStore
 import graft.ops.VectorSearch
 
 /** IVF (inverted-file) ANN — the partition-pruned scale path.
@@ -103,10 +104,11 @@ object Ivf {
 
   /** Fit (if needed) and persist the partitioned layout + sidecar.
     * Idempotent across processes: an existing layout is reused only when
-    * its recorded corpus fingerprint matches the current input — a
-    * regenerated fixture or a hash-collided cache dir forces a rebuild
-    * instead of silently probing stale data. The sidecar is written LAST,
-    * so a crashed build never looks complete. */
+    * its COMMITTED corpus fingerprint ([[committedTerms]]) matches the
+    * current input — a regenerated fixture or a hash-collided cache dir
+    * forces a rebuild instead of silently probing stale data. The
+    * sidecar is written LAST, so a crashed build never looks complete;
+    * it is the only writer of `_centroids.json`. */
   def buildLayout(
       spark: SparkSession,
       df: DataFrame,
@@ -118,11 +120,11 @@ object Ivf {
     val sidecar = java.nio.file.Paths.get(dir, centroidFile)
     val (nRows, dataHash, hashSum) = fingerprint(df, embCol)
     if (java.nio.file.Files.exists(sidecar)) {
-      val (layout, storedCount, storedHash, storedSum) = loadLayoutWithFingerprint(dir)
+      val layout = loadLayout(dir)
       // nlist is structural: a caller asking for a different list count
       // must get a rebuild, not a silent reuse of the old partitioning
       // (the stored centroid count IS the built nlist)
-      if (storedCount == nRows && storedHash == dataHash && storedSum == hashSum &&
+      if (committedTerms(dir) == ((nRows, dataHash, hashSum)) &&
           layout.centroids.length == nlist) return layout
     }
     val index = fit(df, nlist, embCol, sampleFraction, maxIter)
@@ -134,17 +136,41 @@ object Ivf {
     Layout(dir, centroids)
   }
 
-  def loadLayout(dir: String): Layout = loadLayoutWithFingerprint(dir)._1
-
-  private def loadLayoutWithFingerprint(dir: String): (Layout, Long, Long, String) = {
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(dir, centroidFile))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(json)
+  def loadLayout(dir: String): Layout = {
     import scala.jdk.CollectionConverters._
-    val centroids = node.get("centroids").elements().asScala
-      .map(row => row.elements().asScala.map(_.asDouble()).toArray).toArray
-    (Layout(dir, centroids), node.get("count").asLong(), node.get("hash").asLong(),
-      if (node.hasNonNull("hsum")) node.get("hsum").asText() else "")
+    Layout(dir, readJson(java.nio.file.Paths.get(dir, centroidFile)).get("centroids")
+      .elements().asScala.map(row => row.elements().asScala.map(_.asDouble()).toArray).toArray)
+  }
+
+  private def readJson(p: java.nio.file.Path): com.fasterxml.jackson.databind.JsonNode =
+    mapperM.readTree(java.nio.file.Files.readString(p))
+
+  /** The COMMITTED corpus fingerprint (count, xor hash, decimal hsum —
+    * "" when absent) that [[buildLayout]]'s reuse check compares: the
+    * state json's terms, which every mutation and fold moves in its
+    * one atomic state commit; the build sidecar's when the state json
+    * carries none (a never-mutated layout, or one last mutated by a
+    * writer that kept them in the sidecar). */
+  private[graft] def committedTerms(dir: String): (Long, Long, String) =
+    termsOf(dir, snapOf(dir).node)
+
+  private def termsOf(dir: String, node: Option[com.fasterxml.jackson.databind.JsonNode])
+      : (Long, Long, String) = {
+    val n = node.filter(_.has("count"))
+      .getOrElse(readJson(java.nio.file.Paths.get(dir, centroidFile)))
+    (n.get("count").asLong(), n.get("hash").asLong(),
+      if (n.hasNonNull("hsum")) n.get("hsum").asText() else "")
+  }
+
+  /** The committed terms moved by a batch's (count, xor, sum) — counts
+    * and sums add (negative to remove), xor toggles — as the raw-json
+    * fields of the operation's one state commit. */
+  private def shifted(
+      dir: String, node: Option[com.fasterxml.jackson.databind.JsonNode],
+      n: Long, h: Long, sum: java.math.BigInteger): Seq[(String, String)] = {
+    val (n0, h0, s0) = termsOf(dir, node)
+    val hsum = (if (s0.isEmpty) java.math.BigInteger.ZERO else new java.math.BigInteger(s0)).add(sum)
+    Seq("count" -> (n0 + n).toString, "hash" -> (h0 ^ h).toString, "hsum" -> s"\"$hsum\"")
   }
 
   private[graft] def probeClustersOf(centroids: Array[Array[Double]], query: Array[Float], nprobe: Int): Seq[Int] = {
@@ -221,18 +247,6 @@ object Ivf {
       query.toSeq, k, idCol, embCol)
   }
 
-  /** O2 `add` at the index level: incremental layout maintenance. New
-    * rows are assigned by [[assignByCentroids]] and APPENDED to the
-    * partitioned parquet — no rebuild, no rewrite of existing inverted
-    * lists (the reference rewrites its whole database file on every add,
-    * `vectordb.cpp:158-178`, and refits the index per query). The
-    * sidecar fingerprint updates compositionally (counts add, xxhash64
-    * xors — the fingerprint aggregate is xor exactly so this works), so
-    * no rescan of the layout is needed; it is rewritten AFTER the data
-    * append, so a crash in between leaves a mismatched fingerprint that
-    * [[buildLayout]] treats as "rebuild" — never a silently stale probe.
-    * Standard IVF caveat: heavy appends under distribution drift skew
-    * the inverted lists; rebuild when drift matters. */
   /** LOUD GUARD shared by both append paths: an appended id that is
     * currently tombstoned would be SILENTLY MASKED by every probe's
     * global anti-join — and naively clearing its tombstone instead
@@ -244,7 +258,7 @@ object Ivf {
     * filtered scan of the mask legs ([[lookupIds]]); no scan at all
     * when the snapshot has no mask. */
   private def requireNotTombstoned(
-      spark: SparkSession, dir: String, s: IvfSnap, ids: Seq[Long]): Unit = {
+      spark: SparkSession, dir: String, s: MutableStore.Snap, ids: Seq[Long]): Unit = {
     val clash = lookupIds(spark, dir, s, ids, "vec_id", "", data = false)
     require(clash.isEmpty,
       s"append: id ${clash.headOption.map(_._2).getOrElse(-1L)} is tombstoned in " +
@@ -258,78 +272,54 @@ object Ivf {
     df.select(col(idCol).cast("long")).collect().toSeq
       .filterNot(_.isNullAt(0)).map(_.getLong(0))
 
+  /** O2 `add` at the index level: incremental layout maintenance. New
+    * rows are assigned by [[assignByCentroids]] and added to the base —
+    * no rebuild, no rewrite of existing inverted lists (the reference
+    * rewrites its whole database file on every add,
+    * `vectordb.cpp:158-178`, and refits the index per query). A
+    * never-folded (v0) layout appends straight into its root
+    * `cluster=K/` dirs, which the legacy listing serves the moment the
+    * files land; a manifest version lands the batch as fresh files
+    * under a never-reused fold tree and commits a manifest listing
+    * the old files plus the new ones (pure addition — an O(batch)
+    * write either way). The committed fingerprint terms move
+    * compositionally (counts add, xxhash64 xors — the fingerprint
+    * aggregate is xor exactly so this works), so no rescan of the
+    * layout is needed; a crash after a v0 append but before its commit
+    * leaves a mismatched fingerprint that [[buildLayout]] treats as
+    * "rebuild" — never a silently stale probe. Standard IVF caveat:
+    * heavy appends under distribution drift skew the inverted lists;
+    * rebuild when drift matters. */
   def appendToLayout(
       layout: Layout,
       rows: DataFrame,
-      embCol: String = "embedding"): Layout =
-      graft.io.MutableStore.withWriterLock(layout.dir, "appendToLayout") {
-    val s = snapOf(layout.dir)
-    // pin the batch ONCE: writing and fingerprinting from two separate
-    // evaluations of `rows` would let a nondeterministic input store one
-    // dataset while the sidecar attests another — exactly the silent
-    // staleness the fingerprint exists to rule out
-    val assigned = assignByCentroids(layout, rows, embCol).localCheckpoint()
-    requireNotTombstoned(rows.sparkSession, layout.dir, s, idsOf(assigned, "vec_id"))
-    if (s.v == 0)
-      // legacy resolution lists the root `cluster=K/` dirs — a direct
-      // append is visible the moment its files land
-      assigned.write.mode("append").partitionBy("cluster").parquet(layout.dir)
-    else {
-      // manifest version: a root append would be invisible to pinned
-      // probes, so the batch lands as fresh files under a never-reused
-      // fold tree and COMMITS via manifest+state swap (nothing removed
-      // — pure addition; an O(batch) write either way)
-      val dir = layout.dir
-      val st = graft.io.MutableStore.state(dir)
-      val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir, st.priors)
-      val vNew = (Seq(s.v,
-        graft.io.MutableStore.maxOnDiskVersion(dir, Seq(foldDirPrefix))) ++
-        Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-          .map(_.getName)
-          .flatMap(manifestVersionOf))
-        .max + 1
-      gcLayout(dir, st, protectedRefs)
-      val building = java.nio.file.Paths.get(dir, s"_building_$foldDirPrefix$vNew")
-      graft.io.MutableStore.deleteDir(building)
-      assigned.write.mode("overwrite").partitionBy("cluster")
-        .parquet(building.toString)
-      java.nio.file.Files.move(building,
-        java.nio.file.Paths.get(dir, s"$foldDirPrefix$vNew"))
-      val root = java.nio.file.Paths.get(dir)
-      val newFiles = Option(
-        new java.io.File(dir, s"$foldDirPrefix$vNew").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .flatMap(c => Option(c.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => root.relativize(f.toPath).toString))
-        .toSeq
-      writeManifest(dir, vNew, Manifest(
-        files = s.manifestV.map(readManifest(dir, _).files).getOrElse(Seq.empty) ++ newFiles,
-        removed = Seq.empty, removedDirs = Seq.empty))
-      graft.io.MutableStore.commitState(dir, vNew,
-        folded = s.folded.toSeq.sorted, deadTombs = s.deadTombs.toSeq.sorted,
-        live = s.live, liveTombs = s.tombTags,
-        priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-          graft.io.MutableStore.SnapRef(s.v, s.live, s.tombTags)))
+      embCol: String = "embedding"): Layout = {
+    val spark = rows.sparkSession
+    val store = storeOf(layout.dir)
+    MutableStore.writing(spark, layout.dir, "Ivf", "appendToLayout") {
+      val s = MutableStore.snapOf(store)
+      // pin the batch ONCE: writing and fingerprinting from two separate
+      // evaluations of `rows` would let a nondeterministic input store one
+      // dataset while the fingerprint attests another — exactly the
+      // silent staleness the fingerprint exists to rule out
+      val assigned = assignByCentroids(layout, rows, embCol).localCheckpoint()
+      requireNotTombstoned(spark, layout.dir, s, idsOf(assigned, "vec_id"))
+      val (n, h, sum) = fingerprint(assigned, embCol)
+      val terms = shifted(layout.dir, s.node, n, h, new java.math.BigInteger(sum))
+      if (s.v == 0) {
+        assigned.write.mode("append").partitionBy("cluster").parquet(layout.dir)
+        MutableStore.commitFields(store, terms)
+      } else
+        MutableStore.compact(spark, store, "appendToLayout", s.live.toSet,
+            foldsTombs = false, force = true) { f =>
+          assigned.write.mode("overwrite").partitionBy("cluster").parquet(f.building.head)
+          writeManifest(f.building(1), Manifest(
+            baseFiles(layout.dir, s) ++ foldFiles(f.building.head), Nil, Nil))
+          terms
+        }
+      layout
     }
-    val (nNew, hNew, sNew) = fingerprint(assigned, embCol)
-    val sidecar = java.nio.file.Paths.get(layout.dir, centroidFile)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(java.nio.file.Files.readString(sidecar))
-    val count = node.get("count").asLong() + nNew
-    val hash = node.get("hash").asLong() ^ hNew
-    // xor and sum are both order-independent, so the sidecar fingerprint
-    // stays maintainable incrementally: xor toggles, sum adds
-    val hsum = storedHsum(node).add(new java.math.BigInteger(sNew))
-    graft.io.Artifact.writeAtomic(sidecar,
-      s"""{"count":$count,"hash":$hash,"hsum":"$hsum","centroids":${node.get("centroids").toString}}""")
-    layout
   }
-
-  private def storedHsum(node: com.fasterxml.jackson.databind.JsonNode): java.math.BigInteger =
-    if (node.hasNonNull("hsum")) new java.math.BigInteger(node.get("hsum").asText())
-    else java.math.BigInteger.ZERO
 
   private val tombstoneDirName = "_tombstones"
   private val deltaDirPrefix = "_delta_"
@@ -342,49 +332,48 @@ object Ivf {
   // ----------------------------------------------------------------
   // SNAPSHOT-PINNED LAYOUT PROTOCOL (r16) — the manifest design the
   // move-fold's own doc named: every committed version `v >= 1` has an
-  // IMMUTABLE per-version manifest (`_manifest_v<N>.json`, the exact
+  // IMMUTABLE per-version manifest (`_manifest_v<N>`, the exact
   // relative data-file list composing the base), the layout state
-  // (version pointer + live delta tags + live tombstone tags) commits
-  // through the shared [[graft.io.MutableStore]] state json, and a
-  // probe resolves its WHOLE file set from ONE atomic state read —
-  // wholly-old or wholly-new, never torn. Folds REWRITE only the
-  // touched clusters into a fresh `fold_v<N>/` tree (O(touched), never
-  // O(base)) and commit by manifest+state swap; the files a commit
-  // superseded ride the manifest's `removed` lists and are collected
-  // LAGGED, at a later compaction's start, behind the engine-wide
-  // [[graft.io.MutableStore.gcRetention]] knob. This removes the
-  // engine's one stop-the-world maintenance op: IVF probes now pin
-  // like every other store family (the reference's implicit per-query
-  // snapshot, vectordb.cpp:180-218, under concurrency).
-  // Layouts never mutated through the protocol (no state json) keep
-  // the original directory-listing resolution and plan shape.
+  // (version pointer + live delta tags + live tombstone tags +
+  // fingerprint terms) commits through the shared
+  // [[graft.io.MutableStore]] state json, and a probe resolves its
+  // WHOLE file set from ONE atomic state read — wholly-old or
+  // wholly-new, never torn. Folds REWRITE only the touched clusters
+  // into a fresh `_fold_v<N>/` tree (O(touched), never O(base)) and
+  // commit by manifest+state swap inside the core's compaction frame
+  // ([[graft.io.MutableStore.compact]]); the files a commit superseded
+  // ride the manifest's `removed` lists and are collected LAGGED, at a
+  // later compaction's start, behind the engine-wide
+  // [[graft.io.MutableStore.gcRetention]] knob ([[gcLayout]], the
+  // layout's base-GC slot). This removes the engine's one
+  // stop-the-world maintenance op: IVF probes now pin like every other
+  // store family (the reference's implicit per-query snapshot,
+  // vectordb.cpp:180-218, under concurrency). Layouts never mutated
+  // through the protocol (no state json) keep the original
+  // directory-listing resolution and plan shape.
   //
-  // Known growth path at extreme file counts: the manifest is ONE
-  // json listing every base file — O(files) to read and rewrite per
-  // commit. Fine to millions of entries (a probe parses it once per
-  // pin); past that the Iceberg answer is a manifest LIST pointing at
-  // per-cluster manifest files, which this layout's cluster grouping
-  // maps onto directly (each cluster's files are rewritten wholesale,
-  // so per-cluster manifests would change one file per touched
-  // cluster). The commit-point and GC protocol would be unchanged.
+  // Known growth path at extreme file counts: the legacy manifest is
+  // ONE json listing every base file — O(files) to read and rewrite
+  // per commit. The split form (an index plus one manifest per
+  // cluster) is the Iceberg manifest-list answer: a pin reads
+  // O(probed clusters) metadata. The commit-point and GC protocol are
+  // the same for both.
   // ----------------------------------------------------------------
 
-  /** One committed snapshot of a persisted layout, resolved from a
-    * SINGLE state read: base file list (None = legacy v0 listing),
-    * live delta tags, live tombstone-batch tags. */
-  private[graft] final case class IvfSnap(
-      v: Int,
-      folded: Set[String],
-      deadTombs: Set[String],
-      manifestV: Option[Int],
-      live: Seq[String],
-      tombTags: Seq[String]) {
-    def key: (Int, Seq[String], Seq[String]) = (v, live, tombTags)
-  }
+  /** The layout as a versioned store ([[graft.io.MutableStore]]): the
+    * flat state json; base versions that are `_manifest_v<N>` manifests
+    * over the root `cluster=K/` files and `_fold_v<N>` trees (a fold
+    * builds both under `_building_` temps); `_delta_<tag>` legs at the
+    * root and `_tombstones/tomb_<tag>` global id masks, neither with a
+    * marker file. Versions share files through their manifests, so the
+    * base GC is the manifest-driven [[gcLayout]]. */
+  private def storeOf(dir: String): MutableStore.Layout = MutableStore.Layout("Ivf", dir,
+    java.nio.file.Paths.get(dir, MutableStore.stateName), flat = true,
+    dir, Seq(foldDirPrefix, manifestPrefix), Seq(dir), () => clusterDirs(dir).map(_.toPath),
+    Seq(dir), deltaDirPrefix, None, s"$dir/$tombstoneDirName", tombTagPrefix, None,
+    Some(gcLayout(dir, _, _)))
 
-  private def stateFileExists(dir: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName))
+  private def snapOf(dir: String): MutableStore.Snap = MutableStore.snapOf(storeOf(dir))
 
   // legacy (r16) single-json manifest: every base file in one list
   private def manifestPath(dir: String, v: Int): java.nio.file.Path =
@@ -418,6 +407,9 @@ object Ivf {
     else node.get(k).elements().asScala.map(_.asText()).toSeq
   }
 
+  private def arr(s: Seq[String]): String =
+    s.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   private def isSplitManifest(dir: String, v: Int): Boolean =
     java.nio.file.Files.exists(manifestIndexPath(dir, v))
 
@@ -425,9 +417,7 @@ object Ivf {
     * index read, O(nlist), never O(files). */
   private def manifestClusterIds(dir: String, v: Int): Seq[Int] =
     if (isSplitManifest(dir, v))
-      jsonArr(mapperM.readTree(
-        java.nio.file.Files.readString(manifestIndexPath(dir, v))), "clusters")
-        .map(_.toInt)
+      jsonArr(readJson(manifestIndexPath(dir, v)), "clusters").map(_.toInt)
     else readManifest(dir, v).files.map(clusterOfPath).distinct.sorted
 
   /** Version `v`'s base files restricted to `clusters` — for a SPLIT
@@ -437,52 +427,40 @@ object Ivf {
     * legacy single-json manifest filters its full list. */
   private def manifestFilesFor(
       dir: String, v: Int, clusters: Set[Int]): Seq[String] =
-    if (isSplitManifest(dir, v)) {
-      val present = manifestClusterIds(dir, v).filter(clusters)
-      present.flatMap { k =>
-        jsonArr(mapperM.readTree(java.nio.file.Files.readString(
-          clusterManifestPath(dir, v, k))), "files")
-      }
-    } else readManifest(dir, v).files.filter(p => clusters(clusterOfPath(p)))
+    if (isSplitManifest(dir, v))
+      manifestClusterIds(dir, v).filter(clusters)
+        .flatMap(k => jsonArr(readJson(clusterManifestPath(dir, v, k)), "files"))
+    else readManifest(dir, v).files.filter(p => clusters(clusterOfPath(p)))
 
   /** Version `v`'s COMPLETE manifest (all clusters + removed lists) —
     * the writer-path read (compactions touch every file's bookkeeping
     * anyway); resolves both the split and the legacy format. */
   private def readManifest(dir: String, v: Int): Manifest =
     if (isSplitManifest(dir, v)) {
-      val idx = mapperM.readTree(
-        java.nio.file.Files.readString(manifestIndexPath(dir, v)))
-      val files = jsonArr(idx, "clusters").map(_.toInt).flatMap { k =>
-        jsonArr(mapperM.readTree(java.nio.file.Files.readString(
-          clusterManifestPath(dir, v, k))), "files")
-      }
+      val idx = readJson(manifestIndexPath(dir, v))
+      val files = jsonArr(idx, "clusters").map(_.toInt)
+        .flatMap(k => jsonArr(readJson(clusterManifestPath(dir, v, k)), "files"))
       Manifest(files, jsonArr(idx, "removed"), jsonArr(idx, "removedDirs"))
     } else {
-      val node = mapperM.readTree(
-        java.nio.file.Files.readString(manifestPath(dir, v)))
+      val node = readJson(manifestPath(dir, v))
       Manifest(jsonArr(node, "files"), jsonArr(node, "removed"),
         jsonArr(node, "removedDirs"))
     }
 
-  /** Write version `v`'s manifest in the SPLIT form: per-cluster file
-    * lists + one index json carrying the cluster ids and the lagged-GC
-    * removed lists. Version numbers are never reused and the manifest
-    * becomes referenced only at the state commit, so the dir needs no
-    * build-then-rename dance; a crashed partial write is debris
-    * ([[gcLayout]] collects manifests newer than the committed v). */
-  private def writeManifest(dir: String, v: Int, m: Manifest): Unit = {
-    def arr(s: Seq[String]) =
-      s.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+  /** Write a manifest in the SPLIT form into `mdir` (a fold's
+    * `_building_` temp, renamed in by the compaction frame before the
+    * state commit that references it): per-cluster file lists + one
+    * index json carrying the cluster ids and the lagged-GC removed
+    * lists. */
+  private def writeManifest(mdir: String, m: Manifest): Unit = {
+    val d = java.nio.file.Paths.get(mdir)
     val byCluster = m.files.groupBy(clusterOfPath)
-    val mdir = manifestDirPath(dir, v)
-    graft.io.MutableStore.deleteDir(mdir) // crashed-attempt debris of THIS v
-    java.nio.file.Files.createDirectories(mdir)
+    java.nio.file.Files.createDirectories(d)
     byCluster.toSeq.sortBy(_._1).foreach { case (k, fs) =>
-      graft.io.Artifact.writeAtomic(clusterManifestPath(dir, v, k),
-        s"""{"files":${arr(fs)}}""")
+      graft.io.Artifact.writeAtomic(d.resolve(s"cluster_$k.json"), s"""{"files":${arr(fs)}}""")
     }
     // index LAST — its presence marks the split manifest complete
-    graft.io.Artifact.writeAtomic(manifestIndexPath(dir, v),
+    graft.io.Artifact.writeAtomic(d.resolve("_index.json"),
       s"""{"clusters":${arr(byCluster.keys.toSeq.sorted.map(_.toString))},"removed":${arr(m.removed)},"removedDirs":${arr(m.removedDirs)}}""")
   }
 
@@ -490,29 +468,22 @@ object Ivf {
     * — IN PLACE and format-preserving, so pinned probes of that
     * version keep resolving (legacy file: one atomic rewrite; split:
     * only the index json changes — cluster manifests are immutable). */
-  private def blankManifestRemoved(dir: String, v: Int): Unit = {
-    def arr(s: Seq[String]) =
-      s.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    if (isSplitManifest(dir, v)) {
-      val idx = mapperM.readTree(
-        java.nio.file.Files.readString(manifestIndexPath(dir, v)))
+  private def blankManifestRemoved(dir: String, v: Int): Unit =
+    if (isSplitManifest(dir, v))
       graft.io.Artifact.writeAtomic(manifestIndexPath(dir, v),
-        s"""{"clusters":${arr(jsonArr(idx, "clusters"))},"removed":[],"removedDirs":[]}""")
-    } else {
-      val m = readManifest(dir, v)
+        s"""{"clusters":${arr(jsonArr(readJson(manifestIndexPath(dir, v)), "clusters"))},"removed":[],"removedDirs":[]}""")
+    else
       graft.io.Artifact.writeAtomic(manifestPath(dir, v),
-        s"""{"files":${arr(m.files)},"removed":[],"removedDirs":[]}""")
-    }
-  }
+        s"""{"files":${arr(readManifest(dir, v).files)},"removed":[],"removedDirs":[]}""")
 
   /** Delete version `v`'s manifest, whichever form it is in. */
   private def deleteManifest(dir: String, v: Int): Unit = {
     java.nio.file.Files.deleteIfExists(manifestPath(dir, v))
-    graft.io.MutableStore.deleteDir(manifestDirPath(dir, v))
+    MutableStore.deleteDir(manifestDirPath(dir, v))
   }
 
   /** Version encoded by a root entry that is a manifest (either
-    * form), for the never-reuse allocator and GC. */
+    * form), for GC. */
   private def manifestVersionOf(nm: String): Option[Int] =
     if (nm.startsWith(manifestPrefix)) {
       val tail = nm.stripPrefix(manifestPrefix)
@@ -527,7 +498,7 @@ object Ivf {
     * economics (index + probed cluster manifests, vs the whole legacy
     * list). */
   private[graft] def pinMetadataBytes(dir: String, clusters: Seq[Int]): Long = {
-    val st = graft.io.MutableStore.state(dir)
+    val st = MutableStore.state(dir)
     if (st.v < 1) return 0L
     if (isSplitManifest(dir, st.v)) {
       val present = manifestClusterIds(dir, st.v).filter(clusters.toSet)
@@ -537,17 +508,30 @@ object Ivf {
     } else java.nio.file.Files.size(manifestPath(dir, st.v))
   }
 
-  /** Relative data-file paths currently composing the LEGACY (v = 0)
-    * base: everything under the root `cluster=K/` dirs. */
-  private def legacyBaseFiles(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(dir)
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-      .flatMap(c => Option(c.listFiles()).getOrElse(Array.empty)
+  /** The `cluster=K/` partition dirs directly under `root`. */
+  private def clusterDirs(root: String): Seq[java.io.File] =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).toSeq
+
+  /** The data files of the `cluster=K/` dirs under `root`, as
+    * `<rel>/cluster=K/<file>` paths (`rel` empty: the layout root). */
+  private def clusterFiles(root: String, rel: String): Seq[String] =
+    clusterDirs(root).flatMap(c =>
+      Option(c.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(f => root.relativize(f.toPath).toString))
-      .toSeq.sorted
-  }
+        .map(f => (if (rel.isEmpty) "" else s"$rel/") + s"${c.getName}/${f.getName}"))
+      .sorted
+
+  /** Every base file of a snapshot, relative to the layout dir: its
+    * manifest's list, or the root `cluster=K/` files at v = 0. */
+  private def baseFiles(dir: String, s: MutableStore.Snap): Seq[String] =
+    if (s.v >= 1) readManifest(dir, s.v).files else clusterFiles(dir, "")
+
+  /** The files of a fold tree built at `building`, relative to the
+    * layout dir as they will be once the frame renames the temp in. */
+  private def foldFiles(building: String): Seq[String] =
+    clusterFiles(building,
+      java.nio.file.Paths.get(building).getFileName.toString.stripPrefix("_building_"))
 
   /** The cluster id encoded in a manifest-relative file path. */
   private def clusterOfPath(p: String): Int = {
@@ -557,25 +541,13 @@ object Ivf {
   }
 
   /** The partition-discovery ROOT of a manifest-relative path: "" for
-    * root-resident `cluster=K/...` files, `fold_v<N>` for rewritten
+    * root-resident `cluster=K/...` files, `_fold_v<N>` for rewritten
     * ones — each read passes its root as `basePath`, so the `cluster`
     * partition column survives an explicit-file-list scan. */
   private def rootOfPath(p: String): String = {
     val i = p.indexOf("cluster=")
     require(i >= 0, s"no cluster component in $p")
     p.substring(0, math.max(0, i - 1))
-  }
-
-  private def listedDeltaTags(dir: String): Seq[String] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(deltaDirPrefix))
-      .map(_.getName.stripPrefix(deltaDirPrefix)).toSeq.sorted
-
-  private def listedTombTags(dir: String): Seq[String] = {
-    val root = new java.io.File(dir, tombstoneDirName)
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(tombTagPrefix))
-      .map(_.getName.stripPrefix(tombTagPrefix)).toSeq.sorted
   }
 
   /** Legacy flat tombstone FILES (the pre-protocol append-mode table,
@@ -593,38 +565,27 @@ object Ivf {
     * as one schema-pinned read ([[graft.io.MutableStore.readParquetPinned]]:
     * no schema-inference job); None when it holds no data file. */
   private def readClusteredDir(spark: SparkSession, path: String): Option[DataFrame] =
-    graft.io.MutableStore.sampleDataFile(path).map(f =>
-      graft.io.MutableStore.readParquetPinned(spark, Seq(path), f, Seq(clusterField)))
+    MutableStore.sampleDataFile(path).map(f =>
+      MutableStore.readParquetPinned(spark, Seq(path), f, Seq(clusterField)))
 
   /** Manifest-listed base files sharing one partition-discovery root,
     * schema-pinned; the root as `basePath` recovers `cluster`. */
   private def readBaseFiles(
       spark: SparkSession, dir: String, root: String, files: Seq[String]): DataFrame =
-    graft.io.MutableStore.readParquetPinned(spark, files.map(f => s"$dir/$f"),
+    MutableStore.readParquetPinned(spark, files.map(f => s"$dir/$f"),
       s"$dir/${files.head}", Seq(clusterField),
       Some(if (root.isEmpty) dir else s"$dir/$root"))
-
-  private[graft] def snapOf(dir: String): IvfSnap = {
-    if (!stateFileExists(dir))
-      return IvfSnap(0, Set.empty, Set.empty, None,
-        listedDeltaTags(dir), listedTombTags(dir))
-    val st = graft.io.MutableStore.state(dir)
-    IvfSnap(st.v, st.folded, st.deadTombs,
-      if (st.v >= 1) Some(st.v) else None,
-      st.live.getOrElse(listedDeltaTags(dir).filterNot(st.folded)),
-      st.liveTombs.getOrElse(listedTombTags(dir).filterNot(st.deadTombs)))
-  }
 
   /** Pin one committed snapshot: resolve → build → re-resolve, accept
     * only when unchanged (a commit interleaving anywhere in between
     * retries against the newer state — the engine-wide optimistic
     * pin). */
-  private def pinned[A](dir: String)(build: IvfSnap => A): A = {
+  private def pinned[A](dir: String)(build: MutableStore.Snap => A): A = {
     var attempt = 0
     while (attempt < 8) {
       val s0 = snapOf(dir)
       val out = build(s0)
-      if (snapOf(dir).key == s0.key) return out
+      if (snapOf(dir).ref == s0.ref) return out
       attempt += 1
     }
     throw new IllegalStateException(
@@ -641,48 +602,60 @@ object Ivf {
     * touched cluster wholly, so a cluster's files always share one
     * root; roots per probe <= min(nprobe, fold generations)). */
   private def baseScanOf(
-      spark: SparkSession, dir: String, s: IvfSnap,
-      clusters: Option[Seq[Int]]): DataFrame = s.manifestV match {
-    case None =>
+      spark: SparkSession, dir: String, s: MutableStore.Snap,
+      clusters: Option[Seq[Int]]): DataFrame =
+    if (s.v < 1) {
       val df = readClusteredDir(spark, dir).getOrElse(
         throw new IllegalStateException(s"IVF layout $dir has no base data file"))
       clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df)
-    case Some(mv) =>
+    } else {
       // SPLIT manifest: resolve ONLY the probed clusters' file lists
       // (index + |probed| small reads); legacy single-json manifests
       // filter their full list — both via manifestFilesFor
       val picked = clusters match {
-        case Some(cs) => manifestFilesFor(dir, mv, cs.toSet)
-        case None => readManifest(dir, mv).files
+        case Some(cs) => manifestFilesFor(dir, s.v, cs.toSet)
+        case None => readManifest(dir, s.v).files
       }
       if (picked.isEmpty) {
         // every probed cluster is file-less: an EMPTY relation with
         // the base schema read from ONE manifest file — never an
         // O(all-files) explicit-file scan setup just to learn a schema
-        val anyCluster = manifestClusterIds(dir, mv)
-        require(anyCluster.nonEmpty, s"manifest v$mv of $dir lists no files")
-        val sample = manifestFilesFor(dir, mv, Set(anyCluster.head)).head
+        val anyCluster = manifestClusterIds(dir, s.v)
+        require(anyCluster.nonEmpty, s"manifest v${s.v} of $dir lists no files")
+        val sample = manifestFilesFor(dir, s.v, Set(anyCluster.head)).head
         val schema = readBaseFiles(spark, dir, rootOfPath(sample), Seq(sample)).schema
-        return spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      } else {
+        val df = picked.groupBy(rootOfPath).toSeq.sortBy(_._1)
+          .map { case (root, fs) => readBaseFiles(spark, dir, root, fs) }
+          .reduce(_ unionByName _)
+        clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df)
       }
-      val legs = picked.groupBy(rootOfPath).toSeq.sortBy(_._1).map {
-        case (root, fs) => readBaseFiles(spark, dir, root, fs)
-      }
-      val df = legs.reduce(_ unionByName _)
-      clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df)
-  }
+    }
 
   /** Live delta legs of a pinned snapshot (cluster-pruned), unioned
     * by name. None when the snapshot has none holding a data file (a
     * leg an empty write left with only `_SUCCESS` has no rows). */
   private def deltaScanOf(
-      spark: SparkSession, dir: String, s: IvfSnap,
+      spark: SparkSession, dir: String, s: MutableStore.Snap,
       clusters: Option[Seq[Int]]): Option[DataFrame] =
     s.live.flatMap { t =>
       readClusteredDir(spark, s"$dir/$deltaDirPrefix$t").map(df =>
         clusters.map(cs => df.filter(col("cluster").isin(cs: _*))).getOrElse(df))
     }.reduceOption(_ unionByName _)
+
+  /** A snapshot's LIVE rows, pruned to `clusters` when given: base ∪
+    * live deltas, minus the global mask — the one scan behind every
+    * delta-aware read (the pinned probes, the audit reads, time
+    * travel). */
+  private def liveRowsOf(
+      spark: SparkSession, dir: String, s: MutableStore.Snap,
+      clusters: Option[Seq[Int]], idCol: String): DataFrame = {
+    val base = baseScanOf(spark, dir, s, clusters)
+    val all = deltaScanOf(spark, dir, s, clusters).fold(base)(d =>
+      base.unionByName(d.select(base.columns.map(col).toIndexedSeq: _*)))
+    applyMask(all, maskOf(spark, dir, s, idCol), idCol)
+  }
 
   /** The layout's LIVE rows as ONE pinned DataFrame (base ∪ live
     * deltas, minus the global mask) — the read-side twin of the probe
@@ -690,15 +663,7 @@ object Ivf {
   def layoutRows(
       spark: SparkSession, layout: Layout,
       idCol: String = "vec_id"): DataFrame =
-    pinned(layout.dir) { s =>
-      val base = baseScanOf(spark, layout.dir, s, None)
-      val all = deltaScanOf(spark, layout.dir, s, None) match {
-        case Some(d) =>
-          base.unionByName(d.select(base.columns.map(col).toIndexedSeq: _*))
-        case None => base
-      }
-      applyMask(all, maskOf(spark, layout.dir, s, idCol), idCol)
-    }
+    pinned(layout.dir)(liveRowsOf(spark, layout.dir, _, None, idCol))
 
   /** TIME-TRAVEL read of the layout (the `VERSION AS OF` analogue):
     * [[layoutRows]] as of committed version `version`. The current
@@ -711,11 +676,9 @@ object Ivf {
   def layoutRowsAt(
       spark: SparkSession, layout: Layout, version: Int,
       idCol: String = "vec_id"): DataFrame = {
-    val dir = layout.dir
-    val cur = snapOf(dir)
-    if (cur.v == version) return layoutRows(spark, layout, idCol)
-    layoutRowsOfRef(spark, dir, graft.io.MutableStore.priorRefOf(
-      dir, graft.io.MutableStore.state(dir), version), idCol)
+    val st = MutableStore.state(layout.dir)
+    if (st.v == version) layoutRows(spark, layout, idCol)
+    else layoutRowsOfRef(spark, layout.dir, MutableStore.priorRefOf(layout.dir, st, version), idCol)
   }
 
   /** The layout exactly as a TAG captured it — the tag's own reference
@@ -724,55 +687,43 @@ object Ivf {
   def layoutRowsAtTag(
       spark: SparkSession, layout: Layout, name: String,
       idCol: String = "vec_id"): DataFrame =
-    layoutRowsOfRef(spark, layout.dir,
-      graft.io.MutableStore.resolveTag(layout.dir, name), idCol)
+    layoutRowsOfRef(spark, layout.dir, MutableStore.resolveTag(layout.dir, name), idCol)
 
   private def layoutRowsOfRef(
-      spark: SparkSession, dir: String,
-      ref: graft.io.MutableStore.SnapRef, idCol: String): DataFrame = {
-    val s = IvfSnap(ref.v, Set.empty, Set.empty,
-      if (ref.v >= 1) Some(ref.v) else None,
-      ref.live, ref.tombs)
-    val base = baseScanOf(spark, dir, s, None)
-    val all = deltaScanOf(spark, dir, s, None) match {
-      case Some(d) =>
-        base.unionByName(d.select(base.columns.map(col).toIndexedSeq: _*))
-      case None => base
-    }
-    applyMask(all, maskOf(spark, dir, s, idCol), idCol)
-  }
+      spark: SparkSession, dir: String, ref: MutableStore.SnapRef, idCol: String): DataFrame =
+    liveRowsOf(spark, dir, MutableStore.snapAt(storeOf(dir), ref), None, idCol)
 
   /** The pinned GLOBAL id mask's legs (`idCol` only): legacy flat
     * tombstone files plus the snapshot's live tombstone-batch dirs,
     * each schema-pinned. */
   private def maskLegs(
-      spark: SparkSession, dir: String, s: IvfSnap, idCol: String): Seq[DataFrame] = {
+      spark: SparkSession, dir: String, s: MutableStore.Snap, idCol: String): Seq[DataFrame] = {
     val legacy = legacyTombFiles(dir)
     ((if (legacy.nonEmpty)
-      Seq(graft.io.MutableStore.readParquetPinned(spark, legacy, legacy.head))
+      Seq(MutableStore.readParquetPinned(spark, legacy, legacy.head))
     else Seq.empty) ++
       s.tombTags.flatMap { t =>
         val p = s"$dir/$tombstoneDirName/$tombTagPrefix$t/ids"
-        graft.io.MutableStore.sampleDataFile(p)
-          .map(f => graft.io.MutableStore.readParquetPinned(spark, Seq(p), f))
+        MutableStore.sampleDataFile(p)
+          .map(f => MutableStore.readParquetPinned(spark, Seq(p), f))
       }).map(_.select(col(idCol)))
   }
 
   /** The pinned GLOBAL id mask as one distinct id table. */
   private def maskOf(
-      spark: SparkSession, dir: String, s: IvfSnap,
+      spark: SparkSession, dir: String, s: MutableStore.Snap,
       idCol: String): Option[DataFrame] =
     maskLegs(spark, dir, s, idCol).reduceOption(_ unionAll _).map(_.distinct())
 
   /** Where requested ids live in a pinned snapshot, from ONE
     * literal-id filtered scan: one (leg, id, h) per matching row, leg
     * 0 = base, 1 = live delta, 2 = mask, with `h` the base row's
-    * embedding hash (the sidecar's per-row term, 0 elsewhere).
+    * embedding hash (the fingerprint's per-row term, 0 elsewhere).
     * `data = false` scans the mask legs only. The result is bounded by
     * the request (ids × their copies), so it comes to the driver —
     * the ids-on-driver contract of [[graft.index.Hnsw.deleteFromLayout]]. */
   private def lookupIds(
-      spark: SparkSession, dir: String, s: IvfSnap, ids: Seq[Long],
+      spark: SparkSession, dir: String, s: MutableStore.Snap, ids: Seq[Long],
       idCol: String, embCol: String, data: Boolean): Array[(Int, Long, Long)] = {
     if (ids.isEmpty) return Array.empty
     def tagged(df: DataFrame, leg: Int, h: Column): DataFrame =
@@ -791,20 +742,14 @@ object Ivf {
       df: DataFrame, mask: Option[DataFrame], idCol: String): DataFrame =
     mask.map(m => df.join(broadcast(m), Seq(idCol), "left_anti")).getOrElse(df)
 
-  /** Standalone snapshot expiry for the IVF layout: apply the
-    * retention policy and collect due priors NOW — superseded base
-    * files and delta dirs via each retired version's manifest
-    * `removed`/`removedDirs` lists, plus crashed-attempt fold trees
-    * and manifests — under the writer lease, without a content commit
-    * ([[graft.io.MutableStore.expireSnapshotsWith]]). Returns the
-    * number of priors expired. */
-  def expireSnapshots(dir: String): Int = {
-    if (!stateFileExists(dir)) return 0 // never committed: nothing retained
-    val st = graft.io.MutableStore.state(dir)
-    graft.io.MutableStore.expireSnapshotsWith(dir,
-      java.nio.file.Paths.get(dir, graft.io.MutableStore.stateName),
-      st.priors, prot => gcLayout(dir, st, prot))
-  }
+  /** Standalone snapshot expiry for the IVF layout
+    * ([[graft.io.MutableStore.expire]]): apply the retention policy and
+    * collect due priors NOW — superseded base files and delta dirs via
+    * each retired version's manifest `removed`/`removedDirs` lists,
+    * plus crashed-attempt fold trees and manifests — under the writer
+    * lease, without a content commit. Returns the number of priors
+    * expired. */
+  def expireSnapshots(dir: String): Int = MutableStore.expire(storeOf(dir))
 
   /** NAMED snapshot tag on the layout (the Iceberg tag analogue):
     * captures the EXACT current reference set (or a retained prior's
@@ -813,15 +758,15 @@ object Ivf {
     * validated index" by name for as long as the deployment needs it.
     * Returns the tagged version. */
   def tagSnapshot(dir: String, name: String, version: Option[Int] = None): Int =
-    graft.io.MutableStore.tagSnapshot(dir, name, version)
+    MutableStore.tagSnapshot(dir, name, version)
 
   def dropTag(dir: String, name: String): Boolean =
-    graft.io.MutableStore.dropTag(dir, name)
+    MutableStore.dropTag(dir, name)
 
   /** [[rollbackTo]] by tag — restores the tag's EXACT captured
     * snapshot. Returns the version rolled back from. */
   def rollbackToTag(dir: String, name: String): Int =
-    graft.io.MutableStore.rollbackToTag(dir, name)
+    MutableStore.rollbackToTag(dir, name)
 
   /** ROLLBACK the layout to retained `version` — one atomic state
     * commit replaying the prior's reference set (its immutable
@@ -829,45 +774,45 @@ object Ivf {
     * data moves; the rolled-back-FROM version becomes a retained prior
     * (roll-forward stays possible while the policy — or a tag —
     * protects it), and the next fold's never-reuse allocation skips
-    * every on-disk version. Returns the version rolled back from. */
+    * every on-disk version. The committed fingerprint terms are kept
+    * as they are (a prior ref records none), so they still attest the
+    * rolled-back-FROM corpus. Returns the version rolled back from. */
   def rollbackTo(dir: String, version: Int): Int =
-    graft.io.MutableStore.rollbackTo(dir, version)
+    MutableStore.rollbackTo(dir, version)
 
-  /** Lagged, retention-aware GC at a compaction's start: versions
-    * retired past [[graft.io.MutableStore.gcRetention]] release the
+  /** The layout's base GC (its [[graft.io.MutableStore.Layout]]
+    * `baseGc` slot), run at a compaction's start or a standalone
+    * expiry: versions retired past the retention policy release the
     * files their commit superseded (each version's manifest carries
-    * its own `removed` lists); crashed-attempt debris (fold dirs and
-    * manifests NEWER than the committed version — never referenced by
-    * any snapshot) goes unconditionally. */
+    * its own `removed` lists); `_building_` temps and crashed-attempt
+    * debris (fold dirs and manifests NEWER than the committed version
+    * — never referenced by any snapshot) go unconditionally. */
   private def gcLayout(
-      dir: String, st: graft.io.MutableStore.State,
-      protectedRefs: Seq[graft.io.MutableStore.SnapRef]): Unit = {
-    val minKeep = (Seq(st.v) ++ protectedRefs.map(_.v)).min
+      dir: String, s: MutableStore.Snap,
+      protectedRefs: Seq[MutableStore.SnapRef]): Unit = {
+    val minKeep = (Seq(s.v) ++ protectedRefs.map(_.v)).min
     // a version NEWER than the committed pointer is crashed-attempt
     // debris — unless a retained prior names it: after a ROLLBACK the
-    // rolled-back-FROM version sits above st.v yet stays readable (and
+    // rolled-back-FROM version sits above s.v yet stays readable (and
     // roll-forward-able) while the policy or a tag protects it
-    val retainedAbove = protectedRefs.map(_.v).filter(_ > st.v).toSet
-    val root = new java.io.File(dir)
-    Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
-      val nm = f.getName
-      if (nm.startsWith(s"_building_$foldDirPrefix"))
-        graft.io.MutableStore.deleteDir(f.toPath)
-      else if (nm.startsWith(foldDirPrefix) &&
-          nm.stripPrefix(foldDirPrefix).forall(_.isDigit) &&
-          nm.stripPrefix(foldDirPrefix).toInt > st.v &&
-          !retainedAbove.contains(nm.stripPrefix(foldDirPrefix).toInt))
-        graft.io.MutableStore.deleteDir(f.toPath) // crashed-attempt debris
+    val retainedAbove = protectedRefs.map(_.v).filter(_ > s.v).toSet
+    MutableStore.entries(dir).foreach { p =>
+      val nm = p.getFileName.toString
+      val fold = nm.stripPrefix(foldDirPrefix)
+      if (nm.startsWith("_building_"))
+        MutableStore.deleteDir(p)
+      else if (nm.startsWith(foldDirPrefix) && fold.nonEmpty && fold.forall(_.isDigit) &&
+          fold.toInt > s.v && !retainedAbove.contains(fold.toInt))
+        MutableStore.deleteDir(p) // crashed-attempt debris
       else manifestVersionOf(nm).foreach { v =>
-        if (v > st.v && !retainedAbove.contains(v))
+        if (v > s.v && !retainedAbove.contains(v))
           deleteManifest(dir, v) // debris (either form)
         else if (v <= minKeep) {
           // this version's commit is older than every retained
           // snapshot: release what it superseded
           val m = readManifest(dir, v)
-          (m.removed ++ m.removedDirs).foreach(p =>
-            graft.io.MutableStore.deleteDir(
-              java.nio.file.Paths.get(dir, p)))
+          (m.removed ++ m.removedDirs).foreach(r =>
+            MutableStore.deleteDir(java.nio.file.Paths.get(dir, r)))
           if (v < minKeep) deleteManifest(dir, v)
           else if (m.removed.nonEmpty || m.removedDirs.nonEmpty)
             // keep the manifest (its snapshot is retained) but blank
@@ -888,13 +833,14 @@ object Ivf {
     * protocol from the incremental dedup stores applies verbatim: a
     * retried micro-batch REWRITES its own delta instead of
     * double-appending into the base layout (which `mode("append")` +
-    * a sidecar increment would corrupt twice over). The underscore
+    * a fingerprint increment would corrupt twice over). The underscore
     * prefix keeps deltas invisible to the base `parquet(layout.dir)`
     * scan; delta-aware probes ([[searchLayoutDeltaAware]]) read them
-    * explicitly with the same cluster pruning. The sidecar is NOT
-    * touched — it attests the base corpus only, so [[buildLayout]]
-    * reuse semantics stay exact; fold deltas into the base with a
-    * batch [[appendToLayout]] + delta cleanup when compaction is due.
+    * explicitly with the same cluster pruning. The fingerprint terms
+    * are NOT touched — they attest the base corpus only, so
+    * [[buildLayout]] reuse semantics stay exact; [[compactDeltas]]
+    * folds the live deltas into the base (and their rows into the
+    * terms) when compaction is due.
     *
     * Job plan (at most three Spark jobs, named `appendDelta at
     * Ivf.scala`): (1) one evaluation of the assigned rows fills a
@@ -911,7 +857,7 @@ object Ivf {
       rows: DataFrame,
       tag: String,
       embCol: String = "embedding"): Long =
-      graft.io.MutableStore.writing(rows.sparkSession, layout.dir, "Ivf", "appendDelta") {
+      MutableStore.writing(rows.sparkSession, layout.dir, "Ivf", "appendDelta") {
     val s = snapOf(layout.dir)
     val assigned = assignByCentroids(layout, rows, embCol).persist()
     try {
@@ -925,9 +871,7 @@ object Ivf {
       // once the state names it. A tag the committed state already FOLDED
       // is a redelivered batch whose rows are base-resident — debris,
       // never re-committed (double-count).
-      if (!s.folded.contains(tag))
-        graft.io.MutableStore.commitLiveLists(layout.dir,
-          (s.live :+ tag).distinct.sorted, s.tombTags)
+      MutableStore.commitMutation(storeOf(layout.dir), tag, tomb = false)
       ids.length.toLong
     } finally assigned.unpersist()
   }
@@ -936,26 +880,18 @@ object Ivf {
     * with, and the quantity the streaming auto-compaction policy
     * bounds. Committed-state resolution (folded dirs linger on disk
     * until retention GC and must not count). */
-  def deltaDirCount(layout: Layout): Int = snapOf(layout.dir).live.size
+  def deltaDirCount(layout: Layout): Int = MutableStore.deltaTags(storeOf(layout.dir)).size
 
   /** Bytes of the live delta dirs / of the base inverted lists — the
-    * size-ratio compaction policy's inputs (IVF's fold is O(delta)
-    * file moves either way; the ratio trigger just amortizes the
-    * per-fold fixed cost over proportionally more appended bytes). */
-  def deltaBytes(layout: Layout): Long =
-    snapOf(layout.dir).live
-      .map(t => graft.io.MutableStore.duBytes(
-        java.nio.file.Paths.get(layout.dir, s"$deltaDirPrefix$t")))
-      .sum
+    * size-ratio compaction policy's inputs (a fold rewrites the
+    * clusters the deltas touch, so the ratio trigger amortizes that
+    * rewrite over proportionally more appended bytes). */
+  def deltaBytes(layout: Layout): Long = MutableStore.deltaBytes(storeOf(layout.dir))
 
-  def baseBytes(layout: Layout): Long = snapOf(layout.dir).manifestV match {
-    case None =>
-      Option(new java.io.File(layout.dir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(f => graft.io.MutableStore.duBytes(f.toPath)).sum
-    case Some(mv) =>
-      readManifest(layout.dir, mv).files
-        .map(f => new java.io.File(layout.dir, f).length()).sum
+  def baseBytes(layout: Layout): Long = {
+    val v = MutableStore.state(layout.dir).v
+    if (v < 1) clusterDirs(layout.dir).map(c => MutableStore.duBytes(c.toPath)).sum
+    else readManifest(layout.dir, v).files.map(f => new java.io.File(layout.dir, f).length()).sum
   }
 
   /** All LIVE delta rows of a layout (None when the committed state
@@ -972,26 +908,28 @@ object Ivf {
     * op — the in-place file move this manifest design replaces).
     * Mechanics: only the clusters the folded deltas TOUCH are
     * rewritten — base(touched) ∪ delta rows land as fresh files under
-    * an underscore temp, renamed into a never-reused `fold_v<N>/`
+    * an underscore temp, renamed into a never-reused `_fold_v<N>/`
     * tree — so fold cost is O(touched + delta), never O(base), and the
     * rewrite also merges the small per-batch delta files (the LSM
     * economics: at 100 TB the size-ratio trigger amortizes rewrite IO
-    * against proportionally more appended bytes). The COMMIT is the
-    * manifest+state swap: `_manifest_v<N>.json` (untouched old files +
-    * new fold files, written first) then one atomic state replace. A
-    * probe pinned on the old state keeps every file and delta dir its
-    * snapshot names — the superseded paths ride the new manifest's
-    * `removed` lists and are collected LAGGED at a later compaction's
-    * start, behind [[graft.io.MutableStore.gcRetention]].
+    * against proportionally more appended bytes). The fold runs in the
+    * core's compaction frame ([[graft.io.MutableStore.compact]]): the
+    * manifest (untouched old files + new fold files) is built and
+    * renamed in beside the fold tree, then ONE atomic state replace
+    * commits the version, the folded tags and the fingerprint terms
+    * together. A probe pinned on the old state keeps every file and
+    * delta dir its snapshot names — the superseded paths ride the new
+    * manifest's `removed` lists and are collected LAGGED at a later
+    * compaction's start, behind [[graft.io.MutableStore.gcRetention]].
     *
-    * The sidecar fingerprint updates compositionally from the LIVE
-    * delta rows (count adds, xor toggles, sum adds — tombstone-masked
-    * rows never entered the sidecar arithmetic, see
-    * [[deleteFromLayout]]); tombstones are NOT consumed here (the
-    * layout's mask is GLOBAL — an id's rows can live in untouched
-    * clusters; [[compactLayout]] is the reclaim leg). A crash anywhere
-    * before the state commit leaves debris the next compaction's GC
-    * collects and probes on the old state, correct.
+    * The fingerprint terms move compositionally by the LIVE delta rows
+    * (count adds, xor toggles, sum adds — tombstone-masked rows never
+    * entered the terms, see [[deleteFromLayout]]); tombstones are NOT
+    * consumed here (the layout's mask is GLOBAL — an id's rows can
+    * live in untouched clusters; [[compactLayout]] is the reclaim
+    * leg). A crash anywhere before the state commit leaves debris the
+    * next compaction's GC collects and probes on the old state,
+    * correct; a retry after it folds from the old state's terms.
     *
     * `excludeTags` skips named deltas — the streaming auto-compaction
     * hook passes the IN-FLIGHT batch's tag, because folding an
@@ -1004,90 +942,41 @@ object Ivf {
       layout: Layout,
       embCol: String = "embedding",
       idCol: String = "vec_id",
-      excludeTags: Set[String] = Set.empty): Int =
-      graft.io.MutableStore.writing(spark, layout.dir, "Ivf", "compactDeltas") {
+      excludeTags: Set[String] = Set.empty): Int = {
     val dir = layout.dir
-    val s = snapOf(dir)
-    val tags = s.live.filterNot(excludeTags)
-    if (tags.isEmpty) return 0
-    val st = graft.io.MutableStore.state(dir) // priors ride the state json
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir, st.priors)
-    // never-reuse allocation BEFORE debris GC: crashed-attempt fold
-    // dirs AND manifests still bump the counter
-    val vNew = (Seq(s.v,
-      graft.io.MutableStore.maxOnDiskVersion(dir, Seq(foldDirPrefix))) ++
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .map(_.getName)
-        .flatMap(manifestVersionOf))
-      .max + 1
-    gcLayout(dir, st, protectedRefs)
-    // None only when every folded leg is file-less: nothing to merge
-    val deltaDf = deltaScanOf(spark, dir, s.copy(live = tags), None)
-    // fingerprint only LIVE delta rows: a delta row deleted via
-    // [[deleteFromLayout]] never entered the sidecar arithmetic (delta
-    // deletes write tombstones only), so folding it into the count/
-    // hash/hsum here would make the sidecar attest a corpus containing
-    // deleted rows. The masked rows are still REWRITTEN (the mask is a
-    // global probe-side anti-join until compactLayout reclaims).
-    val (nNew, hNew, sNew) = deltaDf.map(d => fingerprint(
-      applyMask(d, maskOf(spark, dir, s, idCol), idCol), embCol)).getOrElse((0L, 0L, "0"))
-    val touched: Set[Int] = tags.flatMap { t =>
-      Option(new java.io.File(dir, s"$deltaDirPrefix$t").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-        .map(_.getName.stripPrefix("cluster=").toInt)
-    }.toSet
-    val oldFiles = s.manifestV.map(readManifest(dir, _).files)
-      .getOrElse(legacyBaseFiles(dir))
-    val (oldTouched, untouched) =
-      oldFiles.partition(p => touched.contains(clusterOfPath(p)))
-    val newFiles: Seq[String] =
-      if (touched.isEmpty) Seq.empty
-      else {
+    var folded = 0
+    MutableStore.compact(spark, storeOf(dir), "compactDeltas", excludeTags,
+        foldsTombs = false) { f =>
+      val s = f.snap
+      folded = f.tags.size
+      // None only when every folded leg is file-less: nothing to merge
+      val deltaDf = deltaScanOf(spark, dir, s.copy(live = f.tags), None)
+      // fingerprint only LIVE delta rows: a delta row deleted via
+      // [[deleteFromLayout]] never entered the terms (delta deletes
+      // write tombstones only), so folding it into the count/hash/hsum
+      // here would make them attest a corpus containing deleted rows.
+      // The masked rows are still REWRITTEN (the mask is a global
+      // probe-side anti-join until compactLayout reclaims).
+      val (n, h, sum) = deltaDf.map(d => fingerprint(
+        applyMask(d, maskOf(spark, dir, s, idCol), idCol), embCol)).getOrElse((0L, 0L, "0"))
+      val touched = f.tags.flatMap(t => clusterDirs(s"$dir/$deltaDirPrefix$t")
+        .map(_.getName.stripPrefix("cluster=").toInt)).toSet
+      val (oldTouched, untouched) = baseFiles(dir, s).partition(p => touched(clusterOfPath(p)))
+      if (touched.nonEmpty) {
         val baseTouched =
           if (oldTouched.isEmpty) None
           else Some(baseScanOf(spark, dir, s, Some(touched.toSeq.sorted)))
         val delta = deltaDf.get // a touched cluster has a delta file
-        val merged = (baseTouched.toSeq :+ delta
+        (baseTouched.toSeq :+ delta
           .select(baseTouched.getOrElse(delta).columns.map(col).toIndexedSeq: _*))
           .reduce(_ unionByName _)
-        val building = java.nio.file.Paths.get(dir, s"_building_$foldDirPrefix$vNew")
-        graft.io.MutableStore.deleteDir(building)
-        merged.write.mode("overwrite").partitionBy("cluster")
-          .parquet(building.toString)
-        java.nio.file.Files.move(building,
-          java.nio.file.Paths.get(dir, s"$foldDirPrefix$vNew"))
-        val root = java.nio.file.Paths.get(dir)
-        Option(new java.io.File(dir, s"$foldDirPrefix$vNew").listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-          .flatMap(c => Option(c.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-            .map(f => root.relativize(f.toPath).toString))
-          .toSeq
+          .write.mode("overwrite").partitionBy("cluster").parquet(f.building.head)
       }
-    // manifest FIRST (immutable once the state points at it), state
-    // commit LAST — the single atomic commit point
-    writeManifest(dir, vNew, Manifest(
-      files = untouched ++ newFiles,
-      removed = oldTouched,
-      removedDirs = tags.map(deltaDirPrefix + _)))
-    val sidecar = java.nio.file.Paths.get(dir, centroidFile)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(java.nio.file.Files.readString(sidecar))
-    val hsum = storedHsum(node).add(new java.math.BigInteger(sNew))
-    graft.io.Artifact.writeAtomic(sidecar,
-      s"""{"count":${node.get("count").asLong() + nNew},"hash":${node.get("hash").asLong() ^ hNew},"hsum":"$hsum","centroids":${node.get("centroids").toString}}""")
-    def onDisk(t: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"$deltaDirPrefix$t"))
-    graft.io.MutableStore.commitState(dir, vNew,
-      folded = (s.folded.filter(onDisk) ++ tags).toSeq.sorted,
-      deadTombs = s.deadTombs.toSeq.sorted,
-      live = s.live.filterNot(tags.contains(_)).sorted,
-      liveTombs = s.tombTags,
-      priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-        graft.io.MutableStore.SnapRef(s.v, s.live, s.tombTags)))
-    tags.length
+      writeManifest(f.building(1), Manifest(untouched ++ foldFiles(f.building.head),
+        oldTouched, f.tags.map(deltaDirPrefix + _)))
+      shifted(dir, s.node, n, h, new java.math.BigInteger(sum))
+    }
+    folded
   }
 
   /** [[searchLayout]] over base ∪ streamed deltas: both sides prune to
@@ -1107,16 +996,9 @@ object Ivf {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val clusters = probeClustersOf(layout.centroids, query, nprobe)
-    graft.io.MutableStore.named(spark, "Ivf", "searchLayoutDeltaAware") {
+    MutableStore.named(spark, "Ivf", "searchLayoutDeltaAware") {
       pinned(layout.dir) { s =>
-        val base = baseScanOf(spark, layout.dir, s, Some(clusters))
-        val scan = deltaScanOf(spark, layout.dir, s, Some(clusters)) match {
-          case Some(d) =>
-            base.unionByName(d.select(base.columns.map(col).toIndexedSeq: _*))
-          case None => base
-        }
-        VectorSearch.knnExact(
-          applyMask(scan, maskOf(spark, layout.dir, s, idCol), idCol),
+        VectorSearch.knnExact(liveRowsOf(spark, layout.dir, s, Some(clusters), idCol),
           query.toSeq, k, idCol, embCol)
       }
     }
@@ -1129,22 +1011,23 @@ object Ivf {
     * TOMBSTONE table under the layout (`_tombstones/`, invisible to the
     * data scan — Spark skips underscore paths), so a delete is one tiny
     * write, never a partition rewrite; every probe anti-joins the
-    * (small, broadcast) tombstone set. The sidecar fingerprint is
+    * (small, broadcast) tombstone set. The fingerprint terms are
     * xor-updated with the removed rows' contribution, so a later
     * [[buildLayout]] against the ORIGINAL corpus sees a mismatch and
     * rebuilds rather than silently reusing the shrunken layout.
     * Already-tombstoned and never-present ids are ignored (delete is
-    * idempotent; the fingerprint is never double-xored). Tombstones are
-    * written BEFORE the sidecar: a crash in between leaves probes
-    * correct and only the reuse check conservative. Returns the number
-    * of newly deleted rows.
+    * idempotent; the fingerprint is never double-xored). The terms
+    * commit in the SAME atomic state write that makes the tombstone
+    * live: a crash before it leaves the tombstone invisible and the
+    * terms untouched, so a redelivery applies both exactly once.
+    * Returns the number of newly deleted rows.
     *
     * Job plan (two Spark jobs, named `deleteFromLayout at Ivf.scala`):
     * (1) ONE literal-id filtered scan over base ∪ live deltas ∪ mask
     * legs ([[lookupIds]]) brings the matching rows' ids and embedding
     * hashes to the driver — ids only, bounded by the request (the
     * contract of [[graft.index.Hnsw.deleteFromLayout]] and
-    * [[graft.ops.Takedown]]); the driver derives the sidecar's count,
+    * [[graft.ops.Takedown]]); the driver derives the terms' count,
     * xor and decimal sum ([[graft.io.Artifact.hashAgg]]'s arithmetic)
     * and the delta-only count from it; (2) the tombstone leg write.
     * A request that hits no live row writes and commits nothing. */
@@ -1155,18 +1038,18 @@ object Ivf {
       idCol: String,
       embCol: String,
       tag: String): Long =
-      graft.io.MutableStore.writing(spark, layout.dir, "Ivf", "deleteFromLayout") {
+      MutableStore.writing(spark, layout.dir, "Ivf", "deleteFromLayout") {
     val dir = layout.dir
     val s = snapOf(dir)
     val hits = lookupIds(spark, dir, s, ids.distinct, idCol, embCol, data = true)
     val masked = hits.collect { case (2, id, _) => id }.toSet
-    // every live base copy of a requested id leaves the sidecar
+    // every live base copy of a requested id leaves the fingerprint
     val baseHits = hits.filter { case (leg, id, _) => leg == 0 && !masked(id) }
     val baseIds = baseHits.map(_._2).toSet
     // delta-appended rows are tombstoned too (the streaming-append
-    // interplay), but NEVER enter the sidecar arithmetic — the sidecar
-    // attests only the base corpus, and delta rows were never added to
-    // it; an id deleted via its base row counts once, there
+    // interplay), but NEVER enter the fingerprint arithmetic — the terms
+    // attest only the base corpus, and delta rows were never added to
+    // them; an id deleted via its base row counts once, there
     val deltaIds = hits.collect {
       case (1, id, _) if !masked(id) && !baseIds(id) => id
     }.toSet
@@ -1181,22 +1064,14 @@ object Ivf {
         (baseIds ++ deltaIds).toSeq.sorted.map(org.apache.spark.sql.Row(_)), 1), idSchema)
       .write.mode("overwrite")
       .parquet(s"$dir/$tombstoneDirName/$tombTagPrefix$t/ids")
-    if (nDel > 0L) {
-      // hashAgg's xor and decimal sum, over the collected per-row hashes
-      val hDel = baseHits.foldLeft(0L)(_ ^ _._3)
-      val sDel = baseHits.foldLeft(java.math.BigInteger.ZERO)((acc, r) =>
-        acc.add(java.math.BigInteger.valueOf(r._3)))
-      val sidecar = java.nio.file.Paths.get(dir, centroidFile)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = mapper.readTree(java.nio.file.Files.readString(sidecar))
-      val hsum = storedHsum(node).subtract(sDel)
-      graft.io.Artifact.writeAtomic(sidecar,
-        s"""{"count":${node.get("count").asLong() - nDel},"hash":${node.get("hash").asLong() ^ hDel},"hsum":"$hsum","centroids":${node.get("centroids").toString}}""")
-    }
-    // COMMIT (a tag the state already CONSUMED is redelivered debris)
-    if (!s.deadTombs.contains(t))
-      graft.io.MutableStore.commitLiveLists(dir,
-        s.live, (s.tombTags :+ t).distinct.sorted)
+    // COMMIT the tombstone with hashAgg's xor and decimal sum over the
+    // collected per-row hashes taken off the terms (a tag the state
+    // already CONSUMED is redelivered debris: nothing commits)
+    MutableStore.commitMutation(storeOf(dir), t, tomb = true,
+      if (nDel == 0L) Nil
+      else shifted(dir, s.node, -nDel, baseHits.foldLeft(0L)(_ ^ _._3),
+        baseHits.foldLeft(java.math.BigInteger.ZERO)((acc, r) =>
+          acc.subtract(java.math.BigInteger.valueOf(r._3)))))
     nDel + deltaIds.size
   }
 
@@ -1213,20 +1088,21 @@ object Ivf {
   /** Physically remove tombstoned rows once they exceed
     * `maxTombstoneFraction` of the layout — the RECLAIM leg, now
     * SNAPSHOT-SAFE (r16): only the clusters containing a tombstoned
-    * row are rewritten (survivors land under a fresh `fold_v<N>/`
+    * row are rewritten (survivors land under a fresh `_fold_v<N>/`
     * tree, never an in-place partition overwrite), the commit is the
-    * manifest+state swap, every consumed tombstone batch and legacy
-    * tombstone file rides the new manifest's removed lists for lagged,
-    * retention-aware GC — a probe pinned on the old state keeps its
-    * whole file set, mask included. Deltas fold first (a tombstoned
-    * row's data file in a delta dir must not outlive its mask).
-    * Returns true when a compaction ran. */
+    * core frame's manifest+state swap, every consumed tombstone batch
+    * and legacy tombstone file rides the new manifest's removed lists
+    * for lagged, retention-aware GC — a probe pinned on the old state
+    * keeps its whole file set, mask included. Deltas fold first (a
+    * tombstoned row's data file in a delta dir must not outlive its
+    * mask). The fingerprint terms stay as they are: the deleted rows
+    * left them at delete time. Returns true when a compaction ran. */
   def compactLayout(
       spark: SparkSession,
       layout: Layout,
       maxTombstoneFraction: Double = 0.1,
       idCol: String = "vec_id"): Boolean =
-      graft.io.MutableStore.withWriterLock(layout.dir, "compactLayout") {
+      MutableStore.withWriterLock(layout.dir, "compactLayout") {
     val dir = layout.dir
     compactDeltas(spark, layout, idCol = idCol) // reentrant under the lease
     val s = snapOf(dir)
@@ -1237,67 +1113,25 @@ object Ivf {
     val nTomb = tomb.count()
     if (nTomb == 0L || nTomb.toDouble / math.max(base.count(), 1L) <= maxTombstoneFraction)
       return false
-    val st = graft.io.MutableStore.state(dir)
-    val (protectedRefs, _) = graft.io.MutableStore.splitPriors(dir, st.priors)
-    val vNew = (Seq(s.v,
-      graft.io.MutableStore.maxOnDiskVersion(dir, Seq(foldDirPrefix))) ++
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .map(_.getName)
-        .flatMap(manifestVersionOf))
-      .max + 1
-    gcLayout(dir, st, protectedRefs)
-    val affectedClusters = base.join(broadcast(tomb), Seq(idCol), "left_semi")
-      .select("cluster").distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val oldFiles = s.manifestV.map(readManifest(dir, _).files)
-      .getOrElse(legacyBaseFiles(dir))
-    val (oldTouched, untouched) =
-      oldFiles.partition(p => affectedClusters.contains(clusterOfPath(p)))
-    val newFiles: Seq[String] =
-      if (affectedClusters.isEmpty) Seq.empty
-      else {
-        val survivors = baseScanOf(spark, dir, s, Some(affectedClusters))
+    // force: a mask of legacy flat files alone has no tombstone batch
+    // for the frame to consume, yet must be reclaimed
+    MutableStore.compact(spark, storeOf(dir), "compactLayout", Set.empty, force = true) { f =>
+      val affected = base.join(broadcast(tomb), Seq(idCol), "left_semi")
+        .select("cluster").distinct().collect().map(_.getInt(0)).toSeq.sorted
+      val (oldTouched, untouched) =
+        baseFiles(dir, s).partition(p => affected.contains(clusterOfPath(p)))
+      if (affected.nonEmpty)
+        baseScanOf(spark, dir, s, Some(affected))
           .join(broadcast(tomb), Seq(idCol), "left_anti")
-        val building = java.nio.file.Paths.get(dir, s"_building_$foldDirPrefix$vNew")
-        graft.io.MutableStore.deleteDir(building)
-        survivors.write.mode("overwrite").partitionBy("cluster")
-          .parquet(building.toString)
-        java.nio.file.Files.move(building,
-          java.nio.file.Paths.get(dir, s"$foldDirPrefix$vNew"))
-        val root = java.nio.file.Paths.get(dir)
-        Option(new java.io.File(dir, s"$foldDirPrefix$vNew").listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
-          .flatMap(c => Option(c.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-            .map(f => root.relativize(f.toPath).toString))
-          .toSeq
-      }
-    // consumed masks (tag dirs + legacy flat files) ride the removed
-    // lists — pinned probes keep anti-joining them until retention GC
-    val tombRel = java.nio.file.Paths.get(dir)
-    val legacyRemoved = legacyTombFiles(dir)
-      .map(p => tombRel.relativize(java.nio.file.Paths.get(p)).toString)
-    writeManifest(dir, vNew, Manifest(
-      files = untouched ++ newFiles,
-      removed = oldTouched ++ legacyRemoved,
-      removedDirs = s.tombTags.map(t => s"$tombstoneDirName/$tombTagPrefix$t")))
-    // fold/consumed bookkeeping pruned to what still EXISTS on disk
-    // (mirrors compactDeltas): once lagged GC collected a folded delta
-    // or dead tombstone dir, carrying its tag forward only grows the
-    // state json without bound across delete/compact cycles
-    def deltaOnDisk(t: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s"$deltaDirPrefix$t"))
-    def tombOnDisk(t: String): Boolean =
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, tombstoneDirName, s"$tombTagPrefix$t"))
-    graft.io.MutableStore.commitState(dir, vNew,
-      folded = s.folded.filter(deltaOnDisk).toSeq.sorted,
-      deadTombs = (s.deadTombs.filter(tombOnDisk) ++ s.tombTags).toSeq.sorted,
-      live = s.live,
-      liveTombs = Seq.empty,
-      priors = graft.io.MutableStore.pushPrior(dir, protectedRefs,
-        graft.io.MutableStore.SnapRef(s.v, s.live, s.tombTags)))
-    true
+          .write.mode("overwrite").partitionBy("cluster").parquet(f.building.head)
+      // consumed masks (tag dirs + legacy flat files) ride the removed
+      // lists — pinned probes keep anti-joining them until retention GC
+      val root = java.nio.file.Paths.get(dir)
+      writeManifest(f.building(1), Manifest(untouched ++ foldFiles(f.building.head),
+        oldTouched ++ legacyTombFiles(dir).map(p => root.relativize(java.nio.file.Paths.get(p)).toString),
+        s.tombTags.map(t => s"$tombstoneDirName/$tombTagPrefix$t")))
+      Nil
+    }
   }
 
   /** BATCH probe of a persisted layout — a query table served by ONE
@@ -1335,16 +1169,7 @@ object Ivf {
       (r.getLong(0), emb, probeClustersOf(layout.centroids, emb.toArray, nprobe))
     }
     val union = probed.flatMap(_._3).distinct
-    val scan = pinned(layout.dir) { s =>
-      val basePruned = baseScanOf(spark, layout.dir, s, Some(union))
-      val raw = deltaScanOf(spark, layout.dir, s, Some(union)) match {
-        case Some(d) =>
-          basePruned.unionByName(
-            d.select(basePruned.columns.map(col).toIndexedSeq: _*))
-        case None => basePruned
-      }
-      applyMask(raw, maskOf(spark, layout.dir, s, idCol), idCol)
-    }
+    val scan = pinned(layout.dir)(liveRowsOf(spark, layout.dir, _, Some(union), idCol))
     val qDf = probed.toDF(qIdCol, qEmbCol, "q_clusters")
     graft.ops.VectorSearch.knnJoinAgg(qDf, scan, k,
       qIdCol = qIdCol, qEmbCol = qEmbCol, idCol = idCol,

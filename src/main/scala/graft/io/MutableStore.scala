@@ -10,16 +10,16 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * BM25/positional/trigram), SQ8 codes ([[graft.index.Sq]]), HNSW
   * layouts ([[graft.index.Hnsw]]), binary signatures
   * ([[graft.index.Binary]]), the dedup hash, signature and shingle
-  * stores ([[graft.dedup.Dedup]]) and the fuzzy signature store
-  * ([[graft.ops.FuzzyJoin]]). A family supplies a layout and a fold —
+  * stores ([[graft.dedup.Dedup]]), the fuzzy signature store
+  * ([[graft.ops.FuzzyJoin]]) and the IVF layout ([[graft.index.Ivf]],
+  * whose manifests and manifest-driven base GC plug into the
+  * layout's base-GC slot). A family supplies a layout and a fold —
   * a [[Layout]] (where its state json and its base/delta/tombstone
   * legs live) and a function writing the new base from the pinned
   * legs; the core owns the snapshot read ([[snapOf]]), the mutation
   * commit ([[commitMutation]]), the compaction frame ([[compact]]),
   * lagged GC, expiry ([[expire]]), the replay reset
-  * ([[dropMutations]]) and the compaction-policy feeds. The IVF
-  * layout keeps its own manifest-driven variant ([[graft.index.Ivf]])
-  * on the shared state json, lease, retention and tag machinery.
+  * ([[dropMutations]]) and the compaction-policy feeds.
   *
   *  - mutations are TAG-KEYED dirs (idempotent overwrite under
   *    at-least-once redelivery): `delta_<tag>` appends,
@@ -287,16 +287,24 @@ private[graft] object MutableStore {
     * every mutation. */
   def commitLiveLists(
       dir: String, live: Seq[String], liveTombs: Seq[String]): Unit = {
-    assertWriter(s"commitLiveLists($dir)", dir)
-    requireCleanTags(live ++ liveTombs, s"commitLiveLists($dir)")
-    val p = java.nio.file.Paths.get(dir, stateName)
-    if (java.nio.file.Files.exists(p))
-      patchStringArrays(p, "live" -> live, "liveTombs" -> liveTombs)
-    else {
-      def arr(s: Seq[String]) = s.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      java.nio.file.Files.createDirectories(p.getParent)
-      Artifact.writeAtomic(p,
-        s"""{"v":0,"folded":[],"deadTombs":[],"live":${arr(live)},"liveTombs":${arr(liveTombs)}}""")
+    val l = flatLayout(dir, "MutableStore")
+    commitLegs(l, readState(l.statePath, l.flat)._2, Nil, live, liveTombs)
+  }
+
+  /** One mutation commit: `fields` (raw json) and the live lists in
+    * one atomic write of the state json. A flat store's state is
+    * created (v = 0, empty fold lists) by its first commit; a sidecar
+    * family's commit is a no-op until the store is ensured. */
+  private def commitLegs(l: Layout, node: Option[com.fasterxml.jackson.databind.JsonNode],
+      fields: Seq[(String, String)], live: Seq[String], liveTombs: Seq[String]): Unit = {
+    assertWriter(s"commitMutation(${l.dir})", l.dir)
+    requireCleanTags(live ++ liveTombs, s"commitMutation(${l.dir})")
+    if (node.isDefined || l.flat) {
+      val fresh = node.isEmpty
+      if (fresh) java.nio.file.Files.createDirectories(l.statePath.getParent)
+      writeState(l.statePath, node, (if (fresh) Seq("v" -> "0") else Nil) ++ fields,
+        (if (fresh) Seq("folded" -> Nil, "deadTombs" -> Nil) else Nil) ++
+          Seq("live" -> live, "liveTombs" -> liveTombs): _*)
     }
   }
 
@@ -329,7 +337,11 @@ private[graft] object MutableStore {
     *  - a marker file names the leg's stats json, written LAST — the
     *    legacy listing counts a leg only once it exists. A tombstone's
     *    stats carry the legs it `covered` (base only when absent) and,
-    *    with a delta's, the mergeable fingerprint terms. */
+    *    with a delta's, the mergeable fingerprint terms;
+    *  - `baseGc`, when set, is the family's own base GC (given the
+    *    snapshot and the protected priors) in place of [[versionGc]]
+    *    — the IVF layout, whose versions share files through their
+    *    manifests, collects what each manifest superseded. */
   final case class Layout(
       family: String,
       dir: String,
@@ -344,7 +356,8 @@ private[graft] object MutableStore {
       deltaMarker: Option[String],
       tombRoot: String,
       tombPrefix: String,
-      tombMarker: Option[String]) {
+      tombMarker: Option[String],
+      baseGc: Option[(Snap, Seq[SnapRef]) => Unit] = None) {
     def basePaths(v: Int): Seq[String] =
       if (v > 0) versionPrefixes.map(p => s"$versionRoot/$p$v") else base0
     def deltaDirs(tag: String): Seq[String] = deltaRoots.map(r => s"$r/$deltaPrefix$tag")
@@ -440,18 +453,29 @@ private[graft] object MutableStore {
     * leg is live once the state names it. A tag the state already
     * FOLDED (or CONSUMED) is a redelivered batch whose rows are in the
     * base (whose terms were subtracted) — its rewritten dir is debris
-    * for the next GC, never re-committed (double count). A flat store's
-    * state is created on its first mutation; a sidecar family's commit
-    * is a no-op until the store is ensured. Single-writer. */
-  def commitMutation(l: Layout, tag: String, tomb: Boolean): Unit = {
-    val st = readState(l.statePath, l.flat)._1
+    * for the next GC, never re-committed (double count). `fields` are
+    * raw-json values (a family's shifted fingerprint terms) committed
+    * in the SAME atomic write as the leg — one commit point, so a
+    * redelivery after a crash can never apply them twice. A flat
+    * store's state is created on its first mutation; a sidecar
+    * family's commit is a no-op until the store is ensured.
+    * Single-writer. */
+  def commitMutation(l: Layout, tag: String, tomb: Boolean,
+      fields: Seq[(String, String)] = Nil): Unit = {
+    val (st, node) = readState(l.statePath, l.flat)
     if (!(if (tomb) st.deadTombs else st.folded).contains(tag)) {
-      val (live0, tombs0) = liveTagsOf(l, st)
-      val live = if (tomb) live0 else (live0 :+ tag).distinct
-      val tombs = if (tomb) (tombs0 :+ tag).distinct else tombs0
-      if (l.flat) commitLiveLists(l.dir, live, tombs)
-      else patchStringArrays(l.statePath, "live" -> live, "liveTombs" -> tombs)
+      val (live, tombs) = liveTagsOf(l, st)
+      commitLegs(l, node, fields,
+        if (tomb) live else (live :+ tag).distinct, if (tomb) (tombs :+ tag).distinct else tombs)
     }
+  }
+
+  /** A base-resident mutation with no leg (the IVF layout's v0 root
+    * append): commits only `fields`, the live legs as they are. */
+  def commitFields(l: Layout, fields: Seq[(String, String)]): Unit = {
+    val (st, node) = readState(l.statePath, l.flat)
+    val (live, tombs) = liveTagsOf(l, st)
+    commitLegs(l, node, fields, live, tombs)
   }
 
   /** The legs a tombstone written NOW covers: base + the live delta
@@ -502,15 +526,18 @@ private[graft] object MutableStore {
     * version pointer, the folded/consumed lists (kept while their dirs
     * remain), the surviving live legs, and the pre-compaction snapshot
     * pushed onto `priors`. No GC after the commit: a probe pinned on
-    * the old snapshot keeps every dir it named. Returns whether it
-    * committed. */
+    * the old snapshot keeps every dir it named. A part whose temp the
+    * fold did not create (an IVF fold that rewrote no cluster) is
+    * skipped at the rename. `force` commits even with nothing to fold
+    * (the IVF batch append, and a reclaim of legacy mask files).
+    * Returns whether it committed. */
   def compact(spark: SparkSession, l: Layout, primitive: String,
-      excludeTags: Set[String], foldsTombs: Boolean = true)(
+      excludeTags: Set[String], foldsTombs: Boolean = true, force: Boolean = false)(
       fold: Fold => Seq[(String, String)]): Boolean =
     writing(spark, l.dir, l.family, primitive) {
       val s = snapOf(l)
       val tags = s.live.filterNot(excludeTags)
-      if (tags.isEmpty && (!foldsTombs || s.tombs.isEmpty)) false
+      if (!force && tags.isEmpty && (!foldsTombs || s.tombs.isEmpty)) false
       else {
         val vNew = math.max(s.v, maxOnDiskVersion(l.versionRoot, l.versionPrefixes)) + 1
         val (prot, _) = splitPriors(l.dir, s.st.priors)
@@ -521,7 +548,9 @@ private[graft] object MutableStore {
           java.nio.file.Paths.get(l.versionRoot, s"$pre$p$vNew"))
         temp("_building_").foreach(deleteDir)
         val fields = fold(Fold(l, s, tags, consumed, temp("_building_").map(_.toString)))
-        temp("_building_").zip(temp("")).foreach { case (b, t) => java.nio.file.Files.move(b, t) }
+        temp("_building_").zip(temp("")).foreach { case (b, t) =>
+          if (java.nio.file.Files.exists(b)) java.nio.file.Files.move(b, t)
+        }
         def onDisk(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
         val gone = consumed.map(_.tag).toSet
         assertWriter(s"compact(${l.dir})", l.dir)
@@ -541,16 +570,11 @@ private[graft] object MutableStore {
     * the CURRENT snapshot or a retention-protected prior still names
     * (retention 1 = a pinned probe outlives exactly one concurrent
     * commit). Runs at the START of a compaction (or a standalone
-    * expiry), never at a commit's own end. */
+    * expiry), never at a commit's own end. A layout's `baseGc` slot
+    * replaces the base part (the `_building_` debris, version dirs and
+    * v0 base) with the family's own. */
   private def gc(l: Layout, s: Snap, prot: Seq[SnapRef]): Unit = {
-    val keepV = Set(s.v) ++ prot.map(_.v)
-    entries(l.versionRoot).filter { p =>
-      val nm = p.getFileName.toString
-      l.versionPrefixes.exists(pre => nm.startsWith(s"_building_$pre") ||
-        (nm.matches(java.util.regex.Pattern.quote(pre) + "\\d+") &&
-          !keepV(nm.substring(pre.length).toInt)))
-    }.foreach(deleteDir)
-    if (!keepV(0)) l.v0Base().foreach(deleteDir)
+    l.baseGc.fold(versionGc(l, s, prot))(_(s, prot))
     val keepDelta = s.live.toSet ++ prot.flatMap(_.live)
     val keepTombs = s.tombTags.toSet ++ prot.flatMap(_.tombs)
     s.st.folded.filterNot(keepDelta).flatMap(l.deltaDirs)
@@ -559,13 +583,41 @@ private[graft] object MutableStore {
       .foreach(t => deleteDir(java.nio.file.Paths.get(l.tombDir(t))))
   }
 
-  /** (d) STANDALONE snapshot expiry of a family's store (see
-    * [[expireSnapshotsWith]]); 0 for a store with no committed state. */
+  /** The default base GC: `_building_` debris, every version dir
+    * neither current nor protected, and the v0 base once no kept
+    * snapshot reads it. */
+  private def versionGc(l: Layout, s: Snap, prot: Seq[SnapRef]): Unit = {
+    val keepV = Set(s.v) ++ prot.map(_.v)
+    entries(l.versionRoot).filter { p =>
+      val nm = p.getFileName.toString
+      l.versionPrefixes.exists(pre => nm.startsWith(s"_building_$pre") ||
+        (nm.matches(java.util.regex.Pattern.quote(pre) + "\\d+") &&
+          !keepV(nm.substring(pre.length).toInt)))
+    }.foreach(deleteDir)
+    if (!keepV(0)) l.v0Base().foreach(deleteDir)
+  }
+
+  /** (d) STANDALONE snapshot expiry — the Iceberg `expireSnapshots`
+    * analogue (r16 VERDICT task 2). Lagged GC normally runs only at
+    * the START of the next compaction, so a store that stops
+    * compacting retains superseded versions, fold trees and debris
+    * forever. This maintenance entry point takes the writer lease,
+    * applies the store's retention policy ([[splitPriors]]), runs the
+    * layout's lagged GC with ONLY the still-protected priors
+    * (collecting everything the due priors were keeping alive, plus
+    * crashed-attempt debris), and commits the pruned priors list with
+    * one atomic patch of the state json — NO content commit, NO
+    * version bump. A pinned view within retention survives (its prior
+    * stays protected). Returns the number of prior snapshots expired;
+    * 0 for a store with no committed state. */
   def expire(l: Layout): Int =
     if (!java.nio.file.Files.exists(l.statePath)) 0
     else withWriterLock(l.dir, "expireSnapshots") {
       val s = snapOf(l)
-      expireSnapshotsWith(l.dir, l.statePath, s.st.priors, gc(l, s, _))
+      val (prot, due) = splitPriors(l.dir, s.st.priors)
+      gc(l, s, prot)
+      patchStringArrays(l.statePath, "priors" -> prot.map(encodeRef).sorted)
+      due.length
     }
 
   /** (d) The REPLAY RESET: drop every delta and tombstone dir and empty
@@ -666,18 +718,18 @@ private[graft] object MutableStore {
         .mkString("""{"covered":[""", ",", "]}"))
   }
 
-  /** Atomically commit a new store state (a compaction's commit point:
-    * version pointer + folded/consumed lists + the surviving live
-    * legs). */
+  /** Atomically commit a flat store's state: version pointer +
+    * folded/consumed lists + live legs + priors. Every other field of
+    * an existing state json is carried over as it is. */
   def commitState(dir: String, v: Int, folded: Seq[String], deadTombs: Seq[String],
       live: Seq[String] = Seq.empty, liveTombs: Seq[String] = Seq.empty,
       priors: Seq[String] = Seq.empty): Unit = {
     assertWriter(s"commitState($dir)", dir)
     requireCleanTags(live ++ liveTombs, s"commitState($dir)")
-    def arr(s: Seq[String]) = s.map("\"" + _ + "\"").mkString("[", ",", "]")
-    Artifact.writeAtomic(
-      java.nio.file.Paths.get(dir, stateName),
-      s"""{"v":$v,"folded":${arr(folded.sorted)},"deadTombs":${arr(deadTombs.sorted)},"live":${arr(live.sorted)},"liveTombs":${arr(liveTombs.sorted)},"priors":${arr(priors.sorted)}}""")
+    val p = java.nio.file.Paths.get(dir, stateName)
+    writeState(p, readState(p, flat = true)._2, Seq("v" -> v.toString),
+      "folded" -> folded, "deadTombs" -> deadTombs, "live" -> live,
+      "liveTombs" -> liveTombs, "priors" -> priors)
   }
 
   /** Recursive delete of a store dir or file; an absent path is a no-op. */
@@ -690,8 +742,10 @@ private[graft] object MutableStore {
     finally walk.close()
   }
 
-  /** Highest `<prefix><N>` version dir on disk (committed or debris) —
-    * the next version must skip past BOTH. */
+  /** Highest `<prefix><N>` version on disk (committed or debris) — the
+    * next version must skip past BOTH. A version is a dir or, for the
+    * IVF layout's legacy single-json manifests, a `<prefix><N>.json`
+    * file. */
   def maxOnDiskVersion(dir: String, prefixes: Seq[String]): Int = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(root)) return 0
@@ -702,8 +756,8 @@ private[graft] object MutableStore {
         .flatMap(nm => prefixes.collectFirst {
           // strip the PREFIX, not "leading non-digits" — a prefix may
           // itself contain digits (e.g. a `graft_bm25del_x_v` stem)
-          case p if nm.matches(java.util.regex.Pattern.quote(p) + "\\d+") =>
-            nm.substring(p.length).toInt
+          case p if nm.matches(java.util.regex.Pattern.quote(p) + "\\d+(\\.json)?") =>
+            nm.substring(p.length).stripSuffix(".json").toInt
         })
         .foldLeft(0)(math.max)
     } finally s.close()
@@ -951,7 +1005,7 @@ private[graft] object MutableStore {
 
   /** Drop a tag; the version's refs then age out under the normal
     * retention policy (collected at the next compaction's GC or a
-    * standalone [[expireSnapshotsWith]]). Returns whether the tag
+    * standalone [[expire]]). Returns whether the tag
     * existed. */
   def dropTag(dir: String, name: String): Boolean =
     withWriterLock(dir, s"dropTag($name)") {
@@ -1036,7 +1090,10 @@ private[graft] object MutableStore {
   /** The rollback commit itself (caller holds the lease and resolved a
     * RETAINED target ref): replay the ref's reference set, drop the
     * target version from the priors, push the from-snapshot as a new
-    * commit-stamped prior. */
+    * commit-stamped prior. Every other field of the state json is
+    * carried over as it is — the IVF layout's fingerprint terms
+    * included: they attest the from-snapshot's corpus, not the
+    * target's (a prior ref records no terms). */
   private def rollbackToRef(dir: String, st: State, ref: SnapRef): Int = {
     val fromRef = currentRef(dir, st)
     val rest = st.priors.filterNot(p => decodeRef(p).v == ref.v)
@@ -1108,31 +1165,6 @@ private[graft] object MutableStore {
     val (tagged, rest) = protectedRefs.partition(r => taggedVs.contains(r.v))
     ((stamped +: rest).take(cap) ++ tagged).distinct.map(encodeRef).sorted
   }
-
-  /** STANDALONE snapshot expiry — the Iceberg `expireSnapshots`
-    * analogue (r16 VERDICT task 2). Lagged GC normally runs only at
-    * the START of the next compaction, so a store that stops
-    * compacting retains superseded versions, fold trees and debris
-    * forever. This maintenance entry point takes the writer lease,
-    * applies the store's retention policy ([[splitPriors]]), runs the
-    * family's lagged-GC `gc` with ONLY the still-protected priors
-    * (collecting everything the due priors were keeping alive, plus
-    * crashed-attempt debris), and commits the pruned priors list with
-    * one atomic patch of the state/sidecar json — NO content commit,
-    * NO version bump. A pinned view within retention survives (its
-    * prior stays protected); [[expire]] supplies a family layout's GC,
-    * the IVF layout its manifest-driven one. Returns the number of
-    * prior snapshots expired. */
-  def expireSnapshotsWith(
-      dir: String, statePath: java.nio.file.Path, priors: Seq[String],
-      gc: Seq[SnapRef] => Unit): Int =
-    withWriterLock(dir, "expireSnapshots") {
-      val (prot, due) = splitPriors(dir, priors)
-      gc(prot)
-      if (java.nio.file.Files.exists(statePath))
-        patchStringArrays(statePath, "priors" -> prot.map(encodeRef).sorted)
-      due.length
-    }
 
   /** Recursive on-disk byte size — the numerator/denominator feeds of
     * the size-ratio compaction policies. */

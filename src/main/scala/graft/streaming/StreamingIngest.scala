@@ -434,17 +434,16 @@ object StreamingIngest {
     * re-added), then appends its delta. The probe-time union width is
     * therefore bounded by `maxDeltaDirs + 1` at every instant, and a
     * mid-stream compaction is invisible to probe results
-    * (spec-pinned). Set `Int.MaxValue` to disable. IVF's fold is
-    * O(delta) file moves either way; the ratio trigger just amortizes
-    * the per-fold fixed cost.
+    * (spec-pinned). Set `Int.MaxValue` to disable. A fold rewrites
+    * only the clusters the deltas touch; the ratio trigger amortizes
+    * that rewrite over proportionally more appended bytes.
     *
-    * CONCURRENCY CONTRACT: the auto-compaction inherits
-    * [[graft.index.Ivf.compactDeltas]]'s single-writer/no-concurrent-
-    * probe assumption. Probes issued from THIS pipeline are safe
-    * (foreachBatch serializes the fold against them); a probe from a
-    * SEPARATE session racing the fold can see a transient
-    * FileNotFoundException and should re-issue — see the contract note
-    * on `compactDeltas`. */
+    * CONCURRENCY CONTRACT: the sink is the layout's single writer —
+    * every append and fold holds its writer lease, and a second
+    * writer fails loudly. Probes from any session are safe: each pins
+    * one committed snapshot, and a fold commits a new manifest with
+    * one atomic state write while lagged GC keeps the old snapshot's
+    * files ([[graft.index.Ivf.compactDeltas]]). */
   def streamingIvfAppend(
       stream: DataFrame,
       layoutDir: String,

@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -269,6 +270,47 @@ class IvfStreamAppendSpec extends AnyFunSuite {
     Ivf.buildLayout(spark, stale, layout.dir, nlist = 2, maxIter = 5)
     assert(!java.nio.file.Files.exists(marker),
       "a corpus containing the deleted row must force a rebuild")
+  }
+
+  /** Runs `op` twice with the state json restored to its bytes from
+    * before the first run in between — the files a crash right after
+    * the first run's data writes, and before its state commit, leaves
+    * on disk — then checks that `buildLayout` over `live` REUSES the
+    * layout: the fingerprint terms must have moved exactly once. */
+  private def assertOneCommitPoint(layout: Ivf.Layout, live: => DataFrame)(op: => Unit): Unit = {
+    val state = java.nio.file.Paths.get(layout.dir, graft.io.MutableStore.stateName)
+    val saved = java.nio.file.Files.readAllBytes(state)
+    op
+    java.nio.file.Files.write(state, saved)
+    op
+    val marker = java.nio.file.Paths.get(layout.dir, "_reuse_probe")
+    java.nio.file.Files.writeString(marker, "x")
+    Ivf.buildLayout(spark, live, layout.dir, nlist = 2, maxIter = 5)
+    assert(java.nio.file.Files.exists(marker),
+      "a retried operation must move the fingerprint once — reuse, not rebuild")
+  }
+
+  test("deleteFromLayout has one commit point: a retry after a lost state commit subtracts once") {
+    val layout = freshLayout("ivfdelcp")
+    Ivf.appendDelta(layout,
+      Seq((951L, Seq(0.03f, 0.04f))).toDF("vec_id", "embedding"), "t_b0")
+    assertOneCommitPoint(layout, corpus.filter(!col("vec_id").isin(2L, 5L))) {
+      Ivf.deleteFromLayout(layout, Seq(2L, 5L).toDF("vec_id"))
+    }
+    val got = Ivf.layoutRows(spark, layout).select("vec_id").as[Long].collect().toSet
+    assert(got == Set(1L, 3L, 4L, 6L, 951L), s"live ids: $got")
+  }
+
+  test("compactDeltas has one commit point: a retry after a lost state commit folds once") {
+    val layout = freshLayout("ivffoldcp")
+    val added = Seq((961L, Seq(0.03f, 0.04f)), (962L, Seq(0.05f, 0.02f)),
+      (963L, Seq(10.03f, 10.04f))).toDF("vec_id", "embedding")
+    Ivf.appendDelta(layout, added, "t_b0")
+    assertOneCommitPoint(layout, corpus.unionByName(added)) {
+      Ivf.compactDeltas(spark, layout)
+    }
+    val got = Ivf.layoutRows(spark, layout).select("vec_id").as[Long].collect()
+    assert(got.sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L, 6L, 961L, 962L, 963L), s"live ids: ${got.toSeq}")
   }
 
   test("tombstone interplay: deleting a delta-appended vector hides it from search") {

@@ -117,6 +117,32 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     assert(got == want, s"live ids after the batch: ${got -- want} extra, ${want -- got} missing")
   }
 
+  test("one compacting micro-batch over a live delta and tombstone runs a fixed job budget") {
+    val layout = freshLayout("ivfbudgetfold")
+    val root = new java.io.File(layout.dir).getParent
+    Ivf.appendDelta(layout, op("add")(200L, 201L).drop("op"), "pre")
+    assert(Ivf.deleteFromLayout(layout, Seq(7L).toDF("vec_id"), tag = "pre_del") == 1L)
+    land(s"$root/in", Seq(op("add")(300L to 307L: _*)
+      .unionAll(op("del")(1L, 200L, 307L))))
+
+    // one live delta at the batch's start reaches maxDeltaDirs = 1, so
+    // the batch folds it before its own append and delete
+    val batchJobs = jobsOf(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 1))
+    // measured: 11 (5 compactDeltas, 1 start, 3 appendDelta, 2 deleteFromLayout)
+    assert(batchJobs.size <= 11,
+      s"the compacting CDC micro-batch ran ${batchJobs.size} Spark jobs, budget 11:\n${batchJobs.mkString("\n")}")
+    val named = batchJobs.filter(_.endsWith("at Ivf.scala")).toSet
+    assert(named == Set("compactDeltas at Ivf.scala", "appendDelta at Ivf.scala",
+      "deleteFromLayout at Ivf.scala"),
+      s"store jobs must carry their primitive's call site: $batchJobs")
+    assert(Ivf.deltaDirCount(layout) == 1, "the fold leaves only the batch's own delta")
+
+    val got = Ivf.layoutRows(spark, Ivf.loadLayout(layout.dir))
+      .select("vec_id").as[Long].collect().toSet
+    val want = (0L until 40L).toSet -- Set(1L, 7L) ++ Set(201L) ++ (300L to 306L)
+    assert(got == want, s"live ids after the batch: ${got -- want} extra, ${want -- got} missing")
+  }
+
   test("one HNSW CDC micro-batch with adds and deletes over a live delta and tombstone stays within its job budget") {
     val root = java.nio.file.Files.createTempDirectory("hnswbudget").toString
     val dir = s"$root/layout"
@@ -203,10 +229,8 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     val delta = Ivf.deltaRows(spark, layout).get.select("vec_id")
     val (n, h, sum) = graft.io.Artifact.hashAgg(
       live.join(delta, Seq("vec_id"), "left_anti"), xxhash64(col("embedding")))
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(layout.dir, "_centroids.json")))
     assert(n == want.size - 1)
-    assert((node.get("count").asLong(), node.get("hash").asLong(), node.get("hsum").asText()) ==
-      ((n, h, sum)), "sidecar must equal the recount of the live base rows")
+    assert(Ivf.committedTerms(layout.dir) == ((n, h, sum)),
+      "the committed terms must equal the recount of the live base rows")
   }
 }
