@@ -243,23 +243,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val coldRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD_RUNS", "2").toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // dev-only A/B knob for local conf experiments ("k=v;k2=v2");
-    // the driver leaves it unset and gets exactly the config above
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.setupSession(spark)
+    // unset, the run gets exactly the local session
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';').toSeq).flatMap { kv =>
+        val i = kv.indexOf('=')
+        if (i > 0) Some(kv.take(i).trim -> kv.drop(i + 1).trim) else None
+      }
+    val spark = SparkEntry.localSession(defaultCpus = 32, extraConf)
     // absorb session/executor startup so the first query's time is real
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .write.format("noop").mode("overwrite").save()

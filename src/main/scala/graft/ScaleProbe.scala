@@ -220,16 +220,6 @@ object ScaleProbe {
         .select(col("doc_id"), col("text")).limit(2000).localCheckpoint()
       def batchN(i: Int) = seed
         .select((col("doc_id") + lit(9600000L + i * 10000L)).as("doc_id"), col("text"))
-      def du(p: java.nio.file.Path): Long = {
-        if (!java.nio.file.Files.exists(p)) return 0L
-        val w = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size(_)).sum
-        } finally w.close()
-      }
       def runPolicy(name: String, foldWhen: (String, Int) => Boolean): Unit = {
         val ident = name.replaceAll("[^A-Za-z0-9]", "")
         val dir = java.nio.file.Files
@@ -244,7 +234,8 @@ object ScaleProbe {
         for (i <- 1 to 12) {
           val tag = f"b$i%02d"
           graft.text.InvertedIndex.appendDelta(spark, dir, batchN(i), tag = tag)
-          appended += du(java.nio.file.Paths.get(s"${dir}_deltas/$tag"))
+          appended += graft.io.MutableStore.duBytes(
+            java.nio.file.Paths.get(s"${dir}_deltas/$tag"))
           if (foldWhen(dir, i)) {
             graft.text.InvertedIndex.compactDeltas(spark, table, dir, buckets = 8)
             foldIo += graft.text.InvertedIndex.baseBytes(dir) // the new version's write
@@ -409,17 +400,9 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       graft.index.Ivf.compactDeltas(spark, layout)
       val sec = (System.nanoTime() - t0) / 1e9
-      def du(p: java.nio.file.Path): Long = {
-        if (!java.nio.file.Files.exists(p)) return 0L
-        val w = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size(_)).sum
-        } finally w.close()
-      }
       val written = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("_fold_v")).map(f => du(f.toPath)).sum
+        .filter(_.getName.startsWith("_fold_v"))
+        .map(f => graft.io.MutableStore.duBytes(f.toPath)).sum
       // probe correctness across the fold, for free
       val got = graft.index.Ivf.searchLayoutDeltaAware(
         spark, layout, q.toArray, 10, nprobe = 1).collect()
@@ -971,12 +954,7 @@ object ScaleProbe {
         time(s"hnsw probe top-10 warm ($nVec vectors)")(noop(
           graft.index.Hnsw.searchLayout(spark, dirB.toString, query, 10, p)))
       } finally {
-        Seq(dirA, dirB).foreach { d =>
-          val walk = java.nio.file.Files.walk(d)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-          finally walk.close()
-        }
+        Seq(dirA, dirB).foreach(graft.io.MutableStore.deleteDir)
       }
     }
 

@@ -30,6 +30,25 @@ object SparkEntry {
     org.apache.spark.sql.graft.TopKWindowRewrite.enable(s)
   }
 
+  /** The local session the Bench, Verify and dev-tool mains run
+    * queries under: `local[cpus]` with as many shuffle partitions, UTC
+    * session time, no UI, WARN logging, then [[setupSession]]. `cpus`
+    * is `SPARK_GRAFT_CPUS`, else the caller's `defaultCpus`; `conf`
+    * entries are set last, before the session starts. */
+  def localSession(defaultCpus: Int, conf: Seq[(String, String)]): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    setupSession(spark)
+    spark
+  }
+
   /** Embedding dimensionality of the driver fixtures
     * (embeddings.parquet under /root/testdata, FIXTURES.md §B1). */
   val EmbDim = 64
@@ -1813,25 +1832,27 @@ object SparkEntry {
     }
   }
 
-  /** Per-tag scratch directories for queries that must materialize
-    * through disk (streaming sinks, envelope files). Each new request
-    * for a tag deletes that tag's PREVIOUS directory — safe because by
-    * then its contents have been fully consumed (Verify writes the
-    * returned DataFrame to parquet and Bench noop-saves it before the
-    * query is ever re-invoked) — and a JVM shutdown hook removes
-    * whatever is left, so repeated bench warm runs cannot accumulate
-    * corpus-sized temp trees. Concurrent use of the SAME tag is the
-    * caller's race, not supported; distinct tags never interact. */
+  /** Scratch directories for queries that must materialize through
+    * disk (streaming sinks and checkpoints, store copies, envelope
+    * files), keyed by tag + dataset. Every dir is a fresh temp dir, so
+    * concurrent processes never share one. [[scratchDir]] hands out a
+    * new dir per run and deletes the same key's PREVIOUS dir — safe
+    * because by then its contents have been fully consumed (Verify
+    * writes the returned DataFrame to parquet and Bench noop-saves it
+    * before the query is ever re-invoked); [[processDir]] hands out
+    * one dir per process. A JVM shutdown hook removes whatever is
+    * left, so neither repeated bench warm runs nor exited processes
+    * leave corpus-sized temp trees behind. Concurrent use of the SAME
+    * key is the caller's race, not supported; distinct keys never
+    * interact. */
   private val scratchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
   sys.addShutdownHook(scratchDirs.values.forEach(graft.io.MutableStore.deleteDir(_)))
 
-  /** Stable per-dataset key for artifacts shared across processes in
-    * java.io.tmpdir: md5 of the FULL dir path — String.hashCode can
-    * collide across dataset dirs, silently churning (or cross-reading)
-    * a store built for different data. Build races between processes
-    * are serialized by [[graft.io.Artifact.ensure]]'s dir lock. */
+  /** Stable per-dataset key: md5 of the FULL dir path — String.hashCode
+    * can collide across dataset dirs, silently churning (or
+    * cross-reading) a store built for different data. */
   private def dirKey(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
@@ -1842,12 +1863,53 @@ object SparkEntry {
     * inject into it. */
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
 
-  private def scratchDir(tag: String): String = {
-    val fresh = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-    val prev = scratchDirs.put(tag, fresh)
+  private def scratchDir(tag: String, sfDir: String): String = {
+    val fresh = newScratch(tag)
+    val prev = scratchDirs.put(s"${tag}_${dirKey(sfDir)}", fresh)
     if (prev != null) graft.io.MutableStore.deleteDir(prev)
     fresh.toString
   }
+
+  /** The one scratch dir of `tag` over `sfDir` in this process: work
+    * a query may reuse across its runs (a format round-trip's written
+    * files), removed with the other scratch dirs at exit. */
+  private def processDir(tag: String, sfDir: String): String =
+    scratchDirs.computeIfAbsent(s"${tag}_${dirKey(sfDir)}", _ => newScratch(tag)).toString
+
+  /** The dir name carries the tag only, not the dataset key: Spark
+    * abbreviates a scan's `Location` to 100 characters in the plan
+    * text, so a longer scratch path would change the plan fingerprints
+    * Bench records for the queries that read from scratch. */
+  private def newScratch(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(s"graft_$tag")
+
+  /** Build-once artifact dir of `kind` over one dataset, shared by
+    * every query and process: `<java.io.tmpdir>/graft_<kind>_<key>`.
+    * Kept across runs on purpose — the seeded builds make rebuilds
+    * identical, so bench iterations and verify reruns reuse the files;
+    * build races between processes are serialized by
+    * [[graft.io.Artifact.ensure]]'s dir lock. */
+  private[graft] def artifactDir(kind: String, sfDir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_${dirKey(sfDir)}"
+
+  /** A fresh [[scratchDir]] holding a file copy of the build-once
+    * `seed` at `<scratch>/<sub>`, for queries that MUTATE their store:
+    * each run works on its own copy while the cached original stays
+    * the pristine seed. Returns (scratch, copy). */
+  private def seedCopy(tag: String, sfDir: String, seed: String,
+      sub: String): (String, String) = {
+    val scratch = scratchDir(tag, sfDir)
+    val copy = s"$scratch/$sub"
+    graft.io.MutableStore.copyDir(
+      java.nio.file.Paths.get(seed), java.nio.file.Paths.get(copy))
+    (scratch, copy)
+  }
+
+  /** The embedding of vector `id` — the probe of most vector queries
+    * (one bounded head() action). */
+  private def vecOf(corpus: DataFrame, id: Long): Array[Float] =
+    corpus.filter(col("vec_id") === id)
+      .select(col("embedding")).head().getSeq[Float](0).toArray
 
   /** Runs a bounded streaming query (Trigger.AvailableNow) into a
     * scratch PARQUET sink via foreachBatch and hands back the sink read
@@ -1870,40 +1932,57 @@ object SparkEntry {
     * restores the session value afterwards; the streaming query
     * captures the conf at start, so later batch queries are planned
     * under the restored value. */
-  private def runStreamToParquet(s: SparkSession, result: DataFrame,
-      outputMode: String, overwrite: Boolean, tag: String,
-      statePartitions: Int = 8): DataFrame = {
-    val scratch = scratchDir(tag)
+  private def runStreamToParquet(s: SparkSession, sfDir: String,
+      result: DataFrame, outputMode: String, overwrite: Boolean,
+      tag: String, statePartitions: Int = 8): DataFrame = {
+    val scratch = scratchDir(tag, sfDir)
     val sinkDir = s"$scratch/sink"
     val saveMode = if (overwrite) "overwrite" else "append"
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = result.writeStream
-        .outputMode(outputMode)
-        .option("checkpointLocation", s"$scratch/chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(saveMode).parquet(sinkDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // measured state bound: peak rows-in-state across micro-batches
-      // (summed over a query's stateful operators). The bench emits
-      // these per round so the claimed watermark bounds are observed
-      // numbers, not a one-time spec assertion — unbounded state growth
-      // would show up here long before it OOMs a 100 TB deployment.
-      val peak = q.recentProgress.iterator
-        .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-      streamStateRows.put(tag, peak)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    try awaitStream(tag, result.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", s"$scratch/chk")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(saveMode).parquet(sinkDir)
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start())
+    finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     s.read.parquet(sinkDir)
   }
 
-  /** Peak state-store rows per streaming query tag, recorded by
-    * [[runStreamToParquet]] on every completed run — surfaced in the
-    * bench detail (`stream_state`). */
+  /** Stages a CDC replay's micro-batches under `<scratch>/in`
+    * ([[writeBatchInputs]]) and opens the file stream over them with
+    * the first batch's schema, one file — one micro-batch — per
+    * trigger. */
+  private def replayStream(s: SparkSession, scratch: String,
+      batches: Seq[DataFrame]): DataFrame = {
+    val inDir = s"$scratch/in"
+    writeBatchInputs(inDir, batches)
+    s.readStream.schema(batches.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+  }
+
+  /** Awaits a started streaming query and records its measured state
+    * bound under `name`: peak rows-in-state across micro-batches
+    * (summed over the query's stateful operators). The bench emits
+    * these per round so the claimed watermark bounds are observed
+    * numbers, not a one-time spec assertion — unbounded state growth
+    * would show up here long before it OOMs a 100 TB deployment. */
+  private def awaitStream(name: String,
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    q.awaitTermination()
+    val peak = q.recentProgress.iterator
+      .map(_.stateOperators.map(_.numRowsTotal).sum)
+      .foldLeft(0L)(math.max)
+    streamStateRows.merge(name, peak, (a: Long, b: Long) => math.max(a, b))
+  }
+
+  /** Peak state-store rows per streaming query, recorded by
+    * [[awaitStream]] — the max over every run (and, for a query that
+    * restarts from its checkpoint, every restart) in this process —
+    * surfaced in the bench detail (`stream_state`). */
   val streamStateRows =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
@@ -1963,7 +2042,7 @@ object SparkEntry {
     ivfSqCache.computeIfAbsent(dir, { _ =>
       val ivf = graft.index.Ivf.fit(corpus, nlist = 8, maxIter = 3)
       val (model, _) = sqIndex(dir, corpus)
-      val codesDir = ivfLayoutDir(dir, "ivfsq")
+      val codesDir = artifactDir("ivf_ivfsq", dir)
       graft.index.Sq.writeIvfSqCodes(ivf, model, corpus, codesDir)
       (ivf, model, codesDir)
     })
@@ -1980,36 +2059,10 @@ object SparkEntry {
     ivfPqCache.computeIfAbsent(dir, { _ =>
       val ivf = graft.index.Ivf.fit(corpus, nlist = 8, maxIter = 3)
       val (cb, _) = pqIndex(dir, corpus)
-      val codesDir = ivfLayoutDir(dir, "ivfpq")
+      val codesDir = artifactDir("ivf_ivfpq", dir)
       graft.index.Pq.writeIvfPqCodes(ivf, cb, corpus, codesDir)
       (ivf, cb, codesDir)
     })
-
-  /** Deterministic per-(sf-dir, variant) location for the persisted IVF
-    * layout: build-once, probe-many — bench iterations and verify reruns
-    * reuse the files (the seeded quantizer makes rebuilds identical). */
-  private def ivfLayoutDir(sfDir: String, variant: String): String = {
-    val key = java.lang.Integer.toHexString(sfDir.hashCode)
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${variant}_$key"
-  }
-
-  /** Recursive file copy of a build-once artifact directory into a
-    * per-run scratch copy (for queries that MUTATE their store — the
-    * streaming legs append to it, so each run works on its own copy
-    * while the cached original stays the pristine seed). */
-  private def copyDir(src: String, dst: String): Unit = {
-    val s = java.nio.file.Paths.get(src)
-    val d = java.nio.file.Paths.get(dst)
-    // Files.walk holds open directory handles until closed — leaking one
-    // per bench iteration would eventually exhaust the fd limit
-    val walk = java.nio.file.Files.walk(s)
-    try walk.forEach { p =>
-      val t = d.resolve(s.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-  }
 
   /** Write a CDC replay's micro-batch input files in ONE overlapped
     * pass instead of N serial single-file write jobs: each batch writes
@@ -2041,30 +2094,8 @@ object SparkEntry {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t0 + 2000L * i))
     }
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(stage))
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
+    graft.io.MutableStore.deleteDir(java.nio.file.Paths.get(stage))
   }
-
-  /** Delete-then-recreate a process-stable scratch dir: repeated
-    * invocations (bench iterations) reuse ONE corpus-sized working copy
-    * instead of accumulating temp dirs until /tmp fills. The pid in the
-    * key keeps concurrent processes (a Verify overlapping a Bench on the
-    * same fixtures) from deleting each other's live scratch. */
-  private def freshScratchDir(sfDir: String, variant: String): String = {
-    val dir = java.nio.file.Paths.get(
-      ivfLayoutDir(sfDir, s"${variant}_p${ProcessHandle.current().pid()}"))
-    if (java.nio.file.Files.exists(dir)) {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-    java.nio.file.Files.createDirectories(dir)
-    dir.toString
-  }
-
   /** Karp-Rabin k-gram hash for the winnowing oracle: the rolling hash
     * h(i+1) = (h(i) − c·B^(k−1))·B + c' telescopes to Σ c_j·B^(k−1−j)
     * (mod 2^64), so each hash is one flat sum with the powers of
@@ -2223,9 +2254,8 @@ object SparkEntry {
     // doc_bm25_top20's oracle verbatim — the equivalence proof.
     "sql_bm25_topk" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       val stats = graft.text.InvertedIndex.ensure(s, docs(s, dir),
-        s"graft_post_$key", s"$tmp/graft_postings_$key", buckets = 8)
+        s"graft_post_$key", artifactDir("postings", dir), buckets = 8)
       s.sql(
         s"""WITH occ AS (SELECT doc_id, dl, token, tf FROM graft_post_$key
            |             WHERE token IN ('spark', 'join', 'merge', 'window')),
@@ -2252,9 +2282,8 @@ object SparkEntry {
     // not N statements. Shares doc_bm25_batch's oracle and fixture.
     "sql_bm25_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       val stats = graft.text.InvertedIndex.ensure(s, docs(s, dir),
-        s"graft_post_$key", s"$tmp/graft_postings_$key", buckets = 8)
+        s"graft_post_$key", artifactDir("postings", dir), buckets = 8)
       val qRows = Bm25BatchQueries.flatMap { case (qid, ts) =>
         ts.distinct.map(t => s"(CAST($qid AS BIGINT), ${sqlLit(t)})") }.mkString(", ")
       val allTerms = Bm25BatchQueries.flatMap(_._2).distinct
@@ -2293,9 +2322,8 @@ object SparkEntry {
     // token-slice replay oracle.
     "sql_phrase_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       val qRows = PhraseBatchQueries.flatMap { case (qid, terms) =>
         terms.zipWithIndex.map { case (t, i) =>
           s"(CAST($qid AS BIGINT), ${sqlLit(t)}, $i, ${terms.size})" }
@@ -2327,9 +2355,8 @@ object SparkEntry {
     // rows on both engines).
     "sql_substring_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensureTrigram(s, docs(s, dir),
-        s"graft_tri_$key", s"$tmp/graft_trigram_$key", buckets = 8)
+        s"graft_tri_$key", artifactDir("trigram", dir), buckets = 8)
       docs(s, dir)
         .select(col("doc_id").cast("long").as("doc_id"),
           TextAnalysis.normalizeText(col("text")).as("n"))
@@ -2369,9 +2396,8 @@ object SparkEntry {
     // doc_proximity_batch's positions-cross-product replay oracle.
     "sql_proximity_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       val qRows = ProximityBatchQueries.map { case (qid, (ta, tb)) =>
         s"(CAST($qid AS BIGINT), ${sqlLit(ta)}, ${sqlLit(tb)})" }.mkString(", ")
       val allTerms = ProximityBatchQueries
@@ -2408,7 +2434,7 @@ object SparkEntry {
           col("embedding"))
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val layout = graft.index.Ivf.buildLayout(s, full,
-        ivfLayoutDir(dir, "batch"), nlist = 8, maxIter = 3)
+        artifactDir("ivf_batch", dir), nlist = 8, maxIter = 3)
       val qcl = corpus.filter(col("vec_id") < 3)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => r.getLong(0) -> graft.index.Ivf.probeClustersOf(
@@ -2443,8 +2469,7 @@ object SparkEntry {
     // relational signature-ranking oracle.
     "sql_hamming_batch" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val queries = e.filter(col("vec_id") < 3)
@@ -2480,9 +2505,8 @@ object SparkEntry {
     // brute-force oracle.
     "sql_phrase_search" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       s.sql(
         s"""SELECT t0.doc_id AS doc_id, CAST(count(1) AS BIGINT) AS n_occurrences
            |FROM graft_pos_$key t0 JOIN graft_pos_$key t1
@@ -2499,9 +2523,8 @@ object SparkEntry {
     // doc_substring_search's brute-force oracle.
     "sql_substring_search" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensureTrigram(s, docs(s, dir),
-        s"graft_tri_$key", s"$tmp/graft_trigram_$key", buckets = 8)
+        s"graft_tri_$key", artifactDir("trigram", dir), buckets = 8)
       docs(s, dir)
         .select(col("doc_id").cast("long").as("doc_id"),
           TextAnalysis.normalizeText(col("text")).as("n"))
@@ -2526,9 +2549,8 @@ object SparkEntry {
     // positions-cross-product oracle.
     "sql_proximity_search" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       s.sql(
         s"""SELECT a.doc_id AS doc_id, CAST(min(abs(a.pos - b.pos)) AS INT) AS min_dist
            |FROM graft_pos_$key a JOIN graft_pos_$key b ON a.doc_id = b.doc_id
@@ -2554,8 +2576,7 @@ object SparkEntry {
     "sql_fuzzy_lookup" -> ((s, dir) => {
       tbl(s, dir, "customer").select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("cust_fuzzy_v")
-      val storeDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_fuzzysql_${dirKey(dir)}"
+      val storeDir = artifactDir("fuzzysql", dir)
       graft.ops.FuzzyJoin.ensureFuzzyStore(s,
         tbl(s, dir, "customer"), storeDir, "c_custkey", "c_name")
       // the MASKED snapshot view, not a raw dir scan: base version ∪
@@ -2634,12 +2655,10 @@ object SparkEntry {
     "sql_sq8_topk" -> ((s, dir) => {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       val corpus = emb(s, dir)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sq8_${dirKey(dir)}"
+      val baseDir = artifactDir("sq8", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, baseDir)
       val model = graft.index.Sq.modelFromArtifact(s, baseDir)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       def dArr(a: Array[Double]): String =
         a.map(v => s"${v}D").mkString("array(", ",", ")")
       graft.index.Sq.codesWithDeltas(s, baseDir)
@@ -2675,8 +2694,7 @@ object SparkEntry {
     "sql_knn_batch" -> ((s, dir) => {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       val corpus = emb(s, dir)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sq8_${dirKey(dir)}"
+      val baseDir = artifactDir("sq8", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, baseDir)
       val model = graft.index.Sq.modelFromArtifact(s, baseDir)
       val queries = corpus.filter(col("vec_id") < 3)
@@ -2737,9 +2755,8 @@ object SparkEntry {
         .select((col("id") + lit(2000000L)).as("vec_id"), col("embedding"))
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val layout = graft.index.Ivf.buildLayout(s, full,
-        ivfLayoutDir(dir, "pruned"), nlist = 8, maxIter = 3)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+        artifactDir("ivf_pruned", dir), nlist = 8, maxIter = 3)
+      val query = vecOf(corpus, 0)
       val clusters = graft.index.Ivf.probeClustersOf(layout.centroids, query, 1)
       s.read.parquet(layout.dir).createOrReplaceTempView("ivf_sql_layout_v")
       corpus.createOrReplaceTempView("embeddings_ivfsql_v")
@@ -2786,7 +2803,7 @@ object SparkEntry {
           col("embedding"))
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val layout = graft.index.Ivf.buildLayout(s, full,
-        ivfLayoutDir(dir, "batch"), nlist = 8, maxIter = 3)
+        artifactDir("ivf_batch", dir), nlist = 8, maxIter = 3)
       val queries = corpus.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       graft.index.Ivf.searchLayoutBatch(s, layout, queries, k = 10, nprobe = 1)
@@ -2805,8 +2822,7 @@ object SparkEntry {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       val corpus = emb(s, dir)
       val (cb, enc) = pqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       // exact float-widened doubles: the literal round-trips losslessly
       def fArr(a: Array[Float]): String =
         a.map(v => s"${v.toDouble}D").mkString("array(", ",", ")")
@@ -2836,8 +2852,7 @@ object SparkEntry {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       val corpus = emb(s, dir)
       val (model, enc) = opqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       val qRot = graft.index.Pq.rotateQuery(model, query)
       def fArr(a: Array[Float]): String =
         a.map(v => s"${v.toDouble}D").mkString("array(", ",", ")")
@@ -3075,16 +3090,13 @@ object SparkEntry {
     // oracle replays the seed store and the single-file micro-batch:
     // verdict = min-(hamming, id) seed match within ≤ 3.
     "stream_media_dedup" -> ((s, dir) => {
-      val scratch = scratchDir("stream_media_dedup")
-      val storeDir = s"$scratch/store"
-      val seedDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_seedsig_${dirKey(dir)}"
+      val seedDir = artifactDir("seedsig", dir)
       val imgs = mediaFeatFixture(s).filter(_.modality == "image")
       Dedup.ensureSigStore(s,
         graft.multimodal.Multimodal.dHash(imgs.filter(_.media_id < 50)).toDF()
           .select(col("media_id"), col("dhash").as("sig")),
         seedDir)
-      copyDir(seedDir, storeDir)
+      val (scratch, storeDir) = seedCopy("stream_media_dedup", dir, seedDir, "store")
       // the media corpus as ONE parquet file → one deterministic
       // micro-batch (the stream_incremental replay discipline)
       val mediaPath = s"$scratch/media"
@@ -3093,11 +3105,7 @@ object SparkEntry {
       val stream = s.readStream.schema(schema).parquet(mediaPath)
       val q = graft.streaming.StreamingIngest.streamingMediaDedup(
         stream, storeDir, s"$scratch/sink", s"$scratch/chk")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_media_dedup",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_media_dedup", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .select(col("media_id"), col("is_novel"), col("near_dup_of"),
           col("hamming"))
@@ -3193,8 +3201,7 @@ object SparkEntry {
     // shared with the tokenize query below): repeat invocations pay an
     // artifact read, not a retrain.
     "corpus_bpe_merges_batch" -> ((s, dir) => {
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_bpe_${dirKey(dir)}"
+      val artDir = artifactDir("bpe", dir)
       graft.text.Bpe.ensureMergeArtifact(s, docs(s, dir), artDir,
         rounds = 8, batchSize = 16, candCap = 256)
       graft.text.Bpe.mergesFromArtifact(s, artDir)
@@ -3207,8 +3214,7 @@ object SparkEntry {
     // the full batched construction and aggregates the final symbols.
     "corpus_bpe_vocab" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_bpe_${dirKey(dir)}"
+      val artDir = artifactDir("bpe", dir)
       graft.text.Bpe.ensureMergeArtifact(s, d, artDir,
         rounds = 8, batchSize = 16, candCap = 256)
       graft.text.Bpe.vocabAfterRounds(d,
@@ -3222,8 +3228,7 @@ object SparkEntry {
     // apply.
     "doc_bpe_tokenize_batch" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_bpe_${dirKey(dir)}"
+      val artDir = artifactDir("bpe", dir)
       graft.text.Bpe.ensureMergeArtifact(s, d, artDir,
         rounds = 8, batchSize = 16, candCap = 256)
       val rounds = graft.text.Bpe.loadMergeRounds(s, artDir)
@@ -3269,8 +3274,7 @@ object SparkEntry {
     // corpus+params and shared with the tokenize query below): repeat
     // invocations pay an artifact read, not a retrain.
     "corpus_unigram_vocab" -> ((s, dir) => {
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_${dirKey(dir)}"
+      val artDir = artifactDir("unigram", dir)
       graft.text.Unigram.ensureVocabArtifact(s, docs(s, dir), artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150)
       graft.text.Unigram.vocabFromArtifact(s, artDir)
@@ -3283,8 +3287,7 @@ object SparkEntry {
     // apply.
     "doc_unigram_tokenize" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_${dirKey(dir)}"
+      val artDir = artifactDir("unigram", dir)
       graft.text.Unigram.ensureVocabArtifact(s, d, artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150)
       val vocab = graft.text.Unigram.loadVocabCounts(s, artDir)
@@ -3305,8 +3308,7 @@ object SparkEntry {
     // segmented pieces through a LEFT JOIN + coalesce(0).
     "doc_unigram_ids" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_${dirKey(dir)}"
+      val artDir = artifactDir("unigram", dir)
       graft.text.Unigram.ensureVocabArtifact(s, d, artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150)
       val vocab = graft.text.Unigram.loadVocabCounts(s, artDir)
@@ -3329,8 +3331,7 @@ object SparkEntry {
     // probe-or-expand kernel run once per DISTINCT word.
     "doc_unigram_byte_fallback" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_${dirKey(dir)}"
+      val artDir = artifactDir("unigram", dir)
       graft.text.Unigram.ensureVocabArtifact(s, d, artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150)
       val vocab = graft.text.Unigram.loadVocabCounts(s, artDir)
@@ -3368,27 +3369,19 @@ object SparkEntry {
     // batch packGreedy — the seq_pack oracle replays it.
     "stream_pack_ids" -> ((s, dir) => {
       val d = docs(s, dir)
-      val scratch = freshScratchDir(dir, "streampack")
+      val scratch = scratchDir("streampack", dir)
       val inDir = s"$scratch/in"
       val threshold = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      var stateRows = 0L
       d.filter(col("doc_id") <= threshold).coalesce(1)
         .write.mode("overwrite").parquet(inDir)
-      val q1 = graft.streaming.StreamPack.streamingPackIds(
+      awaitStream("stream_pack_ids", graft.streaming.StreamPack.streamingPackIds(
         s.readStream.schema(d.schema).parquet(inDir),
-        s"$scratch/sink", s"$scratch/chk", budget = 256L, nParts = 8)
-      q1.awaitTermination()
-      stateRows = math.max(stateRows, q1.recentProgress.iterator
-        .map(p => p.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max))
+        s"$scratch/sink", s"$scratch/chk", budget = 256L, nParts = 8))
       d.filter(col("doc_id") > threshold).coalesce(1)
         .write.mode("append").parquet(inDir)
-      val q2 = graft.streaming.StreamPack.streamingPackIds(
+      awaitStream("stream_pack_ids", graft.streaming.StreamPack.streamingPackIds(
         s.readStream.schema(d.schema).parquet(inDir),
-        s"$scratch/sink", s"$scratch/chk", budget = 256L, nParts = 8)
-      q2.awaitTermination()
-      stateRows = math.max(stateRows, q2.recentProgress.iterator
-        .map(p => p.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max))
-      SparkEntry.streamStateRows.put("stream_pack_ids", stateRows)
+        s"$scratch/sink", s"$scratch/chk", budget = 256L, nParts = 8))
       s.read.parquet(s"$scratch/sink")
         .select(col("doc_id"), col("part"), col("bin_idx"))
         .orderBy(col("doc_id"))
@@ -3396,25 +3389,17 @@ object SparkEntry {
 
     "stream_tokenize_ids" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_spcov_${dirKey(dir)}"
+      val artDir = artifactDir("unigram_spcov", dir)
       graft.text.Unigram.ensureVocabArtifact(s, d, artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150,
         marker = true, coveragePermyriad = 9800)
       val vocab = graft.text.Unigram.loadVocabCounts(s, artDir)
-      val scratch = freshScratchDir(dir, "streamtok")
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val scratch = scratchDir("streamtok", dir)
+      val stream = replayStream(s, scratch, Seq(
         d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1)))
-      val stream = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingTokenizeIds(
         stream, vocab, s"$scratch/sink", s"$scratch/chk")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_tokenize_ids",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_tokenize_ids", q)
       val lo = graft.text.Unigram.ByteBase
       val hi = lo + graft.text.Unigram.BytePieces - 1
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
@@ -3432,24 +3417,16 @@ object SparkEntry {
     // overwrite sink, zero executor state, replay-deterministic.
     "stream_lr_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_logreg_${dirKey(dir)}"
+      val artDir = artifactDir("logreg", dir)
       graft.text.LogReg.ensureModelArtifact(s, d, artDir,
         labelLang = "en", vocabK = 16, iters = 24)
       val (vocab, w) = graft.text.LogReg.loadModel(s, artDir)
-      val scratch = freshScratchDir(dir, "streamlr")
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val scratch = scratchDir("streamlr", dir)
+      val stream = replayStream(s, scratch, Seq(
         d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1)))
-      val stream = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingClassifierScores(
         stream, vocab, w, s"$scratch/sink", s"$scratch/chk")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_lr_score",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_lr_score", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .select(col("doc_id"), col("score_micro"), col("pred"))
         .orderBy(col("doc_id"))
@@ -3465,8 +3442,7 @@ object SparkEntry {
     // slots go to useful pieces; coverage of the text stays total).
     "doc_unigram_coverage" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_cov_${dirKey(dir)}"
+      val artDir = artifactDir("unigram_cov", dir)
       graft.text.Unigram.ensureVocabArtifact(s, d, artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150, coveragePermyriad = 9800)
       val vocab = graft.text.Unigram.loadVocabCounts(s, artDir)
@@ -3539,8 +3515,7 @@ object SparkEntry {
     // a hash mismatch here.
     "doc_unigram_detokenize" -> ((s, dir) => {
       val x = extDocs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_sp_${dirKey(dir)}"
+      val artDir = artifactDir("unigram_sp", dir)
       graft.text.Unigram.ensureVocabArtifact(s, docs(s, dir), artDir,
         rounds = 2, maxPieceLen = 4, topMulti = 150, marker = true)
       val vocab = graft.text.Unigram.loadVocabCounts(s, artDir)
@@ -3563,8 +3538,7 @@ object SparkEntry {
     // persisted merge artifact; the oracle replays every round's
     // pair/single counts and the float64 argmax exactly.
     "corpus_wordpiece_merges" -> ((s, dir) => {
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_wordpiece_${dirKey(dir)}"
+      val artDir = artifactDir("wordpiece", dir)
       graft.text.WordPiece.ensureMergeArtifact(s, docs(s, dir), artDir,
         numMerges = 8)
       graft.text.WordPiece.mergesFromArtifact(s, artDir)
@@ -3580,8 +3554,7 @@ object SparkEntry {
     // DISTINCT word (WordPieceExpr), positional rejoin.
     "doc_wordpiece_tokenize" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_wordpiece_${dirKey(dir)}"
+      val artDir = artifactDir("wordpiece", dir)
       graft.text.WordPiece.ensureMergeArtifact(s, d, artDir, numMerges = 8)
       val vocab = graft.text.WordPiece.vocabFromArtifact(s, artDir)
       graft.text.WordPiece.tokenize(
@@ -3603,8 +3576,7 @@ object SparkEntry {
     // the word cache.
     "doc_wordpiece_ids" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_wordpiece_${dirKey(dir)}"
+      val artDir = artifactDir("wordpiece", dir)
       graft.text.WordPiece.ensureMergeArtifact(s, d, artDir, numMerges = 8)
       val vocab = graft.text.WordPiece.vocabFromArtifact(s, artDir)
       graft.text.WordPiece.tokenIds(extDocs(s, dir), vocab)
@@ -3627,8 +3599,7 @@ object SparkEntry {
     "doc_wordpiece_detokenize" -> ((s, dir) => {
       val d = docs(s, dir)
       val x = extDocs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_wordpiece_${dirKey(dir)}"
+      val artDir = artifactDir("wordpiece", dir)
       graft.text.WordPiece.ensureMergeArtifact(s, d, artDir, numMerges = 8)
       val vocab = graft.text.WordPiece.vocabFromArtifact(s, artDir)
       graft.text.WordPiece.tokenIds(x, vocab)
@@ -3878,8 +3849,7 @@ object SparkEntry {
       // the phrase set is a persisted artifact (fingerprint sidecar,
       // build once / probe many): repeat rewrites pay the narrow fold
       // (~the corpus_split precedent), not the corpus-wide PMI derive
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_phrases_${dirKey(dir)}"
+      val artDir = artifactDir("phrases", dir)
       TextAnalysis.ensurePhraseArtifact(s, docs(s, dir), artDir,
         minCount = 5L, topK = 20, broadcastUnigrams = true)
       TextAnalysis.phraseRewriteWithArtifact(s, docs(s, dir), artDir)
@@ -3914,9 +3884,8 @@ object SparkEntry {
     // indexed path equals the corpus-scan path.
     "doc_bm25_indexed" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       val stats = graft.text.InvertedIndex.ensure(s, docs(s, dir),
-        s"graft_post_$key", s"$tmp/graft_postings_$key", buckets = 8)
+        s"graft_post_$key", artifactDir("postings", dir), buckets = 8)
       graft.text.InvertedIndex.bm25Search(s, s"graft_post_$key", stats,
         terms = Seq("spark", "join", "merge", "window"))
     }),
@@ -3931,11 +3900,10 @@ object SparkEntry {
     // a broadcast fan-out, not a scan.
     "doc_bm25_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensure(s, docs(s, dir),
-        s"graft_post_$key", s"$tmp/graft_postings_$key", buckets = 8)
+        s"graft_post_$key", artifactDir("postings", dir), buckets = 8)
       graft.text.InvertedIndex.bm25SearchBatch(s, s"graft_post_$key",
-        s"$tmp/graft_postings_$key", Bm25BatchQueries, topN = 10)
+        artifactDir("postings", dir), Bm25BatchQueries, topN = 10)
     }),
 
     // BATCHED phrase search — N phrases served by ONE delta-aware
@@ -3947,11 +3915,10 @@ object SparkEntry {
     // probe changes nothing.
     "doc_phrase_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       graft.text.InvertedIndex.phraseSearchBatch(s, s"graft_pos_$key",
-        s"$tmp/graft_positional_$key", PhraseBatchQueries)
+        artifactDir("positional", dir), PhraseBatchQueries)
     }),
 
     // Exact PHRASE search over a persisted positional index (IIR §2.4):
@@ -3961,9 +3928,8 @@ object SparkEntry {
     // token-slice oracle proves the index path equals the definition.
     "doc_phrase_search" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       graft.text.InvertedIndex.phraseSearch(s, s"graft_pos_$key",
           Seq("hash", "join"))
         .orderBy(col("doc_id"))
@@ -3974,9 +3940,8 @@ object SparkEntry {
     // operator is a post-filter on this. Per-doc cost tf_a x tf_b.
     "doc_proximity_search" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       graft.text.InvertedIndex.proximitySearch(s, s"graft_pos_$key",
           "vector", "stream")
         .orderBy(col("doc_id"))
@@ -3988,11 +3953,10 @@ object SparkEntry {
     // join runs over that frame. Per-pair replay oracle.
     "doc_proximity_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensurePositional(s, docs(s, dir),
-        s"graft_pos_$key", s"$tmp/graft_positional_$key", buckets = 8)
+        s"graft_pos_$key", artifactDir("positional", dir), buckets = 8)
       graft.text.InvertedIndex.proximitySearchBatch(s, s"graft_pos_$key",
-        s"$tmp/graft_positional_$key", ProximityBatchQueries)
+        artifactDir("positional", dir), ProximityBatchQueries)
     }),
 
     // BATCHED Hamming search — N query signatures through ONE pass
@@ -4003,8 +3967,7 @@ object SparkEntry {
     // signature ranking relationally.
     "knn_hamming_batch" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val queries = e.filter(col("vec_id") < 3)
@@ -4031,18 +3994,16 @@ object SparkEntry {
     // rows on both engines.
     "doc_substring_batch" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensureTrigram(s, docs(s, dir),
-        s"graft_tri_$key", s"$tmp/graft_trigram_$key", buckets = 8)
+        s"graft_tri_$key", artifactDir("trigram", dir), buckets = 8)
       graft.text.InvertedIndex.substringSearchBatch(s, s"graft_tri_$key",
-        s"$tmp/graft_trigram_$key", docs(s, dir), SubstringBatchQueries)
+        artifactDir("trigram", dir), docs(s, dir), SubstringBatchQueries)
     }),
 
     "doc_substring_search" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensureTrigram(s, docs(s, dir),
-        s"graft_tri_$key", s"$tmp/graft_trigram_$key", buckets = 8)
+        s"graft_tri_$key", artifactDir("trigram", dir), buckets = 8)
       graft.text.InvertedIndex.substringSearch(s, s"graft_tri_$key",
           docs(s, dir), needle = "merge batch")
         .orderBy(col("doc_id"))
@@ -4113,7 +4074,7 @@ object SparkEntry {
       val counts = stream.join(broadcast(dim), "user_id")
         .groupBy(col("c_nationkey"), col("event_type"))
         .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
-      runStreamToParquet(s, counts, outputMode = "complete",
+      runStreamToParquet(s, dir, counts, outputMode = "complete",
           overwrite = true, tag = "stream_enrich")
         .orderBy(col("c_nationkey"), col("event_type"))
     }),
@@ -4143,7 +4104,7 @@ object SparkEntry {
         col("c_user") === col("p_user") &&
           col("pts") >= col("cts") &&
           col("pts") <= col("cts") + expr("INTERVAL 1 HOUR"))
-      runStreamToParquet(s, joined, outputMode = "append",
+      runStreamToParquet(s, dir, joined, outputMode = "append",
           overwrite = false, tag = "stream_join")
         .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"),
           unix_micros(col("cts")).as("click_us"),
@@ -4170,7 +4131,7 @@ object SparkEntry {
         .as[graft.streaming.Sessionize.Event]
       val sess = graft.streaming.Sessionize.sessions(ev,
         gapMs = 1800000L, watermarkDelay = "0 seconds").toDF()
-      runStreamToParquet(s, sess, outputMode = "append",
+      runStreamToParquet(s, dir, sess, outputMode = "append",
           overwrite = false, tag = "stream_sessions")
         .select(col("user_id"),
           unix_micros(col("start")).as("start_us"),
@@ -4218,8 +4179,8 @@ object SparkEntry {
 
     // O1 init: create an empty fixed-dim database (vectordb.cpp:23-36),
     // reload it, report its observable state.
-    "vec_init" -> ((s, _) => {
-      val tmp = scratchDir("init")
+    "vec_init" -> ((s, dir) => {
+      val tmp = scratchDir("init", dir)
       VectorStore.init(s, s"$tmp/db.json", EmbDim)
       val reloaded = VectorStore.load(s, s"$tmp/db.json")
       import s.implicits._
@@ -4243,7 +4204,7 @@ object SparkEntry {
         .select(col("vec_id").as("id"), col("embedding"),
           concat(lit("{\"label\": "), col("label"), lit("}")).as("metadata"))
         .as[VectorRecord]
-      val tmp = scratchDir("env")
+      val tmp = scratchDir("env", dir)
       Envelope.saveDataset(EmbDim, orig.count() + 1, orig, s"$tmp/db.json")
       val (_, _, loaded) = Envelope.loadDataset(s, s"$tmp/db.json").get
       val joined = loaded.toDF("id", "embedding2", "metadata2")
@@ -4300,8 +4261,7 @@ object SparkEntry {
     // recomputes from the PARQUET original — any loss or corruption in
     // the ORC path breaks the hash match.
     "orc_roundtrip" -> ((s, dir) => {
-      val tmp = ivfLayoutDir(dir,
-        s"orcwork_p${ProcessHandle.current().pid()}") + "/docs"
+      val tmp = processDir("orcwork", dir) + "/docs"
       docs(s, dir).write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .withColumn("h",
@@ -4321,8 +4281,7 @@ object SparkEntry {
     // in PlanAuditSpec; checksum recomputed by the oracle from the
     // unpartitioned original.
     "events_partitioned_prune" -> ((s, dir) => {
-      val tmp = ivfLayoutDir(dir,
-        s"evpart_p${ProcessHandle.current().pid()}") + "/events"
+      val tmp = processDir("evpart", dir) + "/events"
       // _SUCCESS (written last) gates reuse, so a crashed partial write
       // is re-done rather than read
       if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
@@ -4350,8 +4309,7 @@ object SparkEntry {
     // from the parquet original — a lossy writer, reader, or null/empty
     // conflation would shift it.
     "csv_roundtrip" -> ((s, dir) => {
-      val tmp = ivfLayoutDir(dir,
-        s"csvwork_p${ProcessHandle.current().pid()}") + "/docs"
+      val tmp = processDir("csvwork", dir) + "/docs"
       // explicit RFC-4180 escape (doubled quotes) on BOTH sides plus a
       // multiLine read: the default reader splits records on raw
       // newlines, so any document containing '\n' would break the
@@ -4381,8 +4339,7 @@ object SparkEntry {
     // inference scan), and reduced to checksums the oracle replays from
     // the parquet the XML was derived from.
     "xml_roundtrip" -> ((s, dir) => {
-      val tmp = ivfLayoutDir(dir,
-        s"xmlwork_p${ProcessHandle.current().pid()}") + "/events"
+      val tmp = processDir("xmlwork", dir) + "/events"
       events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           floor(col("value") * 100.0 + 0.5).cast("long").as("value_cents"))
@@ -4702,9 +4659,8 @@ object SparkEntry {
     "knn_ivf_top10" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val layout = graft.index.Ivf.buildLayout(s, corpus,
-        ivfLayoutDir(dir, "full"), nlist = 8, maxIter = 3)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+        artifactDir("ivf_full", dir), nlist = 8, maxIter = 3)
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayout(s, layout, query, k = 10, nprobe = 8)
     }),
 
@@ -4721,9 +4677,8 @@ object SparkEntry {
         .select((col("id") + lit(2000000L)).as("vec_id"), col("embedding"))
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val layout = graft.index.Ivf.buildLayout(s, full,
-        ivfLayoutDir(dir, "pruned"), nlist = 8, maxIter = 3)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+        artifactDir("ivf_pruned", dir), nlist = 8, maxIter = 3)
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayout(s, layout, query, k = 10, nprobe = 1)
     }),
 
@@ -4742,9 +4697,8 @@ object SparkEntry {
         .select((col("id") + lit(2000000L)).as("vec_id"), col("embedding"))
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val layout = graft.index.Ivf.buildLayout(s, full,
-        ivfLayoutDir(dir, "pruned"), nlist = 8, maxIter = 3)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+        artifactDir("ivf_pruned", dir), nlist = 8, maxIter = 3)
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayoutHnswCoarse(s, layout, query, k = 10, nprobe = 1)
     }),
 
@@ -4764,8 +4718,7 @@ object SparkEntry {
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val index = graft.index.Ivf.fit(full, nlist = 8, maxIter = 3)
       val spilled = graft.index.Ivf.assignSpilled(index, full, spill = 2)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchSpilled(index, spilled, query, k = 10, nprobe = 1)
     }),
 
@@ -4784,9 +4737,8 @@ object SparkEntry {
       val full = corpus.select(col("vec_id"), col("embedding"), col("label"))
         .union(planted)
       val layout = graft.index.Ivf.buildLayout(s, full,
-        ivfLayoutDir(dir, "hybrid"), nlist = 8, maxIter = 3)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+        artifactDir("ivf_hybrid", dir), nlist = 8, maxIter = 3)
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayoutWhere(s, layout, query, k = 10, nprobe = 1,
           col("label") === 3)
         .select(col("vec_id"), col("dist"))
@@ -4803,16 +4755,14 @@ object SparkEntry {
     "knn_ivf_append" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val base = graft.index.Ivf.buildLayout(s, corpus,
-        ivfLayoutDir(dir, "appendbase"), nlist = 8, maxIter = 3)
-      val tmp = freshScratchDir(dir, "appendwork")
-      copyDir(base.dir, tmp)
+        artifactDir("ivf_appendbase", dir), nlist = 8, maxIter = 3)
+      val (_, tmp) = seedCopy("appendwork", dir, base.dir, "layout")
       val layout = graft.index.Ivf.loadLayout(tmp)
       val planted = corpus.filter(col("vec_id") === 0)
         .crossJoin(s.range(10))
         .select((col("id") + lit(4000000L)).as("vec_id"), col("embedding"), col("label"))
       graft.index.Ivf.appendToLayout(layout, planted)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayout(s, layout, query, k = 10, nprobe = 1)
     }),
 
@@ -4838,30 +4788,19 @@ object SparkEntry {
     "stream_hnsw_append" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val p = hnswParams(corpus)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_${dirKey(dir)}"
+      val baseDir = artifactDir("hnsw", dir)
       graft.index.Hnsw.ensureLayout(corpus, baseDir, p)
-      val scratch = freshScratchDir(dir, "streamhnsw")
-      val layoutDir = s"$scratch/layout_root"
-      copyDir(baseDir, layoutDir)
+      val (scratch, layoutDir) = seedCopy("streamhnsw", dir, baseDir, "layout_root")
       val planted = corpus.filter(col("vec_id") === 0)
         .crossJoin(s.range(10))
         .select((col("id") + lit(4300000L)).as("vec_id"), col("embedding"))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         planted.filter(col("vec_id") < 4300005L),
         planted.filter(col("vec_id") >= 4300005L)))
-      val stream = s.readStream.schema(planted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingHnswAppend(
         stream, layoutDir, s"$scratch/chk", p)
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_hnsw_append",
-        q.recentProgress.iterator
-          .map(pr => pr.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      awaitStream("stream_hnsw_append", q)
+      val query = vecOf(corpus, 0)
       graft.index.Hnsw.searchLayoutDeltaAware(s, layoutDir, query, k = 10, p)
     }),
 
@@ -4876,10 +4815,8 @@ object SparkEntry {
     "stream_ivf_delete" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val base = graft.index.Ivf.buildLayout(s, corpus,
-        ivfLayoutDir(dir, "appendbase"), nlist = 8, maxIter = 3)
-      val scratch = freshScratchDir(dir, "streamivfmut")
-      val layoutDir = s"$scratch/layout"
-      copyDir(base.dir, layoutDir)
+        artifactDir("ivf_appendbase", dir), nlist = 8, maxIter = 3)
+      val (scratch, layoutDir) = seedCopy("streamivfmut", dir, base.dir, "layout")
       // add rows carry the layout's FULL base schema (incl. label)
       def op(o: String)(df: DataFrame): DataFrame =
         df.select(lit(o).as("op"), col("vec_id"), col("embedding"), col("label"))
@@ -4889,15 +4826,11 @@ object SparkEntry {
           col("label"))
       val b0 = op("add")(planted)
       val b1 = op("del")(planted.filter(col("vec_id") < 5100005L))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1))
       val q = graft.streaming.StreamingIngest.streamingIvfMutations(
         stream, layoutDir, s"$scratch/chk")
-      q.awaitTermination()
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      awaitStream("stream_ivf_delete", q)
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayoutDeltaAware(s,
         graft.index.Ivf.loadLayout(layoutDir), query, k = 10, nprobe = 1)
     }),
@@ -4910,12 +4843,9 @@ object SparkEntry {
     "stream_hnsw_delete" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val p = hnswParams(corpus)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_${dirKey(dir)}"
+      val baseDir = artifactDir("hnsw", dir)
       graft.index.Hnsw.ensureLayout(corpus, baseDir, p)
-      val scratch = freshScratchDir(dir, "streamhnswmut")
-      val layoutDir = s"$scratch/layout_root"
-      copyDir(baseDir, layoutDir)
+      val (scratch, layoutDir) = seedCopy("streamhnswmut", dir, baseDir, "layout_root")
       def op(o: String)(df: DataFrame): DataFrame =
         df.select(lit(o).as("op"), col("vec_id"), col("embedding"))
       val planted = corpus.filter(col("vec_id") === 0)
@@ -4925,15 +4855,11 @@ object SparkEntry {
       val b1 = op("del")(planted.filter(col("vec_id") < 5200002L))
         .unionAll(op("del")(corpus.filter(col("vec_id").isin(1L, 2L))
           .select(col("vec_id"), col("embedding"))))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1))
       val q = graft.streaming.StreamingIngest.streamingHnswMutations(
         stream, layoutDir, s"$scratch/chk", p)
-      q.awaitTermination()
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      awaitStream("stream_hnsw_delete", q)
+      val query = vecOf(corpus, 0)
       graft.index.Hnsw.searchLayoutDeltaAware(s, layoutDir, query, k = 10, p)
     }),
 
@@ -4948,31 +4874,20 @@ object SparkEntry {
     // which is exactly what the brute-force oracle computes.
     "stream_sq8_append" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sq8_${dirKey(dir)}"
+      val baseDir = artifactDir("sq8", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, baseDir)
-      val scratch = freshScratchDir(dir, "streamsq8")
-      val codesDir = s"$scratch/sq8"
-      copyDir(baseDir, codesDir)
+      val (scratch, codesDir) = seedCopy("streamsq8", dir, baseDir, "sq8")
       val planted = corpus.filter(col("vec_id") === 0)
         .crossJoin(s.range(10))
         .select((col("id") + lit(4400000L)).as("vec_id"), col("embedding"))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         planted.filter(col("vec_id") < 4400005L),
         planted.filter(col("vec_id") >= 4400005L)))
-      val stream = s.readStream.schema(planted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingSq8Append(
         stream, codesDir, s"$scratch/chk", maxDeltaDirs = 1)
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_sq8_append",
-        q.recentProgress.iterator
-          .map(pr => pr.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_sq8_append", q)
       val model = graft.index.Sq.modelFromArtifact(s, codesDir)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Sq.searchRerank(
         graft.index.Sq.codesWithDeltas(s, codesDir),
         corpus.select(col("vec_id"), col("embedding")).unionAll(planted),
@@ -4991,35 +4906,26 @@ object SparkEntry {
     // compaction, stat merging, and probe all exact.
     "stream_bm25_append" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val scratch = freshScratchDir(dir, "streambm25")
-      val idxDir = s"$scratch/postings"
       val table = s"graft_poststream_${dirKey(dir)}"
       s.sql(s"DROP TABLE IF EXISTS $table") // stale catalog entry from a prior replay
-      // shared-base copy (the stream_phrase_append device): build the
-      // base ONCE in the per-sf location every BM25 query shares, copy
-      // files, and let the sidecar tier re-register metadata-only — a
-      // replay pays one dir copy, not a corpus-sized tokenize
-      val tmp = System.getProperty("java.io.tmpdir")
+      // shared-base copy ([[seedCopy]]): build the base ONCE in the
+      // per-sf location every BM25 query shares, copy its files, and
+      // let the sidecar tier re-register metadata-only — a replay pays
+      // one dir copy, not a corpus-sized tokenize
       graft.text.InvertedIndex.ensure(s, corpus,
-        s"graft_post_${dirKey(dir)}", s"$tmp/graft_postings_${dirKey(dir)}", buckets = 8)
-      copyDir(s"$tmp/graft_postings_${dirKey(dir)}", idxDir)
+        s"graft_post_${dirKey(dir)}", artifactDir("postings", dir), buckets = 8)
+      val (scratch, idxDir) = seedCopy("streambm25", dir,
+        artifactDir("postings", dir), "postings")
       graft.text.InvertedIndex.ensure(s, corpus, table, idxDir, buckets = 8)
       val planted = corpus.filter(col("doc_id") < 14)
         .select((col("doc_id") + lit(8000000L)).as("doc_id"), col("text"))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         planted.filter(col("doc_id") < 8000008L),
         planted.filter(col("doc_id") >= 8000008L && col("doc_id") < 8000012L),
         planted.filter(col("doc_id") >= 8000012L)))
-      val stream = s.readStream.schema(planted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingPostingsAppend(
         stream, table, idxDir, s"$scratch/chk", buckets = 8, maxDeltaDirs = 2)
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_bm25_append",
-        q.recentProgress.iterator
-          .map(pr => pr.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_bm25_append", q)
       graft.text.InvertedIndex.bm25SearchDeltaAware(s, table, idxDir,
         terms = Seq("spark", "join", "merge", "window"))
     }),
@@ -5036,39 +4942,30 @@ object SparkEntry {
     // positional intersection over mixed base/delta postings all exact.
     "stream_phrase_append" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val scratch = freshScratchDir(dir, "streamphrase")
-      val idxDir = s"$scratch/positional"
       val table = s"graft_posstream_${dirKey(dir)}"
       s.sql(s"DROP TABLE IF EXISTS $table") // stale catalog entry from a prior replay
       // build the base ONCE in the shared per-sf location (the same
       // artifact doc_phrase_search probes), copy files into the
       // scratch dir, and let the sidecar tier re-register over the
-      // copy metadata-only — the stream_hnsw_append device: a replay
-      // pays one dir copy, not a corpus-sized rebuild
-      val tmp = System.getProperty("java.io.tmpdir")
+      // copy metadata-only ([[seedCopy]]): a replay pays one dir
+      // copy, not a corpus-sized rebuild
       graft.text.InvertedIndex.ensurePositional(s, corpus,
-        s"graft_pos_${dirKey(dir)}", s"$tmp/graft_positional_${dirKey(dir)}", buckets = 8)
-      copyDir(s"$tmp/graft_positional_${dirKey(dir)}", idxDir)
+        s"graft_pos_${dirKey(dir)}", artifactDir("positional", dir), buckets = 8)
+      val (scratch, idxDir) = seedCopy("streamphrase", dir,
+        artifactDir("positional", dir), "positional")
       graft.text.InvertedIndex.ensurePositional(s, corpus, table, idxDir, buckets = 8)
       val planted = corpus
         .filter(graft.text.TextAnalysis.normalizeText(col("text")).contains("hash join"))
         .orderBy(col("doc_id")).limit(12)
         .select((col("doc_id") + lit(8200000L)).as("doc_id"), col("text"))
         .localCheckpoint() // 12 rows; reused by the three batch writes
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         planted.filter(col("doc_id") % 3 === 0),
         planted.filter(col("doc_id") % 3 === 1),
         planted.filter(col("doc_id") % 3 === 2)))
-      val stream = s.readStream.schema(planted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingPositionalAppend(
         stream, table, idxDir, s"$scratch/chk", buckets = 8, maxDeltaDirs = 2)
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_phrase_append",
-        q.recentProgress.iterator
-          .map(pr => pr.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_phrase_append", q)
       graft.text.InvertedIndex.phraseSearchDeltaAware(s, table, idxDir,
           Seq("hash", "join"))
         .orderBy(col("doc_id"))
@@ -5084,37 +4981,27 @@ object SparkEntry {
     // oracle over documents ∪ planted.
     "stream_substring_append" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val scratch = freshScratchDir(dir, "streamtri")
-      val idxDir = s"$scratch/trigram"
       val table = s"graft_tristream_${dirKey(dir)}"
       s.sql(s"DROP TABLE IF EXISTS $table") // stale catalog entry from a prior replay
       // shared-base copy (see stream_phrase_append): the trigram base
       // is the expensive one (~10x token posting volume) — a fresh
       // per-replay build measured 18 s at sf0.1 vs ~2 s copied
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensureTrigram(s, corpus,
-        s"graft_tri_${dirKey(dir)}", s"$tmp/graft_trigram_${dirKey(dir)}", buckets = 8)
-      copyDir(s"$tmp/graft_trigram_${dirKey(dir)}", idxDir)
+        s"graft_tri_${dirKey(dir)}", artifactDir("trigram", dir), buckets = 8)
+      val (scratch, idxDir) = seedCopy("streamtri", dir, artifactDir("trigram", dir), "trigram")
       graft.text.InvertedIndex.ensureTrigram(s, corpus, table, idxDir, buckets = 8)
       val planted = corpus
         .filter(graft.text.TextAnalysis.normalizeText(col("text")).contains("merge batch"))
         .orderBy(col("doc_id")).limit(12)
         .select((col("doc_id") + lit(8300000L)).as("doc_id"), col("text"))
         .localCheckpoint() // ≤ 12 rows; reused by the three batch writes
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         planted.filter(col("doc_id") % 3 === 0),
         planted.filter(col("doc_id") % 3 === 1),
         planted.filter(col("doc_id") % 3 === 2)))
-      val stream = s.readStream.schema(planted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingTrigramAppend(
         stream, table, idxDir, s"$scratch/chk", buckets = 8, maxDeltaDirs = 2)
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_substring_append",
-        q.recentProgress.iterator
-          .map(pr => pr.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_substring_append", q)
       graft.text.InvertedIndex.substringSearchDeltaAware(s, table, idxDir,
           corpus.unionAll(planted), needle = "merge batch")
         .orderBy(col("doc_id"))
@@ -5134,15 +5021,13 @@ object SparkEntry {
     // ordering, the stat decrements, and the fold all exact.
     "stream_bm25_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val scratch = freshScratchDir(dir, "streambm25mut")
-      val idxDir = s"$scratch/postings"
       val table = s"graft_postmut_${dirKey(dir)}"
       s.sql(s"DROP TABLE IF EXISTS $table") // stale catalog entry from a prior replay
       // shared-base copy — see stream_bm25_append
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.text.InvertedIndex.ensure(s, corpus,
-        s"graft_post_${dirKey(dir)}", s"$tmp/graft_postings_${dirKey(dir)}", buckets = 8)
-      copyDir(s"$tmp/graft_postings_${dirKey(dir)}", idxDir)
+        s"graft_post_${dirKey(dir)}", artifactDir("postings", dir), buckets = 8)
+      val (scratch, idxDir) = seedCopy("streambm25mut", dir,
+        artifactDir("postings", dir), "postings")
       graft.text.InvertedIndex.ensure(s, corpus, table, idxDir, buckets = 8)
       def op(o: String)(df: DataFrame): DataFrame =
         df.select(lit(o).as("op"), col("doc_id"), col("text"))
@@ -5153,13 +5038,10 @@ object SparkEntry {
         .unionAll(op("del")(planted.filter(col("doc_id") === 8500001L)))
       val b2 = op("add")(corpus.filter(col("doc_id") === 9L)) // revival
       val b3 = op("add")(planted.filter(col("doc_id") >= 8500006L))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1, b2, b3))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1, b2, b3))
       val q = graft.streaming.StreamingIngest.streamingPostingsMutations(
         stream, table, idxDir, s"$scratch/chk", buckets = 8, maxDeltaDirs = 2)
-      q.awaitTermination()
+      awaitStream("stream_bm25_delete", q)
       graft.text.InvertedIndex.bm25SearchDeltaAware(s, table, idxDir,
         terms = Seq("spark", "join", "merge", "window"))
     }),
@@ -5174,14 +5056,10 @@ object SparkEntry {
     // rebuilds from scratch.
     "stream_sq8_delete" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sq8_${dirKey(dir)}"
+      val baseDir = artifactDir("sq8", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, baseDir)
-      val scratch = freshScratchDir(dir, "streamsq8mut")
-      val codesDir = s"$scratch/sq8"
-      copyDir(baseDir, codesDir)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val (scratch, codesDir) = seedCopy("streamsq8mut", dir, baseDir, "sq8")
+      val query = vecOf(corpus, 0)
       // bounded: the exact top-4 comes back, self drops out -> 3 ids
       val delIds = VectorSearch.knnExact(corpus, query.toSeq, 4)
         .select(col("vec_id")).collect().map(_.getLong(0))
@@ -5197,13 +5075,10 @@ object SparkEntry {
         .unionAll(op("del")(planted.filter(col("vec_id") === 4800001L)))
       val b2 = op("add")(base2.filter(col("vec_id") === delIds.head)) // revival
       val b3 = op("add")(planted.filter(col("vec_id") >= 4800004L))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1, b2, b3))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1, b2, b3))
       val q = graft.streaming.StreamingIngest.streamingSq8Mutations(
         stream, codesDir, s"$scratch/chk", maxDeltaDirs = 2)
-      q.awaitTermination()
+      awaitStream("stream_sq8_delete", q)
       val model = graft.index.Sq.modelFromArtifact(s, codesDir)
       val live = base2
         .filter(!col("vec_id").isin(delIds.tail: _*))
@@ -5225,11 +5100,10 @@ object SparkEntry {
       import s.implicits._
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       val stores = Seq(
-        ("bm25", s"graft_bm25del_$key", s"$tmp/graft_bm25del_$key"),
-        ("positional", s"graft_posdel_$key", s"$tmp/graft_posdel_$key"),
-        ("trigram", s"graft_tridel_$key", s"$tmp/graft_tridel_$key"))
+        ("bm25", s"graft_bm25del_$key", artifactDir("bm25del", dir)),
+        ("positional", s"graft_posdel_$key", artifactDir("posdel", dir)),
+        ("trigram", s"graft_tridel_$key", artifactDir("tridel", dir)))
       graft.text.InvertedIndex.ensure(s, corpus, stores(0)._2, stores(0)._3, buckets = 8)
       graft.text.InvertedIndex.ensurePositional(s, corpus, stores(1)._2, stores(1)._3, buckets = 8)
       graft.text.InvertedIndex.ensureTrigram(s, corpus, stores(2)._2, stores(2)._3, buckets = 8)
@@ -5264,14 +5138,13 @@ object SparkEntry {
       // build across invocations; the leading dropMutations reset is
       // the club's replay-determinism contract) — only the JOURNAL is
       // scratch-fresh per run
-      val tmp = System.getProperty("java.io.tmpdir")
       val targets = Seq(
         graft.ops.Takedown.Target(
-          "bm25", s"graft_bm25del_$key", s"$tmp/graft_bm25del_$key"),
+          "bm25", s"graft_bm25del_$key", artifactDir("bm25del", dir)),
         graft.ops.Takedown.Target(
-          "positional", s"graft_posdel_$key", s"$tmp/graft_posdel_$key"),
+          "positional", s"graft_posdel_$key", artifactDir("posdel", dir)),
         graft.ops.Takedown.Target(
-          "trigram", s"graft_tridel_$key", s"$tmp/graft_tridel_$key"))
+          "trigram", s"graft_tridel_$key", artifactDir("tridel", dir)))
       graft.text.InvertedIndex.ensure(
         s, corpus, targets(0).table, targets(0).dir, buckets = 8)
       graft.text.InvertedIndex.ensurePositional(
@@ -5280,7 +5153,7 @@ object SparkEntry {
         s, corpus, targets(2).table, targets(2).dir, buckets = 8)
       targets.foreach(t =>
         graft.text.InvertedIndex.dropMutations(t.dir)) // replay determinism
-      val scratch = freshScratchDir(dir, "tdjq")
+      val scratch = scratchDir("tdjq", dir)
       val victims = corpus.filter(col("doc_id") === 6L)
       val journal = s"$scratch/journal"
       def residual(t: graft.ops.Takedown.Target): Long =
@@ -5320,8 +5193,7 @@ object SparkEntry {
     // oracle recomputes n_codes from the corpus definition.
     "sq8_store_describe" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val key = dirKey(dir)
-      val sqDir = s"${System.getProperty("java.io.tmpdir")}/graft_sq8del_$key"
+      val sqDir = artifactDir("sq8del", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, sqDir)
       graft.index.Sq.dropMutations(sqDir) // replay determinism
       val planted = corpus.filter(col("vec_id") === 0)
@@ -5344,7 +5216,7 @@ object SparkEntry {
     "store_describe" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
       val key = dirKey(dir)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_descr_$key"
+      val idxDir = artifactDir("descr", dir)
       val table = s"graft_descr_$key"
       graft.text.InvertedIndex.ensure(s, corpus, table, idxDir, buckets = 8)
       graft.text.InvertedIndex.dropMutations(idxDir) // replay determinism
@@ -5371,7 +5243,7 @@ object SparkEntry {
     "doc_bm25_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
       val key = dirKey(dir)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_bm25del_$key"
+      val idxDir = artifactDir("bm25del", dir)
       val table = s"graft_bm25del_$key"
       graft.text.InvertedIndex.ensure(s, corpus, table, idxDir, buckets = 8)
       // replay determinism: a re-run must not see the previous run's
@@ -5393,7 +5265,7 @@ object SparkEntry {
     "doc_phrase_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
       val key = dirKey(dir)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_posdel_$key"
+      val idxDir = artifactDir("posdel", dir)
       val table = s"graft_posdel_$key"
       graft.text.InvertedIndex.ensurePositional(s, corpus, table, idxDir, buckets = 8)
       graft.text.InvertedIndex.dropMutations(idxDir) // replay determinism
@@ -5417,7 +5289,7 @@ object SparkEntry {
     "doc_substring_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
       val key = dirKey(dir)
-      val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_tridel_$key"
+      val idxDir = artifactDir("tridel", dir)
       val table = s"graft_tridel_$key"
       graft.text.InvertedIndex.ensureTrigram(s, corpus, table, idxDir, buckets = 8)
       graft.text.InvertedIndex.dropMutations(idxDir) // replay determinism
@@ -5448,8 +5320,7 @@ object SparkEntry {
     // oracle derives the same verdicts relationally from documents.
     "dedup_store_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val store =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hashdel_${dirKey(dir)}"
+      val store = artifactDir("hashdel", dir)
       graft.dedup.Dedup.ensureHashStore(s, corpus, store)
       graft.dedup.Dedup.dropHashStoreMutations(store) // replay determinism
       // bounded: exactly two (id, text) rows come back
@@ -5487,8 +5358,7 @@ object SparkEntry {
     // novel" split).
     "neardup_store_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val store =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sheddel_${dirKey(dir)}"
+      val store = artifactDir("sheddel", dir)
       graft.dedup.Dedup.ensureShingleStore(
         s, corpus.filter(col("doc_id") % 3 === 0), store)
       graft.dedup.Dedup.dropShingleStoreMutations(store) // replay determinism
@@ -5518,8 +5388,7 @@ object SparkEntry {
     // the oracle verbatim.
     "fuzzy_store_delete" -> ((s, dir) => {
       val cust = tbl(s, dir, "customer")
-      val store =
-        s"${System.getProperty("java.io.tmpdir")}/graft_fuzzdel_${dirKey(dir)}"
+      val store = artifactDir("fuzzdel", dir)
       graft.ops.FuzzyJoin.ensureFuzzyStore(s,
         cust.filter(col("c_custkey") % 3 === 0), store, "c_custkey", "c_name")
       graft.ops.FuzzyJoin.dropFuzzyStoreMutations(store) // replay determinism
@@ -5543,13 +5412,11 @@ object SparkEntry {
     // ≤ 3) or report novel — the oracle replays the masked ranking.
     "sigstore_delete" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val sigs = graft.index.Binary.signatures(e, thr)
-      val store =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sigdel_${dirKey(dir)}"
+      val store = artifactDir("sigdel", dir)
       graft.dedup.Dedup.ensureSigStore(s,
         sigs.filter(col("vec_id") % 3 === 0), store, idCol = "vec_id")
       graft.dedup.Dedup.dropSigStoreMutations(store) // replay determinism
@@ -5573,12 +5440,9 @@ object SparkEntry {
     // verdict relationally from documents.
     "stream_dedup_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val seed =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hashmut_${dirKey(dir)}"
+      val seed = artifactDir("hashmut", dir)
       graft.dedup.Dedup.ensureHashStore(s, corpus, seed)
-      val scratch = freshScratchDir(dir, "streamdedupmut")
-      val store = s"$scratch/store"
-      copyDir(seed, store)
+      val (scratch, store) = seedCopy("streamdedupmut", dir, seed, "store")
       // the two lowest-id unique-content docs (dedup_store_delete's device)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(graft.text.TextAnalysis.normalizeText(col("text")))
@@ -5598,13 +5462,10 @@ object SparkEntry {
         ("del", delId, delText), ("add", 9160000L + delId, delText)))
       val b2 = batchDf(Seq(("add", 9170000L + delId, delText)))
       val b3 = batchDf(Seq(("add", 9180000L + delId, delText)))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1, b2, b3))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1, b2, b3))
       val q = graft.streaming.StreamingIngest.streamingDedupMutations(
         stream, store, s"$scratch/sink", s"$scratch/chk", maxDeltaDirs = 2)
-      q.awaitTermination()
+      awaitStream("stream_dedup_delete", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .orderBy(col("doc_id"))
     }),
@@ -5619,13 +5480,10 @@ object SparkEntry {
     // every verdict is a constant the oracle pins.
     "stream_fuzzy_delete" -> ((s, dir) => {
       val cust = tbl(s, dir, "customer")
-      val seed =
-        s"${System.getProperty("java.io.tmpdir")}/graft_fuzzmut_${dirKey(dir)}"
+      val seed = artifactDir("fuzzmut", dir)
       graft.ops.FuzzyJoin.ensureFuzzyStore(s,
         cust.filter(col("c_custkey") % 3 === 0), seed, "c_custkey", "c_name")
-      val scratch = freshScratchDir(dir, "streamfuzzymut")
-      val store = s"$scratch/store"
-      copyDir(seed, store)
+      val (scratch, store) = seedCopy("streamfuzzymut", dir, seed, "store")
       val name3 = cust.filter(col("c_custkey") === 3L)
         .select(col("c_name")).head().getString(0)
       val name6 = cust.filter(col("c_custkey") === 6L)
@@ -5638,14 +5496,11 @@ object SparkEntry {
         ("del", 3L, name3), ("add", 9520003L, name3 + "X")))
       val b2 = batchDf(Seq(("add", 9530003L, name3 + "X")))
       val b3 = batchDf(Seq(("add", 9540003L, name3 + "X")))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1, b2, b3))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1, b2, b3))
       val q = graft.streaming.StreamingIngest.streamingFuzzyMutations(
         stream, store, s"$scratch/sink", s"$scratch/chk",
         idCol = "id", nameCol = "name", maxDeltaDirs = 2)
-      q.awaitTermination()
+      awaitStream("stream_fuzzy_delete", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .orderBy(col("id"))
     }),
@@ -5659,13 +5514,10 @@ object SparkEntry {
     // across the auto-compaction).
     "stream_neardup_delete" -> ((s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
-      val seed =
-        s"${System.getProperty("java.io.tmpdir")}/graft_shedmut_${dirKey(dir)}"
+      val seed = artifactDir("shedmut", dir)
       graft.dedup.Dedup.ensureShingleStore(
         s, corpus.filter(col("doc_id") % 3 === 0), seed)
-      val scratch = freshScratchDir(dir, "streamneardupmut")
-      val store = s"$scratch/store"
-      copyDir(seed, store)
+      val (scratch, store) = seedCopy("streamneardupmut", dir, seed, "store")
       val text0 = corpus.filter(col("doc_id") === 0L)
         .select(col("text")).head().getString(0)
       val text3 = corpus.filter(col("doc_id") === 3L)
@@ -5677,13 +5529,10 @@ object SparkEntry {
       val b1 = batchDf(Seq(("del", 0L, text0), ("add", 9320000L, text0)))
       val b2 = batchDf(Seq(("add", 9330000L, text0)))
       val b3 = batchDf(Seq(("add", 9340000L, text0)))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(b0, b1, b2, b3))
-      val stream = s.readStream.schema(b0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      val stream = replayStream(s, scratch, Seq(b0, b1, b2, b3))
       val q = graft.streaming.StreamingIngest.streamingNearDupMutations(
         stream, store, s"$scratch/sink", s"$scratch/chk", maxDeltaDirs = 2)
-      q.awaitTermination()
+      awaitStream("stream_neardup_delete", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .orderBy(col("doc_id"))
     }),
@@ -5691,30 +5540,20 @@ object SparkEntry {
     "stream_ivf_append" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val base = graft.index.Ivf.buildLayout(s, corpus,
-        ivfLayoutDir(dir, "appendbase"), nlist = 8, maxIter = 3)
-      val scratch = freshScratchDir(dir, "streamappend")
-      val layoutDir = s"$scratch/layout"
-      copyDir(base.dir, layoutDir)
+        artifactDir("ivf_appendbase", dir), nlist = 8, maxIter = 3)
+      val (scratch, layoutDir) = seedCopy("streamappend", dir, base.dir, "layout")
       val layout = graft.index.Ivf.loadLayout(layoutDir)
       val planted = corpus.filter(col("vec_id") === 0)
         .crossJoin(s.range(10))
         .select((col("id") + lit(4200000L)).as("vec_id"),
           col("embedding"), col("label"))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         planted.filter(col("vec_id") < 4200005L),
         planted.filter(col("vec_id") >= 4200005L)))
-      val stream = s.readStream.schema(planted.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingIvfAppend(
         stream, layoutDir, s"$scratch/chk")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_ivf_append",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      awaitStream("stream_ivf_append", q)
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayoutDeltaAware(s, layout, query, k = 10, nprobe = 1)
     }),
 
@@ -5728,9 +5567,8 @@ object SparkEntry {
     "knn_ivf_delete" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val base = graft.index.Ivf.buildLayout(s, corpus,
-        ivfLayoutDir(dir, "appendbase"), nlist = 8, maxIter = 3)
-      val tmp = freshScratchDir(dir, "deletework")
-      copyDir(base.dir, tmp)
+        artifactDir("ivf_appendbase", dir), nlist = 8, maxIter = 3)
+      val (_, tmp) = seedCopy("deletework", dir, base.dir, "layout")
       val layout = graft.index.Ivf.loadLayout(tmp)
       val planted = corpus.filter(col("vec_id") === 0)
         .crossJoin(s.range(15))
@@ -5738,8 +5576,7 @@ object SparkEntry {
       graft.index.Ivf.appendToLayout(layout, planted)
       graft.index.Ivf.deleteFromLayout(layout,
         s.range(5).select((col("id") + lit(4100000L)).as("vec_id")))
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Ivf.searchLayout(s, layout, query, k = 10, nprobe = 1)
     }),
 
@@ -5753,8 +5590,7 @@ object SparkEntry {
     "knn_pq_rerank" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val (cb, enc) = pqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       // shortlist 1000: at sf0.1 the corpus is 10x sf0.01 and a 200-code
       // ADC shortlist started missing true top-10 neighbors (caught by a
       // full sf0.1 oracle sweep); the shortlist must grow with the
@@ -5774,8 +5610,7 @@ object SparkEntry {
     "knn_opq_rerank" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val (model, enc) = opqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Pq.rerankShortlist(
         graft.index.Pq.searchOpq(enc, model, query, k = 1000),
         corpus, query, k = 10)
@@ -5793,8 +5628,7 @@ object SparkEntry {
     "knn_sq8_rerank" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val (model, enc) = sqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Sq.searchRerank(enc, corpus, model, query, k = 10,
         shortlist = 200)
     }),
@@ -5810,12 +5644,10 @@ object SparkEntry {
     // from scratch.
     "knn_sq8_delete" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val key = dirKey(dir)
-      val sqDir = s"${System.getProperty("java.io.tmpdir")}/graft_sq8del_$key"
+      val sqDir = artifactDir("sq8del", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, sqDir)
       graft.index.Sq.dropMutations(sqDir) // replay determinism
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       // bounded: the exact top-4 comes back, self drops out -> 3 ids
       val delIds = VectorSearch.knnExact(corpus, query.toSeq, 4)
         .select(col("vec_id")).collect().map(_.getLong(0))
@@ -5860,8 +5692,7 @@ object SparkEntry {
       })
       val built = graft.index.AnnSelector.fromParts(corpus, lshModel, ivfIndex, frontier)
       val point = graft.index.AnnSelector.select(built, 0.9)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.AnnSelector.search(built, corpus, point, query, k = 10)
         .agg(
           count(lit(1)).as("n_rows"),
@@ -5900,8 +5731,7 @@ object SparkEntry {
       val cheapestOk = chosen.exists(c =>
         !curve.exists(p => p.costFrac < c.costFrac && p.recall >= 0.9))
       // end-to-end: probe the self-query under the selected config
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       val ivfIndex = graft.index.Ivf.fit(corpus, nlist = 8, maxIter = 3)
       val assigned = graft.index.Ivf.assign(ivfIndex, corpus)
         .select("vec_id", "embedding", "cluster")
@@ -5945,13 +5775,10 @@ object SparkEntry {
       import s.implicits._
       val corpus = emb(s, dir)
       val base = graft.index.Ivf.buildLayout(s, corpus,
-        ivfLayoutDir(dir, "appendbase"), nlist = 8, maxIter = 3)
-      val scratch = freshScratchDir(dir, "pinivf")
-      val layoutDir = s"$scratch/layout"
-      copyDir(base.dir, layoutDir)
+        artifactDir("ivf_appendbase", dir), nlist = 8, maxIter = 3)
+      val (_, layoutDir) = seedCopy("pinivf", dir, base.dir, "layout")
       val layout = graft.index.Ivf.loadLayout(layoutDir)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       // 12 exact copies: after two deletes, self + 10 survivors at
       // distance 0 fill the whole top-10 INSIDE the probed cluster, so
       // the nprobe=1 probe provably equals exact over the union
@@ -5995,7 +5822,7 @@ object SparkEntry {
     // full lifecycle on two scratch fuzzy stores.
     "store_gc_retention" -> ((s, dir) => {
       import s.implicits._
-      val scratch = freshScratchDir(dir, "retq")
+      val scratch = scratchDir("retq", dir)
       val registry = (1L to 9L).map(i => (i, f"name-$i%04d")).toDF("id", "name")
       def fixture(sub: String): String = {
         val d = s"$scratch/$sub"
@@ -6055,7 +5882,7 @@ object SparkEntry {
     // unmoved), and the op is idempotent.
     "store_expire_snapshots" -> ((s, dir) => {
       import s.implicits._
-      val scratch = freshScratchDir(dir, "expq")
+      val scratch = scratchDir("expq", dir)
       val d = s"$scratch/store"
       val registry = (1L to 9L).map(i => (i, f"name-$i%04d")).toDF("id", "name")
       graft.ops.FuzzyJoin.ensureFuzzyStore(s, registry, d, "id", "name")
@@ -6113,7 +5940,7 @@ object SparkEntry {
     // (version, store_id) relation.
     "store_time_travel" -> ((s, dir) => {
       import s.implicits._
-      val scratch = freshScratchDir(dir, "ttq")
+      val scratch = scratchDir("ttq", dir)
       val d = s"$scratch/store"
       val registry = (1L to 9L).map(i => (i, f"name-$i%04d")).toDF("id", "name")
       graft.ops.FuzzyJoin.ensureFuzzyStore(s, registry, d, "id", "name")
@@ -6149,7 +5976,7 @@ object SparkEntry {
     // the policy) is doing the protecting.
     "store_snapshot_rollback" -> ((s, dir) => {
       import s.implicits._
-      val scratch = freshScratchDir(dir, "tagq")
+      val scratch = scratchDir("tagq", dir)
       val d = s"$scratch/store"
       val registry = (1L to 9L).map(i => (i, f"name-$i%04d")).toDF("id", "name")
       graft.ops.FuzzyJoin.ensureFuzzyStore(s, registry, d, "id", "name")
@@ -6218,7 +6045,7 @@ object SparkEntry {
     // stolen after the TTL, and the post-steal commit lands.
     "store_writer_lease" -> ((s, dir) => {
       import s.implicits._
-      val scratch = freshScratchDir(dir, "leaseq")
+      val scratch = scratchDir("leaseq", dir)
       val storeDir = s"$scratch/store"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
       val outsideRejected = try {
@@ -6331,8 +6158,7 @@ object SparkEntry {
     "knn_ivfpq_rerank" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val (ivf, cb, codesDir) = ivfPqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       val short = graft.index.Pq.searchIvfPq(s, codesDir, ivf, cb, query,
         shortlist = 1000, nprobe = 8)
       graft.index.Pq.rerankShortlist(short, corpus, query, k = 10)
@@ -6347,8 +6173,7 @@ object SparkEntry {
     "knn_ivfsq_rerank" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val (ivf, model, codesDir) = ivfSqIndex(dir, corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       val short = graft.index.Sq.searchIvfSq(s, codesDir, ivf, model, query,
         shortlist = 1000, nprobe = 8)
       graft.index.Pq.rerankShortlist(short, corpus, query, k = 10)
@@ -6372,8 +6197,7 @@ object SparkEntry {
         .select((col("id") + lit(3000000L)).as("vec_id"), col("embedding"))
       val full = corpus.select(col("vec_id"), col("embedding")).union(planted)
       val model = graft.index.Ann.fit(full)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       graft.index.Ann.searchApprox(model, full, query, k = 10)
     }),
 
@@ -6388,8 +6212,7 @@ object SparkEntry {
     "knn_lsh_check" -> ((s, dir) => {
       val corpus = emb(s, dir)
       val model = graft.index.Ann.fit(corpus)
-      val query = corpus.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val query = vecOf(corpus, 0)
       val approx = graft.index.Ann.searchApprox(model, corpus, query, k = 10)
       val exact = VectorSearch.knnExact(corpus, query.toSeq, k = 10)
       val truth = corpus.select(col("vec_id"),
@@ -6440,8 +6263,7 @@ object SparkEntry {
     // probes scan 8 bytes/row and never re-read the float corpus).
     "knn_hamming_top10" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val q = e.filter(col("vec_id") === 0)
@@ -6458,8 +6280,7 @@ object SparkEntry {
     // knn_hamming_top10's oracle (bit-identical distances required).
     "sql_hamming_top10" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val q = e.filter(col("vec_id") === 0)
@@ -6481,8 +6302,7 @@ object SparkEntry {
     // rows, never rescanned. The oracle replays both stages.
     "knn_hamming_rescore" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val q = e.filter(col("vec_id") === 0)
@@ -6499,8 +6319,7 @@ object SparkEntry {
     // the hard case for sign bits) rather than assumed.
     "knn_hamming_recall" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_binsig_${dirKey(dir)}"
+      val artDir = artifactDir("binsig", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val q = e.filter(col("vec_id") === 0)
@@ -6524,8 +6343,7 @@ object SparkEntry {
     // gains one broadcast anti-join of a two-row id set.
     "knn_hamming_delete" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_bindel_${dirKey(dir)}"
+      val artDir = artifactDir("bindel", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
       graft.index.Binary.dropMutations(artDir) // replay determinism
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
@@ -6598,12 +6416,10 @@ object SparkEntry {
     // as an invariant by knn_hnsw_check and HnswSpec).
     "knn_hnsw_top10" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_${dirKey(dir)}"
+      val artDir = artifactDir("hnsw", dir)
       val p = hnswParams(e)
       graft.index.Hnsw.ensureLayout(e, artDir, p)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val q = vecOf(e, 0)
       graft.index.Hnsw.searchLayout(s, artDir, q, 10, p, efSearch = 64)
     }),
 
@@ -6617,8 +6433,7 @@ object SparkEntry {
     // probe.
     "knn_hnsw_batch" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_${dirKey(dir)}"
+      val artDir = artifactDir("hnsw", dir)
       val p = hnswParams(e)
       graft.index.Hnsw.ensureLayout(e, artDir, p)
       // bounded collect: the 5 probe vectors
@@ -6639,13 +6454,11 @@ object SparkEntry {
     // drops out, which the oracle replays with a NOT IN.
     "knn_hnsw_delete" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnswdel_${dirKey(dir)}"
+      val artDir = artifactDir("hnswdel", dir)
       val p = hnswParams(e)
       graft.index.Hnsw.ensureLayout(e, artDir, p)
       graft.index.Hnsw.deleteFromLayout(s, artDir, Seq(0L, 1L, 2L), tag = "q")
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val q = vecOf(e, 0)
       graft.index.Hnsw.searchLayout(s, artDir, q, 10, p, efSearch = 64)
     }),
 
@@ -6662,16 +6475,12 @@ object SparkEntry {
     "knn_hnsw_compact" -> ((s, dir) => {
       val e = emb(s, dir)
       val p = hnswParams(e)
-      val baseDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_${dirKey(dir)}"
+      val baseDir = artifactDir("hnsw", dir)
       graft.index.Hnsw.ensureLayout(e, baseDir, p)
-      val scratch = freshScratchDir(dir, "hnswcompact")
-      val work = s"$scratch/art"
-      copyDir(baseDir, work)
+      val (_, work) = seedCopy("hnswcompact", dir, baseDir, "art")
       graft.index.Hnsw.deleteFromLayout(s, work, Seq(0L, 1L, 2L), tag = "q")
       graft.index.Hnsw.compactDeltas(s, work, p, dropTombstoned = true)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val q = vecOf(e, 0)
       graft.index.Hnsw.searchLayout(s, work, q, 10, p, efSearch = 64)
     }),
 
@@ -6683,12 +6492,10 @@ object SparkEntry {
     // constant row the oracle pins.
     "knn_hnsw_check" -> ((s, dir) => {
       val e = emb(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_${dirKey(dir)}"
+      val artDir = artifactDir("hnsw", dir)
       val p = hnswParams(e)
       graft.index.Hnsw.ensureLayout(e, artDir, p)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val q = vecOf(e, 0)
       val approx = graft.index.Hnsw.searchLayout(s, artDir, q, 10, p, efSearch = 64)
       val exact = VectorSearch.knnExact(e, q.toSeq, k = 10)
       val truth = e.select(col("vec_id"),
@@ -6796,9 +6603,7 @@ object SparkEntry {
     // columns, so the read skips non-intersecting files — the
     // SelectedBucketsCount story for multi-dimensional range queries.
     "events_zorder_pruned" -> ((s, dir) => {
-      val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val layoutDir = s"$tmp/graft_zorder_$key"
+      val layoutDir = artifactDir("zorder", dir)
       val ev = events(s, dir).select("event_id", "user_id", "value")
       graft.ops.ZOrder.ensureZOrderedLayout(s, ev, layoutDir, "user_id", "value")
       graft.ops.ZOrder.scanBox(s, layoutDir, "user_id", "value", 2L, 9L, 20.0, 250.0)
@@ -7001,15 +6806,14 @@ object SparkEntry {
     // over every later join/agg on the key — the 100 TB fact⋈fact shape.
     "tpch_colocated_rev" -> ((s, dir) => {
       val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       graft.ops.Bucketed.ensure(s,
         tbl(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-        s"graft_bl_li_$key", s"$tmp/graft_bucket_li_$key", buckets = 8, "l_orderkey")
+        s"graft_bl_li_$key", artifactDir("bucket_li", dir), buckets = 8, "l_orderkey")
       graft.ops.Bucketed.ensure(s,
         tbl(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus")),
-        s"graft_bl_o_$key", s"$tmp/graft_bucket_o_$key", buckets = 8, "o_orderkey")
+        s"graft_bl_o_$key", artifactDir("bucket_o", dir), buckets = 8, "o_orderkey")
       graft.ops.Bucketed.colocatedOrderRevenue(s,
         s"graft_bl_li_$key", s"graft_bl_o_$key", minRevCents = 45000000L)
     }),
@@ -7041,8 +6845,7 @@ object SparkEntry {
       val src = emb(s, dir).select(col("vec_id").as("id"),
         col("embedding"), lit("""{"tag":"rt"}""").as("metadata"))
         .as[graft.core.VectorRecord]
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_rt_" +
-        dirKey(dir)
+      val out = artifactDir("jsonl_rt", dir)
       graft.io.Formats.writeJsonl(src, out)
       graft.io.Formats.readJsonl(s, out).toDF()
         .agg(count(lit(1)).as("n_rows"),
@@ -7161,10 +6964,8 @@ object SparkEntry {
     // store side is never shuffled (batch hashes broadcast into its
     // scan). The oracle replays the whole construction from the corpus.
     "dedup_incremental" -> ((s, dir) => {
-      val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       val corpus = docs(s, dir)
-      val storeDir = s"$tmp/graft_hashstore_$key"
+      val storeDir = artifactDir("hashstore", dir)
       graft.dedup.Dedup.ensureHashStore(s, corpus, storeDir)
       val redelivered = corpus.filter(col("doc_id") % 10 === 7)
         .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
@@ -7181,10 +6982,8 @@ object SparkEntry {
     // in and the verdicts broadcast back. Plants appended-edit near
     // dups (%10==4) and wholly novel rows (%10==6) under new ids.
     "dedup_incremental_near" -> ((s, dir) => {
-      val key = dirKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
       val corpus = docs(s, dir)
-      val storeDir = s"$tmp/graft_shinglestore_$key"
+      val storeDir = artifactDir("shinglestore", dir)
       graft.dedup.Dedup.ensureShingleStore(s, corpus, storeDir)
       val near = corpus.filter(col("doc_id") % 10 === 4)
         .select((col("doc_id") + 7000000L).as("doc_id"),
@@ -7322,8 +7121,7 @@ object SparkEntry {
     // NB query makes the same modest claim); the spec proves zero
     // training error on a separable corpus.
     "corpus_lr_train" -> ((s, dir) => {
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_logreg_${dirKey(dir)}"
+      val artDir = artifactDir("logreg", dir)
       graft.text.LogReg.ensureModelArtifact(s, docs(s, dir), artDir,
         labelLang = "en", vocabK = 16, iters = 24)
       graft.text.LogReg.modelFromArtifact(s, artDir)
@@ -7335,8 +7133,7 @@ object SparkEntry {
     // TakeOrdered cut, never a global sort.
     "corpus_lr_select" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_logreg_${dirKey(dir)}"
+      val artDir = artifactDir("logreg", dir)
       graft.text.LogReg.ensureModelArtifact(s, d, artDir,
         labelLang = "en", vocabK = 16, iters = 24)
       val (vocab, w) = graft.text.LogReg.loadModel(s, artDir)
@@ -7352,8 +7149,7 @@ object SparkEntry {
     // measured-accuracy record lives under the hash gate.
     "doc_lr_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val artDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_logreg_${dirKey(dir)}"
+      val artDir = artifactDir("logreg", dir)
       graft.text.LogReg.ensureModelArtifact(s, d, artDir,
         labelLang = "en", vocabK = 16, iters = 24)
       val (vocab, w) = graft.text.LogReg.loadModel(s, artDir)
@@ -7428,7 +7224,7 @@ object SparkEntry {
     // join, not a per-consumer recompute of the candidate join + CC.
     "corpus_split" -> ((s, dir) => {
       val d = docs(s, dir)
-      val cc = Dedup.clusterArtifact(d, ivfLayoutDir(dir, "docclusters"),
+      val cc = Dedup.clusterArtifact(d, artifactDir("ivf_docclusters", dir),
         n = 3, minJaccard = 0.3, maxShingleDf = 500L)
       d.join(cc, Seq("doc_id"), "left")
         .withColumn("grp", coalesce(col("cluster_id"), col("doc_id")))
@@ -7557,7 +7353,7 @@ object SparkEntry {
       val stream = fixEventTs(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       val counts = graft.streaming.StreamingIngest.windowedCounts(stream, "1 hour", "10 minutes")
-      runStreamToParquet(s, counts, outputMode = "complete",
+      runStreamToParquet(s, dir, counts, outputMode = "complete",
           overwrite = true, tag = "stream_hourly")
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
@@ -7577,7 +7373,7 @@ object SparkEntry {
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
       val deduped = graft.streaming.StreamingIngest.streamingDedup(stream, delay = "1 hour")
-      runStreamToParquet(s, deduped.select(col("content_hash")),
+      runStreamToParquet(s, dir, deduped.select(col("content_hash")),
           outputMode = "append", overwrite = false, tag = "stream_dedup")
         .orderBy(col("content_hash"))
     }),
@@ -7595,55 +7391,38 @@ object SparkEntry {
     // by (distance, id)), append novel names' postings for the next
     // batch. Executor state ZERO; batch-keyed overwrite deltas.
     "stream_fuzzy_resolve" -> ((s, dir) => {
-      val scratch = scratchDir("stream_fuzzy_resolve")
-      val storeDir = s"$scratch/store"
-      val seedDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_seedfuzzy_${dirKey(dir)}"
+      val seedDir = artifactDir("seedfuzzy", dir)
       val cust = tbl(s, dir, "customer")
       graft.ops.FuzzyJoin.ensureFuzzyStore(s,
         cust.filter(col("c_custkey") % 3 === 0), seedDir, "c_custkey", "c_name")
-      copyDir(seedDir, storeDir)
+      val (scratch, storeDir) = seedCopy("stream_fuzzy_resolve", dir, seedDir, "store")
       val slice = cust.filter(col("c_custkey") % 7 === 0)
         .select(col("c_custkey"), col("c_name"))
-      val inDir = s"$scratch/in"
-      writeBatchInputs(inDir, Seq(
+      val stream = replayStream(s, scratch, Seq(
         slice.filter(col("c_custkey") % 14 === 0),
         slice.filter(col("c_custkey") % 14 =!= 0)))
-      val stream = s.readStream.schema(slice.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       val q = graft.streaming.StreamingIngest.streamingFuzzyResolve(
         stream, storeDir, s"$scratch/sink", s"$scratch/chk",
         "c_custkey", "c_name")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_fuzzy_resolve",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_fuzzy_resolve", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .select(col("c_custkey"), col("is_new"), col("dup_of"), col("dist"))
         .orderBy(col("c_custkey"))
     }),
 
     "stream_incremental" -> ((s, dir) => {
-      val scratch = scratchDir("stream_incremental")
-      val storeDir = s"$scratch/store"
       // seed store built once per dataset (sidecar), copied per run —
       // the stream appends to its copy (same device as the near leg)
-      val seedDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_seedhash_${dirKey(dir)}"
+      val seedDir = artifactDir("seedhash", dir)
       graft.dedup.Dedup.ensureHashStore(
         s, docs(s, dir).filter(col("doc_id") % 3 === 0), seedDir)
-      copyDir(seedDir, storeDir)
+      val (scratch, storeDir) = seedCopy("stream_incremental", dir, seedDir, "store")
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       val q = graft.streaming.StreamingIngest.streamingIncrementalDedup(
         stream, storeDir, s"$scratch/sink", s"$scratch/chk")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_incremental",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_incremental", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .select(col("doc_id"), col("is_new"), col("dup_of"))
         .orderBy(col("doc_id"))
@@ -7658,28 +7437,21 @@ object SparkEntry {
     // overwrites, so redelivery is idempotent. The oracle rebuilds
     // the seed store and replays the single-file micro-batch.
     "stream_incremental_near" -> ((s, dir) => {
-      val scratch = scratchDir("stream_incremental_near")
-      val storeDir = s"$scratch/store"
       // the SEED posting store is a build-once artifact per dataset
       // (fingerprint sidecar in tmpdir); each run FILE-COPIES it into
       // its own scratch — the stream mutates its copy (posting
       // appends), so runs stay isolated without re-tokenizing the seed
       // corpus per invocation
-      val seedDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_seedshingle_${dirKey(dir)}"
+      val seedDir = artifactDir("seedshingle", dir)
       graft.dedup.Dedup.ensureShingleStore(
         s, docs(s, dir).filter(col("doc_id") % 3 === 0), seedDir)
-      copyDir(seedDir, storeDir)
+      val (scratch, storeDir) = seedCopy("stream_incremental_near", dir, seedDir, "store")
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       val q = graft.streaming.StreamingIngest.streamingIncrementalNearDedup(
         stream, storeDir, s"$scratch/sink", s"$scratch/chk")
-      q.awaitTermination()
-      SparkEntry.streamStateRows.put("stream_incremental_near",
-        q.recentProgress.iterator
-          .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
+      awaitStream("stream_incremental_near", q)
       s.read.option("recursiveFileLookup", "true").parquet(s"$scratch/sink")
         .select(col("doc_id"), col("is_novel"), col("near_dup_of"),
           col("jaccard_dist"))
@@ -7699,7 +7471,7 @@ object SparkEntry {
         .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
       val curated = graft.streaming.StreamingIngest.streamingCurate(
         stream, lang = "en", minQuality = 0.5, delay = "1 hour")
-      runStreamToParquet(s, curated.select(col("content_hash")),
+      runStreamToParquet(s, dir, curated.select(col("content_hash")),
           outputMode = "append", overwrite = false, tag = "stream_curate")
         .orderBy(col("content_hash"))
     }),

@@ -742,6 +742,18 @@ private[graft] object MutableStore {
     finally walk.close()
   }
 
+  /** Recursive file copy of `src` into `dst` (created as needed;
+    * existing files are replaced). */
+  def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+  }
+
   /** Highest `<prefix><N>` version on disk (committed or debris) — the
     * next version must skip past BOTH. A version is a dir or, for the
     * IVF layout's legacy single-json manifests, a `<prefix><N>.json`

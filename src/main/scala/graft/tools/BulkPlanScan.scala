@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: build every declared query and print one summary line
   * per query — counts of scans/exchanges/broadcasts/windows in the
   * spark plan, plus duplicate-scan paths — to rank plan-shape red
@@ -10,15 +8,7 @@ import org.apache.spark.sql.SparkSession
 object BulkPlanScan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.setupSession(spark)
+    val spark = graft.SparkEntry.localSession(defaultCpus = 32, Nil)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(graft.SparkEntry.queries)(s =>

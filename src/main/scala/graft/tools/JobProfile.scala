@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run a declared query and print every Spark job it
   * fires — start offset, duration, task count and call site — so a
@@ -12,15 +11,7 @@ object JobProfile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.setupSession(spark)
+    val spark = graft.SparkEntry.localSession(defaultCpus = 32, Nil)
 
     final case class J(id: Int, start: Long, site: String, nTasks: Int,
         var end: Long = 0L)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan (and optionally the
   * AQE final plan after execution) of a declared query —
   * `sbt "runMain graft.tools.PlanDump <query> [sfDir]"`. */
@@ -9,15 +7,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.setupSession(spark)
+    val spark = graft.SparkEntry.localSession(defaultCpus = 8, Nil)
     val repeats = if (args.length > 2) args(2).toInt else 1
     if (repeats == 1) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
