@@ -204,6 +204,11 @@ object Bench {
     * physical shape. */
   private[graft] def planFingerprint(plan: String): String = {
     val norm = plan
+      // a file scan's Location (index class, path count, scratch paths)
+      // is cut at spark.sql.maxMetadataStringLength characters, so the
+      // cut point moves with the scratch path's length: mask the whole
+      // value, cut or not
+      .replaceAll("(?m)Location: .*?(?=, PartitionFilters: |$)", "Location: x")
       .replaceAll("#\\d+[A-Za-z]*", "#x")
       // codegen stage ids: two independent branches (e.g. parallel
       // broadcast totals) get *(n) numbers in compile-completion order
@@ -314,7 +319,7 @@ object Bench {
     }
 
     // raw plan text per (query, fingerprint): when a query's runs ever
-    // disagree on the fingerprint, every variant is dumped to /tmp so
+    // disagree on the fingerprint, every variant is dumped to the temp dir so
     // the divergence is diffable from the round's artifacts instead of
     // unexplainable (the r7 doc_repetition lesson applied to plans)
     val planTexts = scala.collection.mutable.Map
@@ -438,16 +443,17 @@ object Bench {
     }
     // any query whose runs produced >1 distinct plan shape: dump every
     // variant for offline diffing
+    val tmpDir = System.getProperty("java.io.tmpdir")
     planTexts.foreach { case (name, variants) =>
       if (variants.size > 1) {
         variants.foreach { case (fp, text) =>
-          val f = s"/tmp/graft_bench_plan_${name}_$fp.txt"
-          try java.nio.file.Files.writeString(java.nio.file.Paths.get(f), text)
+          val f = java.nio.file.Paths.get(tmpDir, s"graft_bench_plan_${name}_$fp.txt")
+          try java.nio.file.Files.writeString(f, text)
           catch { case _: Throwable => }
         }
         System.err.println(s"[bench] $name: ${variants.size} distinct plan " +
           s"fingerprints (${variants.keys.mkString(", ")}) — variants dumped " +
-          s"to /tmp/graft_bench_plan_${name}_<fp>.txt")
+          s"to $tmpDir/graft_bench_plan_${name}_<fp>.txt")
       }
     }
     // persist the fingerprint+minima record for the NEXT changed-only

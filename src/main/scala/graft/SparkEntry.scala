@@ -25,10 +25,28 @@ object SparkEntry {
     * thunks, so every query is planned under identical session state
     * regardless of execution order or `SPARK_GRAFT_BENCH_ONLY` subsets
     * (a thunk that mutated `experimental.extraOptimizations` made later
-    * queries' plans depend on which queries ran before them). */
+    * queries' plans depend on which queries ran before them).
+    *
+    * It also lowers AQE's partition floor to [[MinPartitionSize]].
+    * With `coalescePartitions.parallelismFirst` on (Spark's default),
+    * AQE merges post-shuffle partitions up to that floor, and Spark's
+    * 1 MB default put every 1–3 MB shingle shuffle of the curation
+    * chain into one task. One traced perfbench `corpus_curate` run
+    * each (seed 1, 4 vCPU): 53 tasks per request at 64 KB against 23
+    * at the 1 MB default, executor-busy fraction 0.31 against 0.16,
+    * request p50 1.8 s against 3.2 s. 16 KB measured the same as
+    * 64 KB, and 256 KB fell part of the way back (41 tasks, 2.0 s);
+    * the KB-sized store shuffles of `cdc_mutate` keep their task
+    * counts at all three. Partitioning changes task counts only,
+    * never a result. */
   def setupSession(s: SparkSession): Unit = {
     org.apache.spark.sql.graft.TopKWindowRewrite.enable(s)
+    s.conf.set(MinPartitionSizeKey, MinPartitionSize)
   }
+
+  final val MinPartitionSizeKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+  /** The post-shuffle partition floor [[setupSession]] sets. */
+  final val MinPartitionSize = "64KB"
 
   /** The local session the Bench, Verify and dev-tool mains run
     * queries under: `local[cpus]` with as many shuffle partitions, UTC

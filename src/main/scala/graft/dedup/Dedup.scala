@@ -878,11 +878,15 @@ object Dedup {
       .groupBy("shingle").agg(count(lit(1)).as("df_count"))
       .filter(col("df_count") <= maxShingleDf)
       .select("shingle")
-    // set sizes attached by window (not a separate groupBy+join): every
-    // projection stays ABOVE the shared subplan, so the self-join's two
-    // sides canonicalize identically and Spark reuses one exchange —
-    // the naive aliased-branch form derived this scan+explode pipeline
-    // four times (8 file scans at sf0.1, zero reuse)
+    // set sizes attached by window (not a separate groupBy+join), so the
+    // self-join's two sides are one subplan: the naive aliased-branch
+    // form derived this scan+explode pipeline four times (8 file scans
+    // at sf0.1). Its sides are not shared as one exchange, though: at
+    // bench size (about 1,000 docs) AQE plans a BroadcastHashJoin whose
+    // build side evaluates the window a second time; the doc_id shuffle
+    // below it (scan → explode → rare join) is reused in some runs and
+    // derived again in others (AQE's exchange-reuse race, see
+    // graft.Bench.collapseExchangeDups)
     val pruned = shingled.join(rare, "shingle")
       .withColumn("set_size", count(lit(1)).over(Window.partitionBy(col(idCol))))
     val inter = pruned.as("a")
@@ -1461,15 +1465,22 @@ object Dedup {
     * (2) `label(v) ← label(label(v))` (pointer jumping), which contracts
     * label chains so convergence needs O(log d) rounds for diameter-d
     * components rather than O(d). Near-dup components are dense clumps
-    * with tiny diameter, so in practice 2–3 rounds close sf0.1. Every
-    * round ends in an eager `localCheckpoint` — the loop's driver side
-    * touches only a 1-row convergence aggregate, never row data, and the
-    * checkpoint keeps the plan O(1) deep instead of O(rounds). At
-    * cluster scale swap `localCheckpoint` for a reliable `checkpoint`
-    * (HDFS-backed) so executor loss cannot orphan a round; the
-    * alternating large-star/small-star formulation (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) is the
-    * drop-in upgrade if adversarially long chains ever matter.
+    * with tiny diameter, so few rounds run: the perfbench
+    * `corpus_curate` corpus closes with none.
+    * Convergence is tested BEFORE each round: the labels are final iff
+    * every edge's two endpoints carry the same label. That test is
+    * exact: `label(v) ≤ v` always holds and no label drops below its
+    * component's minimum, so the minimum node always labels itself,
+    * and labels that agree on every edge are the component minima.
+    * Star- and clique-shaped components (the common near-dup shapes)
+    * are closed by the fused initialization alone and run no round.
+    * The loop's driver side touches only that 1-row existence test,
+    * never row data. At cluster scale swap `localCheckpoint` for a
+    * reliable `checkpoint` (HDFS-backed) so executor loss cannot orphan
+    * a round; the alternating large-star/small-star formulation
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14) is the drop-in upgrade if adversarially long chains ever
+    * matter.
     *
     * Returns (id, cluster_id) for every node in `pairs`, cluster_id =
     * min id of the component. */
@@ -1484,31 +1495,37 @@ object Dedup {
     val p0 = pairs
       .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
       .localCheckpoint()
-    val edges = p0
-      .union(p0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
+    val symmetric = p0.union(p0.select(col("dst").as("src"), col("src").as("dst")))
     // initialization fused with the would-be first round: label₀(v) =
     // min(v, min neighbor) — exactly what one propagation round over
     // identity labels computes, for the price of the node-distinct
     // aggregation the identity init already paid. Start labels are
     // still ≥ the component minimum, so the monotone min-propagation
-    // converges to the same fixpoint one round sooner.
-    var labels = edges.groupBy(col("src").as("id"))
+    // converges to the same fixpoint one round sooner. A duplicate
+    // edge cannot change a min, so no distinct is needed here.
+    var labels = symmetric.groupBy(col("src").as("id"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
       .localCheckpoint()
-    var converged = false
+    // only a round reads the deduplicated edge list: built on first use
+    lazy val edges = symmetric.distinct().localCheckpoint()
+    // the pairs as given suffice for the test: an edge agrees in both
+    // directions or in neither
+    def anyEdgeDisagrees(l: DataFrame): Boolean = !p0
+      .join(l.select(col("id").as("src"), col("label").as("src_label")), "src")
+      .join(l.select(col("id").as("dst"), col("label").as("dst_label")), "dst")
+      .filter(col("src_label") =!= col("dst_label"))
+      .isEmpty
     var iter = 0
-    // round lifecycle: every round ends in a LAZY localCheckpoint,
-    // materialized by the full diff count below (one job per round).
-    // The checkpoint is load-bearing twice over: it truncates lineage
-    // (the pointer-jump self-join embeds the round's subtree TWICE, so
-    // an uncheckpointed plan doubles in size every round — exponential),
+    // round lifecycle: propagate, pointer-jump, then one eager
+    // localCheckpoint that materializes the round exactly once. The
+    // checkpoint is load-bearing twice over: it truncates lineage (the
+    // pointer-jump self-join embeds the round's subtree TWICE, so an
+    // uncheckpointed plan doubles in size every round — exponential),
     // and unlike persist() it creates no session-lifetime CacheManager
     // entry — superseded rounds' blocks are ContextCleaner-reclaimed
     // once unreferenced, and the caller's result is itself one
     // checkpointed table reclaimed the same way when dropped.
-    while (!converged && iter < maxIter) {
+    while (iter < maxIter && anyEdgeDisagrees(labels)) {
       val nbrMin = edges
         .join(labels.select(col("id").as("src"), col("label").as("src_label")), "src")
         .groupBy(col("dst").as("id"))
@@ -1518,19 +1535,11 @@ object Dedup {
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
       // pointer jumping: follow the label one hop (labels are node ids,
       // so the label table maps them); halves chain length every round
-      val contracted = propagated.as("p")
+      labels = propagated.as("p")
         .join(propagated.select(col("id").as("label"), col("label").as("parent")).as("q"),
           Seq("label"), "left")
         .select(col("id"), coalesce(col("parent"), col("label")).as("label"))
-      val next = contracted.localCheckpoint(eager = false)
-      // one job serves both purposes: the full-table diff count
-      // materializes the lazy checkpoint AND yields the exact
-      // convergence signal — no separate materialization pass
-      val changed = next.as("n").join(labels.as("o"), "id")
-        .filter(col("n.label") =!= col("o.label"))
-        .count()
-      labels = next
-      converged = changed == 0
+        .localCheckpoint()
       iter += 1
     }
     labels.select(col("id"), col("label").as("cluster_id"))

@@ -26,8 +26,8 @@ object PlanDump {
         df.write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
         val p = df.queryExecution.executedPlan.toString
-        val out = s"/tmp/plandump_${name}_$i.txt"
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(out), p)
+        val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), s"plandump_${name}_$i.txt")
+        java.nio.file.Files.writeString(out, p)
         println(f"run $i: $secs%.2f s fp=${graft.Bench.planFingerprint(p)} -> $out")
       }
     }

@@ -101,6 +101,22 @@ class BenchLineSpec extends AnyFunSuite {
     assert(Bench.planFingerprint(cutMidToken) != Bench.planFingerprint(different))
   }
 
+  test("a scan's Location hashes the same whole or cut at the metadata length") {
+    // Spark cuts the Location value at spark.sql.maxMetadataStringLength
+    // (100) characters, so the same scan over a longer scratch path
+    // prints a cut, unclosed value
+    def scan(location: String) =
+      s"FileScan parquet [doc_id#3L,text#4] Batched: true, DataFilters: [], Format: Parquet, " +
+        s"Location: $location, PartitionFilters: [], PushedFilters: [], ReadSchema: struct<doc_id:bigint,text:string>"
+    val whole = scan("InMemoryFileIndex(1 paths)[file:/tmp/q/graft_docs1234/documents.parquet]")
+    val cut = scan("InMemoryFileIndex(1 paths)[file:/tmp/graft_bench_scratch_dir_with_a_long_name/graft_docs98765/...")
+    assert(Bench.planFingerprint(whole) == Bench.planFingerprint(cut))
+    // a Location ending the line (the formatted explain) is masked too
+    assert(Bench.planFingerprint("Location: InMemoryFileIndex [file:/tmp/a]\nReadSchema: x") ==
+      Bench.planFingerprint("Location: InMemoryFileIndex [file:/tmp/graft_long_scratch/b...\nReadSchema: x"))
+    assert(Bench.planFingerprint(whole) != Bench.planFingerprint(whole.replace("doc_id:bigint", "doc_id:int")))
+  }
+
   test("plan fingerprint is stable across run-varying ids, sensitive to plan shape") {
     val runA =
       """AdaptiveSparkPlan isFinalPlan=true

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -265,6 +266,31 @@ class DedupSpec extends AnyFunSuite {
     assert(cc.size == 21 && cc.values.forall(_ == 100L))
   }
 
+  test("connectedComponents runs no propagation round on near-dup-shaped pairs") {
+    // stars centered on their minimum id (an original and its copies)
+    // and 3-cliques: the fused initialization already labels every node
+    // with its component minimum, so the closure is the initialization
+    // plus one agreement test
+    val stars = Seq(100L, 200L, 300L).flatMap(c => (1L to 4L).map(i => (c, c + i)))
+    val cliques = Seq(1000L, 2000L).flatMap(b => Seq((b, b + 1), (b, b + 2), (b + 1, b + 2)))
+    var cc: DataFrame = null
+    val jobs = SparkTestSession.jobsOf(info) {
+      cc = Dedup.connectedComponents((stars ++ cliques).toDF("id_a", "id_b"))
+    }
+    // pair checkpoint, label aggregation and its checkpoint, one
+    // agreement test; a round adds 11 jobs (the path below runs 17)
+    assert(jobs.size <= 6,
+      s"the zero-round closure ran ${jobs.size} Spark jobs, budget 6:\n${jobs.mkString("\n")}")
+    val expected = stars.map { case (c, l) => l -> c }.toMap ++ Seq(100L, 200L, 300L).map(c => c -> c) ++
+      cliques.flatMap { case (a, b) => Seq(a, b) }.map(v => v -> (v / 1000L * 1000L))
+    assert(cc.as[(Long, Long)].collect().toMap == expected)
+    // the path 1-2-3-4 disagrees at the start: one round, one more test
+    val pathJobs = SparkTestSession.jobsOf(info) {
+      Dedup.connectedComponents(Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b"))
+    }
+    assert(pathJobs.size > jobs.size, "a closure that needs a round must cost more jobs")
+  }
+
   test("connectedComponents on an empty pair set returns no rows") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(empty).count() == 0)
@@ -298,6 +324,14 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connectedComponents matches a union-find reference on random graphs") {
+    unionFindTrials(identity)
+  }
+
+  test("connectedComponents matches a union-find reference with edges spread over 4 partitions") {
+    unionFindTrials(_.repartition(4))
+  }
+
+  private def unionFindTrials(spread: DataFrame => DataFrame): Unit = {
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
       val nNodes = 60 + trial * 20
@@ -317,7 +351,7 @@ class DedupSpec extends AnyFunSuite {
         val minOfRoot = nodes.groupBy(find).map { case (r, ns) => r -> ns.min }
         nodes.map(n => n -> minOfRoot(find(n))).toMap
       }
-      val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+      val got = Dedup.connectedComponents(spread(edges.toDF("id_a", "id_b")))
         .as[(Long, Long)].collect().toMap
       assert(got == expected, s"trial $trial: distributed labels diverge from union-find")
     }

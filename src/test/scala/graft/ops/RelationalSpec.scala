@@ -123,15 +123,13 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("topPartsPerBrand rides the row_topk rewrite (no Window in the plan)") {
-    try {
-      graft.SparkEntry.setupSession(spark)
+    SparkTestSession.withSetupSession {
       val plan = Relational.topPartsPerBrand(
         spark.read.parquet(s"$sfDir/part.parquet"), k = 3)
         .queryExecution.executedPlan.toString
       assert(plan.contains("row_topk"), s"TopKWindowRewrite did not fire:\n$plan")
       assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
-    } finally
-      spark.conf.set(org.apache.spark.sql.graft.TopKWindowRewrite.ConfKey, "false")
+    }
   }
 
   test("customerRunningTotals uses a ROWS frame: date ties accumulate row by row") {

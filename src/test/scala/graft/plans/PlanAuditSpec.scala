@@ -161,29 +161,23 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("events_top3_hourly plans the bounded row_topk aggregate, not a per-group sort") {
-    try {
-      // the rewrite is session-level state owned by setupSession (the
-      // Bench/Verify mains call it once up front; query thunks must not)
-      graft.SparkEntry.setupSession(spark)
+    // the rewrite is session-level state owned by setupSession (the
+    // Bench/Verify mains call it once up front; query thunks must not)
+    SparkTestSession.withSetupSession {
       val plan = graft.SparkEntry.queries("events_top3_hourly")(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("row_topk"), s"TopKWindowRewrite did not fire:\n$plan")
       assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
-    } finally
-      // TopKRewriteSpec's baseline assertions share this test session
-      // and need the rewrite off again
-      spark.conf.set(org.apache.spark.sql.graft.TopKWindowRewrite.ConfKey, "false")
+    }
   }
 
   test("corpus_source_cap plans the bounded row_topk aggregate (per-domain cap at scale)") {
-    try {
-      graft.SparkEntry.setupSession(spark)
+    SparkTestSession.withSetupSession {
       val plan = graft.SparkEntry.queries("corpus_source_cap")(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("row_topk"), s"TopKWindowRewrite did not fire:\n$plan")
       assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
-    } finally
-      spark.conf.set(org.apache.spark.sql.graft.TopKWindowRewrite.ConfKey, "false")
+    }
   }
 
   test("events_json_filter parses each props blob exactly once (staged extraction)") {

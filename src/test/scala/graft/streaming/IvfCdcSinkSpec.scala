@@ -1,8 +1,5 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -65,33 +62,6 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     await(StreamingIngest.streamingIvfMutations(feed(inDir), layout.dir, chk,
       maxDeltaDirs = maxDeltaDirs, compactBytesRatio = 1e9))
 
-  /** The call-site names of the Spark jobs `run` starts, in order. */
-  private def jobsOf(run: => Unit): List[String] = {
-    val sites = ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = sites.synchronized {
-        sites += (if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
-      }
-    }
-    val marker = "budget marker"
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      run
-      // listener events arrive in order: once the marker job is seen,
-      // every job of the batch has been counted
-      graft.io.MutableStore.withCallSite(spark, marker) {
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-      }
-      val deadline = System.currentTimeMillis() + 30000
-      while (sites.synchronized(!sites.contains(marker)) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val jobs = sites.synchronized(sites.takeWhile(_ != marker).toList)
-    assert(jobs.nonEmpty && sites.contains(marker))
-    info(s"${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
-    jobs
-  }
-
   test("one micro-batch with adds and deletes over a live delta and tombstone runs a fixed job budget") {
     val layout = freshLayout("ivfbudget")
     val root = new java.io.File(layout.dir).getParent
@@ -101,7 +71,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     land(s"$root/in", Seq(op("add")(300L to 307L: _*)
       .unionAll(op("del")(1L, 200L, 307L))))
 
-    val batchJobs = jobsOf(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 16))
+    val batchJobs = SparkTestSession.jobsOf(info)(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 16))
     // measured: 6 (the id pass, appendDelta's materialization, mask
     // guard and write, deleteFromLayout's lookup and tombstone write)
     assert(batchJobs.size <= 7,
@@ -127,7 +97,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
 
     // one live delta at the batch's start reaches maxDeltaDirs = 1, so
     // the batch folds it before its own append and delete
-    val batchJobs = jobsOf(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 1))
+    val batchJobs = SparkTestSession.jobsOf(info)(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 1))
     // measured: 11 (5 compactDeltas, 1 start, 3 appendDelta, 2 deleteFromLayout)
     assert(batchJobs.size <= 11,
       s"the compacting CDC micro-batch ran ${batchJobs.size} Spark jobs, budget 11:\n${batchJobs.mkString("\n")}")
@@ -152,7 +122,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     land(s"$root/in", Seq(op("add")(300L to 307L: _*)
       .unionAll(op("del")(1L, 200L, 307L))))
 
-    val batchJobs = jobsOf(await(StreamingIngest.streamingHnswMutations(
+    val batchJobs = SparkTestSession.jobsOf(info)(await(StreamingIngest.streamingHnswMutations(
       feed(s"$root/in"), dir, s"$root/chk", maxDeltaDirs = 16, compactBytesRatio = 1e9)))
     // before the shared sink core this batch ran 28 jobs (a grouped op
     // count, an isEmpty probe, a broadcast anti-join and a second delete
@@ -181,7 +151,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     land(s"$root/in", Seq(op("add")(300L to 307L: _*)
       .unionAll(op("del")(1L, 200L))))
 
-    val batchJobs = jobsOf(await(StreamingIngest.streamingSq8Mutations(
+    val batchJobs = SparkTestSession.jobsOf(info)(await(StreamingIngest.streamingSq8Mutations(
       feed(s"$root/in"), dir, s"$root/chk", maxDeltaDirs = 16, compactBytesRatio = 1e9)))
     // before the shared sink core this batch ran 12 jobs (its op
     // presence came from a grouped aggregate), 10 with it; the bound
