@@ -238,7 +238,8 @@ object ScaleProbe {
             java.nio.file.Paths.get(s"${dir}_deltas/$tag"))
           if (foldWhen(dir, i)) {
             graft.text.InvertedIndex.compactDeltas(spark, table, dir, buckets = 8)
-            foldIo += graft.text.InvertedIndex.baseBytes(dir) // the new version's write
+            // the new version's write
+            foldIo += graft.io.MutableStore.baseBytes(graft.text.InvertedIndex.layoutOf(dir))
             folds += 1
           }
         }
@@ -248,9 +249,10 @@ object ScaleProbe {
           f"(${(System.nanoTime() - t0) / 1e9}%6.2f s)")
         spark.sql(s"DROP TABLE IF EXISTS $table")
       }
-      runPolicy("size-ratio", (dir, _) =>
-        graft.text.InvertedIndex.deltaBytes(dir) >=
-          graft.text.InvertedIndex.baseBytes(dir))
+      runPolicy("size-ratio", (dir, _) => {
+        val store = graft.text.InvertedIndex.layoutOf(dir)
+        graft.io.MutableStore.deltaBytes(store) >= graft.io.MutableStore.baseBytes(store)
+      })
       runPolicy("count-4", (_, i) => i % 4 == 0)
     }
 

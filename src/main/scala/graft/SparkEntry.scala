@@ -5125,7 +5125,8 @@ object SparkEntry {
       graft.text.InvertedIndex.ensure(s, corpus, stores(0)._2, stores(0)._3, buckets = 8)
       graft.text.InvertedIndex.ensurePositional(s, corpus, stores(1)._2, stores(1)._3, buckets = 8)
       graft.text.InvertedIndex.ensureTrigram(s, corpus, stores(2)._2, stores(2)._3, buckets = 8)
-      stores.foreach(st => graft.text.InvertedIndex.dropMutations(st._3)) // replay determinism
+      stores.foreach(st => // replay determinism
+        graft.io.MutableStore.dropMutations(graft.text.InvertedIndex.layoutOf(st._3)))
       val victim = corpus.filter(col("doc_id") === 6L)
       val before = stores.map(st =>
         graft.text.InvertedIndex.docResidual(s, st._2, st._3, 6L))
@@ -5169,8 +5170,8 @@ object SparkEntry {
         s, corpus, targets(1).table, targets(1).dir, buckets = 8)
       graft.text.InvertedIndex.ensureTrigram(
         s, corpus, targets(2).table, targets(2).dir, buckets = 8)
-      targets.foreach(t =>
-        graft.text.InvertedIndex.dropMutations(t.dir)) // replay determinism
+      targets.foreach(t => // replay determinism
+        graft.io.MutableStore.dropMutations(graft.text.InvertedIndex.layoutOf(t.dir)))
       val scratch = scratchDir("tdjq", dir)
       val victims = corpus.filter(col("doc_id") === 6L)
       val journal = s"$scratch/journal"
@@ -5213,7 +5214,7 @@ object SparkEntry {
       val corpus = emb(s, dir)
       val sqDir = artifactDir("sq8del", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, sqDir)
-      graft.index.Sq.dropMutations(sqDir) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.index.Sq.layoutOf(sqDir)) // replay determinism
       val planted = corpus.filter(col("vec_id") === 0)
         .crossJoin(s.range(5))
         .select((col("id") + lit(5300000L)).as("vec_id"), col("embedding"))
@@ -5237,7 +5238,7 @@ object SparkEntry {
       val idxDir = artifactDir("descr", dir)
       val table = s"graft_descr_$key"
       graft.text.InvertedIndex.ensure(s, corpus, table, idxDir, buckets = 8)
-      graft.text.InvertedIndex.dropMutations(idxDir) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.text.InvertedIndex.layoutOf(idxDir)) // replay determinism
       val planted = corpus.filter(col("doc_id") < 5)
         .select((col("doc_id") + lit(8600000L)).as("doc_id"), col("text"))
       graft.text.InvertedIndex.appendDelta(s, idxDir, planted, tag = "a1")
@@ -5266,7 +5267,7 @@ object SparkEntry {
       graft.text.InvertedIndex.ensure(s, corpus, table, idxDir, buckets = 8)
       // replay determinism: a re-run must not see the previous run's
       // re-append delta among the tombstone's covered legs
-      graft.text.InvertedIndex.dropMutations(idxDir)
+      graft.io.MutableStore.dropMutations(graft.text.InvertedIndex.layoutOf(idxDir))
       graft.text.InvertedIndex.deleteDocs(s, idxDir,
         corpus.filter(col("doc_id").isin(2L, 7L, 12L)), tag = "del")
       graft.text.InvertedIndex.appendDelta(s, idxDir,
@@ -5286,7 +5287,7 @@ object SparkEntry {
       val idxDir = artifactDir("posdel", dir)
       val table = s"graft_posdel_$key"
       graft.text.InvertedIndex.ensurePositional(s, corpus, table, idxDir, buckets = 8)
-      graft.text.InvertedIndex.dropMutations(idxDir) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.text.InvertedIndex.layoutOf(idxDir)) // replay determinism
       // bounded: exactly two ids come back to the driver
       val ids = corpus
         .filter(graft.text.TextAnalysis.normalizeText(col("text")).contains("hash join"))
@@ -5310,7 +5311,7 @@ object SparkEntry {
       val idxDir = artifactDir("tridel", dir)
       val table = s"graft_tridel_$key"
       graft.text.InvertedIndex.ensureTrigram(s, corpus, table, idxDir, buckets = 8)
-      graft.text.InvertedIndex.dropMutations(idxDir) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.text.InvertedIndex.layoutOf(idxDir)) // replay determinism
       val ids = corpus
         .filter(graft.text.TextAnalysis.normalizeText(col("text")).contains("merge batch"))
         .orderBy(col("doc_id")).limit(2)
@@ -5340,7 +5341,7 @@ object SparkEntry {
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
       val store = artifactDir("hashdel", dir)
       graft.dedup.Dedup.ensureHashStore(s, corpus, store)
-      graft.dedup.Dedup.dropHashStoreMutations(store) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.dedup.Dedup.flatOf(store)) // replay determinism
       // bounded: exactly two (id, text) rows come back
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(graft.text.TextAnalysis.normalizeText(col("text")))
@@ -5379,7 +5380,7 @@ object SparkEntry {
       val store = artifactDir("sheddel", dir)
       graft.dedup.Dedup.ensureShingleStore(
         s, corpus.filter(col("doc_id") % 3 === 0), store)
-      graft.dedup.Dedup.dropShingleStoreMutations(store) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.dedup.Dedup.shingleOf(store)) // replay determinism
       import s.implicits._
       graft.dedup.Dedup.deleteFromShingleStore(
         s, store, Seq(0L).toDF("doc_id"), tag = "del")
@@ -5409,7 +5410,7 @@ object SparkEntry {
       val store = artifactDir("fuzzdel", dir)
       graft.ops.FuzzyJoin.ensureFuzzyStore(s,
         cust.filter(col("c_custkey") % 3 === 0), store, "c_custkey", "c_name")
-      graft.ops.FuzzyJoin.dropFuzzyStoreMutations(store) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.ops.FuzzyJoin.flatOf(store)) // replay determinism
       import s.implicits._
       graft.ops.FuzzyJoin.deleteFromFuzzyStore(s, store,
         Seq(3L).toDF("store_id"), tag = "del")
@@ -5437,7 +5438,7 @@ object SparkEntry {
       val store = artifactDir("sigdel", dir)
       graft.dedup.Dedup.ensureSigStore(s,
         sigs.filter(col("vec_id") % 3 === 0), store, idCol = "vec_id")
-      graft.dedup.Dedup.dropSigStoreMutations(store) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.dedup.Dedup.flatOf(store)) // replay determinism
       import s.implicits._
       graft.dedup.Dedup.deleteFromSigStore(s, store,
         Seq(0L).toDF("s_id"), tag = "del")
@@ -5664,7 +5665,7 @@ object SparkEntry {
       val corpus = emb(s, dir)
       val sqDir = artifactDir("sq8del", dir)
       graft.index.Sq.ensureCodesArtifact(corpus, sqDir)
-      graft.index.Sq.dropMutations(sqDir) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.index.Sq.layoutOf(sqDir)) // replay determinism
       val query = vecOf(corpus, 0)
       // bounded: the exact top-4 comes back, self drops out -> 3 ids
       val delIds = VectorSearch.knnExact(corpus, query.toSeq, 4)
@@ -5922,17 +5923,17 @@ object SparkEntry {
           commit(60L, "a2") // → v2; the v1 prior is retention-protected
           val base1 = java.nio.file.Paths.get(d, "base_v1")
           val retained = java.nio.file.Files.exists(base1)
-          graft.ops.FuzzyJoin.expireFuzzyStoreSnapshots(d) // policy: keep 2
+          graft.io.MutableStore.expire(graft.ops.FuzzyJoin.flatOf(d)) // policy: keep 2
           val protSurvives = java.nio.file.Files.exists(base1)
           val pinnedServes = ids(pinned) == wantV1
           graft.io.MutableStore.setGcRetention(d, None) // default 1
-          val n = graft.ops.FuzzyJoin.expireFuzzyStoreSnapshots(d)
+          val n = graft.io.MutableStore.expire(graft.ops.FuzzyJoin.flatOf(d))
           val reclaimed = n >= 1 && !java.nio.file.Files.exists(base1)
           val st = graft.io.MutableStore.state(d)
           val vUnmoved = st.v == 2 && st.priors.isEmpty
           val freshOk =
             ids(graft.ops.FuzzyJoin.fuzzyStoreView(s, d)) == wantV1 + 60L
-          val idem = graft.ops.FuzzyJoin.expireFuzzyStoreSnapshots(d) == 0
+          val idem = graft.io.MutableStore.expire(graft.ops.FuzzyJoin.flatOf(d)) == 0
           (retained, protSurvives, pinnedServes, reclaimed, vUnmoved,
             freshOk, idem)
         } finally graft.io.MutableStore.setGcRetention(d, None)
@@ -6010,7 +6011,7 @@ object SparkEntry {
         java.nio.file.Paths.get(d, "base_v1"))
       commit(50L, "a1") // → v1
       val wantV1 = ids(graft.ops.FuzzyJoin.fuzzyStoreView(s, d))
-      graft.ops.FuzzyJoin.tagFuzzySnapshot(d, "golden") // names v1
+      graft.io.MutableStore.tagSnapshot(graft.ops.FuzzyJoin.flatOf(d), "golden") // names v1
       // two commits under default retention=1 would collect v1; the
       // tag keeps it readable BY NAME
       commit(60L, "a2"); commit(61L, "a3") // → v3
@@ -6019,11 +6020,11 @@ object SparkEntry {
         ids(graft.ops.FuzzyJoin.fuzzyStoreViewAtTag(s, d, "golden")) == wantV1
       // ROLLBACK to the tag; then ROLL-FORWARD (the from-version is a
       // retained prior)
-      val from = graft.ops.FuzzyJoin.rollbackFuzzyStoreToTag(d, "golden")
+      val from = graft.io.MutableStore.rollbackToTag(graft.ops.FuzzyJoin.flatOf(d), "golden")
       val rollbackRestores = from == 3 &&
         graft.io.MutableStore.state(d).v == 1 &&
         ids(graft.ops.FuzzyJoin.fuzzyStoreView(s, d)) == wantV1
-      val rollForward = graft.ops.FuzzyJoin.rollbackFuzzyStore(d, 3) == 1 &&
+      val rollForward = graft.io.MutableStore.rollbackTo(graft.ops.FuzzyJoin.flatOf(d), 3) == 1 &&
         ids(graft.ops.FuzzyJoin.fuzzyStoreView(s, d)) == wantV1 ++ Set(60L, 61L)
       // a compaction after the rollback dance: never-reuse allocation
       // skips every on-disk version; the tagged snapshot still serves
@@ -6033,8 +6034,8 @@ object SparkEntry {
         ids(graft.ops.FuzzyJoin.fuzzyStoreViewAtTag(s, d, "golden")) == wantV1
       // dropping the tag hands the snapshot back to the policy: the
       // standalone expiry collects it and revokes the read
-      graft.ops.FuzzyJoin.dropFuzzyTag(d, "golden")
-      val expired = graft.ops.FuzzyJoin.expireFuzzyStoreSnapshots(d)
+      graft.io.MutableStore.dropTag(graft.ops.FuzzyJoin.flatOf(d), "golden")
+      val expired = graft.io.MutableStore.expire(graft.ops.FuzzyJoin.flatOf(d))
       val viewAtGone = try {
         graft.ops.FuzzyJoin.fuzzyStoreViewAt(s, d, 1); false
       } catch { case e: IllegalArgumentException =>
@@ -6363,7 +6364,7 @@ object SparkEntry {
       val e = emb(s, dir)
       val artDir = artifactDir("bindel", dir)
       graft.index.Binary.ensureSignatureArtifact(e, artDir, EmbDim)
-      graft.index.Binary.dropMutations(artDir) // replay determinism
+      graft.io.MutableStore.dropMutations(graft.index.Binary.layoutOf(artDir)) // replay determinism
       val thr = graft.index.Binary.thresholdsFromArtifact(s, artDir)
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0)

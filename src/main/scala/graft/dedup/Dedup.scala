@@ -82,8 +82,10 @@ object Dedup {
   import graft.io.MutableStore
 
   /** The hash and signature stores: the FLAT layout
-    * ([[graft.io.MutableStore.flatLayout]]). */
-  private def flatOf(dir: String) = MutableStore.flatLayout(dir, "Dedup")
+    * ([[graft.io.MutableStore.flatLayout]]). The stores' one handle:
+    * callers apply the [[graft.io.MutableStore]] lifecycle primitives
+    * (feeds, expiry, replay reset, tags, rollback) to it. */
+  private[graft] def flatOf(dir: String) = MutableStore.flatLayout(dir, "Dedup")
 
   /** TAKEDOWN from the hash store (GDPR/opt-out: the content hash of a
     * scrubbed document is derived data and must go too). The batch is
@@ -163,28 +165,6 @@ object Dedup {
       name: String): DataFrame =
     readHashAt(spark, dir, MutableStore.snapAt(flatOf(dir), MutableStore.resolveTag(dir, name)))
 
-  /** NAMED snapshot tag on the exact-dedup hash store — exempts
-    * `version` (current by default) from the retention policy until
-    * dropped. Returns the tagged version. */
-  def tagHashSnapshot(
-      dir: String, name: String, version: Option[Int] = None): Int =
-    MutableStore.tagSnapshot(dir, name, version)
-
-  def dropHashTag(dir: String, name: String): Boolean =
-    MutableStore.dropTag(dir, name)
-
-  /** ROLLBACK the hash store to a retained version — one atomic state
-    * commit replaying the prior's reference set; the rolled-back-FROM
-    * version becomes a retained prior. Returns the version rolled back
-    * from. */
-  def rollbackHashStore(dir: String, version: Int): Int =
-    MutableStore.rollbackTo(dir, version)
-
-  /** [[rollbackHashStore]] by tag — restores the tag's EXACT captured
-    * snapshot. Returns the version rolled back from. */
-  def rollbackHashStoreToTag(dir: String, name: String): Int =
-    MutableStore.rollbackToTag(dir, name)
-
   /** Fold live deltas and consumed tombstones into a fresh base
     * version — the engine-wide VERSIONED ATOMIC SWAP
     * ([[graft.io.MutableStore.compact]]) applied to the hash store:
@@ -198,17 +178,6 @@ object Dedup {
       excludeTags: Set[String] = Set.empty): Unit =
     MutableStore.compactFlat(spark, flatOf(dir), "compactHashStore", excludeTags,
       "pairs", Seq("h", "first_id"))
-
-  /** Policy feeds for the streaming auto-compaction (count + the
-    * size-ratio trigger every streaming leg uses). */
-  def hashStoreDeltaCount(dir: String): Int = MutableStore.deltaTags(flatOf(dir)).size
-  def hashStoreBaseBytes(dir: String): Long = MutableStore.baseBytes(flatOf(dir))
-  def hashStoreDeltaBytes(dir: String): Long = MutableStore.deltaBytes(flatOf(dir))
-
-  /** Drop every delta and tombstone dir — the replay reset
-    * ([[graft.io.MutableStore.dropMutations]]; the base snapshot and
-    * its seed sidecar are untouched). */
-  def dropHashStoreMutations(dir: String): Unit = MutableStore.dropMutations(flatOf(dir))
 
   /** Novelty check of a crawl `batch` against a persisted hash store
     * ([[ensureHashStore]]): every batch row annotated with
@@ -391,8 +360,10 @@ object Dedup {
   /** The shingle store's two-part layout: `sh`/`sizes` part dirs (v0)
     * → `sh_v<N>`/`sizes_v<N>`, each with `delta_<tag>` legs nested in
     * the part dir (listed through `sh`; an append writes both under one
-    * tag), the flat `_tombstones`. */
-  private def shingleOf(dir: String) = MutableStore.Layout("Dedup", dir,
+    * tag), the flat `_tombstones`. The store's one handle: callers
+    * apply the [[graft.io.MutableStore]] lifecycle primitives (feeds,
+    * expiry, replay reset) to it. */
+  private[graft] def shingleOf(dir: String) = MutableStore.Layout("Dedup", dir,
     java.nio.file.Paths.get(dir, MutableStore.stateName), flat = true, dir,
     Seq("sh_v", "sizes_v"), Seq(s"$dir/sh", s"$dir/sizes"),
     () => Seq("sh", "sizes").flatMap(part => MutableStore.entries(s"$dir/$part")
@@ -408,27 +379,6 @@ object Dedup {
       excludeTags: Set[String] = Set.empty): Unit =
     MutableStore.compactFlat(spark, shingleOf(dir), "compactShingleStore", excludeTags,
       "ids", Seq("c_id"))
-
-  /** Standalone snapshot expiry for the HASH-layout stores (exact/
-    * fuzzy-hash and SimHash signature stores — the shared flat
-    * base_v/delta layout): apply the retention policy and collect due
-    * priors + debris NOW, without waiting for (or performing) a
-    * content commit. See [[graft.io.MutableStore.expire]]. */
-  def expireHashStoreSnapshots(dir: String): Int = MutableStore.expire(flatOf(dir))
-
-  /** Standalone snapshot expiry for the SHINGLE store (the near-dup
-    * MinHash store's two-part layout). */
-  def expireShingleStoreSnapshots(dir: String): Int = MutableStore.expire(shingleOf(dir))
-
-  /** Policy feeds for the streaming auto-compaction of the shingle
-    * store (both parts; delta dirs live INSIDE the part dirs). */
-  def shingleStoreDeltaCount(dir: String): Int = MutableStore.deltaTags(shingleOf(dir)).size
-  def shingleStoreBaseBytes(dir: String): Long = MutableStore.baseBytes(shingleOf(dir))
-  def shingleStoreDeltaBytes(dir: String): Long = MutableStore.deltaBytes(shingleOf(dir))
-
-  /** Replay-reset: drop every delta and tombstone dir of the shingle
-    * store (base snapshot + seed sidecar untouched). */
-  def dropShingleStoreMutations(dir: String): Unit = MutableStore.dropMutations(shingleOf(dir))
 
   /** Near-duplicate check of a crawl `batch` against a persisted
     * shingle store ([[ensureShingleStore]]): every batch row annotated
@@ -753,10 +703,6 @@ object Dedup {
     MutableStore.compactFlat(spark, flatOf(dir), "compactSigStore", excludeTags,
       "ids", Seq("s_id"))
 
-  /** Replay-reset for the signature store — deltas + tombstones go,
-    * base snapshot and seed sidecar stay. */
-  def dropSigStoreMutations(dir: String): Unit = dropHashStoreMutations(dir)
-
   /** One micro-batch step of STORE-backed incremental SIGNATURE dedup —
     * the [[incrementalDedupBatch]] shape for perceptual near-dups:
     * every batch signature gets a verdict against the persisted store
@@ -850,28 +796,14 @@ object Dedup {
     * at least one shingle. The shared-shingle join IS the candidate
     * pruning: shuffle key = shingle hash. At 100 TB, drop ultra-frequent
     * shingles first (`maxShingleDf`) so no hot key explodes the join —
-    * the standard "stopword shingle" guard.
-    *
-    * With `prefixFilter=true`, candidates are generated from each doc's
-    * rarest `|A| − ⌈t·|A|⌉ + 1` shingles only (global rarity order) —
-    * the prefix-filtering principle of SSJoin/PPJoin (Chaudhuri et al.
-    * ICDE'06; Xiao et al. WWW'08): any pair with Jaccard ≥ t must share
-    * a prefix shingle, so the result is identical while the candidate
-    * join shrinks by the square of the prefix selectivity. Measured
-    * tradeoff: at t=0.3 the prefix is ~70% of each set and the extra
-    * window passes cost more than they save (14s vs 9s at sf0.1); use
-    * it for high thresholds (t ≥ 0.7), where the prefix is a sliver and
-    * candidates shrink quadratically. Equivalence is test-pinned. */
+    * the standard "stopword shingle" guard. */
   def ngramJaccardPairs(
       df: DataFrame,
       n: Int = 3,
       minJaccard: Double = 0.5,
       idCol: String = "doc_id",
       textCol: String = "text",
-      maxShingleDf: Long = 1000L,
-      prefixFilter: Boolean = false): DataFrame = {
-    if (prefixFilter)
-      return ngramJaccardPrefix(df, n, minJaccard, idCol, textCol, maxShingleDf)
+      maxShingleDf: Long = 1000L): DataFrame = {
     val shingled = df
       .select(col(idCol), explode(wordShingles(col(textCol), n)).as("shingle"))
     val rare = shingled
@@ -900,51 +832,6 @@ object Dedup {
       .withColumn("jaccard",
         col("n_inter").cast("double") /
           (col("size_a") + col("size_b") - col("n_inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Prefix-filtered exact Jaccard (see [[ngramJaccardPairs]]). */
-  private def ngramJaccardPrefix(
-      df: DataFrame,
-      n: Int,
-      minJaccard: Double,
-      idCol: String,
-      textCol: String,
-      maxShingleDf: Long): DataFrame = {
-    val sets = df
-      .select(col(idCol), wordShingles(col(textCol), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val exploded = sets.select(col(idCol), explode(col("sh")).as("shingle"))
-    val dfCounts = exploded.groupBy("shingle").agg(count(lit(1)).as("df_count"))
-    val pruned = exploded
-      .join(dfCounts.filter(col("df_count") <= maxShingleDf), "shingle")
-    // per-doc prefix: the rarest (set_size − ceil(t·set_size) + 1)
-    // shingles in global (df, shingle) order
-    val w = Window.partitionBy(col(idCol)).orderBy(col("df_count").asc, col("shingle").asc)
-    val sized = pruned
-      .withColumn("rn", row_number().over(w))
-      .withColumn("set_size", count(lit(1)).over(Window.partitionBy(col(idCol))))
-    val prefix = sized.filter(
-      col("rn") <= col("set_size") - ceil(lit(minJaccard) * col("set_size")) + 1)
-    // aliased self-join: one shared prefix-selection subplan (see
-    // ngramJaccardPairs — per-branch derivation re-runs the df-count
-    // join and both windows)
-    val candidates = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.shingle") === col("b.shingle") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-    // exact verify on the pruned shingle sets
-    val prunedSets = pruned.groupBy(col(idCol))
-      .agg(collect_list(col("shingle")).as("sh"))
-    val setsA = prunedSets.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val setsB = prunedSets.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    candidates
-      .join(setsA, "id_a").join(setsB, "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
   }
@@ -1554,10 +1441,11 @@ object Dedup {
     * per query). Same discipline as the persisted IVF layouts
     * ([[graft.index.Ivf.buildLayout]]): the (id, cluster_id) parquet is
     * reused only when the recorded corpus fingerprint (row count +
-    * order-independent content hash) matches the current input, and the
-    * sidecar is written LAST so a crashed build never looks complete.
-    * Returns the artifact as a DataFrame of (`idCol`, cluster_id) for
-    * every clustered doc. */
+    * order-independent content hash) AND the build parameters match
+    * the current call ([[graft.io.Artifact.ensure]]: the build runs
+    * under the dir lock, and the sidecar is written LAST so a crashed
+    * build never looks complete). Returns the artifact as a DataFrame
+    * of (`idCol`, cluster_id) for every clustered doc. */
   def clusterArtifact(
       df: DataFrame,
       dir: String,
@@ -1566,26 +1454,17 @@ object Dedup {
       maxShingleDf: Long = 1000L,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val spark = df.sparkSession
-    val sidecar = java.nio.file.Paths.get(dir, "_fingerprint.json")
     val (nRows, hash, hashSum) =
       graft.io.Artifact.hashAgg(df, xxhash64(col(idCol), col(textCol)))
     val dataDir = s"$dir/clusters"
-    if (java.nio.file.Files.exists(sidecar)) {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(sidecar))
-      if (node.get("count").asLong() == nRows && node.get("hash").asLong() == hash &&
-          node.hasNonNull("hsum") && node.get("hsum").asText() == hashSum)
-        return spark.read.parquet(dataDir)
+    graft.io.Artifact.ensure(dir, "_fingerprint.json", graft.io.Artifact.fingerprintJson(
+        nRows, hash, "hsum" -> hashSum, "n" -> n.toString, "minJaccard" -> minJaccard.toString,
+        "maxShingleDf" -> maxShingleDf.toString, "idCol" -> idCol, "textCol" -> textCol)) {
+      connectedComponents(ngramJaccardPairs(df, n, minJaccard, idCol, textCol, maxShingleDf)
+          .select("id_a", "id_b"))
+        .withColumnRenamed("id", idCol)
+        .write.mode("overwrite").parquet(dataDir)
     }
-    val pairs = ngramJaccardPairs(df, n, minJaccard, idCol, textCol, maxShingleDf)
-      .select("id_a", "id_b")
-    connectedComponents(pairs)
-      .withColumnRenamed("id", idCol)
-      .write.mode("overwrite").parquet(dataDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    graft.io.Artifact.writeAtomic(sidecar,
-      s"""{"count":$nRows,"hash":$hash,"hsum":"$hashSum"}""")
-    spark.read.parquet(dataDir)
+    df.sparkSession.read.parquet(dataDir)
   }
 }

@@ -157,8 +157,10 @@ object Binary {
 
   /** The signature store as a versioned store ([[graft.io.MutableStore]]):
     * state in the fingerprint sidecar, base `sigs` → `sigs_v<N>`,
-    * `tomb_<tag>` (ids + `_stats.json`) legs; no deltas. */
-  private def layoutOf(dir: String) = graft.io.MutableStore.Layout("Binary", dir,
+    * `tomb_<tag>` (ids + `_stats.json`) legs; no deltas. The store's
+    * one handle: callers apply the [[graft.io.MutableStore]] lifecycle
+    * primitives (expiry, replay reset) to it. */
+  private[graft] def layoutOf(dir: String) = graft.io.MutableStore.Layout("Binary", dir,
     java.nio.file.Paths.get(dir, sigSidecar), flat = false, dir, Seq("sigs_v"),
     Seq(s"$dir/sigs"), () => Seq(java.nio.file.Paths.get(dir, "sigs")),
     Seq(dir), "delta_", Some("_stats.json"), dir, "tomb_", Some("_stats.json"))
@@ -206,10 +208,6 @@ object Binary {
         .foreach(graft.io.MutableStore.deleteDir)
     }
   }
-
-  /** Drop every tombstone dir, returning the store to the BASE
-    * snapshot its sidecar attests ([[graft.io.MutableStore.dropMutations]]). */
-  def dropMutations(dir: String): Unit = graft.io.MutableStore.dropMutations(layoutOf(dir))
 
   /** DELETE a batch of vectors from the signature store: a tag-keyed
     * tombstone (ids + the batch's mergeable fingerprint terms, derived
@@ -272,10 +270,6 @@ object Binary {
         .reduce(_ unionAll _).distinct().select(col(idCol))),
       Seq(idCol), "left_anti")
   }
-
-  /** Standalone snapshot expiry for the binary signature store
-    * ([[graft.io.MutableStore.expire]]). Returns # priors expired. */
-  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   /** Physically drop tombstoned rows into a NEW `sigs_v<N>` version
     * ([[graft.io.MutableStore.compact]]): the committed sidecar carries

@@ -383,8 +383,10 @@ object Hnsw {
     * in the fingerprint sidecar, base `layout` → `layout_v<N>`,
     * `layout_delta_<tag>` graphs beside it, tombstone batches under
     * `_tombstones/del_<tag>` (global id masks, consumed only by a
-    * `dropTombstoned` fold). */
-  private def layoutOf(dir: String) = graft.io.MutableStore.Layout("Hnsw", dir,
+    * `dropTombstoned` fold). The store's one handle: callers apply the
+    * [[graft.io.MutableStore]] lifecycle primitives (feeds, expiry,
+    * replay reset) to it. */
+  private[graft] def layoutOf(dir: String) = graft.io.MutableStore.Layout("Hnsw", dir,
     java.nio.file.Paths.get(dir, sidecarName), flat = false, dir, Seq("layout_v"),
     Seq(s"$dir/layout"), () => Seq(java.nio.file.Paths.get(dir, "layout")),
     Seq(dir), deltaDirPrefix, None, s"$dir/$tombstoneDirName", "del_", None)
@@ -612,21 +614,6 @@ object Hnsw {
     graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
 
-  /** Tags of the live deltas, sorted (the probe fan-out width — the
-    * compaction policy bounds it). A committed-but-not-yet-GC'd folded
-    * delta (sidecar `folded` list) is NOT live — its nodes are already
-    * in the current base version. */
-  def deltaTags(dir: String): Seq[String] = graft.io.MutableStore.deltaTags(layoutOf(dir))
-
-  /** Bytes of the live delta graph dirs / of the base shards — the
-    * size-ratio compaction policy's inputs (fold when deltas reach a
-    * fixed fraction of the base, so each canonical-rebuild fold costs
-    * IO proportional to the deltas it folds, not an O(base) rewrite
-    * every fixed number of micro-batches). */
-  def deltaBytes(dir: String): Long = graft.io.MutableStore.deltaBytes(layoutOf(dir))
-
-  def baseBytes(dir: String): Long = graft.io.MutableStore.baseBytes(layoutOf(dir))
-
   /** Probe base AND every delta graph, merge ≤ (1+deltas)·parts·k
     * candidates in one TakeOrdered. Deltas are immutable once written,
     * so their graphs cache under (dir, tag, part) like the base. */
@@ -707,10 +694,6 @@ object Hnsw {
       writePartCounts(spark, f.building.head)
       fingerprintFields(n, h, hs, p)
     }
-
-  /** Standalone snapshot expiry for the HNSW layout store
-    * ([[graft.io.MutableStore.expire]]). Returns # priors expired. */
-  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   /** Mark ids deleted — the tombstone protocol ([[graft.index.Ivf]]'s
     * shape): each delete batch is a TAG-KEYED OVERWRITE under

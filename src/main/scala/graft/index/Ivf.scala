@@ -366,12 +366,17 @@ object Ivf {
     * builds both under `_building_` temps); `_delta_<tag>` legs at the
     * root and `_tombstones/tomb_<tag>` global id masks, neither with a
     * marker file. Versions share files through their manifests, so the
-    * base GC is the manifest-driven [[gcLayout]]. */
-  private def storeOf(dir: String): MutableStore.Layout = MutableStore.Layout("Ivf", dir,
+    * base GC is the manifest-driven [[gcLayout]], and a version's base
+    * size is the summed size of the files its manifest lists. The
+    * layout's one store handle: callers apply the
+    * [[graft.io.MutableStore]] lifecycle primitives (feeds, expiry,
+    * tags, rollback) to it. */
+  private[graft] def storeOf(dir: String): MutableStore.Layout = MutableStore.Layout("Ivf", dir,
     java.nio.file.Paths.get(dir, MutableStore.stateName), flat = true,
     dir, Seq(foldDirPrefix, manifestPrefix), Seq(dir), () => clusterDirs(dir).map(_.toPath),
     Seq(dir), deltaDirPrefix, None, s"$dir/$tombstoneDirName", tombTagPrefix, None,
-    Some(gcLayout(dir, _, _)))
+    Some(gcLayout(dir, _, _)),
+    Some(v => readManifest(dir, v).files.map(f => new java.io.File(dir, f).length()).sum))
 
   private def snapOf(dir: String): MutableStore.Snap = MutableStore.snapOf(storeOf(dir))
 
@@ -742,44 +747,6 @@ object Ivf {
       df: DataFrame, mask: Option[DataFrame], idCol: String): DataFrame =
     mask.map(m => df.join(broadcast(m), Seq(idCol), "left_anti")).getOrElse(df)
 
-  /** Standalone snapshot expiry for the IVF layout
-    * ([[graft.io.MutableStore.expire]]): apply the retention policy and
-    * collect due priors NOW — superseded base files and delta dirs via
-    * each retired version's manifest `removed`/`removedDirs` lists,
-    * plus crashed-attempt fold trees and manifests — under the writer
-    * lease, without a content commit. Returns the number of priors
-    * expired. */
-  def expireSnapshots(dir: String): Int = MutableStore.expire(storeOf(dir))
-
-  /** NAMED snapshot tag on the layout (the Iceberg tag analogue):
-    * captures the EXACT current reference set (or a retained prior's
-    * retirement state when `version` names one) and exempts it from
-    * the retention policy until dropped — a probe fleet can pin "the
-    * validated index" by name for as long as the deployment needs it.
-    * Returns the tagged version. */
-  def tagSnapshot(dir: String, name: String, version: Option[Int] = None): Int =
-    MutableStore.tagSnapshot(dir, name, version)
-
-  def dropTag(dir: String, name: String): Boolean =
-    MutableStore.dropTag(dir, name)
-
-  /** [[rollbackTo]] by tag — restores the tag's EXACT captured
-    * snapshot. Returns the version rolled back from. */
-  def rollbackToTag(dir: String, name: String): Int =
-    MutableStore.rollbackToTag(dir, name)
-
-  /** ROLLBACK the layout to retained `version` — one atomic state
-    * commit replaying the prior's reference set (its immutable
-    * manifest + the delta/tombstone legs live at its retirement). No
-    * data moves; the rolled-back-FROM version becomes a retained prior
-    * (roll-forward stays possible while the policy — or a tag —
-    * protects it), and the next fold's never-reuse allocation skips
-    * every on-disk version. The committed fingerprint terms are kept
-    * as they are (a prior ref records none), so they still attest the
-    * rolled-back-FROM corpus. Returns the version rolled back from. */
-  def rollbackTo(dir: String, version: Int): Int =
-    MutableStore.rollbackTo(dir, version)
-
   /** The layout's base GC (its [[graft.io.MutableStore.Layout]]
     * `baseGc` slot), run at a compaction's start or a standalone
     * expiry: versions retired past the retention policy release the
@@ -876,23 +843,12 @@ object Ivf {
     } finally assigned.unpersist()
   }
 
-  /** Number of LIVE delta legs — what a probe's union width grows
-    * with, and the quantity the streaming auto-compaction policy
-    * bounds. Committed-state resolution (folded dirs linger on disk
-    * until retention GC and must not count). */
-  def deltaDirCount(layout: Layout): Int = MutableStore.deltaTags(storeOf(layout.dir)).size
-
-  /** Bytes of the live delta dirs / of the base inverted lists — the
-    * size-ratio compaction policy's inputs (a fold rewrites the
-    * clusters the deltas touch, so the ratio trigger amortizes that
-    * rewrite over proportionally more appended bytes). */
+  /** Bytes of the live delta dirs / of the base inverted lists
+    * ([[graft.io.MutableStore.deltaBytes]] / `baseBytes` on the
+    * layout's handle, [[storeOf]]); delegates kept for callers that
+    * hold only an IVF [[Layout]]. */
   def deltaBytes(layout: Layout): Long = MutableStore.deltaBytes(storeOf(layout.dir))
-
-  def baseBytes(layout: Layout): Long = {
-    val v = MutableStore.state(layout.dir).v
-    if (v < 1) clusterDirs(layout.dir).map(c => MutableStore.duBytes(c.toPath)).sum
-    else readManifest(layout.dir, v).files.map(f => new java.io.File(layout.dir, f).length()).sum
-  }
+  def baseBytes(layout: Layout): Long = MutableStore.baseBytes(storeOf(layout.dir))
 
   /** All LIVE delta rows of a layout (None when the committed state
     * names none — folded dirs linger until retention GC and must not

@@ -334,8 +334,10 @@ object Sq {
   /** The code store as a versioned store ([[graft.io.MutableStore]]):
     * state in the fingerprint sidecar, base `codes` → `codes_v<N>`,
     * `delta_<tag>` (codes + `_stats.json`) and `tomb_<tag>` (ids +
-    * `_stats.json`) legs at the dir root. */
-  private def layoutOf(dir: String) = graft.io.MutableStore.Layout("Sq", dir,
+    * `_stats.json`) legs at the dir root. The store's one handle:
+    * callers apply the [[graft.io.MutableStore]] lifecycle primitives
+    * (feeds, expiry, replay reset) to it. */
+  private[graft] def layoutOf(dir: String) = graft.io.MutableStore.Layout("Sq", dir,
     java.nio.file.Paths.get(dir, codesSidecar), flat = false, dir, Seq("codes_v"),
     Seq(s"$dir/codes"), () => Seq(java.nio.file.Paths.get(dir, "codes")),
     Seq(dir), "delta_", Some("_stats.json"), dir, "tomb_", Some("_stats.json"))
@@ -458,10 +460,6 @@ object Sq {
     graft.io.MutableStore.commitMutation(l, tag, tomb = true)
   }
 
-  /** Drop every delta and tombstone dir, returning the store to the
-    * BASE snapshot its sidecar attests ([[graft.io.MutableStore.dropMutations]]). */
-  def dropMutations(dir: String): Unit = graft.io.MutableStore.dropMutations(layoutOf(dir))
-
   /** Codes of the base and the `legs` delta tags of snapshot `s`, each
     * leg anti-joined with only the (broadcast, tiny) tombstones
     * covering it — so a vector re-appended after its delete is live
@@ -495,10 +493,6 @@ object Sq {
     codesOf(spark, dir, s, s.live, idCol)
   }
 
-  /** Base/delta byte sizes for the size-ratio compaction policy. */
-  def baseBytes(dir: String): Long = graft.io.MutableStore.baseBytes(layoutOf(dir))
-  def deltaBytes(dir: String): Long = graft.io.MutableStore.deltaBytes(layoutOf(dir))
-
   /** Append a batch of new vectors ENCODED UNDER THE PERSISTED MODEL
     * (the FAISS trained-index contract: adding vectors never retrains
     * the quantizer — out-of-range values clamp, the re-rank stage
@@ -523,12 +517,6 @@ object Sq {
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum"}""")
     graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
-
-  def deltaDirCount(dir: String): Int = graft.io.MutableStore.deltaTags(layoutOf(dir)).size
-
-  /** Standalone snapshot expiry for the SQ8 codes store
-    * ([[graft.io.MutableStore.expire]]). Returns # priors expired. */
-  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   /** Fold live deltas (minus `excludeTags` — redelivery safety) and
     * tombstones into a NEW base codes version

@@ -19,7 +19,16 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * legs; the core owns the snapshot read ([[snapOf]]), the mutation
   * commit ([[commitMutation]]), the compaction frame ([[compact]]),
   * lagged GC, expiry ([[expire]]), the replay reset
-  * ([[dropMutations]]) and the compaction-policy feeds.
+  * ([[dropMutations]]), tags and rollback, and the compaction-policy
+  * feeds.
+  *
+  * A family hands out its layout through one `private[graft]`
+  * accessor (`Sq.layoutOf(dir)`, `Dedup.flatOf(dir)`,
+  * `Ivf.storeOf(dir)`, …) and declares none of the lifecycle again:
+  * callers — the CDC sinks, the declared queries, the specs — apply
+  * [[deltaTags]], [[deltaBytes]], [[baseBytes]], [[dropMutations]],
+  * [[expire]], [[tagSnapshot]], [[dropTag]], [[rollbackTo]] and
+  * [[rollbackToTag]] to that handle.
   *
   *  - mutations are TAG-KEYED dirs (idempotent overwrite under
   *    at-least-once redelivery): `delta_<tag>` appends,
@@ -341,7 +350,12 @@ private[graft] object MutableStore {
     *  - `baseGc`, when set, is the family's own base GC (given the
     *    snapshot and the protected priors) in place of [[versionGc]]
     *    — the IVF layout, whose versions share files through their
-    *    manifests, collects what each manifest superseded. */
+    *    manifests, collects what each manifest superseded;
+    *  - `baseSize`, when set, is the byte size of committed base
+    *    version N > 0 in place of the size of its `basePaths` — the
+    *    IVF layout, whose version is the file list its manifest names
+    *    (a `_fold_v<N>` tree holds only the clusters that fold
+    *    rewrote). */
   final case class Layout(
       family: String,
       dir: String,
@@ -357,7 +371,8 @@ private[graft] object MutableStore {
       tombRoot: String,
       tombPrefix: String,
       tombMarker: Option[String],
-      baseGc: Option[(Snap, Seq[SnapRef]) => Unit] = None) {
+      baseGc: Option[(Snap, Seq[SnapRef]) => Unit] = None,
+      baseSize: Option[Int => Long] = None) {
     def basePaths(v: Int): Seq[String] =
       if (v > 0) versionPrefixes.map(p => s"$versionRoot/$p$v") else base0
     def deltaDirs(tag: String): Seq[String] = deltaRoots.map(r => s"$r/$deltaPrefix$tag")
@@ -637,14 +652,15 @@ private[graft] object MutableStore {
 
   /** (d) The compaction-policy feeds: the live delta tags (the count
     * feed and probe fan-out), live delta bytes, and base bytes (the
-    * committed version, or the v0 data). */
+    * committed version — through the layout's `baseSize` when set —
+    * or the v0 data). */
   def deltaTags(l: Layout): Seq[String] = liveTagsOf(l, readState(l.statePath, l.flat)._1)._1
   def deltaBytes(l: Layout): Long =
     deltaTags(l).flatMap(l.deltaDirs).map(d => duBytes(java.nio.file.Paths.get(d))).sum
   def baseBytes(l: Layout): Long = {
     val v = readState(l.statePath, l.flat)._1.v
-    (if (v > 0) l.basePaths(v).map(java.nio.file.Paths.get(_)) else l.v0Base())
-      .map(duBytes).sum
+    if (v > 0) l.baseSize.fold(l.basePaths(v).map(p => duBytes(java.nio.file.Paths.get(p))).sum)(_(v))
+    else l.v0Base().map(duBytes).sum
   }
 
   /** The FLAT-layout leg-masked read, shared by every flat store (the
@@ -960,10 +976,10 @@ private[graft] object MutableStore {
         .mkString("""{"tags":{""", ",", "}}"))
 
   /** The CURRENT snapshot's full reference set (committed lists; the
-    * legacy listing fallback otherwise) — what a tag of the current
+    * layout's legacy listing otherwise) — what a tag of the current
     * version captures, and what a rollback pushes as the from-prior. */
-  private def currentRef(dir: String, st: State): SnapRef = {
-    val (live, tombs) = liveTagsOf(flatLayout(dir, "MutableStore"), st)
+  private def currentRef(l: Layout, st: State): SnapRef = {
+    val (live, tombs) = liveTagsOf(l, st)
     SnapRef(st.v, live, tombs, System.currentTimeMillis())
   }
 
@@ -983,7 +999,8 @@ private[graft] object MutableStore {
     * A complete legal erasure must drop (or re-pin post-scrub) the
     * store's tags; [[graft.ops.Takedown]] warns loudly when it scrubs
     * a tagged store. */
-  def tagSnapshot(dir: String, name: String, version: Option[Int] = None): Int =
+  def tagSnapshot(l: Layout, name: String, version: Option[Int] = None): Int = {
+    val dir = l.dir
     withWriterLock(dir, s"tagSnapshot($name)") {
       require(name.matches("[A-Za-z0-9_.-]+"),
         s"tagSnapshot($dir): tag name '$name' is not a clean slug " +
@@ -993,7 +1010,7 @@ private[graft] object MutableStore {
           "nothing to tag yet")
       val st = state(dir)
       val ref = version.filter(_ != st.v) match {
-        case None => currentRef(dir, st)
+        case None => currentRef(l, st)
         case Some(v) =>
           st.priors.map(decodeRef).find(_.v == v).getOrElse {
             val readable = (st.priors.map(decodeRef(_).v) :+ st.v).sorted
@@ -1014,16 +1031,17 @@ private[graft] object MutableStore {
       }
       ref.v
     }
+  }
 
   /** Drop a tag; the version's refs then age out under the normal
     * retention policy (collected at the next compaction's GC or a
     * standalone [[expire]]). Returns whether the tag
     * existed. */
-  def dropTag(dir: String, name: String): Boolean =
-    withWriterLock(dir, s"dropTag($name)") {
-      val cur = snapshotTags(dir)
+  def dropTag(l: Layout, name: String): Boolean =
+    withWriterLock(l.dir, s"dropTag($name)") {
+      val cur = snapshotTags(l.dir)
       if (!cur.contains(name)) false
-      else { writeTags(dir, cur - name); true }
+      else { writeTags(l.dir, cur - name); true }
     }
 
   /** Resolve a tag to the exact reference set it captured — loud error
@@ -1060,15 +1078,16 @@ private[graft] object MutableStore {
     * ref cannot reconstruct; a rollback there needs retained
     * per-version stat snapshots first. (The GC-side tag protection in
     * [[splitPriors]] is already family-generic — it reads the tags
-    * sidecar for whichever dir it is given — but [[tagSnapshot]] is
-    * only exposed where the read/restore paths exist.) Returns the
+    * sidecar for whichever dir it is given — but [[tagSnapshot]]
+    * requires the shared state json, where the read/restore paths
+    * exist.) Returns the
     * version rolled back FROM (== `version` when already there:
     * no-op). */
-  def rollbackTo(dir: String, version: Int): Int =
-    withWriterLock(dir, s"rollback($version)") {
-      val st = state(dir)
+  def rollbackTo(l: Layout, version: Int): Int =
+    withWriterLock(l.dir, s"rollback($version)") {
+      val st = state(l.dir)
       if (st.v == version) version
-      else rollbackToRef(dir, st, priorRefOf(dir, st, version))
+      else rollbackToRef(l, st, priorRefOf(l.dir, st, version))
     }
 
   /** [[rollbackTo]] by TAG name — restores the tag's EXACT captured
@@ -1077,11 +1096,12 @@ private[graft] object MutableStore {
     * byte-identical to the current reference set (otherwise deltas
     * landed after the tag and a loud error asks for a compaction
     * first — a rollback must never orphan live legs silently). */
-  def rollbackToTag(dir: String, name: String): Int =
+  def rollbackToTag(l: Layout, name: String): Int = {
+    val dir = l.dir
     withWriterLock(dir, s"rollbackToTag($name)") {
       val ref = resolveTag(dir, name)
       val st = state(dir)
-      val cur = currentRef(dir, st)
+      val cur = currentRef(l, st)
       if (ref.v == st.v) {
         if (ref.live.sorted == cur.live.sorted &&
           ref.tombs.sorted == cur.tombs.sorted) st.v
@@ -1095,9 +1115,10 @@ private[graft] object MutableStore {
         require(st.priors.map(decodeRef(_).v).contains(ref.v),
           s"rollbackToTag($dir, $name): tagged version ${ref.v} is no longer " +
             "retained (was the tag's snapshot expired externally?)")
-        rollbackToRef(dir, st, ref)
+        rollbackToRef(l, st, ref)
       }
     }
+  }
 
   /** The rollback commit itself (caller holds the lease and resolved a
     * RETAINED target ref): replay the ref's reference set, drop the
@@ -1106,10 +1127,10 @@ private[graft] object MutableStore {
     * carried over as it is — the IVF layout's fingerprint terms
     * included: they attest the from-snapshot's corpus, not the
     * target's (a prior ref records no terms). */
-  private def rollbackToRef(dir: String, st: State, ref: SnapRef): Int = {
-    val fromRef = currentRef(dir, st)
+  private def rollbackToRef(l: Layout, st: State, ref: SnapRef): Int = {
+    val fromRef = currentRef(l, st)
     val rest = st.priors.filterNot(p => decodeRef(p).v == ref.v)
-    commitState(dir, ref.v,
+    commitState(l.dir, ref.v,
       folded = st.folded.toSeq, deadTombs = st.deadTombs.toSeq,
       live = ref.live, liveTombs = ref.tombs,
       priors = rest :+ encodeRef(fromRef))
@@ -1190,14 +1211,6 @@ private[graft] object MutableStore {
         .map(java.nio.file.Files.size(_)).sum
     } finally walk.close()
   }
-
-  /** Base bytes of a FLAT-layout store (seed files at the dir root, or
-    * the committed `base_v<N>` dir after a compaction). */
-  def flatBaseBytes(dir: String): Long = baseBytes(flatLayout(dir, "MutableStore"))
-
-  /** Live delta bytes of a flat-layout store. */
-  def flatDeltaBytes(dir: String, liveTags: Seq[String]): Long =
-    liveTags.map(t => duBytes(java.nio.file.Paths.get(dir, s"delta_$t"))).sum
 
   /** Atomically PATCH string-array fields of an existing json file
     * (read → set → one atomic replace) — the MUTATION-COMMIT primitive

@@ -133,8 +133,11 @@ object FuzzyJoin {
 
   import graft.io.MutableStore
 
-  /** The fuzzy store: the FLAT layout ([[graft.io.MutableStore.flatLayout]]). */
-  private def flatOf(dir: String) = MutableStore.flatLayout(dir, "FuzzyJoin")
+  /** The fuzzy store: the FLAT layout ([[graft.io.MutableStore.flatLayout]]).
+    * The store's one handle: callers apply the [[graft.io.MutableStore]]
+    * lifecycle primitives (feeds, expiry, replay reset, tags, rollback)
+    * to it. */
+  private[graft] def flatOf(dir: String) = MutableStore.flatLayout(dir, "FuzzyJoin")
 
   /** TAKEDOWN from the fuzzy signature store: a scrubbed entity's
     * deletion-neighborhood postings are derived data too. Ids-only
@@ -181,13 +184,6 @@ object FuzzyJoin {
     MutableStore.compactFlat(spark, flatOf(dir), "compactFuzzyStore", excludeTags,
       "ids", Seq("store_id"))
 
-  /** Standalone snapshot expiry for the fuzzy signature store (the
-    * Iceberg `expireSnapshots` analogue): apply the retention policy
-    * and collect due priors + debris NOW, under the writer lease,
-    * without a content commit — a store that stopped compacting
-    * reclaims on demand. Returns the number of priors expired. */
-  def expireFuzzyStoreSnapshots(dir: String): Int = MutableStore.expire(flatOf(dir))
-
   /** The persisted fuzzy store as a LAZY DataFrame — current base
     * version ∪ committed live deltas, minus covering tombstones,
     * resolved from ONE committed-state read (the snapshot-pinned-probe
@@ -215,18 +211,6 @@ object FuzzyJoin {
       Some(MutableStore.snapAt(flatOf(dir), MutableStore.priorRefOf(dir, st, version))))
   }
 
-  /** NAMED snapshot tag (the Iceberg tag analogue): captures the
-    * EXACT current reference set (or a retained prior's retirement
-    * state when `version` names one) and exempts it from the retention
-    * policy until dropped — the indefinite form of the N-commits/TTL
-    * protection window. Returns the tagged version. */
-  def tagFuzzySnapshot(
-      dir: String, name: String, version: Option[Int] = None): Int =
-    MutableStore.tagSnapshot(dir, name, version)
-
-  def dropFuzzyTag(dir: String, name: String): Boolean =
-    MutableStore.dropTag(dir, name)
-
   /** The store exactly as the tag captured it — the tag's own
     * reference set, NOT the version's retirement state: deltas
     * committed after the tag are not in the view. */
@@ -236,28 +220,6 @@ object FuzzyJoin {
     readFuzzyStore(spark, dir, Set.empty,
       Some(MutableStore.snapAt(flatOf(dir), MutableStore.resolveTag(dir, name))))
   }
-
-  /** ROLLBACK to a retained version (the write companion of
-    * [[fuzzyStoreViewAt]]): one atomic state commit replaying the
-    * prior's reference set; the rolled-back-FROM version becomes a
-    * retained prior (roll-forward stays possible while the policy — or
-    * a tag — protects it). Returns the version rolled back from. */
-  def rollbackFuzzyStore(dir: String, version: Int): Int =
-    MutableStore.rollbackTo(dir, version)
-
-  /** [[rollbackFuzzyStore]] by tag — restores the tag's EXACT captured
-    * snapshot. Returns the version rolled back from. */
-  def rollbackFuzzyStoreToTag(dir: String, name: String): Int =
-    MutableStore.rollbackToTag(dir, name)
-
-  /** Policy feeds for the streaming auto-compaction. */
-  def fuzzyStoreDeltaCount(dir: String): Int = MutableStore.deltaTags(flatOf(dir)).size
-  def fuzzyStoreBaseBytes(dir: String): Long = MutableStore.baseBytes(flatOf(dir))
-  def fuzzyStoreDeltaBytes(dir: String): Long = MutableStore.deltaBytes(flatOf(dir))
-
-  /** Replay-reset: drop every delta and tombstone dir (base snapshot +
-    * seed sidecar untouched; [[graft.io.MutableStore.dropMutations]]). */
-  def dropFuzzyStoreMutations(dir: String): Unit = MutableStore.dropMutations(flatOf(dir))
 
   /** Resolve a crawl `batch` against the persisted fuzzy store AND
     * against its own earlier rows, then append the NOVEL rows'

@@ -7,6 +7,7 @@ import org.apache.spark.sql.Row
 
 import graft.dedup.Dedup
 import graft.index.{Ann, Hnsw, Ivf, Sq}
+import graft.io.MutableStore
 import graft.ops.FuzzyJoin
 import graft.text.{InvertedIndex, TextAnalysis}
 
@@ -331,49 +332,50 @@ object StreamingIngest {
     * number of micro-batches) — OR when the delta-dir count reaches
     * `maxDeltaDirs`, the probe fan-out bound (many tiny deltas cost
     * probe latency even when their bytes are negligible). */
-  private def shouldCompact(deltaCount: Int, maxDeltaDirs: Int,
-      deltaBytes: => Long, baseBytes: => Long, ratio: Double): Boolean =
+  private def shouldCompact(store: MutableStore.Layout, maxDeltaDirs: Int,
+      ratio: Double): Boolean = {
+    val deltaCount = MutableStore.deltaTags(store).size
     deltaCount > 0 && (deltaCount >= maxDeltaDirs ||
-      deltaBytes.toDouble >= ratio * math.max(baseBytes, 1L).toDouble)
+      MutableStore.deltaBytes(store).toDouble >=
+        ratio * math.max(MutableStore.baseBytes(store), 1L).toDouble)
+  }
 
   /** The CDC sink core for an append-only store family: each batch
     * first folds the store's COMMITTED deltas when [[shouldCompact]]
     * says so, then runs the family's `body`. The family passes its
-    * compaction feeds — live delta count, delta and base bytes
-    * (by-name: no size walk runs once the count cap has fired) and a
-    * `fold` taking `excludeTags`. The fold always excludes the
-    * CURRENT batch's tag: on at-least-once redelivery the crashed
-    * attempt's delta may already exist, and folding it into the base
-    * right before the body rewrites the same tag would double-insert
-    * its rows. The single-writer foreachBatch serializes the fold
-    * against the body's append. */
+    * store handle — `store`, the [[MutableStore.Layout]] the policy
+    * reads the live delta count and the delta and base bytes through
+    * (resolved per batch; no size walk runs once the count cap has
+    * fired) — and a `fold` taking `excludeTags`. The fold always
+    * excludes the CURRENT batch's tag: on at-least-once redelivery the
+    * crashed attempt's delta may already exist, and folding it into
+    * the base right before the body rewrites the same tag would
+    * double-insert its rows. The single-writer foreachBatch serializes
+    * the fold against the body's append. */
   private def storeSink(stream: DataFrame, checkpoint: String, maxDeltaDirs: Int,
       ratio: Double)(
-      deltaCount: => Int, deltaBytes: => Long, baseBytes: => Long,
-      fold: (SparkSession, Set[String]) => Unit)(
+      store: => MutableStore.Layout, fold: (SparkSession, Set[String]) => Unit)(
       body: (DataFrame, String) => Unit): StreamingQuery =
     taggedSink(stream, checkpoint) { (batch, tag) =>
-      if (shouldCompact(deltaCount, maxDeltaDirs, deltaBytes, baseBytes, ratio))
-        fold(batch.sparkSession, Set(tag))
+      if (shouldCompact(store, maxDeltaDirs, ratio)) fold(batch.sparkSession, Set(tag))
       body(batch, tag)
     }
 
   /** The CDC sink core for a MUTATION feed — (op ∈ {add, del}, `key`,
-    * …) rows — built on [[storeSink]]: after the compaction check the
-    * batch is persisted once and ONE narrow projection pass brings
-    * each op's keys to the driver (ids only, bounded by the
-    * micro-batch — no shuffle, unlike a grouped op count). `body` gets
-    * the pinned batch, the tag and `keys(op)` (null keys included);
+    * …) rows — built on [[storeSink]] (same `store` handle and `fold`
+    * pair): after the compaction check the batch is persisted once and
+    * ONE narrow projection pass brings each op's keys to the driver
+    * (ids only, bounded by the micro-batch — no shuffle, unlike a
+    * grouped op count). `body` gets the pinned batch, the tag and
+    * `keys(op)` (null keys included);
     * the batch is unpersisted in `finally`. The covered-leg families
     * read only op presence from `keys`; the global-mask families
     * resolve the batch through [[netOut]]. */
   private def cdcSink(stream: DataFrame, checkpoint: String, maxDeltaDirs: Int,
       ratio: Double, key: String)(
-      deltaCount: => Int, deltaBytes: => Long, baseBytes: => Long,
-      fold: (SparkSession, Set[String]) => Unit)(
+      store: => MutableStore.Layout, fold: (SparkSession, Set[String]) => Unit)(
       body: (DataFrame, String, String => Seq[Any]) => Unit): StreamingQuery =
-    storeSink(stream, checkpoint, maxDeltaDirs, ratio)(
-        deltaCount, deltaBytes, baseBytes, fold) { (batch, tag) =>
+    storeSink(stream, checkpoint, maxDeltaDirs, ratio)(store, fold) { (batch, tag) =>
       val b = batch.persist()
       try {
         val ops = b.filter(col("op").isin("add", "del")).select(col("op"), col(key)).collect()
@@ -452,8 +454,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery = {
     def layout = Ivf.loadLayout(layoutDir) // a small sidecar read, never cached across batches
-    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
-        Ivf.deltaDirCount(layout), Ivf.deltaBytes(layout), Ivf.baseBytes(layout),
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(Ivf.storeOf(layoutDir),
         (spark, ex) => Ivf.compactDeltas(spark, layout, embCol, excludeTags = ex)) {
       (batch, tag) => Ivf.appendDelta(layout, batch, tag, embCol)
     }
@@ -487,8 +488,7 @@ object StreamingIngest {
       p: Hnsw.Params = Hnsw.Params(),
       maxDeltaDirs: Int = 8,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
-        Hnsw.deltaTags(layoutDir).size, Hnsw.deltaBytes(layoutDir), Hnsw.baseBytes(layoutDir),
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(Hnsw.layoutOf(layoutDir),
         Hnsw.compactDeltas(_, layoutDir, p, _)) { (batch, tag) =>
       Hnsw.appendDelta(batch.sparkSession, layoutDir, batch, tag, p)
     }
@@ -513,9 +513,7 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
-        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
-        InvertedIndex.baseBytes(dir),
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(InvertedIndex.layoutOf(dir),
         InvertedIndex.compactDeltas(_, table, dir, buckets, _)) { (batch, tag) =>
       InvertedIndex.appendDelta(batch.sparkSession, dir, batch, tag)
     }
@@ -533,9 +531,7 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
-        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
-        InvertedIndex.baseBytes(dir),
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(InvertedIndex.layoutOf(dir),
         InvertedIndex.compactPositionalDeltas(_, table, dir, buckets, _)) {
       (batch, tag) => InvertedIndex.appendPositionalDelta(batch.sparkSession, dir, batch, tag)
     }
@@ -550,9 +546,7 @@ object StreamingIngest {
       buckets: Int,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
-        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
-        InvertedIndex.baseBytes(dir),
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(InvertedIndex.layoutOf(dir),
         InvertedIndex.compactTrigramDeltas(_, table, dir, buckets, _)) {
       (batch, tag) => InvertedIndex.appendTrigramDelta(batch.sparkSession, dir, batch, tag)
     }
@@ -568,8 +562,7 @@ object StreamingIngest {
       checkpoint: String,
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
-    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(
-        Sq.deltaDirCount(dir), Sq.deltaBytes(dir), Sq.baseBytes(dir),
+    storeSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio)(Sq.layoutOf(dir),
         Sq.compactDeltas(_, dir, _)) { (batch, tag) =>
       Sq.appendDelta(batch.sparkSession, dir, batch, tag)
     }
@@ -615,9 +608,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
-        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
-        InvertedIndex.baseBytes(dir),
-        InvertedIndex.compactDeltas(_, table, dir, buckets, _)) {
+        InvertedIndex.layoutOf(dir), InvertedIndex.compactDeltas(_, table, dir, buckets, _)) {
       (b, tag, keys) =>
         if (keys("del").nonEmpty)
           InvertedIndex.deleteDocs(b.sparkSession, dir, opRows(b, "del", "doc_id", "text"),
@@ -637,8 +628,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
-        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
-        InvertedIndex.baseBytes(dir),
+        InvertedIndex.layoutOf(dir),
         InvertedIndex.compactPositionalDeltas(_, table, dir, buckets, _)) {
       (b, tag, keys) =>
         if (keys("del").nonEmpty)
@@ -660,8 +650,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
-        InvertedIndex.deltaTags(dir).size, InvertedIndex.deltaBytes(dir),
-        InvertedIndex.baseBytes(dir),
+        InvertedIndex.layoutOf(dir),
         InvertedIndex.compactTrigramDeltas(_, table, dir, buckets, _)) {
       (b, tag, keys) =>
         if (keys("del").nonEmpty)
@@ -689,8 +678,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(
-        Sq.deltaDirCount(dir), Sq.deltaBytes(dir), Sq.baseBytes(dir),
-        Sq.compactDeltas(_, dir, _)) { (b, tag, keys) =>
+        Sq.layoutOf(dir), Sq.compactDeltas(_, dir, _)) { (b, tag, keys) =>
       if (keys("del").nonEmpty)
         Sq.deleteVectors(b.sparkSession, dir, opRows(b, "del", "vec_id", "embedding"), tag,
           excludeCovered = Set(tag))
@@ -722,8 +710,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery = {
     def layout = Ivf.loadLayout(layoutDir) // a small sidecar read, never cached across batches
-    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(
-        Ivf.deltaDirCount(layout), Ivf.deltaBytes(layout), Ivf.baseBytes(layout),
+    cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(Ivf.storeOf(layoutDir),
         (spark, ex) => Ivf.compactDeltas(spark, layout, embCol, excludeTags = ex)) {
       (b, tag, keys) =>
         val ivf = layout
@@ -754,8 +741,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 8,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "vec_id")(
-        Hnsw.deltaTags(layoutDir).size, Hnsw.deltaBytes(layoutDir), Hnsw.baseBytes(layoutDir),
-        Hnsw.compactDeltas(_, layoutDir, p, _)) { (b, tag, keys) =>
+        Hnsw.layoutOf(layoutDir), Hnsw.compactDeltas(_, layoutDir, p, _)) { (b, tag, keys) =>
       netOut(b, keys)(
         adds => Hnsw.appendDelta(b.sparkSession, layoutDir,
           adds.select("vec_id", "embedding"), tag, p),
@@ -789,9 +775,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
-        Dedup.hashStoreDeltaCount(storeDir), Dedup.hashStoreDeltaBytes(storeDir),
-        Dedup.hashStoreBaseBytes(storeDir),
-        Dedup.compactHashStore(_, storeDir, _)) { (b, tag, keys) =>
+        Dedup.flatOf(storeDir), Dedup.compactHashStore(_, storeDir, _)) { (b, tag, keys) =>
       if (keys("del").nonEmpty)
         Dedup.deleteFromHashStore(b.sparkSession, storeDir, opRows(b, "del", "doc_id", "text"),
           tag, excludeCovered = Set(tag))
@@ -818,9 +802,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, "doc_id")(
-        Dedup.shingleStoreDeltaCount(storeDir), Dedup.shingleStoreDeltaBytes(storeDir),
-        Dedup.shingleStoreBaseBytes(storeDir),
-        Dedup.compactShingleStore(_, storeDir, _)) { (b, tag, keys) =>
+        Dedup.shingleOf(storeDir), Dedup.compactShingleStore(_, storeDir, _)) { (b, tag, keys) =>
       if (keys("del").nonEmpty)
         Dedup.deleteFromShingleStore(b.sparkSession, storeDir, opRows(b, "del", "doc_id"),
           tag, excludeCovered = Set(tag))
@@ -849,9 +831,7 @@ object StreamingIngest {
       maxDeltaDirs: Int = 16,
       compactBytesRatio: Double = 1.0): StreamingQuery =
     cdcSink(stream, checkpoint, maxDeltaDirs, compactBytesRatio, idCol)(
-        FuzzyJoin.fuzzyStoreDeltaCount(storeDir), FuzzyJoin.fuzzyStoreDeltaBytes(storeDir),
-        FuzzyJoin.fuzzyStoreBaseBytes(storeDir),
-        FuzzyJoin.compactFuzzyStore(_, storeDir, _)) { (b, tag, keys) =>
+        FuzzyJoin.flatOf(storeDir), FuzzyJoin.compactFuzzyStore(_, storeDir, _)) { (b, tag, keys) =>
       if (keys("del").nonEmpty)
         FuzzyJoin.deleteFromFuzzyStore(b.sparkSession, storeDir, opRows(b, "del", idCol),
           tag, idCol = idCol, excludeCovered = Set(tag))

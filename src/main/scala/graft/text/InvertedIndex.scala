@@ -424,8 +424,10 @@ object InvertedIndex {
     * state in the owning sidecar, the v0 base is the bucketed data at
     * `dir` itself (everything there but the sidecars), versions are
     * SIBLING `<dir>_v<N>` dirs, deltas `<dir>_deltas/<tag>` and
-    * tombstones `<dir>_tombstones/<tag>` beside it. */
-  private def layoutOf(dir: String) = {
+    * tombstones `<dir>_tombstones/<tag>` beside it. The store's one
+    * handle: callers apply the [[graft.io.MutableStore]] lifecycle
+    * primitives (feeds, expiry, replay reset) to it. */
+  private[graft] def layoutOf(dir: String) = {
     val d = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
     graft.io.MutableStore.Layout("InvertedIndex", dir, sidecarPath(dir), flat = false,
       d.getParent.toString, Seq(s"${d.getFileName}_v"), Seq(dir),
@@ -538,11 +540,6 @@ object InvertedIndex {
     graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = true)
   }
 
-  /** Drop every delta and tombstone dir, returning the store to the
-    * BASE snapshot its sidecar attests — the replay reset
-    * ([[graft.io.MutableStore.dropMutations]]). */
-  def dropMutations(dir: String): Unit = graft.io.MutableStore.dropMutations(layoutOf(dir))
-
   /** The tombstoned doc ids covering one leg, as a broadcast anti-join
     * (None when no tombstone covers it). */
   private def maskFor(spark: SparkSession, dir: String,
@@ -592,22 +589,6 @@ object InvertedIndex {
       s"""{"count":$nRows,"hash":$dataHash,"hsum":"$hashSum","nDocs":$nDocs,"sumDl":$sumDl}""")
     graft.io.MutableStore.commitMutation(layoutOf(dir), tag, tomb = false)
   }
-
-  /** Tags of the live deltas, sorted (probe fan-out width — bounded by
-    * the compaction policy), per the COMMITTED state (one sidecar
-    * read). A delta is live only once the state names it. */
-  def deltaTags(dir: String): Seq[String] = graft.io.MutableStore.deltaTags(layoutOf(dir))
-
-  /** Total bytes of the current BASE version's data files — the
-    * denominator of the size-ratio compaction policy. */
-  def baseBytes(dir: String): Long = graft.io.MutableStore.baseBytes(layoutOf(dir))
-
-  /** Total bytes of the live delta dirs — the numerator of the
-    * size-ratio compaction policy (fold when deltas have grown to a
-    * fixed fraction of the base, so each fold's IO is proportional to
-    * the delta bytes it folds and total compaction IO stays LINEAR in
-    * stream length — a count trigger makes it quadratic). */
-  def deltaBytes(dir: String): Long = graft.io.MutableStore.deltaBytes(layoutOf(dir))
 
   /** The base table's corpus stats, read from its sidecar — the
     * probe-time source of truth (a captured value goes stale the
@@ -922,11 +903,6 @@ object InvertedIndex {
       spark.sql(s"REFRESH TABLE $table")
     }
   }
-
-  /** Standalone snapshot expiry for a posting store (BM25/positional/
-    * trigram — whichever sidecar owns `dir`;
-    * [[graft.io.MutableStore.expire]]). Returns # priors expired. */
-  def expireSnapshots(dir: String): Int = graft.io.MutableStore.expire(layoutOf(dir))
 
   def compactPositionalDeltas(
       spark: SparkSession,

@@ -113,18 +113,6 @@ class DedupSpec extends AnyFunSuite {
     assert(found.subsetOf(truth) || found.diff(truth).isEmpty)
   }
 
-  test("prefix-filtered Jaccard equals the full shared-shingle join on fixture docs") {
-    val fixture = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    for (t <- Seq(0.3, 0.5)) {
-      val full = Dedup.ngramJaccardPairs(fixture, n = 3, minJaccard = t)
-        .as[(Long, Long, Double)].collect().toSet
-      val prefixed = Dedup.ngramJaccardPairs(fixture, n = 3, minJaccard = t,
-          prefixFilter = true)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(prefixed == full, s"prefix filter changed results at t=$t")
-    }
-  }
-
   test("winnowing: a copied passage inside otherwise-different docs is detected") {
     val passage = "the quick brown fox jumps over the lazy dog near the river bank today"
     val corpus = Seq(
@@ -321,6 +309,24 @@ class DedupSpec extends AnyFunSuite {
     val rebuilt = Dedup.clusterArtifact(changed, dir, n = 3, minJaccard = 0.3,
       maxShingleDf = 500L).as[(Long, Long)].collect().toSet
     assert(rebuilt != built && rebuilt.exists(_._1 == 6L))
+  }
+
+  test("clusterArtifact: other build params on the same dir rebuild, never serve stale clusters") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ca_params").toString
+    def direct(minJaccard: Double) = Dedup.connectedComponents(
+        Dedup.ngramJaccardPairs(docs, n = 3, minJaccard = minJaccard, maxShingleDf = 500L)
+          .select("id_a", "id_b"))
+      .withColumnRenamed("id", "doc_id")
+      .as[(Long, Long)].collect().toSet
+    val loose = Dedup.clusterArtifact(docs, dir, n = 3, minJaccard = 0.3,
+      maxShingleDf = 500L).as[(Long, Long)].collect().toSet
+    assert(loose == direct(0.3))
+    // at 0.9 the one-word near-dup (3) leaves the {1, 2, 3} cluster
+    val strict = direct(0.9)
+    assert(strict != loose, "premise: the two thresholds cluster differently")
+    val second = Dedup.clusterArtifact(docs, dir, n = 3, minJaccard = 0.9,
+      maxShingleDf = 500L).as[(Long, Long)].collect().toSet
+    assert(second == strict, "same docs and dir, new minJaccard: the first call's clusters were served")
   }
 
   test("connectedComponents matches a union-find reference on random graphs") {

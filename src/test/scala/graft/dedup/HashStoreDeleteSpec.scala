@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.io.MutableStore
 
 /** Takedown on the incremental exact-dedup hash store: a scrubbed
   * document's content hash is derived data and must go too. Covered-leg
@@ -121,7 +122,7 @@ class HashStoreDeleteSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getLong(2)))).head
     assert(verdict("p0") == (0L, Some(0L)))
-    Dedup.dropSigStoreMutations(dir)
+    MutableStore.dropMutations(Dedup.flatOf(dir))
     Dedup.deleteFromSigStore(spark, dir, Seq(0L).toDF("s_id"), tag = "t1")
     assert(verdict("p1") == (0L, Some(3L)), "falls through to the hamming-1 neighbor")
     Dedup.deleteFromSigStore(spark, dir, Seq(3L).toDF("s_id"), tag = "t2")

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.ops.VectorSearch
+import graft.io.MutableStore
 
 class HnswSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -196,7 +197,7 @@ class HnswSpec extends AnyFunSuite {
       .select((col("id") + 5000000L).as("vec_id"), col("embedding"))
     Hnsw.appendDelta(spark, dir, batch, tag = "b0", p)
     Hnsw.appendDelta(spark, dir, batch, tag = "b0", p) // redelivery: same tag overwrites
-    assert(Hnsw.deltaTags(dir) == Seq("b0"))
+    assert(MutableStore.deltaTags(Hnsw.layoutOf(dir)) == Seq("b0"))
     val got = Hnsw.searchLayoutDeltaAware(spark, dir, q, 10, p)
       .select("vec_id").as[Long].collect().toSeq
     // 5 dist-0 rows (the original + 4 planted), ids ascending first
@@ -204,7 +205,7 @@ class HnswSpec extends AnyFunSuite {
       s"append must surface immediately and exactly once: $got")
     // compaction: canonical rebuild, identical probe result, deltas gone
     Hnsw.compactDeltas(spark, dir, p)
-    assert(Hnsw.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(Hnsw.layoutOf(dir)).isEmpty)
     val after = Hnsw.searchLayoutDeltaAware(spark, dir, q, 10, p)
       .select("vec_id").as[Long].collect().toSeq
     assert(after == got, "mid-stream compaction must be invisible to probe results")
@@ -227,10 +228,10 @@ class HnswSpec extends AnyFunSuite {
     (0 until 3).foreach { i =>
       val b = c.filter(col("vec_id") === i.toLong)
         .select((col("vec_id") + 6000000L + i).as("vec_id"), col("embedding"))
-      if (Hnsw.deltaTags(dir).size >= 2) Hnsw.compactDeltas(spark, dir, p)
+      if (MutableStore.deltaTags(Hnsw.layoutOf(dir)).size >= 2) Hnsw.compactDeltas(spark, dir, p)
       Hnsw.appendDelta(spark, dir, b, tag = s"t$i", p)
     }
-    assert(Hnsw.deltaTags(dir).size <= 2, s"deltas: ${Hnsw.deltaTags(dir)}")
+    assert(MutableStore.deltaTags(Hnsw.layoutOf(dir)).size <= 2, s"deltas: ${MutableStore.deltaTags(Hnsw.layoutOf(dir))}")
     // every appended id still searchable
     val q = c.filter(col("vec_id") === 0L).as[(Long, Array[Float])].head()._2
     val got = Hnsw.searchLayoutDeltaAware(spark, dir, q, 5, p)
@@ -310,7 +311,7 @@ class HnswSpec extends AnyFunSuite {
     // redelivery replays the foreachBatch body: compaction MUST skip
     // the current tag, then the append rewrites it
     Hnsw.compactDeltas(spark, dir, p, excludeTags = Set("b"))
-    assert(Hnsw.deltaTags(dir) == Seq("b"), "excluded delta must survive the fold")
+    assert(MutableStore.deltaTags(Hnsw.layoutOf(dir)) == Seq("b"), "excluded delta must survive the fold")
     Hnsw.appendDelta(spark, dir, current, tag = "b", p)
     val got = Hnsw.searchLayoutDeltaAware(spark, dir, q, 10, p)
       .select("vec_id").as[Long].collect().toSeq

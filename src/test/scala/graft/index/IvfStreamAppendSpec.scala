@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.streaming.StreamingIngest
+import graft.io.MutableStore
 
 /** Streaming IVF append — the embedding leg of the incremental crawl
   * triple: batch-keyed delta appends ([[Ivf.appendDelta]]) through
@@ -87,10 +88,10 @@ class IvfStreamAppendSpec extends AnyFunSuite {
     val layout = freshLayout("ivfempty")
     Ivf.appendDelta(layout,
       Seq((901L, Seq(0.02f, 0.04f))).toDF("vec_id", "embedding"), "t_b0")
-    val before = Ivf.deltaDirCount(layout)
+    val before = MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size
     assert(Ivf.appendDelta(layout,
       Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"), "t_b1") == 0L)
-    assert(Ivf.deltaDirCount(layout) == before,
+    assert(MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size == before,
       "an empty batch must not commit a delta leg")
     def probe(): Set[Long] = Ivf.searchLayoutDeltaAware(
         spark, layout, Array(0.0f, 0.0f), k = 6, nprobe = 1)
@@ -183,8 +184,8 @@ class IvfStreamAppendSpec extends AnyFunSuite {
         in.toDF().toDF("vec_id", "embedding"), layout.dir,
         s"$scratch/chk$leg", maxDeltaDirs = 2).awaitTermination()
     }
-    assert(Ivf.deltaDirCount(layout) == 1,
-      s"auto-compaction must fold committed deltas, ${Ivf.deltaDirCount(layout)} pending")
+    assert(MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size == 1,
+      s"auto-compaction must fold committed deltas, ${MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size} pending")
     val got = Ivf.searchLayoutDeltaAware(
         spark, layout, Array(0.0f, 0.0f), k = 8, nprobe = 1)
       .select("vec_id").as[Long].collect()
@@ -207,7 +208,7 @@ class IvfStreamAppendSpec extends AnyFunSuite {
       Seq((802L, Seq(0.05f, 0.03f))).toDF("vec_id", "embedding"), "t_b1")
     // fold only the committed b0; b1 is in flight
     assert(Ivf.compactDeltas(spark, layout, excludeTags = Set("t_b1")) == 1)
-    assert(Ivf.deltaDirCount(layout) == 1)
+    assert(MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size == 1)
     // redelivery of the in-flight batch rewrites its delta — safe
     Ivf.appendDelta(layout,
       Seq((802L, Seq(0.05f, 0.03f))).toDF("vec_id", "embedding"), "t_b1")
@@ -278,7 +279,7 @@ class IvfStreamAppendSpec extends AnyFunSuite {
     * on disk — then checks that `buildLayout` over `live` REUSES the
     * layout: the fingerprint terms must have moved exactly once. */
   private def assertOneCommitPoint(layout: Ivf.Layout, live: => DataFrame)(op: => Unit): Unit = {
-    val state = java.nio.file.Paths.get(layout.dir, graft.io.MutableStore.stateName)
+    val state = java.nio.file.Paths.get(layout.dir, MutableStore.stateName)
     val saved = java.nio.file.Files.readAllBytes(state)
     op
     java.nio.file.Files.write(state, saved)

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.ops.VectorSearch
+import graft.io.MutableStore
 
 class SqSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -101,7 +102,7 @@ class SqSpec extends AnyFunSuite {
     Sq.appendDelta(spark, artDir, b1, tag = "b1")
     Sq.appendDelta(spark, artDir, b1, tag = "b1") // redelivery: same tag overwrites
     Sq.appendDelta(spark, artDir, b2, tag = "b2")
-    assert(Sq.deltaDirCount(artDir) == 2)
+    assert(MutableStore.deltaTags(Sq.layoutOf(artDir)).size == 2)
     val union = corpus.unionAll(b1).unionAll(b2)
     val q = corpus.filter(col("vec_id") === 1L)
       .select(col("embedding")).head().getSeq[Float](0).toArray
@@ -115,9 +116,9 @@ class SqSpec extends AnyFunSuite {
     // compaction: excluded tag survives, full fold is probe-invariant,
     // and the merged fingerprint equals a fresh ensure over the union
     Sq.compactDeltas(spark, artDir, excludeTags = Set("b2"))
-    assert(Sq.deltaDirCount(artDir) == 1)
+    assert(MutableStore.deltaTags(Sq.layoutOf(artDir)).size == 1)
     Sq.compactDeltas(spark, artDir)
-    assert(Sq.deltaDirCount(artDir) == 0)
+    assert(MutableStore.deltaTags(Sq.layoutOf(artDir)).size == 0)
     val after = Sq.searchRerank(Sq.codesWithDeltas(spark, artDir), union,
       model, q, k = 10, shortlist = 50).as[(Long, Double)].collect().toSeq
     assert(after == before, "compaction must be invisible to probe results")

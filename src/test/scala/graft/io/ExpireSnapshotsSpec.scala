@@ -56,7 +56,7 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
 
       // expiry under the store's retention=2 policy: the v1 prior is
       // still protected — the pinned view must survive the op
-      FuzzyJoin.expireFuzzyStoreSnapshots(dir)
+      MutableStore.expire(FuzzyJoin.flatOf(dir))
       assert(exists(s"$dir/base_v1"),
         "a prior within retention survives an explicit expiry")
       assert(ids(pinned) == wantV1,
@@ -65,7 +65,7 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
       // tighten to the default policy and expire: reclaim ON DEMAND,
       // with no compaction and no content commit
       MutableStore.setGcRetention(dir, None) // default 1
-      val n = FuzzyJoin.expireFuzzyStoreSnapshots(dir)
+      val n = MutableStore.expire(FuzzyJoin.flatOf(dir))
       assert(n >= 1, "the now-unprotected prior(s) must be expired")
       assert(!exists(s"$dir/base_v1"),
         "a QUIESCENT store must reclaim superseded versions on demand")
@@ -74,7 +74,7 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
       assert(st.priors.isEmpty, "expired priors leave the committed list")
       assert(ids(FuzzyJoin.fuzzyStoreView(spark, dir)) == wantV1 + 60L,
         "the current snapshot still serves after the expiry")
-      assert(FuzzyJoin.expireFuzzyStoreSnapshots(dir) == 0, "idempotent")
+      assert(MutableStore.expire(FuzzyJoin.flatOf(dir)) == 0, "idempotent")
     } finally MutableStore.setGcRetention(dir, None)
   }
 
@@ -100,7 +100,7 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     val vBefore = MutableStore.state(dir).v
 
     // …until the QUIESCENT layout expires its snapshots on demand
-    Ivf.expireSnapshots(dir)
+    MutableStore.expire(Ivf.storeOf(dir))
     assert(!exists(s"$dir/_delta_a1"),
       "expiry must release the fold commit's removedDirs without waiting " +
         "for a next compaction")
@@ -109,7 +109,7 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     assert(Ivf.searchLayoutDeltaAware(spark, layout, q, 5, nprobe = 4)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq == want,
       "the current snapshot still serves byte-identically after expiry")
-    assert(Ivf.expireSnapshots(dir) == 0, "idempotent")
+    assert(MutableStore.expire(Ivf.storeOf(dir)) == 0, "idempotent")
   }
 
   test("sq8 / hnsw / binary / shingle stores: every family's expireSnapshots reclaims a quiescent store on demand") {
@@ -132,10 +132,10 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     Sq.compactDeltas(spark, sqDir)
     val nSq = Sq.codesWithDeltas(spark, sqDir).count()
     assert(exists(s"$sqDir/codes"), "lagged GC kept the v0 codes")
-    assert(Sq.expireSnapshots(sqDir) >= 1)
+    assert(MutableStore.expire(Sq.layoutOf(sqDir)) >= 1)
     assert(!exists(s"$sqDir/codes"), "sq8 expiry reclaims the superseded base")
     assert(Sq.codesWithDeltas(spark, sqDir).count() == nSq)
-    assert(Sq.expireSnapshots(sqDir) == 0, "idempotent")
+    assert(MutableStore.expire(Sq.layoutOf(sqDir)) == 0, "idempotent")
 
     // HNSW: a delete reclaimed via fold → layout_v1; v0 `layout` retained
     val hDir = tmp("exp_hnsw")
@@ -144,10 +144,10 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     Hnsw.deleteFromLayout(spark, hDir, Seq(5L), tag = "d1")
     Hnsw.compactDeltas(spark, hDir, p, dropTombstoned = true)
     assert(exists(s"$hDir/layout"), "lagged GC kept the v0 layout")
-    assert(Hnsw.expireSnapshots(hDir) >= 1)
+    assert(MutableStore.expire(Hnsw.layoutOf(hDir)) >= 1)
     assert(!exists(s"$hDir/layout"), "hnsw expiry reclaims the superseded base")
     assert(Hnsw.searchLayout(spark, hDir, Array.fill(dim)(0.5f), 3, p).count() == 3)
-    assert(Hnsw.expireSnapshots(hDir) == 0, "idempotent")
+    assert(MutableStore.expire(Hnsw.layoutOf(hDir)) == 0, "idempotent")
 
     // BINARY: a delete compacted → sigs_v1; v0 `sigs` retained
     val bDir = tmp("exp_bin")
@@ -157,10 +157,10 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     Binary.compactSignatures(spark, bDir)
     val nBin = Binary.liveSignatures(spark, bDir).count()
     assert(exists(s"$bDir/sigs"), "lagged GC kept the v0 sigs")
-    assert(Binary.expireSnapshots(bDir) >= 1)
+    assert(MutableStore.expire(Binary.layoutOf(bDir)) >= 1)
     assert(!exists(s"$bDir/sigs"), "binary expiry reclaims the superseded base")
     assert(Binary.liveSignatures(spark, bDir).count() == nBin)
-    assert(Binary.expireSnapshots(bDir) == 0, "idempotent")
+    assert(MutableStore.expire(Binary.layoutOf(bDir)) == 0, "idempotent")
 
     // SHINGLE: one near-dup batch folded → sh_v1/sizes_v1; the folded
     // delta subdirs are retained until the explicit expiry
@@ -173,10 +173,10 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
       batchTag = "b1").collect()
     Dedup.compactShingleStore(spark, shDir)
     assert(exists(s"$shDir/sh/delta_b1"), "lagged GC kept the folded delta leg")
-    assert(Dedup.expireShingleStoreSnapshots(shDir) >= 0) // prior count may be 0 at v1
+    assert(MutableStore.expire(Dedup.shingleOf(shDir)) >= 0) // prior count may be 0 at v1
     assert(!exists(s"$shDir/sh/delta_b1"),
       "shingle expiry reclaims the folded delta subdirs on demand")
-    assert(Dedup.expireShingleStoreSnapshots(shDir) == 0, "idempotent")
+    assert(MutableStore.expire(Dedup.shingleOf(shDir)) == 0, "idempotent")
 
     // HASH: one novel batch folded → base_v1; the v0 root files and the
     // folded delta are retained until the explicit expiry
@@ -188,10 +188,10 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     Dedup.compactHashStore(spark, hDir2)
     val nHash = Dedup.hashStoreView(spark, hDir2).count()
     assert(exists(s"$hDir2/delta_b1"), "lagged GC kept the folded delta leg")
-    assert(Dedup.expireHashStoreSnapshots(hDir2) >= 1)
+    assert(MutableStore.expire(Dedup.flatOf(hDir2)) >= 1)
     assert(!exists(s"$hDir2/delta_b1"), "hash expiry reclaims the folded delta")
     assert(Dedup.hashStoreView(spark, hDir2).count() == nHash)
-    assert(Dedup.expireHashStoreSnapshots(hDir2) == 0, "idempotent")
+    assert(MutableStore.expire(Dedup.flatOf(hDir2)) == 0, "idempotent")
 
     // SIG: a takedown compacted → base_v1; the consumed tombstone is
     // retained until the explicit expiry
@@ -201,10 +201,10 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     Dedup.deleteFromSigStore(spark, sDir, Seq(0L).toDF("s_id"), tag = "d1")
     Dedup.compactSigStore(spark, sDir)
     assert(exists(s"$sDir/_tombstones/d1"), "lagged GC kept the consumed tombstone")
-    assert(Dedup.expireHashStoreSnapshots(sDir) >= 1)
+    assert(MutableStore.expire(Dedup.flatOf(sDir)) >= 1)
     assert(!exists(s"$sDir/_tombstones/d1"), "sig expiry reclaims the consumed tombstone")
     assert(spark.read.parquet(s"$sDir/base_v1").select("s_id").as[Long].collect().toSeq == Seq(3L))
-    assert(Dedup.expireHashStoreSnapshots(sDir) == 0, "idempotent")
+    assert(MutableStore.expire(Dedup.flatOf(sDir)) == 0, "idempotent")
   }
 
   test("posting store: expiry collects the superseded v0 root data of a quiescent store; search unchanged") {
@@ -234,7 +234,7 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
     assert(rootData().nonEmpty, "lagged GC kept the v0 root data")
 
     // …until the quiescent store expires on demand
-    val n = InvertedIndex.expireSnapshots(dir)
+    val n = MutableStore.expire(InvertedIndex.layoutOf(dir))
     assert(n >= 1)
     assert(rootData().isEmpty,
       "expiry must collect the superseded v0 root data without a compaction")
@@ -242,6 +242,6 @@ class ExpireSnapshotsSpec extends AnyFunSuite {
       "…and the folded delta dir")
     assert(exists(s"${dir}_v1"), "the CURRENT version is untouched")
     assert(probe() == want, "search serves the current snapshot unchanged")
-    assert(InvertedIndex.expireSnapshots(dir) == 0, "idempotent")
+    assert(MutableStore.expire(InvertedIndex.layoutOf(dir)) == 0, "idempotent")
   }
 }

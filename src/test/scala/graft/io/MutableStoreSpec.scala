@@ -295,23 +295,24 @@ class MutableStoreSpec extends AnyFunSuite {
     assert(st.live.isEmpty && st.liveTombs.isEmpty)
   }
 
-  test("flatBaseBytes: root files at v=0, the committed version dir afterwards") {
+  test("baseBytes: root files at v=0, the committed version dir afterwards") {
     val dir = tmp()
+    val store = MutableStore.flatLayout(dir, "Spec")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "part-0.parquet"), "12345678")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "delta_x"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "delta_x", "f.parquet"), "ddd")
-    assert(MutableStore.flatBaseBytes(dir) == 8L,
+    assert(MutableStore.baseBytes(store) == 8L,
       "v0 base = root files only (delta/underscore dirs excluded)")
-    assert(MutableStore.flatDeltaBytes(dir, Seq("x")) == 3L)
+    assert(MutableStore.deltaBytes(store) == 3L)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "base_v2"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "base_v2", "p.parquet"), "22")
     MutableStore.withWriterLock(dir) {
       MutableStore.commitState(dir, 2, Seq.empty, Seq.empty)
     }
-    assert(MutableStore.flatBaseBytes(dir) == 2L,
+    assert(MutableStore.baseBytes(store) == 2L,
       "after a commit the base is the committed version dir")
   }
 }

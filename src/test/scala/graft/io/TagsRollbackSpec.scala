@@ -37,6 +37,7 @@ class TagsRollbackSpec extends AnyFunSuite {
   test("splitPriors / pushPrior: a tagged prior is exempt from the keep-N policy and the cap") {
     val dir = tmp("tags_unit")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val store = MutableStore.flatLayout(dir, "Spec")
     val r1 = MutableStore.SnapRef(1, Seq("a1"), Seq.empty, 1000L)
     val r2 = MutableStore.SnapRef(2, Seq("a2"), Seq.empty, 2000L)
     MutableStore.withWriterLock(dir, "fixture") {
@@ -44,7 +45,7 @@ class TagsRollbackSpec extends AnyFunSuite {
         live = Seq("a3"), liveTombs = Seq.empty,
         priors = Seq(r1, r2).map(MutableStore.encodeRef))
     }
-    assert(MutableStore.tagSnapshot(dir, "keep", Some(1)) == 1)
+    assert(MutableStore.tagSnapshot(store, "keep", Some(1)) == 1)
 
     // default keep-1 policy protects ZERO priors — except the tagged one
     val (prot, due) = MutableStore.splitPriors(dir,
@@ -58,13 +59,14 @@ class TagsRollbackSpec extends AnyFunSuite {
       .pushPrior(dir, prot, MutableStore.SnapRef(3, Seq("a3"), Seq.empty))
       .map(MutableStore.decodeRef(_).v).sorted
     assert(pushed == Seq(1, 3), "tagged v1 survives the keep-1 cap")
-    assert(MutableStore.dropTag(dir, "keep"))
-    assert(!MutableStore.dropTag(dir, "keep"), "second drop reports absent")
+    assert(MutableStore.dropTag(store, "keep"))
+    assert(!MutableStore.dropTag(store, "keep"), "second drop reports absent")
   }
 
   test("tag validation: unretained version, name collision, dirty name, missing resolve — all loud") {
     val dir = tmp("tags_valid")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val store = MutableStore.flatLayout(dir, "Spec")
     MutableStore.withWriterLock(dir, "fixture") {
       MutableStore.commitState(dir, 2, Seq.empty, Seq.empty,
         live = Seq.empty, liveTombs = Seq.empty,
@@ -72,18 +74,18 @@ class TagsRollbackSpec extends AnyFunSuite {
           MutableStore.SnapRef(1, Seq.empty, Seq.empty, 1000L))))
     }
     val e1 = intercept[IllegalArgumentException] {
-      MutableStore.tagSnapshot(dir, "t", Some(7))
+      MutableStore.tagSnapshot(store, "t", Some(7))
     }
     assert(e1.getMessage.contains("not retained") &&
       e1.getMessage.contains("1, 2"), s"names the readable versions: $e1")
-    assert(MutableStore.tagSnapshot(dir, "t", Some(1)) == 1)
-    assert(MutableStore.tagSnapshot(dir, "t", Some(1)) == 1, "same-version re-tag is a no-op")
+    assert(MutableStore.tagSnapshot(store, "t", Some(1)) == 1)
+    assert(MutableStore.tagSnapshot(store, "t", Some(1)) == 1, "same-version re-tag is a no-op")
     val e2 = intercept[IllegalArgumentException] {
-      MutableStore.tagSnapshot(dir, "t", Some(2))
+      MutableStore.tagSnapshot(store, "t", Some(2))
     }
     assert(e2.getMessage.contains("already names version 1"), s"$e2")
     intercept[IllegalArgumentException] {
-      MutableStore.tagSnapshot(dir, "no|pipes", Some(2))
+      MutableStore.tagSnapshot(store, "no|pipes", Some(2))
     }
     val e3 = intercept[IllegalArgumentException] {
       MutableStore.resolveTag(dir, "ghost")
@@ -106,7 +108,7 @@ class TagsRollbackSpec extends AnyFunSuite {
       df.select("store_id").distinct().as[Long].collect().toSet
     commit(50L, "a1") // → v1
     val wantV1 = ids(FuzzyJoin.fuzzyStoreView(spark, dir))
-    assert(FuzzyJoin.tagFuzzySnapshot(dir, "golden") == 1)
+    assert(MutableStore.tagSnapshot(FuzzyJoin.flatOf(dir), "golden") == 1)
 
     // DEFAULT retention=1 protects zero priors — two commits would
     // collect v1; the tag keeps it
@@ -118,13 +120,13 @@ class TagsRollbackSpec extends AnyFunSuite {
       "time travel by tag serves the tagged snapshot")
 
     // ROLLBACK to the tag: live view == tagged snapshot; no data moved
-    val from = FuzzyJoin.rollbackFuzzyStoreToTag(dir, "golden")
+    val from = MutableStore.rollbackToTag(FuzzyJoin.flatOf(dir), "golden")
     assert(from == 3)
     assert(MutableStore.state(dir).v == 1)
     assert(ids(FuzzyJoin.fuzzyStoreView(spark, dir)) == wantV1)
 
     // ROLL-FORWARD: the rolled-back-from version is a retained prior
-    assert(FuzzyJoin.rollbackFuzzyStore(dir, 3) == 1)
+    assert(MutableStore.rollbackTo(FuzzyJoin.flatOf(dir), 3) == 1)
     assert(ids(FuzzyJoin.fuzzyStoreView(spark, dir)) == wantV1 ++ Set(60L, 61L))
 
     // a compaction AFTER the rollback dance allocates past every
@@ -136,8 +138,8 @@ class TagsRollbackSpec extends AnyFunSuite {
 
     // drop the tag: the next expiry collects v1 under the default
     // policy and revokes the read
-    assert(FuzzyJoin.dropFuzzyTag(dir, "golden"))
-    assert(FuzzyJoin.expireFuzzyStoreSnapshots(dir) >= 1)
+    assert(MutableStore.dropTag(FuzzyJoin.flatOf(dir), "golden"))
+    assert(MutableStore.expire(FuzzyJoin.flatOf(dir)) >= 1)
     assert(!exists(s"$dir/base_v1"), "dropping the tag releases the snapshot")
     intercept[IllegalArgumentException] {
       FuzzyJoin.fuzzyStoreViewAt(spark, dir, 1).collect()
@@ -157,7 +159,7 @@ class TagsRollbackSpec extends AnyFunSuite {
       Seq((14L, "h-d")).toDF("id", "text"), "id", "text",
       batchTag = Some("b1")).collect()
     Dedup.compactHashStore(spark, dir) // → v1
-    assert(Dedup.tagHashSnapshot(dir, "clean") == 1)
+    assert(MutableStore.tagSnapshot(Dedup.flatOf(dir), "clean") == 1)
 
     // an uncompacted DELETE hides a row from the live view — but not
     // from the tag's capture (same version, different legs: the
@@ -172,7 +174,7 @@ class TagsRollbackSpec extends AnyFunSuite {
     // rolling back to a current-version tag with NEWER legs committed
     // since must refuse loudly (it would orphan the live tombstone)
     val e = intercept[IllegalArgumentException] {
-      Dedup.rollbackHashStoreToTag(dir, "clean")
+      MutableStore.rollbackToTag(Dedup.flatOf(dir), "clean")
     }
     assert(e.getMessage.contains("compact first"), s"$e")
 
@@ -180,7 +182,7 @@ class TagsRollbackSpec extends AnyFunSuite {
     // tag still protects the pre-delete base — rollback restores it
     Dedup.compactHashStore(spark, dir) // → v2, 12 physically gone
     assert(ids(Dedup.hashStoreView(spark, dir)) == Set(11L, 13L, 14L))
-    assert(Dedup.rollbackHashStoreToTag(dir, "clean") == 2)
+    assert(MutableStore.rollbackToTag(Dedup.flatOf(dir), "clean") == 2)
     assert(ids(Dedup.hashStoreView(spark, dir)) == Set(11L, 12L, 13L, 14L),
       "rollback undoes the compacted delete from the tag-protected files")
   }
@@ -195,10 +197,10 @@ class TagsRollbackSpec extends AnyFunSuite {
       "id", "name", batchTag = Some("a1")).collect()
     FuzzyJoin.compactFuzzyStore(spark, dir) // v1
     val e = intercept[IllegalArgumentException] {
-      FuzzyJoin.rollbackFuzzyStore(dir, 99)
+      MutableStore.rollbackTo(FuzzyJoin.flatOf(dir), 99)
     }
     assert(e.getMessage.contains("not readable"), s"$e")
-    assert(FuzzyJoin.rollbackFuzzyStore(dir, 1) == 1, "no-op returns the version")
+    assert(MutableStore.rollbackTo(FuzzyJoin.flatOf(dir), 1) == 1, "no-op returns the version")
     assert(MutableStore.state(dir).v == 1)
   }
 
@@ -223,7 +225,7 @@ class TagsRollbackSpec extends AnyFunSuite {
     append(1000L, "m1") // → v1 (manifest-committed)
     val v1 = MutableStore.state(dir).v
     val wantV1 = idsNow()
-    assert(Ivf.tagSnapshot(dir, "validated") == v1)
+    assert(MutableStore.tagSnapshot(Ivf.storeOf(dir), "validated") == v1)
 
     append(2000L, "m2") // supersedes v1; tag protects it
     append(3000L, "m3")
@@ -239,9 +241,9 @@ class TagsRollbackSpec extends AnyFunSuite {
         "when the superseding commit retired it) — the documented distinction")
 
     // rollback to the validated index, then roll forward
-    assert(Ivf.rollbackToTag(dir, "validated") == v3)
+    assert(MutableStore.rollbackToTag(Ivf.storeOf(dir), "validated") == v3)
     assert(idsNow() == wantV1, "rollback replays the tagged snapshot")
-    assert(Ivf.rollbackTo(dir, v3) == v1)
+    assert(MutableStore.rollbackTo(Ivf.storeOf(dir), v3) == v1)
     assert(idsNow() == wantV3, "roll-forward replays the newest state")
 
     // a fold AFTER the rollback dance: never-reuse allocation, and the
@@ -250,8 +252,8 @@ class TagsRollbackSpec extends AnyFunSuite {
     assert(MutableStore.state(dir).v > v3, "allocation skips on-disk versions")
     assert(Ivf.layoutRowsAtTag(spark, layout, "validated")
       .select("vec_id").as[Long].collect().toSet == wantV1)
-    assert(Ivf.dropTag(dir, "validated"))
-    assert(Ivf.expireSnapshots(dir) >= 1)
+    assert(MutableStore.dropTag(Ivf.storeOf(dir), "validated"))
+    assert(MutableStore.expire(Ivf.storeOf(dir)) >= 1)
     intercept[IllegalArgumentException] {
       Ivf.layoutRowsAt(spark, layout, v1).collect()
     }
@@ -278,18 +280,18 @@ class TagsRollbackSpec extends AnyFunSuite {
     val v2 = MutableStore.state(dir).v
     val wantV2 = Ivf.layoutRows(spark, layout)
       .select("vec_id").as[Long].collect().toSet
-    Ivf.tagSnapshot(dir, "head") // tag v2, then roll below it
+    MutableStore.tagSnapshot(Ivf.storeOf(dir), "head") // tag v2, then roll below it
     val v1 = v2 - 1
     // v1 must be retained to roll back to; tag it too
-    Ivf.tagSnapshot(dir, "prev", Some(v1))
-    assert(Ivf.rollbackTo(dir, v1) == v2)
+    MutableStore.tagSnapshot(Ivf.storeOf(dir), "prev", Some(v1))
+    assert(MutableStore.rollbackTo(Ivf.storeOf(dir), v1) == v2)
     // expiry's debris sweep runs with the pointer BELOW v2 — the
     // retained (tagged) v2 fold tree + manifest must survive it
-    Ivf.expireSnapshots(dir)
+    MutableStore.expire(Ivf.storeOf(dir))
     assert(Ivf.layoutRowsAt(spark, layout, v2)
       .select("vec_id").as[Long].collect().toSet == wantV2,
       "a retained version above the rolled-back pointer is not debris")
-    assert(Ivf.rollbackTo(dir, v2) == v1, "roll-forward after the sweep")
+    assert(MutableStore.rollbackTo(Ivf.storeOf(dir), v2) == v1, "roll-forward after the sweep")
     assert(Ivf.layoutRows(spark, layout)
       .select("vec_id").as[Long].collect().toSet == wantV2)
   }

@@ -75,7 +75,7 @@ class TimeTravelSpec extends AnyFunSuite {
 
       // expiry under the default policy revokes the priors loudly
       MutableStore.setGcRetention(dir, None)
-      FuzzyJoin.expireFuzzyStoreSnapshots(dir)
+      MutableStore.expire(FuzzyJoin.flatOf(dir))
       val e2 = intercept[IllegalArgumentException] {
         FuzzyJoin.fuzzyStoreViewAt(spark, dir, 1)
       }

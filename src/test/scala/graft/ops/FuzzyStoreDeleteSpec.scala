@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.io.MutableStore
 
 /** Takedown on the persisted fuzzy signature store: a scrubbed
   * entity's deletion-neighborhood postings go too; re-registration
@@ -33,7 +34,7 @@ class FuzzyStoreDeleteSpec extends AnyFunSuite {
     // pre-delete: "alpha" resolves exactly to 1
     val b = Seq((100L, "alpha")).toDF("id", "name")
     assert(resolve(dir, b, "p0")(100L) == (false, Some(1L)))
-    FuzzyJoin.dropFuzzyStoreMutations(dir) // p0 left no delta (not novel)
+    MutableStore.dropMutations(FuzzyJoin.flatOf(dir)) // p0 left no delta (not novel)
 
     // take down 1: the probe must fall through to the ed-1 neighbor 3
     FuzzyJoin.deleteFromFuzzyStore(spark, dir, Seq(1L).toDF("store_id"), tag = "t1")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.io.MutableStore
 
 /** The size-ratio compaction policy (r13 VERDICT task 2): the
   * streaming legs fold deltas when their BYTES reach a fixed fraction
@@ -45,8 +46,8 @@ class CompactionPolicySpec extends AnyFunSuite {
     // batch's delta is ever live — with the count cap far away at 16
     runStream(dir, Seq(vecs(1000 until 1500), vecs(2000 until 2500),
       vecs(3000 until 3500)), maxDeltaDirs = 16, ratio = 0.5)
-    assert(graft.index.Sq.deltaDirCount(dir) <= 1,
-      s"ratio trigger must have folded: ${graft.index.Sq.deltaDirCount(dir)} deltas live")
+    assert(MutableStore.deltaTags(graft.index.Sq.layoutOf(dir)).size <= 1,
+      s"ratio trigger must have folded: ${MutableStore.deltaTags(graft.index.Sq.layoutOf(dir)).size} deltas live")
     // and nothing was lost: every appended vector is probeable
     assert(graft.index.Sq.codesWithDeltas(spark, dir).count() == 20L + 1500L)
   }
@@ -71,10 +72,10 @@ class CompactionPolicySpec extends AnyFunSuite {
     // compaction (a snapshot-pinned probe may still be reading it)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/layout")),
       "superseded base must survive its own commit (lagged GC)")
-    assert(Hnsw.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(Hnsw.layoutOf(dir)).isEmpty)
     // crash window B: a folded delta resurrected on disk stays invisible
     Hnsw.appendDelta(spark, dir, batch, tag = "d1", p)
-    assert(Hnsw.deltaTags(dir).isEmpty,
+    assert(MutableStore.deltaTags(Hnsw.layoutOf(dir)).isEmpty,
       "a sidecar-folded delta dir must not be live")
     assert(probe() == want)
     // a fresh ensure over the union corpus field-matches the compacted
@@ -124,6 +125,32 @@ class CompactionPolicySpec extends AnyFunSuite {
       "ensure over the live corpus must reuse the reclaimed layout")
   }
 
+  test("IVF base size through the store handle: the files the committed manifest lists") {
+    import graft.index.Ivf
+    import scala.jdk.CollectionConverters._
+    val dir = tmp("cps_ivfsize")
+    val base = vecs(0 until 200)
+    val layout = Ivf.buildLayout(spark, base, dir, nlist = 4, maxIter = 2)
+    // 20 copies of one vector land in ONE list, so the fold rewrites
+    // that cluster only and the other lists stay root-resident
+    Ivf.appendDelta(layout, base.filter(col("vec_id") === 7L).crossJoin(spark.range(20))
+      .select((col("id") + 9000L).as("vec_id"), col("embedding")), tag = "d1")
+    Ivf.compactDeltas(spark, layout)
+    val v = MutableStore.state(dir).v
+    assert(v >= 1)
+    val mdir = java.nio.file.Paths.get(dir, s"_manifest_v$v")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def json(p: java.nio.file.Path) = mapper.readTree(java.nio.file.Files.readString(p))
+    val listed = json(mdir.resolve("_index.json")).get("clusters").elements().asScala
+      .flatMap(k => json(mdir.resolve(s"cluster_${k.asText()}.json")).get("files").elements().asScala)
+      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(dir, f.asText()))).sum
+    assert(MutableStore.baseBytes(Ivf.storeOf(dir)) == listed)
+    assert(Ivf.baseBytes(layout) == listed)
+    val foldBytes = MutableStore.duBytes(java.nio.file.Paths.get(dir, s"_fold_v$v"))
+    assert(listed > foldBytes,
+      s"the manifest ($listed B) must also list the untouched root clusters, not only the fold tree ($foldBytes B)")
+  }
+
   test("tiny batches over a big base: no ratio fold; the count cap still bounds fan-out") {
     val dir = tmp("cps_count")
     graft.index.Sq.ensureCodesArtifact(vecs(0 until 2000), dir)
@@ -132,7 +159,7 @@ class CompactionPolicySpec extends AnyFunSuite {
     // 3-row deltas never reach the 2000-row base's bytes, so only the
     // count cap (3) folds: batch 3's pre-check folds batches 1-2,
     // leaving batches 3 and 4 live — never more than maxDeltaDirs
-    assert(graft.index.Sq.deltaDirCount(dir) <= 3)
+    assert(MutableStore.deltaTags(graft.index.Sq.layoutOf(dir)).size <= 3)
     assert(graft.index.Sq.codesWithDeltas(spark, dir).count() == 2000L + 12L)
   }
 }

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.index.{Hnsw, Ivf, Sq}
+import graft.io.MutableStore
 
 /** The CDC sinks as a fixed per-batch job budget: a SparkListener
   * count of one micro-batch's Spark jobs through the IVF
@@ -105,7 +106,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     assert(named == Set("compactDeltas at Ivf.scala", "appendDelta at Ivf.scala",
       "deleteFromLayout at Ivf.scala"),
       s"store jobs must carry their primitive's call site: $batchJobs")
-    assert(Ivf.deltaDirCount(layout) == 1, "the fold leaves only the batch's own delta")
+    assert(MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size == 1, "the fold leaves only the batch's own delta")
 
     val got = Ivf.layoutRows(spark, Ivf.loadLayout(layout.dir))
       .select("vec_id").as[Long].collect().toSet
@@ -134,7 +135,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
     assert(named == Set("appendDelta at Hnsw.scala", "deleteFromLayout at Hnsw.scala"),
       s"store jobs must carry their primitive's call site: $batchJobs")
 
-    val nodes = (Hnsw.layout(spark, dir) +: Hnsw.deltaTags(dir)
+    val nodes = (Hnsw.layout(spark, dir) +: MutableStore.deltaTags(Hnsw.layoutOf(dir))
         .map(t => spark.read.parquet(s"$dir/layout_delta_$t")))
       .map(_.select("vec_id")).reduce(_ unionAll _).as[Long].collect().toSet
     val got = nodes -- Hnsw.tombstonedIds(spark, dir)
@@ -181,7 +182,7 @@ class IvfCdcSinkSpec extends AnyFunSuite {
       op("add")(108L).unionAll(op("del")(5L, 104L)))
     land(s"$root/in", batches)
     assert(runSink(layout, s"$root/in", s"$root/chk", maxDeltaDirs = 2) == Seq(0L, 1L, 2L))
-    assert(Ivf.deltaDirCount(layout) == 1, "b2 must have folded b0 and b1")
+    assert(MutableStore.deltaTags(Ivf.storeOf(layout.dir)).size == 1, "b2 must have folded b0 and b1")
     // at-least-once redelivery: drop b2's commit mark, so the restarted
     // query re-runs b2 under the same tag
     Seq("2", ".2.crc").foreach(f =>

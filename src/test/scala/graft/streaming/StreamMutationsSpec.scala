@@ -8,6 +8,7 @@ import graft.SparkTestSession
 import graft.text.InvertedIndex
 import graft.index.Sq
 import graft.ops.VectorSearch
+import graft.io.MutableStore
 
 /** CDC MUTATION streams — one feed carrying both appends and takedowns
   * (op ∈ {add, del}) applied per micro-batch to the incremental
@@ -98,8 +99,8 @@ class StreamMutationsSpec extends AnyFunSuite {
     // deleted rows physically gone from the folded base
     assert(spark.table(table).filter(col("doc_id").isin(4L, 100L)).count() == 0L,
       "compaction during the mutation stream must physically drop tombstoned rows")
-    assert(InvertedIndex.deltaTags(dir) == Seq(InvertedIndex.deltaTags(dir).head)
-      && InvertedIndex.deltaTags(dir).head.endsWith("_b3"),
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)) == Seq(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).head)
+      && MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).head.endsWith("_b3"),
       "only the final batch's delta should remain live")
     assert(q.recentProgress.forall(_.stateOperators.isEmpty),
       "foreachBatch mutations must carry no state-store state")
@@ -319,7 +320,7 @@ class StreamMutationsSpec extends AnyFunSuite {
     // compaction happened during the stream: versioned swap committed
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/codes_v1")),
       "the final batch must have triggered the versioned compaction")
-    assert(Sq.deltaDirCount(dir) == 1,
+    assert(MutableStore.deltaTags(Sq.layoutOf(dir)).size == 1,
       "only the final batch's delta should remain live")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.io.MutableStore
 
 /** Tombstone deletes + versioned atomic compaction on the posting
   * stores (r13 VERDICT tasks 1+2): probes over (base ∪ deltas) −
@@ -97,7 +98,7 @@ class InvertedIndexDeleteSpec extends AnyFunSuite {
     assert(probe(table, dir) == before)
     // rows physically dropped and no deltas/tombstones left behind
     assert(spark.table(table).filter(col("doc_id").isin(2L, 6L)).count() == 0L)
-    assert(InvertedIndex.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).isEmpty)
     assert(InvertedIndex.statsDeltaAware(dir) == InvertedIndex.sidecarStats(dir))
     // the versioned swap really happened: base now at the _v1 sibling
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"${dir}_v1")))
@@ -129,7 +130,7 @@ class InvertedIndexDeleteSpec extends AnyFunSuite {
     // the next compaction simply overwrites the leftover and succeeds
     InvertedIndex.compactDeltas(spark, table, dir, buckets = 4)
     assert(probe(table, dir) == want)
-    assert(InvertedIndex.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).isEmpty)
   }
 
   test("crash window B: commit done but GC died — folded delta still on disk is skipped") {
@@ -144,7 +145,7 @@ class InvertedIndexDeleteSpec extends AnyFunSuite {
     InvertedIndex.appendDelta(spark, dir, extra, tag = "d1")
     // the sidecar's committed folded list must keep it invisible — the
     // doc would double-count otherwise (its rows are in the new base)
-    assert(InvertedIndex.deltaTags(dir).isEmpty,
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).isEmpty,
       "a sidecar-folded delta dir must not be live")
     assert(probe(table, dir) == want)
   }

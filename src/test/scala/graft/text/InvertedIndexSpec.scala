@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.io.MutableStore
 
 /** Persisted posting-list index: build/reuse tiers, bucket-pruned probe
   * plan, and exact agreement with the corpus-scan BM25 path. */
@@ -251,7 +252,7 @@ class InvertedIndexSpec extends AnyFunSuite {
     InvertedIndex.appendDelta(spark, dir, b1, tag = "b1")
     InvertedIndex.appendDelta(spark, dir, b1, tag = "b1") // redelivery: same tag overwrites
     InvertedIndex.appendDelta(spark, dir, b2, tag = "b2")
-    assert(InvertedIndex.deltaTags(dir) == Seq("b1", "b2"))
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)) == Seq("b1", "b2"))
     val viaDeltas = InvertedIndex.bm25SearchDeltaAware(spark, "iidx_delta", dir, terms)
       .as[(Long, Long, Long)].collect().toSeq
     // ground truth: a fresh build over the union corpus
@@ -282,9 +283,9 @@ class InvertedIndexSpec extends AnyFunSuite {
     // excludeTags: c2 (the "current batch") must survive the fold
     InvertedIndex.compactDeltas(spark, "iidx_compact", dir, buckets = 4,
       excludeTags = Set("c2"))
-    assert(InvertedIndex.deltaTags(dir) == Seq("c2"), "excluded delta must stay live")
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)) == Seq("c2"), "excluded delta must stay live")
     InvertedIndex.compactDeltas(spark, "iidx_compact", dir, buckets = 4)
-    assert(InvertedIndex.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).isEmpty)
     val after = InvertedIndex.bm25SearchDeltaAware(spark, "iidx_compact", dir,
       terms).collect().toSeq
     assert(after == before, "compaction must be invisible to probe results")
@@ -313,7 +314,7 @@ class InvertedIndexSpec extends AnyFunSuite {
     InvertedIndex.appendPositionalDelta(spark, dir, b1, tag = "p1")
     InvertedIndex.appendPositionalDelta(spark, dir, b1, tag = "p1") // redelivery overwrite
     InvertedIndex.appendPositionalDelta(spark, dir, b2, tag = "p2")
-    assert(InvertedIndex.deltaTags(dir) == Seq("p1", "p2"))
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)) == Seq("p1", "p2"))
     val viaDeltas = InvertedIndex.phraseSearchDeltaAware(
       spark, "iidx_posd", dir, Seq("hash", "join")).as[(Long, Long)].collect().toMap
     // planted docs visible with exact occurrence counts; the
@@ -331,9 +332,9 @@ class InvertedIndexSpec extends AnyFunSuite {
     // compaction: exclude the "current" tag, then fold everything; probe invariant
     InvertedIndex.compactPositionalDeltas(spark, "iidx_posd", dir, buckets = 4,
       excludeTags = Set("p2"))
-    assert(InvertedIndex.deltaTags(dir) == Seq("p2"), "excluded delta must stay live")
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)) == Seq("p2"), "excluded delta must stay live")
     InvertedIndex.compactPositionalDeltas(spark, "iidx_posd", dir, buckets = 4)
-    assert(InvertedIndex.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).isEmpty)
     val after = InvertedIndex.phraseSearchDeltaAware(
       spark, "iidx_posd", dir, Seq("hash", "join")).as[(Long, Long)].collect().toMap
     assert(after == viaDeltas, "compaction must be invisible to probe results")
@@ -374,9 +375,9 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(viaDeltas == viaFresh, s"delta-aware != fresh union build:\n$viaDeltas\n$viaFresh")
     InvertedIndex.compactTrigramDeltas(spark, "iidx_trid", dir, buckets = 4,
       excludeTags = Set("t2"))
-    assert(InvertedIndex.deltaTags(dir) == Seq("t2"), "excluded delta must stay live")
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)) == Seq("t2"), "excluded delta must stay live")
     InvertedIndex.compactTrigramDeltas(spark, "iidx_trid", dir, buckets = 4)
-    assert(InvertedIndex.deltaTags(dir).isEmpty)
+    assert(MutableStore.deltaTags(InvertedIndex.layoutOf(dir)).isEmpty)
     val after = InvertedIndex.substringSearchDeltaAware(
         spark, "iidx_trid", dir, union, "merge batch")
       .as[(Long, Long)].collect().toMap
