@@ -106,6 +106,14 @@ object Bench {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
+  /** The record grouped by query family: per family (sorted by name),
+    * its query count and the sum of its warm medians. */
+  def familiesJson(results: Seq[(String, Samples)], familyOf: String => String): String =
+    results.groupBy { case (name, _) => familyOf(name) }.toSeq.sortBy(_._1)
+      .map { case (f, rs) =>
+        s""""$f":{"n_queries":${rs.size},"total_warm_median":${r3(rs.map(_._2.warmMedian).sum)}}"""
+      }.mkString("\"families\":{", ",", "}")
+
   /** The per-run record: every sample and every plan fingerprint, so the
     * consumer can tell "one slow run" from "consistently slow" from
     * "the plan changed". */
@@ -489,7 +497,7 @@ object Bench {
     // spec-pinned once — a leak shows up as round-over-round growth here
     val streamState = {
       import scala.jdk.CollectionConverters._
-      val m = SparkEntry.streamStateRows.asScala.toSeq.sortBy(_._1)
+      val m = graft.queries.Fixtures.streamStateRows.asScala.toSeq.sortBy(_._1)
       if (m.isEmpty) ""
       else m.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(",\"stream_state\":{", ",", "}")
@@ -501,10 +509,12 @@ object Bench {
       .map { case (name, s) => "\"" + name + "\":" + r3(s.warmMedian) }
       .mkString("{", ",", "}")
     val totalWarmMedian = results.map(_._2.warmMedian).sum
+    val families = graft.queries.Catalog.all.map(d => d.name -> d.family).toMap
     val extra = recall.fold("")("," + _.json) +
       s""","total_warm_median":${r3(totalWarmMedian)}""" +
       s""","queries_warm_median":$medianDict""" +
-      s""","order_seed":$orderSeed,""" + samplesJson(results) + streamState
+      s""","order_seed":$orderSeed,""" + samplesJson(results) + streamState +
+      "," + familiesJson(results, families)
     val detail = detailLine(totalWarm, totalCold, minima, sfDir, warmRuns, coldRuns, extra)
     println(detail) // first line: full per-query detail for humans/logs
     try java.nio.file.Files.write(

@@ -1115,7 +1115,7 @@ object ScaleProbe {
       org.apache.spark.sql.graft.TopKWindowRewrite.enable(spark)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val events = replicate(
-        graft.SparkEntry.fixEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
+        graft.queries.Fixtures.fixEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
           .select("user_id", "ts"), "user_id", factor)
       val counts = events.groupBy(
           date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),

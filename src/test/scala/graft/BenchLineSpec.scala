@@ -48,7 +48,8 @@ class BenchLineSpec extends AnyFunSuite {
         cold = Seq(Bench.Run(1.234, "ab12cd34ef56"), Bench.Run(0.9, "ab12cd34ef56")),
         warm = Seq(Bench.Run(0.5, "ab12cd34ef56"), Bench.Run(0.51, "none"))),
       "q2" -> Bench.Samples(cold = Seq(Bench.Run(2.0, "ffffffffffff")), warm = Nil))
-    val extra = "," + Bench.samplesJson(samples) + ",\"stream_state\":{\"stream_dedup\":500}"
+    val extra = "," + Bench.samplesJson(samples) + ",\"stream_state\":{\"stream_dedup\":500}" +
+      "," + Bench.familiesJson(samples, Map("q1" -> "vector", "q2" -> "vector"))
     val detail = Bench.detailLine(1.0, 2.0,
       samples.map { case (k, s) => k -> (s.coldMin, s.warmMin) }, "sf0.1", 3, 2, extra)
     val node = mapper.readTree(detail) // throws on malformed JSON
@@ -60,6 +61,10 @@ class BenchLineSpec extends AnyFunSuite {
     assert(node.get("stream_state").get("stream_dedup").asLong() == 500L)
     // warm falls back to cold min when no warm run succeeded
     assert(node.get("queries").get("q2").asDouble() == 2.0)
+    // per family: query count and summed warm medians (0.505 + 2.0)
+    val vector = node.get("families").get("vector")
+    assert(vector.get("n_queries").asInt() == 2)
+    assert(vector.get("total_warm_median").asDouble() == 2.505)
   }
 
   test("medians: odd count takes the middle, even averages, warm falls back to cold") {

@@ -121,7 +121,8 @@ class SnapshotPinSpec extends AnyFunSuite {
         s"relative-dir probe must pin and serve all fig docs, got $got")
     } finally {
       spark.sql("DROP TABLE IF EXISTS relpin_t")
-      Seq(rel, s"${rel}_deltas", s"${rel}_tombstones", s"${rel}__writer_lock")
+      Seq(rel, s"${rel}_deltas", s"${rel}_tombstones", s"${rel}__writer_lock",
+          s"$rel.graft_lock")
         .foreach(p => MutableStore.deleteDir(
           java.nio.file.Paths.get(p).toAbsolutePath))
     }
